@@ -5,7 +5,9 @@ path, WayebEngine.java:442-466 + ForecasterRun.scala:57-102).
 Output rows carry counter-relative forecast intervals
 (RelativeForecast.scala:102-113): start_ctr/end_ctr are absolute
 per-key event counters, so evaluation is a pure interval join against
-detections (SURVEY.md §2.F F6).
+detections (SURVEY.md §2.F F6) — ``evaluate_forecasts`` as a join,
+``ForecastCEP.confusion`` as per-key binary searches inside the same
+pass that produced the forecasts.
 
 Scale shape: identical to BatchCEP — one shuffle of (key, ts, id,
 symbol); the SPST tables and the per-state forecast table broadcast
@@ -46,17 +48,19 @@ FORECAST_COLUMNS = [
 ]
 
 
-def _run_forecast_segment(key, syms, tss, ids, init, main, swap=None):
+def _forecast_run(syms, tss, init, main, swap=None):
     """THE forecast run kernel — shared verbatim by batch
-    (ForecastCEP.forecasts) and streaming (streaming/inference.py), so
-    the two paths cannot diverge.
+    (ForecastCEP.forecasts / .confusion) and streaming
+    (streaming/inference.py), so the paths cannot diverge.
 
     One key segment; ``init`` = (state, counter0, swapped) carried
     across Arrow batches / GroupState.  ``main`` = (delta, finals,
     started, ftable, resets); ``swap`` = None or (migrate, sync_time,
     delta2, finals2, started2, ftable2) for the synchronized per-event
     model swap (G4).  Sequential pass computes only the state
-    trajectory; emission is vectorized."""
+    trajectory; emission is vectorized.  Returns per-event arrays
+    (counters, det_mask, fc_mask, fstart, fend, fprob, fpos) and the
+    carry."""
     delta, finals, started, ftable, resets = main
     if swap is not None:
         migrate, sync_time, delta2, finals2, started2, ftable2 = swap
@@ -101,6 +105,17 @@ def _run_forecast_segment(key, syms, tss, ids, init, main, swap=None):
         fstart[sl], fend[sl], fprob[sl], fpos[sl] = (
             rowvals[:, 0], rowvals[:, 1], rowvals[:, 2], rowvals[:, 3]
         )
+    carry = (state, int(counters[-1]) if n else counter0, swapped)
+    return (counters, det_mask, fc_mask, fstart, fend, fprob, fpos), carry
+
+
+def _run_forecast_segment(key, syms, tss, ids, init, main, swap=None):
+    """One key segment through ``_forecast_run``, as output rows: the
+    key's detections and forecasts in the FORECAST_COLUMNS frame, plus
+    the carry."""
+    (counters, det_mask, fc_mask, fstart, fend, fprob, fpos), carry = _forecast_run(
+        syms, tss, init, main, swap
+    )
     frames = []
     if det_mask.any():
         di = np.where(det_mask)[0]
@@ -136,13 +151,92 @@ def _run_forecast_segment(key, syms, tss, ids, init, main, swap=None):
                 }
             )
         )
-    carry = (state, int(counters[-1]) if n else counter0, swapped)
     if not frames:
         return pd.DataFrame(columns=FORECAST_COLUMNS), carry
     return pd.concat(frames)[FORECAST_COLUMNS], carry
 
 
+CONFUSION_COLUMNS = ["tp", "tn", "fp", "fn"]
+
+
+def _score_inputs(syms, tss, init, main):
+    """One key segment through ``_forecast_run``, reduced to what
+    scoring needs: (detection counters, forecast start_ctr, end_ctr,
+    positive) — the same values ``_run_forecast_segment`` emits as
+    rows — plus the carry."""
+    (counters, det_mask, fc_mask, fstart, fend, _, fpos), carry = _forecast_run(
+        syms, tss, init, main
+    )
+    fc = counters[fc_mask]
+    return (
+        counters[det_mask],
+        fc + fstart[fc_mask].astype("int64"),
+        fc + fend[fc_mask].astype("int64"),
+        fpos[fc_mask] >= 1.0,
+    ), carry
+
+
+def _score_key(key, pieces) -> np.ndarray:
+    """(tp, tn, fp, fn) of one closed key from its ``_score_inputs``
+    pieces: a forecast hits iff one of the key's detection counters
+    lies in [start_ctr, end_ctr] (counters ascend, so two binary
+    searches per forecast).  A NULL key never hits, as ``key = d_key``
+    never holds for it in ``evaluate_forecasts``' join."""
+    det, start, end, pos = (np.concatenate(col) for col in zip(*pieces))
+    if pd.isna(key):
+        hit = np.zeros(len(start), dtype=bool)
+    else:
+        hit = np.searchsorted(det, start, "left") < np.searchsorted(det, end, "right")
+    return np.array(
+        [(pos & hit).sum(), (~pos & ~hit).sum(), (pos & ~hit).sum(), (~pos & hit).sum()],
+        dtype=np.int64,
+    )
+
+
+_NO_KEY = object()  # no open key yet (None is a key: the NULL key)
+
+
+def _key_segments(batches, fresh, step):
+    """The fused walk shared by ForecastCEP.forecasts and .confusion
+    (strategy of BatchCEP.detections): one Python call per Arrow batch
+    of a key-sorted partition, key segments found inside the batch,
+    the open key's carry handed on across batches.  NULL keys compare
+    equal, so a NULL-key run is one run like any other.
+
+    ``step(key, syms, tss, ids, init) -> (out, carry)`` runs one
+    segment, ``init`` being ``fresh`` for a new key.  Yields, per
+    non-empty batch, the list of (key, continues_open_key, out)."""
+    open_key, carry = _NO_KEY, None
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        keys = pdf["key"].to_numpy()
+        syms = pdf["symbol"].to_numpy()
+        tss = pdf["ts"].to_numpy()
+        ids = pdf["event_id"].to_numpy()
+        null = pd.isna(keys)
+        change = (keys[1:] != keys[:-1]) & ~(null[1:] & null[:-1])
+        bounds = [0, *(np.flatnonzero(change) + 1), n]
+        segs = []
+        for start, end in zip(bounds[:-1], bounds[1:]):
+            k = keys[start]
+            continues = start == 0 and (
+                k == open_key or bool(null[0]) and pd.isna(open_key)
+            )
+            out, carry = step(
+                k, syms[start:end], tss[start:end], ids[start:end],
+                carry if continues else fresh,
+            )
+            segs.append((k, continues, out))
+            open_key = k
+        yield segs
+
+
 class ForecastCEP(BatchCEP):
+    """Recognition + forecasting over a keyed stream with one SPST:
+    ``forecasts`` emits the rows, ``confusion`` scores them."""
+
     def __init__(
         self,
         spst: SPST,
@@ -159,6 +253,25 @@ class ForecastCEP(BatchCEP):
         self.confidence_threshold = confidence_threshold
         self.spread = spread
 
+    def _tables(self, spst: SPST) -> tuple:
+        """``_forecast_run``'s (delta, finals, started, ftable, resets)."""
+        return (
+            spst.delta,
+            spst.finals,
+            spst.started,
+            spst.forecast_table(self.method, self.confidence_threshold, self.spread),
+            self.compiled.reset_symbols(),
+        )
+
+    def _key_sorted(self, df: DataFrame) -> DataFrame:
+        """The one shuffle: (key, ts, event_id, symbol) hash-partitioned
+        on the key, each partition sorted by (key, ts, event_id)."""
+        return (
+            self.symbolized(df)
+            .repartition("key")
+            .sortWithinPartitions("key", "ts", "event_id")
+        )
+
     def forecasts(
         self,
         df: DataFrame,
@@ -174,82 +287,67 @@ class ForecastCEP(BatchCEP):
         event-time sync_time (G4) — each key's run migrates its state
         into the new model at the first event with ts >= sync_time,
         exactly the reference's per-event swap granularity."""
-        sym_df = self.symbolized(df)
-        delta = self.spst.delta
-        take = self.spst.take
-        finals = self.spst.finals
-        started = self.spst.started
-        resets = self.compiled.reset_symbols()
-        ftable = self.spst.forecast_table(
-            self.method, self.confidence_threshold, self.spread
-        )
-        if new_model is not None:
-            migrate = swap_mapping(self.spst, new_model)
-            delta2 = new_model.delta
-            finals2 = new_model.finals
-            started2 = new_model.started
-            ftable2 = new_model.forecast_table(
-                self.method, self.confidence_threshold, self.spread
-            )
         key_type = dict(df.dtypes)[self.key_col]
         schema = (
             f"key {key_type}, ts long, event_id long, counter long, "
             "is_detection boolean, prob double, start_ctr long, end_ctr long, "
             "positive boolean"
         )
+        main_tables = self._tables(self.spst)
+        swap_tables = None
+        if new_model is not None:
+            delta2, finals2, started2, ftable2, _ = self._tables(new_model)
+            migrate = swap_mapping(self.spst, new_model)
+            swap_tables = (migrate, sync_time, delta2, finals2, started2, ftable2)
+        fresh = (0, 0, new_model is None)
 
-        main_tables = (delta, finals, started, ftable, resets)
-        swap_tables = (
-            None
-            if new_model is None
-            else (migrate, sync_time, delta2, finals2, started2, ftable2)
-        )
-
-        def run_segment(key, syms, tss, ids, init):
+        def step(key, syms, tss, ids, init):
             return _run_forecast_segment(
                 key, syms, tss, ids, init, main_tables, swap_tables
             )
 
         def run_partition(batches):
-            # fused strategy (see BatchCEP.detections): one Python call
-            # per Arrow batch, key segments walked inside, open key's
-            # (state, counter, swapped) carried across batches
-            open_key = None
-            carry = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keys = pdf["key"].to_numpy()
-                syms = pdf["symbol"].to_numpy()
-                tss = pdf["ts"].to_numpy()
-                ids = pdf["event_id"].to_numpy()
-                outs = []
-                start, n = 0, len(keys)
-                while start < n:
-                    end = start
-                    k = keys[start]
-                    while end < n and keys[end] == k:
-                        end += 1
-                    init = (
-                        carry
-                        if (open_key is not None and k == open_key)
-                        else (0, 0, new_model is None)
-                    )
-                    frame, carry = run_segment(
-                        k, syms[start:end], tss[start:end], ids[start:end], init
-                    )
-                    outs.append(frame)
-                    open_key = k
-                    start = end
-                yield pd.concat(outs) if outs else pd.DataFrame(
-                    columns=["key", "ts", "event_id", "counter", "is_detection",
-                             "prob", "start_ctr", "end_ctr", "positive"]
-                )
+            for segs in _key_segments(batches, fresh, step):
+                yield pd.concat([frame for _, _, frame in segs])
+
+        return self._key_sorted(df).mapInPandas(run_partition, schema=schema)
+
+    def confusion(self, df: DataFrame) -> dict[str, int]:
+        """Global confusion counts {"tp", "tn", "fp", "fn"} of this
+        model's forecasts on ``df``: the column sums of
+        ``evaluate_forecasts(self.forecasts(df))`` (its reference), in
+        one shuffle and one Python pass instead of two passes and a
+        range self-join.  Each key is scored against its own detection
+        counters when its run closes; per-partition counts finish in
+        one small aggregate."""
+        row = self._confusion_frame(df).collect()[0]
+        return {c: int(row[c] or 0) for c in CONFUSION_COLUMNS}
+
+    def _confusion_frame(self, df: DataFrame) -> DataFrame:
+        """``confusion``'s one-row plan (exposed for the plan audit)."""
+        main_tables = self._tables(self.spst)
+
+        def step(key, syms, tss, ids, init):
+            return _score_inputs(syms, tss, init, main_tables)
+
+        def score_partition(batches):
+            counts = np.zeros(len(CONFUSION_COLUMNS), dtype=np.int64)
+            key, pieces = None, []
+            for segs in _key_segments(batches, (0, 0, True), step):
+                for k, continues, piece in segs:
+                    if pieces and not continues:
+                        counts += _score_key(key, pieces)
+                        pieces = []
+                    key = k
+                    pieces.append(piece)
+            if pieces:
+                counts += _score_key(key, pieces)
+            yield pd.DataFrame([counts], columns=CONFUSION_COLUMNS)
 
         return (
-            sym_df.repartition("key")
-            .sortWithinPartitions("key", "ts", "event_id")
-            .mapInPandas(run_partition, schema=schema)
+            self._key_sorted(df)
+            .mapInPandas(score_partition, schema="tp long, tn long, fp long, fn long")
+            .agg(*(F.sum(c).alias(c) for c in CONFUSION_COLUMNS))
         )
 
 

@@ -15,6 +15,20 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """Local-mode driver heap when SPARK_GRAFT_DRIVER_MEM is unset: half
+    of physical memory, at most 16g and at least 1g.  The JVM's RSS
+    runs past its heap (metaspace, Arrow and shuffle buffers) and the
+    Python workers need room too, so a heap the size of the host gets
+    the JVM killed before it sees an OutOfMemoryError."""
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = physical_bytes // 2**20 // 2
+    return f"{max(1024, min(MAX_DRIVER_MEM_MB, mb))}m"
+
 
 def get_spark(
     app_name: str = "flink_rtcef_spark",
@@ -56,7 +70,8 @@ def get_spark(
         # Only effective when this process creates the JVM — a cluster
         # submit sets memory via spark-submit and never hits this.
         builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -11,17 +11,19 @@ G7 parity (WayebAdapter.scala:39-184 + ModelFactoryEngine.java:226-496):
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from flink_rtcef_spark.models.spst import SPST, train_spst
 from flink_rtcef_spark.operators.cep import BatchCEP
-from flink_rtcef_spark.operators.forecast import ForecastCEP, evaluate_forecasts
+from flink_rtcef_spark.operators.forecast import ForecastCEP
 from flink_rtcef_spark.plans.compiler import CompiledPattern
 
 MIN_EVENTS = 50
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -31,6 +33,7 @@ class TrainResult:
     f_val: float
     status: str  # success | error
     params: dict
+    cause: str = ""  # why status is error
 
 
 class ModelFactory:
@@ -60,7 +63,9 @@ class ModelFactory:
         params = {"pMin": pmin, "gamma": gamma}
         n = events.count()
         if n < MIN_EVENTS:  # min-data guard
-            return TrainResult(None, 0.0, 0.0, "error", params)
+            return TrainResult(
+                None, 0.0, 0.0, "error", params, f"fewer than {MIN_EVENTS} events"
+            )
         cep = BatchCEP(self.compiled, key_col=self.key_col, ts_col=self.ts_col, id_col=self.id_col)
         try:
             spst = train_spst(
@@ -73,8 +78,9 @@ class ModelFactory:
             )
             mcc = self.test(spst, events)
             return TrainResult(spst, mcc, -mcc, "success", params)
-        except Exception:
-            return TrainResult(None, 0.0, 0.0, "error", params)
+        except Exception as e:
+            log.exception("train_and_test failed for %s", params)
+            return TrainResult(None, 0.0, 0.0, "error", params, f"{type(e).__name__}: {e}")
 
     def test(self, spst: SPST, events: DataFrame) -> float:
         """Replay through a fresh engine; global MCC over all keys
@@ -88,15 +94,7 @@ class ModelFactory:
             confidence_threshold=self.confidence_threshold,
             spread=self.spread,
         )
-        results = fcep.forecasts(events)
-        per_key = evaluate_forecasts(results)
-        glob = per_key.agg(
-            F.sum("tp").alias("tp"),
-            F.sum("tn").alias("tn"),
-            F.sum("fp").alias("fp"),
-            F.sum("fn").alias("fn"),
-        ).collect()[0]
-        return _mcc(glob["tp"] or 0, glob["tn"] or 0, glob["fp"] or 0, glob["fn"] or 0)
+        return _mcc(**fcep.confusion(events))
 
 
 def _mcc(tp: int, tn: int, fp: int, fn: int) -> float:

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_rtcef_spark.models.spst import SPST
-from flink_rtcef_spark.operators.forecast import ForecastCEP, evaluate_forecasts
+from flink_rtcef_spark.operators.forecast import ForecastCEP
 from flink_rtcef_spark.plans.compiler import CompiledPattern
 from flink_rtcef_spark.streaming.collector import BucketCollector
 from flink_rtcef_spark.streaming.factory import ModelFactory, _mcc
@@ -77,18 +77,7 @@ class RTCEFLoop:
             confidence_threshold=self.factory.confidence_threshold,
             spread=self.factory.spread,
         )
-        results = fcep.forecasts(batch)
-        agg = (
-            evaluate_forecasts(results)
-            .agg(
-                F.sum("tp").alias("tp"),
-                F.sum("tn").alias("tn"),
-                F.sum("fp").alias("fp"),
-                F.sum("fn").alias("fn"),
-            )
-            .collect()[0]
-        )
-        counts = {k: int(agg[k] or 0) for k in ("tp", "tn", "fp", "fn")}
+        counts = fcep.confusion(batch)
         for k, v in counts.items():
             self.cum[k] += v
         runtime = _mcc(**self.cum)

@@ -231,3 +231,107 @@ def test_reference_report_trajectory_semantics(spark):
         res_df, ev_df, reporting_distance=100, skip_first=True
     )
     assert len(traj2) == 1 and traj2.tp.iloc[0] == 1 and traj2.fp.iloc[0] == 1
+
+
+# ---------------------------------------------------------------------------
+# ForecastCEP.confusion == column sums of evaluate_forecasts(forecasts(df))
+
+CONFUSION = ["tp", "tn", "fp", "fn"]
+
+
+@pytest.fixture
+def small_arrow_batches(spark):
+    """7-row Arrow batches, so keys straddle batch boundaries and the
+    kernel's cross-batch carry is exercised."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield
+    spark.conf.set(key, prev)
+
+
+def _assert_confusion_is_reference(fcep, df) -> pd.DataFrame:
+    ref = evaluate_forecasts(fcep.forecasts(df)).toPandas()
+    assert fcep.confusion(df) == {c: int(ref[c].sum()) for c in CONFUSION}
+    return ref
+
+
+def _ab_stream(spark):
+    """Two ordinary keys, a NULL key and a key that only ever sees A
+    (forecasts, never a detection); ids unique across keys."""
+    rng = random.Random(3)
+    rows = []
+    for key in ("k1", "k2", None, "onlyA"):
+        for t in range(60):
+            et = "B" if key != "onlyA" and rng.random() < 0.3 else "A"
+            rows.append((key, t + 1, len(rows), et))
+    pdf = pd.DataFrame(rows, columns=["k", "timestamp", "id", "event_type"])
+    return spark.createDataFrame(pdf, "k string, timestamp long, id long, event_type string")
+
+
+def _ab_forecaster(df, pattern=PAT_AB):
+    compiled = compile_pattern(pattern, DECLS_AB)
+    cep = BatchCEP(compiled, key_col="k", ts_col="timestamp", id_col="id")
+    spst = train_spst(
+        cep.symbolized(df), compiled, max_order=1,
+        pmin=0.0001, gamma_min=0.0001, horizon=5, cutoff=0.0,
+    )
+    return ForecastCEP(
+        spst, key_col="k", ts_col="timestamp", id_col="id",
+        method="classify_nextk", confidence_threshold=0.4, spread=3,
+    )
+
+
+@pytest.mark.parametrize("arrow_batch", ["default", "7 rows"])
+def test_confusion_equals_reference_with_null_and_detectionless_keys(
+    spark, request, arrow_batch
+):
+    if arrow_batch == "7 rows":
+        request.getfixturevalue("small_arrow_batches")
+    df = _ab_stream(spark)
+    fcep = _ab_forecaster(df)
+    out = fcep.forecasts(df).toPandas()
+    null_rows = out[out.key.isna()]
+    only_a = out[out.key == "onlyA"]
+    # the cases are really there: the NULL key has detections inside
+    # its forecasts' reach, the A-only key forecasts but never detects
+    assert null_rows.is_detection.any() and (~null_rows.is_detection).any()
+    assert len(only_a) > 0 and not only_a.is_detection.any()
+    ref = _assert_confusion_is_reference(fcep, df)
+    null_ref = ref[ref.key.isna()].iloc[0]
+    assert null_ref.tp == 0 and null_ref.fn == 0  # a NULL key never hits
+    assert int(ref.tp.sum()) > 0
+
+
+def test_confusion_equals_reference_windowed_pattern(spark, small_arrow_batches):
+    df = _ab_stream(spark)
+    windowed = PAT_AB + "{window:4}"
+    fcep = _ab_forecaster(df, windowed)
+    assert fcep.compiled.window > 0
+    _assert_confusion_is_reference(fcep, df)
+
+
+def test_confusion_equals_reference_finance_order3(spark, small_arrow_batches):
+    from tests.test_finance_trajectory import DECLS, PATTERN, synth_finance
+
+    df = spark.createDataFrame(synth_finance(n_cards=12, n_events=200, seed=5))
+    compiled = compile_pattern(PATTERN, DECLS)
+    cep = BatchCEP(compiled, key_col="pan", ts_col="timestamp", id_col="id")
+    spst = train_spst(
+        cep.symbolized(df), compiled, max_order=3,
+        pmin=1e-4, gamma_min=0.001, r=1.05, horizon=10,
+    )
+    fcep = ForecastCEP(
+        spst, key_col="pan", ts_col="timestamp", id_col="id",
+        method="classify_nextk", confidence_threshold=0.3, spread=5,
+    )
+    ref = _assert_confusion_is_reference(fcep, df)
+    assert (ref[CONFUSION].sum() > 0).all()
+
+
+def test_confusion_of_empty_input_is_zero(spark):
+    df = _ab_stream(spark)
+    fcep = _ab_forecaster(df)
+    empty = df.limit(0)
+    assert fcep.confusion(empty) == dict.fromkeys(CONFUSION, 0)
+    _assert_confusion_is_reference(fcep, empty)

@@ -259,3 +259,27 @@ def test_no_nested_loop_joins_sneak_into_registry(spark):
         if n:
             offenders[name] = n
     assert set(offenders) <= allowed, offenders
+
+
+def test_forecast_confusion_single_python_pass(spark):
+    """ForecastCEP.confusion scores inside the forecast kernel: one
+    hash shuffle on the key, ONE MapInPandas after it, and no join — a
+    regression to forecasts -> evaluate_forecasts (two Python passes of
+    the same kernel plus a range self-join) fails here."""
+    from tests.test_forecast import _ab_forecaster, _ab_stream
+
+    df = _ab_stream(spark)
+    cf = _ab_forecaster(df)._confusion_frame(df)
+    plan = cf._sc._jvm.PythonSQLUtils.explainString(
+        cf._jdf.queryExecution(), "formatted"
+    )
+    # formatted plans number nodes bottom-up; the detail section lists
+    # each node once as "(n) Name"
+    maps = re.findall(r"^\((\d+)\) MapInPandas", plan, re.M)
+    assert len(maps) == 1
+    key_exchanges = re.findall(
+        r"^\((\d+)\) Exchange\n[^\n]*\nArguments: hashpartitioning\(key", plan, re.M
+    )
+    assert len(key_exchanges) == 1
+    assert int(key_exchanges[0]) < int(maps[0])
+    assert "Join" not in plan
