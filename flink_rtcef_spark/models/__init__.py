@@ -10,7 +10,7 @@ operator.
 from flink_rtcef_spark.models.cst import CounterSuffixTree, cst_counts_spark
 from flink_rtcef_spark.models.pst import PredictionSuffixTree, learn_pst
 from flink_rtcef_spark.models.wt import WtDistribution, Forecast
-from flink_rtcef_spark.models.spst import SPST, train_spst
+from flink_rtcef_spark.models.spst import SPST, spst_from_cst, train_spst
 
 __all__ = [
     "CounterSuffixTree",
@@ -20,5 +20,6 @@ __all__ = [
     "WtDistribution",
     "Forecast",
     "SPST",
+    "spst_from_cst",
     "train_spst",
 ]

@@ -112,10 +112,13 @@ def cst_counts_spark(
     ts_col: str = "ts",
     id_col: str = "event_id",
     sym_col: str = "symbol",
+    total: int | None = None,
 ) -> tuple[dict[tuple[int, ...], int], int]:
     """Distributed context counting (E2+E3): per-key ordered lag columns
     give each position its word of the last k symbols (k=1..maxOrder+1,
     most-recent-first); one explode + groupBy counts every context.
+    ``total`` is ``sym_df``'s row count when the caller already has it
+    (otherwise one more job counts it).
 
     Scale shape: one shuffle for the per-key window sort, one for the
     count aggregation; output size is bounded by distinct observed
@@ -141,7 +144,8 @@ def cst_counts_spark(
     counts_pdf: pd.DataFrame = (
         exploded.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")).toPandas()
     )
-    total = sym_df.count()
+    if total is None:
+        total = sym_df.count()
     counts = {
         tuple(int(x) for x in word.split("|")): int(cnt)
         for word, cnt in zip(counts_pdf["word"], counts_pdf["cnt"])

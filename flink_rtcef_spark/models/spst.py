@@ -175,6 +175,33 @@ class SPST:
         return table
 
 
+def spst_from_cst(
+    cst: CounterSuffixTree,
+    compiled: CompiledPattern,
+    max_order: int,
+    pmin: float = 0.001,
+    alpha: float = 0.0,
+    gamma_min: float = 0.001,
+    r: float = 1.05,
+    horizon: int = 0,
+    cutoff: float = 1e-3,
+    distance: tuple[float, float] = (-1.0, -1.0),
+) -> SPST:
+    """The driver half of the train path: PST learn -> virtual-state
+    expansion -> wt distributions.  Reads ``cst`` without changing it,
+    so one CST serves every (pMin, gamma) of an optimisation session."""
+    symbols = list(range(len(compiled.minterms)))
+    pst = learn_pst(
+        cst, symbols, max_order, pmin, alpha, gamma_min, r, variant=True, with_missing=True
+    )
+    spst = SPST(compiled=compiled, pst=pst, max_order=max_order)
+    spst._expand()
+    if horizon > 0:
+        spst.compute_wt_dists(horizon, cutoff)
+        spst.filter_by_distance(*distance)
+    return spst
+
+
 def train_spst(
     sym_df: DataFrame,
     compiled: CompiledPattern,
@@ -190,17 +217,9 @@ def train_spst(
 ) -> SPST:
     """The G7 in-memory train path as Spark-first stages
     (WayebAdapter.trainInMemory:39-79 parity): distributed context
-    counting -> driver PST learn -> virtual-state expansion -> wt
-    distributions.  ``sym_df`` is the symbolized stream (output of
-    BatchCEP.symbolized)."""
-    cst: CounterSuffixTree = cst_from_spark(sym_df, max_order, **cst_cols)
-    symbols = list(range(len(compiled.minterms)))
-    pst = learn_pst(
-        cst, symbols, max_order, pmin, alpha, gamma_min, r, variant=True, with_missing=True
+    counting (``cst_from_spark``), then ``spst_from_cst``.  ``sym_df``
+    is the symbolized stream (output of BatchCEP.symbolized)."""
+    return spst_from_cst(
+        cst_from_spark(sym_df, max_order, **cst_cols), compiled, max_order,
+        pmin, alpha, gamma_min, r, horizon, cutoff, distance,
     )
-    spst = SPST(compiled=compiled, pst=pst, max_order=max_order)
-    spst._expand()
-    if horizon > 0:
-        spst.compute_wt_dists(horizon, cutoff)
-        spst.filter_by_distance(*distance)
-    return spst

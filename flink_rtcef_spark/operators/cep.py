@@ -307,6 +307,16 @@ class BatchCEP:
             self.compiled.symbol_column().alias("symbol"),
         )
 
+    def key_sorted(self, df: DataFrame) -> DataFrame:
+        """The one shuffle of every per-key kernel: ``symbolized(df)``
+        hash-partitioned on the key, each partition sorted by (key, ts,
+        event_id)."""
+        return (
+            self.symbolized(df)
+            .repartition("key")
+            .sortWithinPartitions("key", "ts", "event_id")
+        )
+
     def detections(self, df: DataFrame, fused: bool = True) -> DataFrame:
         """(key, detection_event_id, detection_ts, counter, min_counter,
         n_matched) — one row per full match, per key.
@@ -318,7 +328,6 @@ class BatchCEP:
         groupBy().applyInPandas but one Python invocation per batch
         instead of per key — the per-group overhead dominates when keys
         are many and small (the common CEP regime)."""
-        sym_df = self.symbolized(df)
         delta, take, finals = transition_tables(self.compiled.sdfa)
         window = self.compiled.window
         window_type = self.compiled.window_type
@@ -346,7 +355,9 @@ class BatchCEP:
                 key = pdf["key"].iloc[0]
                 return pd.DataFrame([(key, *r) for r in rows], columns=columns)
 
-            return sym_df.groupBy("key").applyInPandas(run_group, schema=schema)
+            return (
+                self.symbolized(df).groupBy("key").applyInPandas(run_group, schema=schema)
+            )
 
         def run_partition(batches):
             # state of the key spanning a batch boundary:
@@ -391,8 +402,4 @@ class BatchCEP:
                     start = end
                 yield pd.DataFrame(out, columns=columns)
 
-        return (
-            sym_df.repartition("key")
-            .sortWithinPartitions("key", "ts", "event_id")
-            .mapInPandas(run_partition, schema=schema)
-        )
+        return self.key_sorted(df).mapInPandas(run_partition, schema=schema)

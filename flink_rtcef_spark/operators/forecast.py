@@ -263,15 +263,6 @@ class ForecastCEP(BatchCEP):
             self.compiled.reset_symbols(),
         )
 
-    def _key_sorted(self, df: DataFrame) -> DataFrame:
-        """The one shuffle: (key, ts, event_id, symbol) hash-partitioned
-        on the key, each partition sorted by (key, ts, event_id)."""
-        return (
-            self.symbolized(df)
-            .repartition("key")
-            .sortWithinPartitions("key", "ts", "event_id")
-        )
-
     def forecasts(
         self,
         df: DataFrame,
@@ -310,21 +301,30 @@ class ForecastCEP(BatchCEP):
             for segs in _key_segments(batches, fresh, step):
                 yield pd.concat([frame for _, _, frame in segs])
 
-        return self._key_sorted(df).mapInPandas(run_partition, schema=schema)
+        return self.key_sorted(df).mapInPandas(run_partition, schema=schema)
 
     def confusion(self, df: DataFrame) -> dict[str, int]:
         """Global confusion counts {"tp", "tn", "fp", "fn"} of this
         model's forecasts on ``df``: the column sums of
         ``evaluate_forecasts(self.forecasts(df))`` (its reference), in
         one shuffle and one Python pass instead of two passes and a
-        range self-join.  Each key is scored against its own detection
-        counters when its run closes; per-partition counts finish in
-        one small aggregate."""
-        row = self._confusion_frame(df).collect()[0]
-        return {c: int(row[c] or 0) for c in CONFUSION_COLUMNS}
+        range self-join."""
+        return self.confusion_key_sorted(self.key_sorted(df))
+
+    def confusion_key_sorted(self, sorted_df: DataFrame) -> dict[str, int]:
+        """``confusion`` of a frame already in ``key_sorted`` shape (or a
+        materialization of one): one Python pass and no Exchange.  Each
+        key is scored against its own detection counters when its run
+        closes; the per-partition count rows are summed on the driver."""
+        rows = self._partition_counts(sorted_df).collect()
+        return {c: sum(int(r[c]) for r in rows) for c in CONFUSION_COLUMNS}
 
     def _confusion_frame(self, df: DataFrame) -> DataFrame:
-        """``confusion``'s one-row plan (exposed for the plan audit)."""
+        """``confusion``'s plan (exposed for the plan audit)."""
+        return self._partition_counts(self.key_sorted(df))
+
+    def _partition_counts(self, sorted_df: DataFrame) -> DataFrame:
+        """One (tp, tn, fp, fn) row per partition of ``sorted_df``."""
         main_tables = self._tables(self.spst)
 
         def step(key, syms, tss, ids, init):
@@ -344,10 +344,8 @@ class ForecastCEP(BatchCEP):
                 counts += _score_key(key, pieces)
             yield pd.DataFrame([counts], columns=CONFUSION_COLUMNS)
 
-        return (
-            self._key_sorted(df)
-            .mapInPandas(score_partition, schema="tp long, tn long, fp long, fn long")
-            .agg(*(F.sum(c).alias(c) for c in CONFUSION_COLUMNS))
+        return sorted_df.mapInPandas(
+            score_partition, schema="tp long, tn long, fp long, fn long"
         )
 
 

@@ -18,6 +18,7 @@ differences.md spirit:
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,9 +28,11 @@ from flink_rtcef_spark.models.spst import SPST
 from flink_rtcef_spark.operators.forecast import ForecastCEP
 from flink_rtcef_spark.plans.compiler import CompiledPattern
 from flink_rtcef_spark.streaming.collector import BucketCollector
-from flink_rtcef_spark.streaming.factory import ModelFactory, _mcc
+from flink_rtcef_spark.streaming.factory import ModelFactory, TrainingSet, TrainResult, _mcc
 from flink_rtcef_spark.streaming.observer import Instruction, Observer
 from flink_rtcef_spark.streaming.optimizer import BayesLiteOptimizer
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -38,6 +41,7 @@ class ReportPoint:
     runtime_mcc: float
     batch_mcc: float
     event: str = ""  # "" | optimize | retrain | deploy
+    cause: str = ""  # TrainResult.cause of the instruction's last failed train
 
 
 @dataclass
@@ -85,45 +89,49 @@ class RTCEFLoop:
         return runtime, batch_mcc, counts
 
     # -------------------------------------------------------- controller
-    def _run_optimize_session(self, events: DataFrame) -> tuple[SPST | None, str]:
-        """PAUSE -> ask/tell loop -> retrain best -> PLAY with deploy
-        (controller_coprocess.py:130-155 + optimizer.py:242-395)."""
+    def _run_optimize_session(self, data: TrainingSet) -> list[TrainResult]:
+        """PAUSE -> ask/tell loop -> retrain best -> PLAY
+        (controller_coprocess.py:130-155 + optimizer.py:242-395).
+        Returns every evaluation's result, the final retrain last."""
         self.paused = True
         opt = BayesLiteOptimizer(self.opt_space, n_initial=self.n_initial, seed=self.seed)
+        results = []
         for _ in range(self.n_opt_evals):
             x = opt.ask()
-            result = self.factory.train_and_test(events, pmin=x[0], gamma=x[1])
+            result = self.factory.train_and_test(data, pmin=x[0], gamma=x[1])
             opt.tell(x, result.f_val if result.status == "success" else 0.0)
+            results.append(result)
         best_x, _ = opt.best
-        final = self.factory.train_and_test(events, pmin=best_x[0], gamma=best_x[1])
+        results.append(self.factory.train_and_test(data, pmin=best_x[0], gamma=best_x[1]))
         self.paused = False
-        if final.status == "success":
-            return final.spst, "deploy"
-        return None, ""
+        return results
 
-    def _run_retrain(self, events: DataFrame, pmin: float, gamma: float) -> tuple[SPST | None, str]:
-        result = self.factory.train_and_test(events, pmin=pmin, gamma=gamma)
-        if result.status == "success":
-            return result.spst, "deploy"
-        return None, ""
-
-    def handle_instruction(self, instr: Instruction) -> str:
-        """Assemble the last-K dataset and run the corresponding factory
-        session; swap the model on success (G4, microbatch granularity)."""
+    def handle_instruction(self, instr: Instruction) -> tuple[str, str]:
+        """Assemble the last-K dataset, prepare it once, and run the
+        corresponding factory session on it; swap the model on success
+        (G4, microbatch granularity).  Returns (event, cause): "deploy"
+        or "", and the cause of the session's last failed train."""
         covered = sorted(self.collector.seen_buckets)[-self.collector.last_k :]
         if not covered:
-            return ""
-        events = self.collector.assemble(self.spark, covered)
-        if instr.instruction_type == "optimize":
-            new_model, event = self._run_optimize_session(events)
-        else:
-            new_model, event = self._run_retrain(events, pmin=0.001, gamma=0.001)
+            return "", ""
+        assembled = self.collector.assemble(self.spark, covered)
+        with self.factory.prepare(assembled) as data:
+            if instr.instruction_type == "optimize":
+                results = self._run_optimize_session(data)
+            else:
+                results = [self.factory.train_and_test(data, pmin=0.001, gamma=0.001)]
         self.collector.ack(covered)
-        if new_model is not None:
-            self.model = new_model
-            # per-key stats reset on swap (WayebEngine.java:246-292)
-            self.cum = {"tp": 0, "tn": 0, "fp": 0, "fn": 0}
-        return event
+        failed = [r for r in results if r.status != "success"]
+        for r in failed:
+            log.warning("%s train failed for %s: %s", instr.instruction_type, r.params, r.cause)
+        cause = failed[-1].cause if failed else ""
+        final = results[-1]
+        if final.status != "success":
+            return "", cause
+        self.model = final.spst
+        # per-key stats reset on swap (WayebEngine.java:246-292)
+        self.cum = {"tp": 0, "tn": 0, "fp": 0, "fn": 0}
+        return "deploy", cause
 
     # -------------------------------------------------------------- loop
     def process_batch(self, batch: DataFrame, batch_ts: int) -> ReportPoint | None:
@@ -138,7 +146,7 @@ class RTCEFLoop:
         )
         if instr is not None:
             point.event = instr.instruction_type
-            deployed = self.handle_instruction(instr)
+            deployed, point.cause = self.handle_instruction(instr)
             if deployed:
                 point.event += "+deploy"
         self.metrics.append(point)

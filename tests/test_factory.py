@@ -40,7 +40,7 @@ def test_training_error_keeps_cause_and_logs_traceback(spark, monkeypatch, caplo
     def broken_train(*args, **kwargs):
         raise RuntimeError("tree exploded")
 
-    monkeypatch.setattr(factory_mod, "train_spst", broken_train)
+    monkeypatch.setattr(factory_mod, "spst_from_cst", broken_train)
     with caplog.at_level(logging.ERROR, logger=factory_mod.__name__):
         res = _factory().train_and_test(_events(spark, 2 * MIN_EVENTS), 0.001, 0.001)
     assert res.status == "error" and res.spst is None

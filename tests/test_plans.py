@@ -283,3 +283,55 @@ def test_forecast_confusion_single_python_pass(spark):
     assert len(key_exchanges) == 1
     assert int(key_exchanges[0]) < int(maps[0])
     assert "Join" not in plan
+
+
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def test_prepare_is_one_key_shuffle(spark, monkeypatch):
+    """ModelFactory.prepare materializes ONE hash shuffle on the key
+    (symbolize -> repartition -> sortWithinPartitions), once per
+    session: the plan it checkpoints is captured at the checkpoint."""
+    from tests.test_forecast import _ab_forecaster, _ab_stream
+    from flink_rtcef_spark.streaming.factory import ModelFactory
+
+    df = _ab_stream(spark)
+    fcep = _ab_forecaster(df)
+    factory = ModelFactory(fcep.compiled, key_col="k", ts_col="timestamp", id_col="id")
+    plans = []
+    cls = type(df)
+    checkpoint = cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(_formatted(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    with factory.prepare(df):
+        pass
+    [plan] = plans
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
+    assert len(re.findall(
+        r"^\(\d+\) Exchange\n[^\n]*\nArguments: hashpartitioning\(key", plan, re.M
+    )) == 1
+    assert "MapInPandas" not in plan
+
+
+def test_prepared_score_pass_has_no_exchange(spark):
+    """Scoring on a prepared training set reuses its key shuffle: ONE
+    MapInPandas straight over the materialized frame, no Exchange, and
+    on AQE's coalesced partitions (a persist() of the shuffle would
+    keep all spark.sql.shuffle.partitions of them)."""
+    from tests.test_forecast import _ab_forecaster, _ab_stream
+    from flink_rtcef_spark.streaming.factory import ModelFactory
+
+    df = _ab_stream(spark)
+    fcep = _ab_forecaster(df)
+    factory = ModelFactory(fcep.compiled, key_col="k", ts_col="timestamp", id_col="id")
+    with factory.prepare(df) as data:
+        plan = _formatted(fcep._partition_counts(data.frame))
+        assert data.frame.rdd.getNumPartitions() == 1
+    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1
+    assert "Exchange" not in plan
+    assert "Join" not in plan
