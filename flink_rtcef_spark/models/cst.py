@@ -156,5 +156,7 @@ def cst_counts_spark(
 def cst_from_spark(
     sym_df: DataFrame, max_order: int, **cols
 ) -> CounterSuffixTree:
+    """`CounterSuffixTree` from `cst_counts_spark`; pass `total=` when
+    the row count is known, to skip its count job."""
     counts, total = cst_counts_spark(sym_df, max_order, **cols)
     return CounterSuffixTree.from_counts(counts, total)

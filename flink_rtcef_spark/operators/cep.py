@@ -276,7 +276,9 @@ def _run_sdfa_batch_vectorized(
 
 
 class BatchCEP:
-    """Batch Complex Event Recognition over a DataFrame.
+    """Batch Complex Event Recognition over a DataFrame; `key_sorted` is
+    the one key shuffle of every per-key kernel (detections, forecasts,
+    the scorer and `ModelFactory.prepare`).
 
     >>> cep = BatchCEP(compiled, key_col="user_id", ts_col="ts", id_col="event_id")
     >>> detections = cep.detections(events_df)

@@ -18,6 +18,8 @@ oracles can verify):
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 
@@ -25,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_rtcef_spark.functions.scalar import portable_hash64
+
+log = logging.getLogger(__name__)
 
 MINHASH_P = 2147483647  # 2^31 - 1
 
@@ -546,8 +550,14 @@ def embedding_near_dup_auto(
         stats_rows = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
         if stats_rows.isDefined():
             n = int(str(stats_rows.get()))
-    except Exception:
-        pass  # py4j surface changed or non-classic DataFrame: fall through
+    except Exception as exc:
+        # py4j surface changed or non-classic DataFrame: the probe
+        # below still routes correctly, but say why it runs
+        log.warning(
+            "embedding_near_dup_auto: no catalog row count (%s: %s); "
+            "routing by the bounded limit(%d) probe instead",
+            type(exc).__name__, exc, broadcast_limit + 1,
+        )
     if n is None:
         # bounded probe: a LocalLimit stops the scan after limit+1 rows
         n = df.select(id_col).limit(broadcast_limit + 1).count()

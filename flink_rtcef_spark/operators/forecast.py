@@ -235,7 +235,9 @@ def _key_segments(batches, fresh, step):
 
 class ForecastCEP(BatchCEP):
     """Recognition + forecasting over a keyed stream with one SPST:
-    ``forecasts`` emits the rows, ``confusion`` scores them."""
+    ``forecasts`` emits the rows, ``confusion`` scores them in one
+    shuffle and one Python pass (``confusion_key_sorted`` with none on a
+    ``key_sorted`` frame)."""
 
     def __init__(
         self,

@@ -67,6 +67,10 @@ class TrainingSet:
 
 
 class ModelFactory:
+    """In-memory train/test of SPST models: `prepare` builds a session's
+    `TrainingSet` once (one key shuffle, one count, one context count);
+    `train_and_test` trains one (pMin, gamma) on it and scores it."""
+
     def __init__(
         self,
         compiled: CompiledPattern,

@@ -48,9 +48,55 @@ of them; the uniform-random-keys worst case degrades gracefully to
 the full rewrite.  At production scale the state table is a normal
 columnar table — re-clustering, TTL sweeps, and inspection are plain
 DataFrame operations rather than state-store internals.
+
+The protocol contract, for both automata.  One skeleton
+(:func:`_make_foreach_batch`) runs every microbatch of the SDFA path
+here and of the register (SREMO/NSRA) path in
+streaming/fastpath_register.py; a kernel spec supplies only its event
+and state columns and ``load``/``step``/``dump`` around its segment
+kernel (plus, for the SDFA, a pure-JVM fold).  Every route of both
+kernels keeps this contract:
+
+- routes: ``driver`` advances the batch on the driver with zero Spark
+  jobs; ``sql`` runs the JVM fold (SDFA only); ``arrow`` runs the
+  fused mapInPandas kernel; ``auto`` goes driver when a bounded
+  ``limit(driver_max_rows + 1)`` probe of the batch AND the manifest's
+  counts of its touched buckets' carried state (no scan) fit, else
+  distributed (``sql`` where a fold exists, else ``arrow``).  All
+  routes speak the same versioned-bucketed-state protocol, so the
+  route can flip per batch with no state migration; each version's
+  manifest records the route that wrote it (``engine_used``).
+- rows with a NULL key are dropped before any route runs: a keyed run
+  over a null key is undefined — the reference's keyBy raises on null
+  keys (InferenceJob.java keyBy(mmsi)) — and per-engine null handling
+  would otherwise diverge (pandas groupby vs JVM groupBy null groups).
+- Spark actions per microbatch: the driver route runs NONE beyond the
+  routing collect that doubles as the batch read; the distributed
+  routes run the probe (auto only), one tiny per-bucket count
+  aggregate (touched buckets + group sizing), on the arrow route one
+  count that materializes the passive/active split, and the write of
+  the kernel's rows (kind 0 = detection, kind 1 = one state row per
+  live key) into ``v{batch_id+1}`` (layout and footer-statistics
+  recovery: streaming/state_table.py).
+- a carried key with no events in the batch writes its state row back
+  unchanged: verbatim on the driver route (the key walk passes it
+  through) and the arrow route (the passive/active split keeps it out
+  of the kernel); the sql fold re-emits it from its pseudo-event.
+- no int64 column passes through float64: each side of the (state ∪
+  event) union fills the other's integer columns with typed zeros, and
+  the kernel's output frame keeps Python ints, so event ids above
+  2**53 survive every route.
+- ``sink(detections_df, batch_id)``, if given, receives a LAZY view
+  over the written detections (a no-op sink pays nothing).  Old
+  versions are GC'd after ``keep_versions`` batches EXCEPT bucket dirs
+  a live manifest still references; a sink that wants a durable
+  detection history must write it onward — the standard foreachBatch
+  delivery contract.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -58,6 +104,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from flink_rtcef_spark.operators.cep import _run_sdfa_segment
 from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
@@ -68,28 +115,6 @@ from flink_rtcef_spark.streaming.inference import _with_event_time
 # any real event of their key (ts = _STATE_TS)
 _STATE_TS = -(1 << 62)
 
-# kind 0 = detection, 1 = carried state
-_OUT_SCHEMA = (
-    "kind int, key string, event_id long, ts long, counter long, "
-    "min_counter long, n_matched int, state int, min_ts long, last_ts long"
-)
-_OUT_COLUMNS = [
-    "kind", "key", "event_id", "ts", "counter", "min_counter", "n_matched",
-    "state", "min_ts", "last_ts",
-]
-
-STATE_COLUMNS = [
-    "key", "state", "counter", "min_counter", "min_ts", "n_matched", "last_ts"
-]
-DETECTION_COLUMNS = [
-    "key", "detection_event_id", "detection_ts", "counter", "min_counter",
-    "n_matched",
-]
-_DET_SCHEMA = (
-    "key string, detection_event_id long, detection_ts long, counter long, "
-    "min_counter long, n_matched int"
-)
-
 #: default bound on the carried state rows the auto route will process
 #: driver-side.  Measured crossover (uniform-key bench, 10k-row
 #: batches, local[32], 9-batch wall): at 30k carried rows driver 6.7 s
@@ -98,192 +123,309 @@ _DET_SCHEMA = (
 #: fold somewhere above ~75k carried keys.
 DRIVER_MAX_STATE_ROWS = 75_000
 
+_ARROW_TYPES = {
+    "int": pa.int32(), "long": pa.int64(), "string": pa.string(),
+    "binary": pa.binary(),
+}
+_NUMPY_INTS = {"int": np.int32, "long": np.int64}
+# Spark's simple-string names of the integer types (DataFrame.dtypes)
+_SPARK_INTS = {"tinyint", "smallint", "int", "bigint", "long"}
 
-def _make_partition_runner(compiled: CompiledPattern):
-    """One fused pass over a partition of (state ∪ event) rows sorted by
-    (key, ts, event_id): pops each key's leading state row as carry-in,
-    advances the segment with the SAME kernel as BatchCEP, and emits the
-    key's carry-out as a kind=1 row when the key closes."""
-    delta, take, finals = transition_tables(compiled.sdfa)
-    window = compiled.window
-    window_type = compiled.window_type
-    resets = compiled.reset_symbols()
+
+class _OutSchema(NamedTuple):
+    """A kernel's output rows (kind 0 = detection, 1 = carried state)
+    as the Spark schema string, the Arrow schema, the column list and
+    the per-column Spark types, built by :func:`_out_schema` from one
+    field list."""
+
+    sql: str
+    arrow: pa.Schema
+    columns: list[str]
+    types: dict[str, str]
+
+
+def _out_schema(state_fields: list[tuple[str, str]]) -> _OutSchema:
+    """The output schema of a kernel whose carried state adds
+    ``state_fields`` to the detection columns every kernel writes; a
+    kind=1 row carries its state in ``counter``, ``min_counter``,
+    ``n_matched`` and ``state_fields``, then ``last_ts`` (the TTL and
+    watermark clock)."""
+    fields = [
+        ("kind", "int"), ("key", "string"), ("event_id", "long"),
+        ("ts", "long"), ("counter", "long"), ("min_counter", "long"),
+        ("n_matched", "int"), *state_fields, ("last_ts", "long"),
+    ]
+    return _OutSchema(
+        ", ".join(f"{n} {t}" for n, t in fields),
+        pa.schema([(n, _ARROW_TYPES[t]) for n, t in fields]),
+        [n for n, _ in fields],
+        dict(fields),
+    )
+
+
+_SDFA_OUT = _out_schema([("state", "int"), ("min_ts", "long")])
+_OUT_SCHEMA = _SDFA_OUT.sql
+
+
+class _SdfaSpec:
+    """The deterministic kernel: the per-key quintuple rides the state
+    row's typed columns, and ``step`` is BatchCEP's own
+    ``_run_sdfa_segment``."""
+
+    out = _SDFA_OUT
+
+    def __init__(self, compiled: CompiledPattern):
+        self.compiled = compiled
+        self.event_cols = ["key", "ts", "event_id", "symbol"]
+        self.delta, self.take, self.finals = transition_tables(compiled.sdfa)
+        self.window, self.window_type = compiled.window, compiled.window_type
+        self.resets = compiled.reset_symbols()
+
+    @staticmethod
+    def load(counter, min_counter, n_matched, state, min_ts):
+        return (
+            int(state), int(counter), int(min_counter), int(min_ts),
+            int(n_matched),
+        )
+
+    def step(self, cols, seg, carry):
+        return _run_sdfa_segment(
+            cols["symbol"][seg].astype(np.int64),
+            cols["ts"][seg].astype(np.int64),
+            cols["event_id"][seg].astype(np.int64),
+            self.delta, self.take, self.finals, self.window,
+            self.window_type, self.resets, carry,
+        )
+
+    @staticmethod
+    def dump(carry):
+        state, counter, min_counter, min_ts, n_matched = carry
+        return counter, min_counter, n_matched, state, min_ts
+
+    def jvm_fold(self) -> _SqlFold:
+        return _SqlFold(self.compiled)
+
+
+def _make_partition_runner(spec):
+    """The one key walk of every route: a fused pass over a partition
+    of (state ∪ event) rows sorted by (key, ts, event_id).  Key
+    segments come from one numpy comparison per Arrow batch (as in
+    operators/forecast._key_segments), and a key's carry is handed on
+    across batches.  A key's leading state row (ts = _STATE_TS sorts it
+    first) is its carry-in; the kernel ``load``s it only when the key
+    has events, and a key with none writes its row back verbatim, byte
+    for byte — at 1M uniform live keys almost every carried key rides
+    through here with no event.  The key's carry-out is emitted as a
+    kind=1 row when the key closes.
+
+    The output frame is built with object columns: inferring dtypes
+    from rows that mix ints and None would turn event ids into
+    float64 and corrupt every id above 2**53."""
+    out_cols = spec.out.columns
+    state_cols = out_cols[4:-1]
+    det_pad = (None,) * (len(out_cols) - 7)
 
     def run_partition(batches):
-        open_key = None
-        carry = None          # (state, counter, min_counter, min_ts, n_matched)
-        last_ts = -1          # carried last event ts for TTL accounting
         out: list[tuple] = []
+        key = None
+        raw = None            # the key's carried state values, unloaded
+        carry = None          # the kernel's carry once the key has events
+        active = False
+        last_ts = -1
 
         def close_key():
-            if open_key is not None:
-                s, c, mc, mts, nm = carry
-                out.append(
-                    (1, open_key, None, None, int(c), int(mc), int(nm),
-                     int(s), int(mts), int(last_ts))
-                )
+            if key is not None:
+                vals = spec.dump(carry) if active else raw
+                out.append((1, key, None, None, *vals, last_ts))
 
         for pdf in batches:
-            if len(pdf) == 0:
+            n = len(pdf)
+            if n == 0:
                 continue
-            keys = pdf["key"].to_numpy()
-            is_state = pdf["is_state"].to_numpy()
             # column-at-a-time numpy views: a per-key pdf.iloc[...] row
             # access costs ~50 us, which at 100k carried keys per
             # partition dominated the whole batch (measured 7 s/batch
             # pre-fix in the uniform key-cardinality bench)
-            c_state = pdf["state"].to_numpy()
-            c_counter = pdf["counter"].to_numpy()
-            c_min_counter = pdf["min_counter"].to_numpy()
-            c_min_ts = pdf["min_ts"].to_numpy()
-            c_n_matched = pdf["n_matched"].to_numpy()
+            keys = pdf["key"].to_numpy()
+            is_state = pdf["is_state"].to_numpy()
+            tss = pdf["ts"].to_numpy()
             c_last_ts = pdf["last_ts"].to_numpy()
-            all_syms = pdf["symbol"].to_numpy()
-            all_tss = pdf["ts"].to_numpy()
-            all_ids = pdf["event_id"].to_numpy()
-            n = len(keys)
-            start = 0
-            while start < n:
-                end = start
+            c_state = [pdf[c].to_numpy() for c in state_cols]
+            cols = {c: pdf[c].to_numpy() for c in spec.event_cols}
+            bounds = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1), n]
+            for start, end in zip(bounds[:-1], bounds[1:]):
                 k = keys[start]
-                while end < n and keys[end] == k:
-                    end += 1
-                if k != open_key:
+                if k != key:
                     close_key()
-                    open_key, carry, last_ts = k, (0, 0, -1, -1, 0), -1
-                seg = slice(start, end)
-                st_mask = is_state[seg]
-                if st_mask.any():
-                    # the state row sorts first within the key
-                    carry = (
-                        int(c_state[start]), int(c_counter[start]),
-                        int(c_min_counter[start]), int(c_min_ts[start]),
-                        int(c_n_matched[start]),
-                    )
+                    key, raw, carry, active, last_ts = k, None, None, False, -1
+                if is_state[start]:
+                    raw = tuple(c[start] for c in c_state)
                     last_ts = int(c_last_ts[start])
-                    start += int(st_mask.sum())
-                    seg = slice(start, end)
+                    start += int(is_state[start:end].sum())
                 if start < end:
-                    syms = all_syms[seg].astype(np.int64)
-                    tss = all_tss[seg].astype(np.int64)
-                    ids = all_ids[seg].astype(np.int64)
-                    rows, carry = _run_sdfa_segment(
-                        syms, tss, ids, delta, take, finals, window,
-                        window_type, resets, carry,
-                    )
-                    last_ts = max(last_ts, int(tss[-1]))
+                    if not active:
+                        carry = None if raw is None else spec.load(*raw)
+                        active = True
+                    rows, carry = spec.step(cols, slice(start, end), carry)
+                    last_ts = max(last_ts, int(tss[end - 1]))
                     out.extend(
                         (0, k, int(eid), int(ets), int(c), int(mc), int(nm),
-                         None, None, None)
+                         *det_pad)
                         for (eid, ets, c, mc, nm) in rows
                     )
-                start = end
         close_key()
-        yield pd.DataFrame(out, columns=_OUT_COLUMNS)
+        yield pd.DataFrame(out, columns=out_cols, dtype=object)
 
     return run_partition
 
 
-_OUT_PA_SCHEMA = pa.schema(
-    [
-        ("kind", pa.int32()),
-        ("key", pa.string()),
-        ("event_id", pa.int64()),
-        ("ts", pa.int64()),
-        ("counter", pa.int64()),
-        ("min_counter", pa.int64()),
-        ("n_matched", pa.int32()),
-        ("state", pa.int32()),
-        ("min_ts", pa.int64()),
-        ("last_ts", pa.int64()),
-    ]
-)
-
-
 def _driver_batch(
+    spec,
     runner,
-    events_pdf: pd.DataFrame,
+    ev: pd.DataFrame,
+    touched: list[int],
     state_dir: str,
     batch_id: int,
     meta: dict,
     state_ttl_ms: int,
 ) -> tuple[dict[int, int], int | None, int]:
-    """Advance one SMALL microbatch entirely on the driver: no Spark
-    job.  Returns (per-touched-bucket state row counts, max carried
-    last_ts, group size used) — the manifest/watermark inputs, known
-    here without any read-back because the writer has the frame in
-    hand.
+    """Advance one SMALL microbatch — its live events ``ev``, touching
+    the buckets ``touched`` — entirely on the driver: no Spark job.
+    Returns :func:`stt.write_driver_output`'s manifest inputs.
 
     A distributed plan has a ~0.35 s floor per microbatch on this
     workload (measured: task scheduling + shuffle + commit — independent
     of row count), which caps sustained small-batch throughput.  When
     the batch AND its touched-bucket state fit in driver memory the
-    same fused kernel (_make_partition_runner → _run_sdfa_segment,
-    identical semantics) runs over one pandas frame in ~10 ms, and the
-    state buckets are written with one pyarrow ``write_dataset``.  The
-    versioned-state protocol — read ``v{b}``'s manifest, write
-    ``v{b+1}``'s touched buckets, idempotent replay — is byte-identical
-    to the distributed engines', so a query can cross the routing
-    threshold mid-stream (batch b driver-side, batch b+1 distributed)
-    without any state migration.  This is the microbatch analogue of
-    AQE's local-shuffle-reader: pick the non-distributed physical
-    strategy when the stats say distribution costs more than it buys."""
+    same fused kernel (_make_partition_runner, identical semantics)
+    runs over one pandas frame in ~10 ms, and the state buckets are
+    written with one pyarrow ``write_dataset``.  The versioned-state
+    protocol — read ``v{b}``'s manifest, write ``v{b+1}``'s touched
+    buckets, idempotent replay — is byte-identical to the distributed
+    routes', so a query can cross the routing threshold mid-stream
+    (batch b driver-side, batch b+1 distributed) without any state
+    migration.  This is the microbatch analogue of AQE's
+    local-shuffle-reader: pick the non-distributed physical strategy
+    when the stats say distribution costs more than it buys."""
     wm = meta["watermark_ms"]
-    num_buckets = meta["num_buckets"]
-    ev = events_pdf
-    if wm is not None:
-        ev = ev[ev["ts"] >= int(wm)]
-    touched = stt.touched_buckets_of(ev["key"], num_buckets)
-
-    frames = []
     st = stt.read_state_pandas(meta, state_dir, touched)
-    if st is not None and len(st):
-        if state_ttl_ms > 0 and wm is not None:
-            st = st[~(int(wm) > st["last_ts"] + state_ttl_ms)]
-        if len(st):
-            st = st.assign(
-                ts=np.int64(_STATE_TS),
-                event_id=np.int64(0),
-                symbol=np.int32(0),
-                is_state=True,
-            )
-            frames.append(
-                st[
-                    ["key", "ts", "event_id", "symbol", "is_state", "state",
-                     "counter", "min_counter", "min_ts", "n_matched", "last_ts"]
-                ]
-            )
-    if len(ev):
-        ev = ev.assign(
-            is_state=False, state=None, counter=None, min_counter=None,
-            min_ts=None, n_matched=None, last_ts=None,
-        )
-        frames.append(
-            ev[
-                ["key", "ts", "event_id", "symbol", "is_state", "state",
-                 "counter", "min_counter", "min_ts", "n_matched", "last_ts"]
-            ]
-        )
-    if frames:
-        wide = pd.concat(frames, ignore_index=True)
-        wide = wide.sort_values(
-            ["key", "ts", "event_id"], kind="stable"
-        ).reset_index(drop=True)
-        out = next(runner([wide]))
-    else:
-        out = pd.DataFrame(columns=_OUT_COLUMNS)
-
-    return stt.finish_driver_kernel_output(
-        out, touched, meta, _OUT_PA_SCHEMA, state_dir, batch_id
+    if st is not None and state_ttl_ms > 0 and wm is not None:
+        st = st[~(int(wm) > st["last_ts"] + state_ttl_ms)]
+    out = next(runner([_wide_frame(spec, ev, st)]))
+    return stt.write_driver_output(
+        out, touched, meta, spec.out.arrow, state_dir, batch_id
     )
 
 
-class _SqlEngineExprs:
-    """Column expression trees for the JVM microbatch plan, built ONCE
+def _wide_frame(spec, ev: pd.DataFrame, st) -> pd.DataFrame:
+    """The driver route's (state ∪ event) frame in the kernel's input
+    shape, sorted by (key, ts, event_id).  Each side fills the other's
+    integer columns with typed zeros (never read: ``is_state`` tells
+    the walk which side a row is on): a concat that introduced NaN
+    would upcast the unified column to float64, which corrupts int64
+    values above 2**53 (event ids, long register attrs).  The other
+    columns take the concat's nulls, as the distributed routes'
+    typed-null fills do."""
+    state_cols = spec.out.columns[4:]
+    types = spec.out.types
+    ev = ev.assign(
+        is_state=False,
+        **{
+            c: np.zeros(len(ev), dtype=_NUMPY_INTS[types[c]])
+            if types[c] in _NUMPY_INTS else None
+            for c in state_cols
+        },
+    )
+    if st is not None and len(st):
+        st = st[["key", *state_cols]].assign(
+            ts=np.int64(_STATE_TS),
+            is_state=True,
+            **{
+                c: np.zeros(len(st), dtype=ev[c].dtype)
+                for c in spec.event_cols
+                if c not in ("key", "ts")
+                and pd.api.types.is_integer_dtype(ev[c].dtype)
+            },
+        )
+        ev = pd.concat([st, ev], ignore_index=True)[list(ev.columns)]
+    return ev.sort_values(
+        ["key", "ts", "event_id"], kind="stable"
+    ).reset_index(drop=True)
+
+
+def _arrow_plan(spec, runner, events: DataFrame, carried: DataFrame | None):
+    """The distributed arrow route: one hash shuffle of (events ∪
+    ACTIVE carried state) on the key, a within-partition sort, and the
+    key walk as one Arrow-batched pass.  Returns (output rows, the
+    persisted frame the caller must unpersist after the write, or
+    None).
+
+    PASSIVE/ACTIVE split: a carried key with no events this batch
+    writes back verbatim, so it never needs the shuffle+sort+Arrow+
+    Python pass at all — only keys the batch actually touches ride the
+    kernel.  Uniform keys over a large live population are the case
+    this pays for (10k batch keys vs 1M carried rows: the kernel sees
+    1% of the state); the batch-key side is a distinct over the batch,
+    small enough that AQE broadcasts it.  ONE state scan (r8 ADVICE):
+    an anti- plus a semi-join would read the touched buckets' parquet
+    twice, so left-join a hit flag instead and persist the flagged
+    frame — the split becomes two cache filters, and the count()
+    materializes the cache before the write job's two consumers can
+    race to recompute the scan."""
+
+    def fill(c, t):
+        # typed zeros for the other side's integer columns, as in
+        # _wide_frame, else typed nulls
+        return F.lit(0 if t in _SPARK_INTS else None).cast(t).alias(c)
+
+    ev_types = dict(events.dtypes)
+    state_cols = spec.out.columns[4:]
+    unioned = events.select(
+        *spec.event_cols,
+        F.lit(False).alias("is_state"),
+        *[fill(c, spec.out.types[c]) for c in state_cols],
+    )
+    passive = flagged = None
+    if carried is not None:
+        batch_keys = events.select("key").distinct().withColumn(
+            "__hit", F.lit(True)
+        )
+        flagged = carried.join(batch_keys, "key", "left").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        flagged.count()
+        passive = flagged.filter(F.col("__hit").isNull()).drop("__hit")
+        active = flagged.filter(F.col("__hit").isNotNull())
+        unioned = unioned.unionByName(
+            active.select(
+                "key",
+                F.lit(_STATE_TS).alias("ts"),
+                *[
+                    fill(c, ev_types[c])
+                    for c in spec.event_cols if c not in ("key", "ts")
+                ],
+                F.lit(True).alias("is_state"),
+                *state_cols,
+            )
+        )
+    out = (
+        unioned.repartition("key")
+        .sortWithinPartitions("key", "ts", "event_id")
+        .mapInPandas(runner, schema=spec.out.sql)
+    )
+    if passive is not None:
+        out = out.unionByName(passive)
+    return out, flagged
+
+
+
+class _SqlFold:
+    """The SDFA microbatch as a 100% JVM plan with ONE shuffle
+    (plans/sql_kernel.py).  Column expression trees are built ONCE
     per query (not per batch): the fold lambda alone is a multi-KB SQL
-    string whose re-parse cost (~100 ms/batch, measured) would otherwise
-    land on every microbatch's critical path.  Columns are stateless
-    expression trees, safe to reuse across DataFrames."""
+    string whose re-parse cost (~100 ms/batch, measured) would
+    otherwise land on every microbatch's critical path.  Columns are
+    stateless expression trees, safe to reuse across DataFrames."""
 
     def __init__(self, compiled: CompiledPattern):
         from flink_rtcef_spark.plans.sql_kernel import fold_column
@@ -326,122 +468,94 @@ class _SqlEngineExprs:
             "    'min_ts', r.mts, 'last_ts', r.lt))"
         )
 
-
-def _jvm_batch_plan(
-    compiled: CompiledPattern,
-    events: DataFrame,
-    carried: DataFrame | None,
-    exprs: _SqlEngineExprs | None = None,
-) -> DataFrame:
-    """The microbatch as a 100% JVM plan with ONE shuffle
-    (plans/sql_kernel.py): carried-state rows union in as pseudo-events
-    whose ts (-2^62) sorts them first within their key, so the
-    aggregate-fold's stateful_x branch loads them as the resume
-    accumulator — no state join, no second Exchange.  One explode emits
-    each key's detections (kind=0) and carry-out (kind=1) from the same
-    pass; state-only keys survive via their pseudo-event.  No Python
-    boundary anywhere in the batch."""
-    e = exprs or _SqlEngineExprs(compiled)
-    ev = events.select("key", e.ev_x)
-    unioned = ev
-    if carried is not None:
-        unioned = ev.unionByName(carried.select("key", e.st_x))
-
-    folded = (
-        unioned.groupBy("key")
-        .agg(F.sort_array(F.collect_list("x")).alias("evs"))
-        .select("key", e.fold)
-    )
-    return folded.select(F.explode(e.rows).alias("o")).select("o.*")
+    def __call__(
+        self, events: DataFrame, carried: DataFrame | None
+    ) -> DataFrame:
+        """Carried-state rows union in as pseudo-events whose ts
+        (-2^62) sorts them first within their key, so the
+        aggregate-fold's stateful_x branch loads them as the resume
+        accumulator — no state join, no second Exchange.  One explode
+        emits each key's detections (kind=0) and carry-out (kind=1)
+        from the same pass; state-only keys survive via their
+        pseudo-event.  No Python boundary anywhere in the batch."""
+        unioned = events.select("key", self.ev_x)
+        if carried is not None:
+            unioned = unioned.unionByName(carried.select("key", self.st_x))
+        folded = (
+            unioned.groupBy("key")
+            .agg(F.sort_array(F.collect_list("x")).alias("evs"))
+            .select("key", self.fold)
+        )
+        return folded.select(F.explode(self.rows).alias("o")).select("o.*")
 
 
-def make_foreach_batch_detections(
-    compiled: CompiledPattern,
-    state_dir: str,
-    sink=None,
-    watermark_delay_ms: int = 60_000,
-    state_ttl_ms: int = 0,
-    keep_versions: int = 2,
-    num_partitions: int | None = None,
-    engine: str = "auto",
-    driver_max_rows: int = 200_000,
-    driver_max_state_rows: int | None = None,
-    num_buckets: int = stt.DEFAULT_NUM_BUCKETS,
+def _route_to_driver(
+    batch_df: DataFrame,
+    cols: list[str],
+    engine: str,
+    meta: dict,
+    driver_max_rows: int,
+    driver_max_state_rows: int,
 ):
-    """Build the ``foreachBatch`` function.
+    """The auto/driver routing decision: collect the batch to driver
+    pandas when (a) engine == "driver", or (b) engine == "auto" AND
+    both bounds hold — the batch fits (``limit(n+1)`` probe) and the
+    carried state its touched buckets hold fits (manifest counts — no
+    scan).  Returns (the batch's live events — rows later than the
+    watermark dropped — as pandas, the buckets they touch), or None →
+    a distributed route.
 
-    ``engine="auto"`` (default) routes each microbatch by size — BOTH
-    sides of it: a bounded ``limit(driver_max_rows + 1)`` collect
-    probes the batch, and the manifest's per-bucket row counts bound
-    the carried state the driver would have to read
-    (``driver_max_state_rows``, default :data:`DRIVER_MAX_STATE_ROWS`
-    = the measured driver-vs-JVM crossover).  Only
-    when events AND touched-bucket state fit does the fused kernel
-    advance the batch driver-side with zero Spark jobs (see
-    _driver_batch; a distributed microbatch has a measured ~0.35 s job
-    floor regardless of row count) — a huge-key-space stream with tiny
-    batches therefore routes DISTRIBUTED and the driver never
-    materializes the state table (r4 verdict "what's wrong" #2).
-    Otherwise the batch runs as the distributed JVM plan.
-    ``engine="sql"`` always uses the JVM aggregate-fold kernel
-    (plans/sql_kernel.py) — the whole microbatch is one Python-free
-    Catalyst plan.  ``engine="arrow"`` uses the fused mapInPandas
-    kernel instead — pick it when a single key's per-batch event array
-    would strain executor memory, since the SQL path materializes one
-    key's batch as one array.  ``engine="driver"`` forces the driver
-    path (testing only: it skips the state-size bound).  All engines
-    speak the same versioned-bucketed-state protocol
-    (streaming/state_table.py), so the auto route can flip per batch
-    with no state migration; each version's manifest records which
-    engine ran it (``engine_used``).
-
-    Spark actions per microbatch: the driver route runs NONE beyond
-    the routing collect that doubles as the batch read; the
-    distributed route runs the bounded probe collect (auto only), one
-    tiny per-bucket count aggregate (touched buckets + group sizing),
-    and the write action — the fused kernel's full output, detections
-    and carried state, lands in ``v{batch_id+1}/data``,
-    hive-partitioned into ``pdir=d`` (detections) and one
-    ``pdir={group}`` dir per touched bucket group.  The watermark and the manifest's row counts are recovered
-    WITHOUT scanning state: the driver route knows them from the frame
-    it wrote, the distributed route reads parquet footer statistics
-    (metadata only).  ``sink(detections_df, batch_id)``, if given,
-    receives a LAZY view over the written detections, so a sink that
-    only counts or copies pays one cheap scan and a no-op sink pays
-    nothing.  Old versions are GC'd after ``keep_versions`` batches
-    EXCEPT bucket dirs still referenced by a live manifest — untouched
-    buckets carry forward indefinitely by reference; a sink that wants
-    a durable detection history must write it onward — the standard
-    foreachBatch delivery contract.
-
-    Measured engine crossover (sf0.1 events, local[32], warm medians):
-    8 microbatches of 12.5 k rows — driver 3.33 s, sql 4.50 s, arrow
-    5.89 s; 1 microbatch of 100 k rows — sql 0.84 s, arrow 0.92 s; at
-    batch scale (1 M rows, no streaming machinery) the fused Arrow
-    kernel wins instead (1.15 s vs 1.45 s — aggregate() lambdas are
-    interpreted, see plans/sql_kernel.py).  Hence auto routes
-    small→driver and large→sql: in the microbatch regime the SQL
-    plan's zero Python-worker round trips dominate, and by the time
-    the Arrow kernel would win the workload is a batch job.
+    ``.toArrow().to_pandas()`` over ``.toPandas()``: same rows, same
+    dtypes for these non-null columns, but the Arrow collect skips the
+    row-wise conversion layer — measured 204 → 77 ms on a 12.5k-row
+    microbatch probe, a fifth of the per-batch floor.
 
     Negative result (r4 verdict item 8, measured r5): skipping the
-    ``limit(n+1)`` probe via a previous-batch-size prior (plain
-    ``toPandas`` when the last batch was small, lazy flip on the first
-    oversize) saves ~70 ms/batch in ISOLATION (CollectLimit's
-    incremental take), but an interleaved A/B over 5 full 8-batch
-    streaming runs measured medians of 2.67 s (skip) vs 2.68 s (probe)
-    — a dead heat inside the pipeline, where the collect overlaps
-    other per-batch work.  The prior mechanism was therefore removed;
-    the bounded probe stays as the simpler, oversize-safe form.
+    probe via a previous-batch-size prior (plain ``toPandas`` when the
+    last batch was small, lazy flip on the first oversize) saves
+    ~70 ms/batch in ISOLATION (CollectLimit's incremental take), but an
+    interleaved A/B over 5 full 8-batch streaming runs measured medians
+    of 2.67 s (skip) vs 2.68 s (probe) — a dead heat inside the
+    pipeline, where the collect overlaps other per-batch work.  The
+    prior mechanism was therefore removed; the bounded probe stays as
+    the simpler, oversize-safe form."""
+    if engine not in ("auto", "driver"):
+        return None
+    batch = batch_df.select(*cols)
+    if engine == "auto":
+        batch = batch.limit(driver_max_rows + 1)
+    pdf = batch.toArrow().to_pandas()
+    if engine == "auto" and len(pdf) > driver_max_rows:
+        return None
+    wm = meta["watermark_ms"]
+    live = pdf if wm is None else pdf[pdf["ts"] >= int(wm)]
+    touched = stt.touched_buckets_of(live["key"], meta["num_buckets"])
+    if (
+        engine == "auto"
+        and stt.touched_state_rows(meta, touched) > driver_max_state_rows
+    ):
+        return None
+    return live, touched
 
-    The input batch must already be symbolized to (key string,
-    ts long-millis, event_id long, symbol int) — use
-    :func:`symbolize_stream`.  Rows with a NULL key are dropped before
-    any engine runs (all routes agree): a keyed run over a null key is
-    undefined — the reference's keyBy raises on null keys
-    (InferenceJob.java keyBy(mmsi)) — and per-engine null handling
-    would otherwise diverge (pandas groupby vs JVM groupBy null
-    groups)."""
+
+def _make_foreach_batch(
+    spec,
+    state_dir: str,
+    sink,
+    *,
+    watermark_delay_ms: int,
+    state_ttl_ms: int,
+    keep_versions: int,
+    engine: str,
+    driver_max_rows: int,
+    driver_max_state_rows: int | None,
+    num_buckets: int,
+):
+    """The one ``foreachBatch`` body behind both fast paths (see the
+    module docstring for the contract it keeps)."""
+    engines = ("auto", "sql", "arrow", "driver") if spec.jvm_fold else (
+        "auto", "arrow", "driver"
+    )
     if keep_versions < 1:
         # keep_versions=0 would GC v{batch_id} — the batch's OWN input
         # version — so a crash-replay of that batch would silently run
@@ -449,26 +563,39 @@ def make_foreach_batch_detections(
         raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
     if num_buckets < 1:
         raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
-    if engine not in ("auto", "sql", "arrow", "driver"):
-        # a typo would otherwise silently fall through to the
-        # distributed arrow route and never surface
+    if engine not in engines:
+        # a typo (or "sql" for a kernel without a JVM fold) would
+        # otherwise silently fall through to the distributed arrow
+        # route and never surface
         raise ValueError(
-            f"engine must be one of auto/sql/arrow/driver, got {engine!r}"
+            f"engine must be one of {'/'.join(engines)}, got {engine!r}"
         )
     if driver_max_state_rows is None:
         driver_max_state_rows = DRIVER_MAX_STATE_ROWS
-    runner = _make_partition_runner(compiled)
-    exprs = _SqlEngineExprs(compiled) if engine in ("sql", "auto") else None
+    runner = _make_partition_runner(spec)
+    fold = spec.jvm_fold() if spec.jvm_fold and engine in ("sql", "auto") else None
 
-    def _finish_batch(
-        spark, batch_id, meta, touched_rows, max_lt, engine_used, g
-    ) -> None:
-        stt.finish_batch(
-            spark, state_dir, batch_id, meta, touched_rows, max_lt,
-            engine_used, g, watermark_delay_ms=watermark_delay_ms,
-            keep_versions=keep_versions, sink=sink,
-            out_schema=_OUT_SCHEMA, det_schema=_DET_SCHEMA,
+    def finish_batch(spark, batch_id, meta, written, engine_used) -> None:
+        """Every route's tail once ``v{batch_id+1}``'s data exists:
+        fold the new max carried last_ts into the watermark (monotone:
+        the outer max with the previous value guards against expiry
+        regressions), write the manifest, deliver the sink view, GC
+        stale versions."""
+        touched_rows, max_lt, g = written
+        wm = meta["watermark_ms"]
+        if max_lt is not None and max_lt >= 0:
+            cand = max_lt - watermark_delay_ms
+            wm = cand if wm is None else max(int(wm), cand)
+        stt.write_meta(
+            state_dir, batch_id + 1,
+            stt.next_meta(meta, batch_id, touched_rows, wm, engine_used, g),
         )
+        if sink is not None:
+            sink(
+                stt.detections_view(spark, state_dir, batch_id, spec.out.sql),
+                batch_id,
+            )
+        stt.gc_versions(state_dir, batch_id, keep_versions)
 
     def foreach_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -476,22 +603,19 @@ def make_foreach_batch_detections(
         meta = stt.read_meta(state_dir, batch_id, num_buckets)
         wm = meta["watermark_ms"]
 
-        # the routing decision (events bound + state bound) is the
-        # shared protocol — stt.route_events_pdf
-        events_pdf = stt.route_events_pdf(
-            batch_df, ["key", "ts", "event_id", "symbol"], engine, meta,
+        routed = _route_to_driver(
+            batch_df, spec.event_cols, engine, meta,
             driver_max_rows, driver_max_state_rows,
         )
-        if events_pdf is not None:
-            touched_rows, max_lt, g = _driver_batch(
-                runner, events_pdf, state_dir, batch_id, meta, state_ttl_ms
+        if routed is not None:
+            written = _driver_batch(
+                spec, runner, *routed, state_dir, batch_id, meta,
+                state_ttl_ms,
             )
-            _finish_batch(
-                spark, batch_id, meta, touched_rows, max_lt, "driver", g
-            )
+            finish_batch(spark, batch_id, meta, written, "driver")
             return
 
-        events = batch_df.select("key", "ts", "event_id", "symbol")
+        events = batch_df.select(*spec.event_cols)
         if wm is not None:
             # rows later than the watermark are dropped, as in the
             # engine path (withWatermark + state op) and the reference's
@@ -509,7 +633,7 @@ def make_foreach_batch_detections(
         events_total = sum(r["count"] for r in per_bucket)
 
         carried = stt.read_state_spark(
-            spark, meta, state_dir, touched, _OUT_SCHEMA
+            spark, meta, state_dir, touched, spec.out.sql
         )
         if carried is not None and state_ttl_ms > 0 and wm is not None:
             # run expiry on the event clock (ERFEngine.scala:213-216):
@@ -518,59 +642,109 @@ def make_foreach_batch_detections(
             carried = carried.filter(
                 ~(F.lit(int(wm)) > F.col("last_ts") + F.lit(state_ttl_ms))
             )
-
-        sql_route = engine in ("sql", "auto")
-        if sql_route:
-            out = _jvm_batch_plan(compiled, events, carried, exprs)
-        else:
-            wide_events = events.select(
-                "key", "ts", "event_id", "symbol",
-                F.lit(False).alias("is_state"),
-                F.lit(None).cast("int").alias("state"),
-                F.lit(None).cast("long").alias("counter"),
-                F.lit(None).cast("long").alias("min_counter"),
-                F.lit(None).cast("long").alias("min_ts"),
-                F.lit(None).cast("int").alias("n_matched"),
-                F.lit(None).cast("long").alias("last_ts"),
+        flagged = None
+        try:
+            if fold is not None:
+                out = fold(events, carried)
+            else:
+                out, flagged = _arrow_plan(spec, runner, events, carried)
+            # group sizing, salted partitioned write, footer-stat
+            # manifest recovery: the distributed tail (stt)
+            written = stt.write_distributed_output(
+                out, meta, touched, events_total, state_dir, batch_id
             )
-            unioned = wide_events
-            if carried is not None:
-                unioned = wide_events.unionByName(
-                    carried.select(
-                        "key",
-                        F.lit(_STATE_TS).alias("ts"),
-                        F.lit(0).cast("long").alias("event_id"),
-                        F.lit(None).cast("int").alias("symbol"),
-                        F.lit(True).alias("is_state"),
-                        "state", "counter", "min_counter", "min_ts",
-                        "n_matched", "last_ts",
-                    )
-                )
-            parts = ["key"] if num_partitions is None else [num_partitions, "key"]
-            out = (
-                unioned.repartition(*parts)
-                .sortWithinPartitions("key", "ts", "event_id")
-                .mapInPandas(runner, schema=_OUT_SCHEMA)
-            )
-        # group sizing, salted partitioned write, footer-stat manifest
-        # recovery: the shared distributed tail (stt).  The SQL
-        # engine's shuffle width comes from spark.sql.shuffle.partitions
-        # (a groupBy, not an explicit repartition), so num_partitions is
-        # honored via the helper's set-and-restore override there; the
-        # arrow engine already honored it in its explicit repartition.
-        touched_rows, max_lt, g_new = stt.write_distributed_output(
-            out, meta, touched, events_total, state_dir, batch_id,
-            shuffle_partitions=(
-                num_partitions if sql_route and num_partitions is not None
-                else None
-            ),
-        )
-        _finish_batch(
-            spark, batch_id, meta, touched_rows, max_lt,
-            "sql" if sql_route else "arrow", g_new,
+        finally:
+            if flagged is not None:
+                flagged.unpersist()
+        finish_batch(
+            spark, batch_id, meta, written,
+            "sql" if fold is not None else "arrow",
         )
 
     return foreach_batch
+
+
+def _symbolize(
+    stream_df: DataFrame,
+    key: str,
+    ts_col: str,
+    id_col: str,
+    kernel_cols: list,
+) -> DataFrame:
+    """(key string, ts millis, event_id, *kernel_cols): the projection
+    both kernels' streams share."""
+    with_event_time, et_col = _with_event_time(stream_df, ts_col)
+    return with_event_time.select(
+        F.col(key).cast("string").alias("key"),
+        F.unix_millis(F.col(et_col)).alias("ts"),
+        F.col(id_col).alias("event_id"),
+        *kernel_cols,
+    )
+
+
+def _start(sym: DataFrame, fb, checkpoint_dir: str, trigger: dict | None):
+    """Start ``fb`` as the foreachBatch sink of the symbolized stream."""
+    writer = (
+        sym.writeStream.foreachBatch(fb)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    return writer.trigger(**(trigger or {"availableNow": True})).start()
+
+
+def make_foreach_batch_detections(
+    compiled: CompiledPattern,
+    state_dir: str,
+    sink=None,
+    watermark_delay_ms: int = 60_000,
+    state_ttl_ms: int = 0,
+    keep_versions: int = 2,
+    engine: str = "auto",
+    driver_max_rows: int = 200_000,
+    driver_max_state_rows: int | None = None,
+    num_buckets: int = stt.DEFAULT_NUM_BUCKETS,
+):
+    """Build the ``foreachBatch`` function of an SDFA pattern; its
+    routes, state protocol, Spark actions and sink contract are the
+    module docstring's.
+
+    ``engine="auto"`` (default) bounds both sides of each microbatch:
+    ``driver_max_rows`` the batch, ``driver_max_state_rows`` (default
+    :data:`DRIVER_MAX_STATE_ROWS` = the measured driver-vs-JVM
+    crossover) the carried state its touched buckets hold — a
+    huge-key-space stream with tiny batches therefore routes
+    DISTRIBUTED and the driver never materializes the state table (r4
+    verdict "what's wrong" #2); a distributed microbatch has a measured
+    ~0.35 s job floor regardless of row count (see _driver_batch).
+    ``engine="sql"`` always uses the JVM aggregate-fold kernel
+    (plans/sql_kernel.py) — the whole microbatch is one Python-free
+    Catalyst plan.  ``engine="arrow"`` uses the fused mapInPandas
+    kernel instead — pick it when a single key's per-batch event array
+    would strain executor memory, since the SQL path materializes one
+    key's batch as one array.  ``engine="driver"`` forces the driver
+    path (testing only: it skips the state-size bound).
+
+    Measured engine crossover (sf0.1 events, local[32], warm medians):
+    8 microbatches of 12.5 k rows — driver 3.33 s, sql 4.50 s, arrow
+    5.89 s; 1 microbatch of 100 k rows — sql 0.84 s, arrow 0.92 s; at
+    batch scale (1 M rows, no streaming machinery) the fused Arrow
+    kernel wins instead (1.15 s vs 1.45 s — aggregate() lambdas are
+    interpreted, see plans/sql_kernel.py).  Hence auto routes
+    small→driver and large→sql: in the microbatch regime the SQL
+    plan's zero Python-worker round trips dominate, and by the time
+    the Arrow kernel would win the workload is a batch job.
+
+    The input batch must already be symbolized to (key string,
+    ts long-millis, event_id long, symbol int) — use
+    :func:`symbolize_stream`."""
+    return _make_foreach_batch(
+        _SdfaSpec(compiled), state_dir, sink,
+        watermark_delay_ms=watermark_delay_ms, state_ttl_ms=state_ttl_ms,
+        keep_versions=keep_versions, engine=engine,
+        driver_max_rows=driver_max_rows,
+        driver_max_state_rows=driver_max_state_rows,
+        num_buckets=num_buckets,
+    )
 
 
 def symbolize_stream(
@@ -583,13 +757,9 @@ def symbolize_stream(
     """Streaming-side projection to (key, ts millis, event_id, symbol):
     symbolization stays a JVM CASE column (identical to BatchCEP), so
     foreachBatch receives 4 narrow columns."""
-    key = key_col or compiled.partition_by
-    with_event_time, et_col = _with_event_time(stream_df, ts_col)
-    return with_event_time.select(
-        F.col(key).cast("string").alias("key"),
-        F.unix_millis(F.col(et_col)).alias("ts"),
-        F.col(id_col).alias("event_id"),
-        compiled.symbol_column().alias("symbol"),
+    return _symbolize(
+        stream_df, key_col or compiled.partition_by, ts_col, id_col,
+        [compiled.symbol_column().alias("symbol")],
     )
 
 
@@ -606,7 +776,6 @@ def start_fastpath_detections(
     state_ttl_ms: int = 0,
     keep_versions: int = 2,
     trigger: dict | None = None,
-    num_partitions: int | None = None,
     engine: str = "auto",
     driver_max_rows: int = 200_000,
     driver_max_state_rows: int | None = None,
@@ -619,16 +788,9 @@ def start_fastpath_detections(
     fb = make_foreach_batch_detections(
         compiled, state_dir, sink,
         watermark_delay_ms=watermark_delay_ms, state_ttl_ms=state_ttl_ms,
-        keep_versions=keep_versions,
-        num_partitions=num_partitions, engine=engine,
+        keep_versions=keep_versions, engine=engine,
         driver_max_rows=driver_max_rows,
         driver_max_state_rows=driver_max_state_rows,
         num_buckets=num_buckets,
     )
-    writer = (
-        sym.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return _start(sym, fb, checkpoint_dir, trigger)

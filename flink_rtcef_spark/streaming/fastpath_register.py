@@ -1,14 +1,12 @@
 """foreachBatch fast path for register (SREMO/NSRA) patterns.
 
-Same versioned, hash-bucketed state protocol as streaming/fastpath.py
-(streaming/state_table.py: batch ``b`` reads only the buckets its keys
-hash into via ``v{b}``'s manifest, advances them in one pass, writes
-those buckets into ``v{b+1}``; untouched buckets carry forward by
-manifest reference — idempotent under microbatch replay, exactly-once
-without a state store, per-batch cost O(touched-bucket rows) not
-O(live keys)), applied to the nondeterministic register kernel
+The kernel spec of the nondeterministic register run
 (operators/cep_register._run_nsra_segment, the reference's
-non-deterministic run path ERFEngine.processEventAtRunNonDet:295).
+non-deterministic run path ERFEngine.processEventAtRunNonDet:295) for
+the one fast-path skeleton in streaming/fastpath.py, whose module
+docstring states the protocol contract this path keeps: the
+versioned, hash-bucketed state table, the routes, the null-key rule,
+the Spark actions per microbatch and the sink's lazy view.
 
 The cross-batch state is the per-key (configuration set, counter)
 pickled into a BINARY parquet column — identical content to the
@@ -18,170 +16,70 @@ columnar table instead.  The mandatory SREMO window bounds the config
 set (at most ``window`` concurrent runs per key), so blob size is
 O(window), not O(stream).
 
-Engines: ``arrow`` — one hash shuffle of (events ∪ touched-bucket
-state) on the key, within-partition sort, one Arrow-batched pass;
-``driver`` — the whole microbatch advanced driver-side with zero Spark
-jobs (the distributed plan has a ~0.35 s/microbatch job floor
-regardless of row count); ``auto`` (default) — routes per batch via a
-bounded ``limit(n+1)`` probe AND the manifest's touched-bucket row
-counts (state-side bound, no scan), driver below both thresholds,
-distributed above either, with no state migration across the flip.
-There is no ``sql`` engine here: register guards compare event
-attributes against stored valuations — inherently Python-side (the
-same boundary the reference crosses into its run closures), unlike
-the SDFA fold.
+Routes: ``driver``, ``arrow`` and ``auto`` (driver below both bounds,
+``arrow`` above either).  There is no ``sql`` route here: register
+guards compare event attributes against stored valuations —
+inherently Python-side (the same boundary the reference crosses into
+its run closures), unlike the SDFA fold.
 """
 
 from __future__ import annotations
 
 import pickle
 
-import numpy as np
-import pandas as pd
-import pyarrow as pa
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from flink_rtcef_spark.operators.cep_register import _run_nsra_segment
 from flink_rtcef_spark.streaming import state_table as stt
 from flink_rtcef_spark.streaming.fastpath import (
-    DRIVER_MAX_STATE_ROWS,
-    _STATE_TS,
-)
-from flink_rtcef_spark.streaming.inference import _with_event_time
-
-DETECTION_COLUMNS = [
-    "key", "detection_event_id", "detection_ts", "counter", "min_counter",
-    "n_matched",
-]
-
-# kind 0 = detection, 1 = carried state
-_OUT_COLUMNS = [
-    "kind", "key", "event_id", "ts", "counter", "min_counter", "n_matched",
-    "blob", "last_ts",
-]
-_OUT_SCHEMA = (
-    "kind int, key string, event_id long, ts long, counter long, "
-    "min_counter long, n_matched int, blob binary, last_ts long"
-)
-_OUT_PA_SCHEMA = pa.schema(
-    [
-        ("kind", pa.int32()),
-        ("key", pa.string()),
-        ("event_id", pa.int64()),
-        ("ts", pa.int64()),
-        ("counter", pa.int64()),
-        ("min_counter", pa.int64()),
-        ("n_matched", pa.int32()),
-        ("blob", pa.binary()),
-        ("last_ts", pa.int64()),
-    ]
-)
-_DET_SCHEMA = (
-    "key string, detection_event_id long, detection_ts long, counter long, "
-    "min_counter long, n_matched int"
+    _make_foreach_batch,
+    _out_schema,
+    _start,
+    _symbolize,
 )
 
+# kind 0 = detection, 1 = carried state: (configs, counter) as
+# ``counter`` plus the pickled config set
+_REGISTER_OUT = _out_schema([("blob", "binary")])
+_OUT_SCHEMA = _REGISTER_OUT.sql
 
-def _make_partition_runner(compiled):
-    """One fused pass over a partition of (state ∪ event) rows sorted
-    by (key, ts, event_id): pops each key's leading state row (ts =
-    -2^62 sorts it first) as the unpickled carry-in, advances the
-    segment with the SAME kernel as RegisterCEP, and emits the key's
-    carry-out as a kind=1 blob row."""
-    table = compiled.table
-    finals = frozenset(compiled.nsra.finals)
-    start_states = compiled.start_states
-    window, window_type = compiled.window, compiled.window_type
-    attrs = list(compiled.register_attrs)
 
-    def run_partition(batches):
-        open_key = None
-        carry = None          # (configs, counter), unpickled
-        raw = None            # (blob, counter) NOT unpickled — see below
-        last_ts = -1
-        out: list[tuple] = []
+class _RegisterSpec:
+    """The register kernel: ``step`` is RegisterCEP's own
+    ``_run_nsra_segment``; its (configs, counter) carry is stored as
+    ``counter`` and the pickled config set, and unpickled only for a
+    key with events in the batch."""
 
-        def close_key():
-            if open_key is None:
-                return
-            if raw is not None:
-                # state-only key (no events this batch): the carry-out
-                # IS the carry-in, byte for byte — skip the
-                # loads+dumps round trip entirely.  At 1M uniform live
-                # keys this is the dominant per-batch cost (the batch
-                # touches every bucket, so every carried key rides
-                # through here, but only ~1% have events).
-                out.append(
-                    (1, open_key, None, None, raw[1], None, None,
-                     raw[0], int(last_ts))
-                )
-                return
-            configs, counter = carry
-            out.append(
-                (1, open_key, None, None, int(counter), None, None,
-                 pickle.dumps(configs), int(last_ts))
-            )
+    out = _REGISTER_OUT
+    jvm_fold = None
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["key"].to_numpy()
-            is_state = pdf["is_state"].to_numpy()
-            # column views, not per-key pdf.iloc — see fastpath.py
-            # (measured ~50 us per iloc row access, dominating
-            # many-carried-key partitions)
-            c_blob = pdf["blob"].to_numpy()
-            c_counter = pdf["counter"].to_numpy()
-            c_last_ts = pdf["last_ts"].to_numpy()
-            all_tss = pdf["ts"].to_numpy()
-            all_ids = pdf["event_id"].to_numpy()
-            all_bits = pdf["bits"].to_numpy()
-            all_attrs = {a: pdf[a].to_numpy() for a in attrs}
-            n = len(keys)
-            start = 0
-            while start < n:
-                end = start
-                k = keys[start]
-                while end < n and keys[end] == k:
-                    end += 1
-                if k != open_key:
-                    close_key()
-                    open_key, carry, raw, last_ts = k, ({}, 0), None, -1
-                if is_state[start]:
-                    # defer the unpickle: a key whose group holds only
-                    # its state row passes through close_key verbatim
-                    raw = (bytes(c_blob[start]), int(c_counter[start]))
-                    carry = None
-                    last_ts = int(c_last_ts[start])
-                    start += int(is_state[start:end].sum())
-                if start < end:
-                    if raw is not None:
-                        carry = (pickle.loads(raw[0]), raw[1])
-                        raw = None
-                    seg = slice(start, end)
-                    tss = all_tss[seg].astype(np.int64)
-                    rows, carry = _run_nsra_segment(
-                        all_bits[seg],
-                        tss,
-                        all_ids[seg].astype(np.int64),
-                        {a: all_attrs[a][seg] for a in attrs},
-                        table, finals, start_states, window, window_type,
-                        carry,
-                    )
-                    last_ts = max(last_ts, int(tss[-1]))
-                    out.extend(
-                        (0, k, int(eid), int(ets), int(c), int(mc), int(nm),
-                         None, None)
-                        for (eid, ets, c, mc, nm) in rows
-                    )
-                start = end
-        close_key()
-        yield pd.DataFrame(out, columns=_OUT_COLUMNS)
+    def __init__(self, compiled):
+        self.attrs = list(compiled.register_attrs)
+        self.event_cols = ["key", "ts", "event_id", "bits", *self.attrs]
+        self.table = compiled.table
+        self.finals = frozenset(compiled.nsra.finals)
+        self.start_states = compiled.start_states
+        self.window, self.window_type = compiled.window, compiled.window_type
 
-    return run_partition
+    @staticmethod
+    def load(counter, _min_counter, _n_matched, blob):
+        return pickle.loads(blob), int(counter)
+
+    def step(self, cols, seg, carry):
+        return _run_nsra_segment(
+            cols["bits"][seg],
+            cols["ts"][seg].astype("int64"),
+            cols["event_id"][seg].astype("int64"),
+            {a: cols[a][seg] for a in self.attrs},
+            self.table, self.finals, self.start_states, self.window,
+            self.window_type, carry,
+        )
+
+    @staticmethod
+    def dump(carry):
+        configs, counter = carry
+        return int(counter), None, None, pickle.dumps(configs)
 
 
 def make_foreach_batch_register(
@@ -191,213 +89,25 @@ def make_foreach_batch_register(
     watermark_delay_ms: int = 60_000,
     state_ttl_ms: int = 0,
     keep_versions: int = 2,
-    num_partitions: int | None = None,
     engine: str = "auto",
     driver_max_rows: int = 200_000,
     driver_max_state_rows: int | None = None,
     num_buckets: int = stt.DEFAULT_NUM_BUCKETS,
 ):
-    """Build the ``foreachBatch`` function for a register pattern.
-
-    Same contract as fastpath.make_foreach_batch_detections: the
-    driver route runs zero Spark actions beyond its routing collect,
-    the distributed route runs the probe (auto), the per-bucket count
-    aggregate, and the write; watermark and
-    manifest row counts recovered at write time (driver route: from
-    the frame in hand; distributed: parquet footer statistics —
-    metadata only, never a state scan), auto routing bounded on BOTH
-    the batch and the touched-bucket state, run expiry on the event
-    clock (a key whose last event is > ttl behind the watermark drops
-    its carried config set before the batch's rows are processed —
-    ERFEngine.scala:213-216), sink receives a lazy view over the
-    written detections.  Input batches must be symbolized via
+    """Build the ``foreachBatch`` function for a register pattern:
+    fastpath.make_foreach_batch_detections's skeleton and options over
+    the register kernel, with routes ``auto``/``arrow``/``driver``.
+    Input batches must be symbolized via
     :func:`symbolize_register_stream` (key, ts millis, event_id, bits,
-    register attrs).  Rows with a NULL key are dropped before any
-    engine runs (same contract as the deterministic fast path)."""
-    if keep_versions < 1:
-        # keep_versions=0 would GC the batch's own input version,
-        # breaking crash-replay (see fastpath.make_foreach_batch_detections)
-        raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
-    if num_buckets < 1:
-        raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
-    if engine not in ("auto", "arrow", "driver"):
-        # no "sql" here: register guards are inherently Python-side
-        # (see module docstring); refuse it and typos loudly instead of
-        # silently running the distributed arrow route
-        raise ValueError(
-            f"engine must be one of auto/arrow/driver, got {engine!r}"
-        )
-    if driver_max_state_rows is None:
-        driver_max_state_rows = DRIVER_MAX_STATE_ROWS
-    runner = _make_partition_runner(compiled)
-    attrs = list(compiled.register_attrs)
-    ev_cols = ["key", "ts", "event_id", "bits", *attrs]
-
-    def _finish_batch(
-        spark, batch_id, meta, touched_rows, max_lt, engine_used, g
-    ) -> None:
-        stt.finish_batch(
-            spark, state_dir, batch_id, meta, touched_rows, max_lt,
-            engine_used, g, watermark_delay_ms=watermark_delay_ms,
-            keep_versions=keep_versions, sink=sink,
-            out_schema=_OUT_SCHEMA, det_schema=_DET_SCHEMA,
-        )
-
-    def _driver_batch(
-        events_pdf: pd.DataFrame, batch_id: int, meta: dict
-    ) -> tuple[dict[int, int], int | None, int]:
-        wm = meta["watermark_ms"]
-        ev = events_pdf
-        if wm is not None:
-            ev = ev[ev["ts"] >= int(wm)]
-        touched = stt.touched_buckets_of(ev["key"], num_buckets)
-
-        frames = []
-        st = stt.read_state_pandas(meta, state_dir, touched)
-        if st is not None and len(st):
-            if state_ttl_ms > 0 and wm is not None:
-                st = st[~(int(wm) > st["last_ts"] + state_ttl_ms)]
-            if len(st):
-                st = st.assign(
-                    ts=np.int64(_STATE_TS), is_state=True,
-                    event_id=np.int64(0),
-                )
-                # typed zero-fills for the event-only columns: a concat
-                # that introduces NaN upcasts the unified column to
-                # float64, which corrupts int64 values above 2**53
-                # (event ids, long register attrs) — the arrow engine
-                # keeps them long end-to-end, so the driver route must
-                # too
-                for c in ("bits", *attrs):
-                    dt = events_pdf.dtypes.get(c)
-                    if dt is not None and pd.api.types.is_integer_dtype(dt):
-                        st[c] = np.zeros(len(st), dtype=dt)
-                frames.append(st)
-        if len(ev):
-            # counter/blob/last_ts present even when no state frame
-            # joins the concat: the kernel's column-view extraction
-            # reads them unconditionally
-            frames.append(
-                ev.assign(is_state=False, blob=None, counter=None, last_ts=-1)
-            )
-        if frames:
-            wide = pd.concat(frames, ignore_index=True)
-            wide = wide.sort_values(
-                ["key", "ts", "event_id"], kind="stable"
-            ).reset_index(drop=True)
-            out = next(runner([wide]))
-        else:
-            out = pd.DataFrame(columns=_OUT_COLUMNS)
-
-        return stt.finish_driver_kernel_output(
-            out, touched, meta, _OUT_PA_SCHEMA, state_dir, batch_id
-        )
-
-    def foreach_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.filter(F.col("key").isNotNull())
-        meta = stt.read_meta(state_dir, batch_id, num_buckets)
-        wm = meta["watermark_ms"]
-
-        # shared routing decision (events bound + state bound) —
-        # stt.route_events_pdf
-        events_pdf = stt.route_events_pdf(
-            batch_df, ev_cols, engine, meta,
-            driver_max_rows, driver_max_state_rows,
-        )
-        if events_pdf is not None:
-            touched_rows, max_lt, g = _driver_batch(events_pdf, batch_id, meta)
-            _finish_batch(
-                spark, batch_id, meta, touched_rows, max_lt, "driver", g
-            )
-            return
-
-        events = batch_df.select(*ev_cols)
-        if wm is not None:
-            events = events.filter(F.col("ts") >= F.lit(int(wm)))
-        per_bucket = events.groupBy(
-            stt.bucket_col(F.col("key"), num_buckets).alias("b")
-        ).count().collect()
-        touched = sorted(r["b"] for r in per_bucket)
-        events_total = sum(r["count"] for r in per_bucket)
-        wide_events = events.select(
-            *ev_cols,
-            F.lit(False).alias("is_state"),
-            F.lit(None).cast("binary").alias("blob"),
-            F.lit(None).cast("long").alias("counter"),
-            F.lit(-1).cast("long").alias("last_ts"),
-        )
-        unioned = wide_events
-        passive = None
-        flagged = None
-        carried = stt.read_state_spark(
-            spark, meta, state_dir, touched, _OUT_SCHEMA
-        )
-        if carried is not None:
-            if state_ttl_ms > 0 and wm is not None:
-                carried = carried.filter(
-                    ~(F.lit(int(wm)) > F.col("last_ts") + F.lit(state_ttl_ms))
-                )
-            # PASSIVE/ACTIVE split: a carried key with no events this
-            # batch writes back verbatim, so it never needs the
-            # shuffle+sort+Arrow+Python pass at all — only keys the
-            # batch actually touches ride the kernel.  Uniform keys
-            # over a large live population are the case this pays for
-            # (10k batch keys vs 1M carried rows: the kernel sees 1%
-            # of the state); the batch-key side is a distinct over the
-            # batch, small enough that AQE broadcasts it.
-            # ONE state scan (r8 ADVICE): an anti- plus a semi-join
-            # would read the touched buckets' parquet twice, so
-            # left-join a hit flag instead and persist the flagged
-            # frame — the split becomes two cache filters, and the
-            # count() materializes the cache before the write job's
-            # two consumers can race to recompute the scan.
-            batch_keys = events.select("key").distinct().withColumn(
-                "__hit", F.lit(True)
-            )
-            flagged = carried.join(batch_keys, "key", "left").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            flagged.count()
-            passive = flagged.filter(F.col("__hit").isNull()).drop("__hit")
-            active = flagged.filter(F.col("__hit").isNotNull()).drop("__hit")
-            ev_types = dict(wide_events.dtypes)
-            attr_nulls = [
-                F.lit(None).cast(ev_types[a]).alias(a) for a in attrs
-            ]
-            unioned = wide_events.unionByName(
-                active.select(
-                    "key",
-                    F.lit(_STATE_TS).alias("ts"),
-                    F.lit(0).cast("long").alias("event_id"),
-                    F.lit(None).cast(ev_types["bits"]).alias("bits"),
-                    *attr_nulls,
-                    F.lit(True).alias("is_state"),
-                    "blob", "counter", "last_ts",
-                )
-            )
-        parts = ["key"] if num_partitions is None else [num_partitions, "key"]
-        try:
-            out = (
-                unioned.repartition(*parts)
-                .sortWithinPartitions("key", "ts", "event_id")
-                .mapInPandas(runner, schema=_OUT_SCHEMA)
-            )
-            if passive is not None:
-                out = out.unionByName(passive)
-            # group sizing, salted partitioned write, footer-stat
-            # manifest recovery: the shared distributed tail (stt)
-            touched_rows, max_lt, g_new = stt.write_distributed_output(
-                out, meta, touched, events_total, state_dir, batch_id
-            )
-        finally:
-            if flagged is not None:
-                flagged.unpersist()
-        _finish_batch(
-            spark, batch_id, meta, touched_rows, max_lt, "arrow", g_new
-        )
-
-    return foreach_batch
+    register attrs)."""
+    return _make_foreach_batch(
+        _RegisterSpec(compiled), state_dir, sink,
+        watermark_delay_ms=watermark_delay_ms, state_ttl_ms=state_ttl_ms,
+        keep_versions=keep_versions, engine=engine,
+        driver_max_rows=driver_max_rows,
+        driver_max_state_rows=driver_max_state_rows,
+        num_buckets=num_buckets,
+    )
 
 
 def symbolize_register_stream(
@@ -411,16 +121,13 @@ def symbolize_register_stream(
     register attrs): static predicates fold into the JVM ``bits``
     column exactly as in batch (RegisterCEP.symbolized); only register
     comparisons reach the Python kernel."""
-    key = key_col or compiled.partition_by
-    with_event_time, et_col = _with_event_time(stream_df, ts_col)
-    cols = [
-        F.col(key).cast("string").alias("key"),
-        F.unix_millis(F.col(et_col)).alias("ts"),
-        F.col(id_col).alias("event_id"),
-        compiled.bits_column().alias("bits"),
-    ]
-    cols += [F.col(a) for a in compiled.register_attrs]
-    return with_event_time.select(*cols)
+    return _symbolize(
+        stream_df, key_col or compiled.partition_by, ts_col, id_col,
+        [
+            compiled.bits_column().alias("bits"),
+            *[F.col(a) for a in compiled.register_attrs],
+        ],
+    )
 
 
 def start_fastpath_register(
@@ -436,7 +143,6 @@ def start_fastpath_register(
     state_ttl_ms: int = 0,
     keep_versions: int = 2,
     trigger: dict | None = None,
-    num_partitions: int | None = None,
     engine: str = "auto",
     driver_max_rows: int = 200_000,
     driver_max_state_rows: int | None = None,
@@ -447,16 +153,9 @@ def start_fastpath_register(
     fb = make_foreach_batch_register(
         compiled, state_dir, sink,
         watermark_delay_ms=watermark_delay_ms, state_ttl_ms=state_ttl_ms,
-        keep_versions=keep_versions,
-        num_partitions=num_partitions, engine=engine,
+        keep_versions=keep_versions, engine=engine,
         driver_max_rows=driver_max_rows,
         driver_max_state_rows=driver_max_state_rows,
         num_buckets=num_buckets,
     )
-    writer = (
-        sym.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return _start(sym, fb, checkpoint_dir, trigger)

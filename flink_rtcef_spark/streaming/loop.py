@@ -37,6 +37,9 @@ log = logging.getLogger(__name__)
 
 @dataclass
 class ReportPoint:
+    """One report: timestamp, runtime/batch MCC, event, and `cause` (the
+    `TrainResult.cause` of the instruction's last failed train)."""
+
     timestamp: int
     runtime_mcc: float
     batch_mcc: float

@@ -1,13 +1,15 @@
 """Versioned, hash-BUCKETED state table for the foreachBatch fast paths.
 
-Shared by streaming/fastpath.py (deterministic SDFA runs) and
-streaming/fastpath_register.py (register/NSRA runs).  Fixes the r4
-design's key-cardinality scaling: r4 rewrote the ENTIRE state table
-every microbatch — per-batch cost O(live keys), not O(batch).  At tens
-of millions of live keys (vessels/sessions) every 10k-row microbatch
-would pay a full state read + shuffle + write, where Flink's RocksDB
-state — the thing the versioned table replaces (WayebEngine.java:
-102-118 keyed quintuple) — touches only the batch's keys.
+The state store of the foreachBatch fast-path skeleton
+(streaming/fastpath.py), whichever kernel it runs (deterministic SDFA
+runs, or register/NSRA runs via streaming/fastpath_register.py).
+Fixes the r4 design's key-cardinality scaling: r4 rewrote the ENTIRE
+state table every microbatch — per-batch cost O(live keys), not
+O(batch).  At tens of millions of live keys (vessels/sessions) every
+10k-row microbatch would pay a full state read + shuffle + write,
+where Flink's RocksDB state — the thing the versioned table replaces
+(WayebEngine.java:102-118 keyed quintuple) — touches only the batch's
+keys.
 
 Design: LOGICAL buckets + a per-bucket MANIFEST + ADAPTIVE physical
 grouping.
@@ -68,6 +70,7 @@ import json
 import os
 import shutil
 import zlib
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.dataset as pads
@@ -78,6 +81,12 @@ from pyspark.sql import functions as F
 
 #: partition value holding a batch's detections (kind=0 rows)
 DETS_PART = "d"
+
+#: the sink's view of a batch's detections, whichever kernel wrote them
+DET_SCHEMA = (
+    "key string, detection_event_id long, detection_ts long, counter long, "
+    "min_counter long, n_matched int"
+)
 
 #: default LOGICAL bucket count — at ~50k rows per bucket this covers
 #: ~10M live keys; raise it for larger key spaces (the manifest is
@@ -399,57 +408,13 @@ def read_state_spark(
     return out
 
 
-def write_state_pandas(
-    out_pdf,
-    bucket_ids,
-    pa_schema: pa.Schema,
-    state_dir: str,
-    batch_id: int,
-    num_buckets: int,
-    est_next_rows: int,
-) -> int:
-    """Driver route's state write: one pyarrow ``write_dataset`` call,
-    hive-partitioned on the GROUP dir — all touched groups plus the
-    detections dir in a single pass, no Spark job.  ``bucket_ids`` is
-    the per-row logical bucket (any value for kind=0 rows — they land
-    in ``pdir=d`` regardless).  Returns the group size used (recorded
-    in the manifest for later reads)."""
-    g = group_size(num_buckets, est_next_rows)
-    is_state = out_pdf["kind"] == 1
-    pdir = [
-        str(int(b) // g) if s else DETS_PART
-        for b, s in zip(bucket_ids, is_state)
-    ]
-    vdir = version_path(state_dir, batch_id + 1)
-    shutil.rmtree(vdir, ignore_errors=True)
-    os.makedirs(vdir, exist_ok=True)
-    full = pa_schema.insert(0, pa.field("pdir", pa.string()))
-    tbl = pa.Table.from_pandas(
-        out_pdf.assign(pdir=pdir)[["pdir", *pa_schema.names]],
-        schema=full,
-        preserve_index=False,
-    )
-    if tbl.num_rows:
-        pads.write_dataset(
-            tbl,
-            data_path(state_dir, batch_id + 1),
-            format="parquet",
-            partitioning=pads.partitioning(
-                pa.schema([("pdir", pa.string())]), flavor="hive"
-            ),
-        )
-    return g
-
-
-def detections_view(
-    spark, state_dir: str, batch_id: int, out_schema: str, det_schema: str
-):
+def detections_view(spark, state_dir: str, batch_id: int, out_schema: str):
     """Lazy view over the written batch's detections (the ``pdir=d``
     dir of ``v{batch_id + 1}``); an empty frame when the batch detected
     nothing (no dir is written then)."""
     p = dets_path(state_dir, batch_id + 1)
     if not os.path.isdir(p):
-        return spark.createDataFrame([], det_schema)
+        return spark.createDataFrame([], DET_SCHEMA)
     return (
         spark.read.schema(out_schema).parquet(p)
         .filter(F.col("kind") == 0)
@@ -495,60 +460,22 @@ def touched_buckets_of(keys, num_buckets: int) -> list[int]:
     return sorted({bucket_of_key(k, num_buckets) for k in keys})
 
 
-def route_events_pdf(
-    batch_df,
-    cols: list[str],
-    engine: str,
-    meta: dict,
-    driver_max_rows: int,
-    driver_max_state_rows: int,
-):
-    """The auto/driver routing decision, shared by both fast paths:
-    collect the batch to driver pandas when (a) engine == "driver", or
-    (b) engine == "auto" AND both bounds hold — the batch fits
-    (``limit(n+1)`` probe) and the carried state its touched buckets
-    hold fits (manifest counts — no scan).  Returns the pandas frame,
-    or None → the caller takes a distributed route.
-
-    ``.toArrow().to_pandas()`` over ``.toPandas()``: same rows, same
-    dtypes for these non-null columns, but the Arrow collect skips the
-    row-wise conversion layer — measured 204 → 77 ms on a 12.5k-row
-    microbatch probe, a fifth of the per-batch floor."""
-    wm = meta["watermark_ms"]
-    if engine == "driver":
-        return batch_df.select(*cols).toArrow().to_pandas()
-    if engine != "auto":
-        return None
-    probe = (
-        batch_df.select(*cols)
-        .limit(driver_max_rows + 1).toArrow().to_pandas()
-    )
-    if len(probe) > driver_max_rows:
-        return None
-    live = probe if wm is None else probe[probe["ts"] >= int(wm)]
-    touched = touched_buckets_of(live["key"], meta["num_buckets"])
-    if touched_state_rows(meta, touched) > driver_max_state_rows:
-        return None
-    return probe
-
-
-def finish_driver_kernel_output(
+def write_driver_output(
     out,
     touched: list[int],
     meta: dict,
-    pa_schema,
+    pa_schema: pa.Schema,
     state_dir: str,
     batch_id: int,
 ) -> tuple[dict[int, int], int | None, int]:
-    """Driver-route tail shared by both fast paths, after the fused
-    kernel produced ``out`` (a pandas frame in the state-output
-    schema): bucket each kind=1 row by its key, write the touched
-    buckets with one pyarrow ``write_dataset``, and return the
-    manifest inputs (per-touched-bucket state row counts, max carried
-    last_ts, group size used) — known here without any read-back
-    because the writer has the frame in hand."""
-    import pandas as pd
-
+    """Driver-route tail, after the fused kernel produced ``out`` (a
+    pandas frame in the kernel's output schema): bucket each kind=1 row
+    by its key and write ``v{batch_id+1}`` with ONE pyarrow
+    ``write_dataset`` call, hive-partitioned on the GROUP dir — all
+    touched groups plus the detections dir in a single pass, no Spark
+    job.  Returns the manifest inputs (per-touched-bucket state row
+    counts, max carried last_ts, group size used) — known here without
+    any read-back because the writer has the frame in hand."""
     num_buckets = meta["num_buckets"]
     is_state = out["kind"] == 1
     bucket_ids = [
@@ -556,24 +483,35 @@ def finish_driver_kernel_output(
         for k, s in zip(out["key"], is_state)
     ]
     n_new = int(is_state.sum())
-    est_next = (
-        meta["state_rows"] - touched_state_rows(meta, touched) + n_new
+    g = group_size(
+        num_buckets,
+        meta["state_rows"] - touched_state_rows(meta, touched) + n_new,
     )
-    g = write_state_pandas(
-        out, bucket_ids, pa_schema, state_dir, batch_id, num_buckets,
-        est_next,
+    pdir = [
+        str(b // g) if s else DETS_PART for b, s in zip(bucket_ids, is_state)
+    ]
+    vdir = version_path(state_dir, batch_id + 1)
+    shutil.rmtree(vdir, ignore_errors=True)
+    os.makedirs(vdir, exist_ok=True)
+    tbl = pa.Table.from_pandas(
+        out.assign(pdir=pdir)[["pdir", *pa_schema.names]],
+        schema=pa_schema.insert(0, pa.field("pdir", pa.string())),
+        preserve_index=False,
     )
-    touched_rows = {t: 0 for t in touched}
-    for b, s in zip(bucket_ids, is_state):
-        if s:
-            touched_rows[b] = touched_rows.get(b, 0) + 1
-    state_rows = out[is_state]
-    lts = state_rows["last_ts"].max() if len(state_rows) else None
-    return (
-        touched_rows,
-        (int(lts) if lts is not None and not pd.isna(lts) else None),
-        g,
+    if tbl.num_rows:
+        pads.write_dataset(
+            tbl,
+            data_path(state_dir, batch_id + 1),
+            format="parquet",
+            partitioning=pads.partitioning(
+                pa.schema([("pdir", pa.string())]), flavor="hive"
+            ),
+        )
+    touched_rows = {t: 0 for t in touched} | Counter(
+        b for b, s in zip(bucket_ids, is_state) if s
     )
+    lts = out.loc[is_state, "last_ts"]
+    return touched_rows, (int(lts.max()) if len(lts) else None), g
 
 
 def write_distributed_output(
@@ -583,24 +521,17 @@ def write_distributed_output(
     events_total: int,
     state_dir: str,
     batch_id: int,
-    shuffle_partitions: int | None = None,
 ) -> tuple[dict[int, int], int | None, int]:
-    """Distributed-route tail shared by both fast paths: size the next
-    version's group layout from a deterministic upper bound on its
-    live rows (each batch key adds at most one state row — replay-safe;
-    an overestimate only splits groups finer), cluster each group dir
+    """Distributed-route tail: size the next version's group layout
+    from a deterministic upper bound on its live rows (each batch key
+    adds at most one state row — replay-safe; an overestimate only
+    splits groups finer), cluster each group dir
     into ~4 tasks before the partitioned write (without the crc32 salt
     every task writes a sliver of every group — tasks x groups tiny
     files; with ONE task per group a detection-heavy pdir=d would
     serialize), write ``v{batch_id+1}``, and recover the manifest
     counts + watermark from parquet FOOTER statistics (metadata only,
-    never a state re-scan).
-
-    ``shuffle_partitions`` temporarily overrides
-    spark.sql.shuffle.partitions around the write for plans whose
-    width comes from a groupBy rather than an explicit repartition
-    (the sql engine); foreachBatch runs sequentially on the driver, so
-    set-and-restore is safe."""
+    never a state re-scan)."""
     num_buckets = meta["num_buckets"]
     est_next = max(
         1,
@@ -614,62 +545,13 @@ def write_distributed_output(
         F.col("pdir"),
         F.pmod(F.crc32(F.encode(F.col("key"), "UTF-8")), F.lit(4)),
     )
-    writer = out.write.mode("overwrite").partitionBy("pdir")
-    nxt_data = data_path(state_dir, batch_id + 1)
-    if shuffle_partitions is not None:
-        spark = out.sparkSession
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        try:
-            writer.parquet(nxt_data)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    else:
-        writer.parquet(nxt_data)
+    out.write.mode("overwrite").partitionBy("pdir").parquet(
+        data_path(state_dir, batch_id + 1)
+    )
     touched_rows, max_lt = split_group_counts(
         state_dir, batch_id + 1, touched, g_new
     )
     return touched_rows, max_lt, g_new
-
-
-def finish_batch(
-    spark,
-    state_dir: str,
-    batch_id: int,
-    meta: dict,
-    touched_rows: dict[int, int],
-    max_lt: int | None,
-    engine_used: str,
-    group_size_: int,
-    *,
-    watermark_delay_ms: int,
-    keep_versions: int,
-    sink,
-    out_schema: str,
-    det_schema: str,
-) -> None:
-    """Common tail for BOTH fast paths once ``v{batch_id+1}``'s data
-    exists: fold the new max carried last_ts into the watermark
-    (monotone: the outer max with the previous value guards against
-    expiry regressions), write the manifest, deliver the sink view, GC
-    stale versions."""
-    wm = meta["watermark_ms"]
-    new_wm = wm
-    if max_lt is not None and max_lt >= 0:
-        cand = max_lt - watermark_delay_ms
-        new_wm = cand if wm is None else max(int(wm), cand)
-    write_meta(
-        state_dir, batch_id + 1,
-        next_meta(meta, batch_id, touched_rows, new_wm, engine_used,
-                  group_size_),
-    )
-    if sink is not None:
-        sink(
-            detections_view(spark, state_dir, batch_id, out_schema,
-                            det_schema),
-            batch_id,
-        )
-    gc_versions(state_dir, batch_id, keep_versions)
 
 
 def compact_state(
@@ -728,8 +610,8 @@ def compact_state(
         and watermark_ms < stored_wm
     ):
         # a regressed watermark on resume would re-admit late events and
-        # shift TTL expiry — the monotonicity finish_batch guards must
-        # hold through compaction too
+        # shift TTL expiry — the monotonicity the fast path's
+        # finish_batch guards must hold through compaction too
         raise ValueError(
             f"compact_state watermark override {watermark_ms} is below "
             f"the stored watermark {stored_wm} for {state_dir}; the "

@@ -73,6 +73,44 @@ def test_auto_router_picks_lsh_beyond_limit(spark):
     assert len(lsh_pairs) >= 0.8 * len(exact_pairs)
 
 
+def test_auto_router_logs_why_it_probes(spark, caplog):
+    """When the catalog row count cannot be read, the router logs the
+    cause and that it fell back to the bounded probe, and still routes:
+    a planted twin pair is found on the exact broadcast path."""
+    import logging
+
+    from flink_rtcef_spark.operators.dedup import embedding_near_dup_auto
+
+    rng = np.random.RandomState(3)
+    base = rng.randn(16)
+    rows = [(i, [float(x) for x in rng.randn(16)]) for i in range(8)]
+    rows += [(100, [float(x) for x in base]), (101, [float(x) for x in base])]
+    emb_df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["vec_id", "embedding"])
+    )
+
+    class _NoStats:
+        """The DataFrame's JVM handle with its plan statistics gone."""
+
+        def __init__(self, jdf):
+            self._j = jdf
+
+        def queryExecution(self):
+            raise RuntimeError("plan stats unavailable")
+
+        def __getattr__(self, name):
+            return getattr(self._j, name)
+
+    emb_df._jdf = _NoStats(emb_df._jdf)
+    with caplog.at_level(logging.WARNING, logger="flink_rtcef_spark.operators.dedup"):
+        got = embedding_near_dup_auto(
+            emb_df, threshold=0.99, broadcast_limit=100
+        ).toPandas()
+    assert "RuntimeError: plan stats unavailable" in caplog.text
+    assert "bounded limit(101) probe" in caplog.text
+    assert (100, 101) in set(zip(got["id_a"], got["id_b"]))
+
+
 def test_levenshtein_verify_matches_duckdb(spark):
     import duckdb
 

@@ -11,22 +11,81 @@ Gates here:
 - event-clock run expiry: stale partial match dies, ttl=0 control keeps it
   (reference run expiry, ERFEngine.scala:213-216)
 - crash/restart resume over the same checkpoint + state dir is exactly-once
+- the protocol gates (zero-job driver route, torn-write replay, touched-
+  bucket rewrites, GC of idle buckets) and the route-agreement gates run
+  for BOTH kernels of the one skeleton: the SDFA and the register (NSRA)
+  spec (``kernel`` parameter)
 """
 
 from __future__ import annotations
 
 import random
+from typing import Callable, NamedTuple
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from flink_rtcef_spark.operators.cep import BatchCEP
+from flink_rtcef_spark.operators.cep_register import RegisterCEP
 from flink_rtcef_spark.plans.compiler import compile_pattern
-from flink_rtcef_spark.streaming.fastpath import start_fastpath_detections
+from flink_rtcef_spark.plans.nsra import compile_register_pattern
+from flink_rtcef_spark.streaming import fastpath
+from flink_rtcef_spark.streaming.fastpath import (
+    _SdfaSpec,
+    make_foreach_batch_detections,
+    start_fastpath_detections,
+    symbolize_stream,
+)
+from flink_rtcef_spark.streaming.fastpath_register import (
+    _RegisterSpec,
+    make_foreach_batch_register,
+    start_fastpath_register,
+    symbolize_register_stream,
+)
+from tests.test_fastpath_register import PAT as REG_PAT
+from tests.test_fastpath_register import SCHEMA as REG_SCHEMA
 
 PAT = ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){partitionBy:k}"
 DECLS = "~(IsEventTypePredicate(A),IsEventTypePredicate(B))"
+
+
+class Kernel(NamedTuple):
+    """One automaton's entry points into the fast-path skeleton, so a
+    protocol test runs unchanged over both kernels."""
+
+    schema: str
+    compile: Callable
+    start: Callable
+    make_fb: Callable
+    symbolize: Callable
+    spec: type
+    cep: type
+    row: Callable  # (k, ts, id, event_type) -> a row of ``schema``
+    routes: tuple
+
+
+def _register_row(r):
+    # A stores x = 1, B carries 5 > x: every A -> B inside the window
+    # completes, as in the SDFA pattern
+    return (*r, {"A": 1.0, "B": 5.0}.get(r[3], 0.0))
+
+
+KERNELS = {
+    "sdfa": Kernel(
+        "k string, ts long, id long, event_type string",
+        lambda: compile_pattern(PAT, DECLS),
+        start_fastpath_detections, make_foreach_batch_detections,
+        symbolize_stream, _SdfaSpec, BatchCEP, lambda r: r,
+        ("driver", "arrow", "sql"),
+    ),
+    "register": Kernel(
+        REG_SCHEMA,
+        lambda: compile_register_pattern(REG_PAT),
+        start_fastpath_register, make_foreach_batch_register,
+        symbolize_register_stream, _RegisterSpec, RegisterCEP,
+        _register_row, ("driver", "arrow"),
+    ),
+}
 
 DET_COLS = [
     "key", "detection_event_id", "detection_ts", "counter", "min_counter",
@@ -42,14 +101,17 @@ def _rows(n=400, seed=13):
     ]
 
 
-def _write_chunks(spark, path, rows, n_chunks):
+def _write_chunks(
+    spark, path, rows, n_chunks,
+    schema="k string, ts long, id long, event_type string",
+):
     per = (len(rows) + n_chunks - 1) // n_chunks
     for c in range(n_chunks):
         chunk = rows[c * per:(c + 1) * per]
         if not chunk:
             continue
         spark.createDataFrame(
-            chunk, "k string, ts long, id long, event_type string"
+            chunk, schema
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/c{c}")
 
 
@@ -207,28 +269,25 @@ def test_fastpath_auto_engine_flips_mid_stream(spark, tmp_path):
     assert got.astype(str).equals(want.astype(str))
 
 
-def test_fastpath_driver_engine_runs_no_spark_jobs(spark, tmp_path):
+@pytest.mark.parametrize("kernel", list(KERNELS))
+def test_fastpath_driver_engine_runs_no_spark_jobs(spark, tmp_path, kernel):
     """The driver route's whole point is removing the ~0.35 s/batch
     distributed-job floor: besides the batch's own source collect, the
     advance + state write + watermark recovery must submit ZERO Spark
     jobs.  Guard it with the status tracker so a regression (a stray
     count()/read job creeping into _driver_batch or _finish_batch)
     fails loudly instead of silently tripling microbatch latency."""
-    from flink_rtcef_spark.streaming.fastpath import (
-        make_foreach_batch_detections,
-    )
-
-    compiled = compile_pattern(PAT, DECLS)
-    fb = make_foreach_batch_detections(
+    kn = KERNELS[kernel]
+    compiled = kn.compile()
+    fb = kn.make_fb(
         compiled, str(tmp_path / "state"), sink=None, engine="driver"
     )
     rows = _rows(n=200, seed=7)
-    batch = spark.createDataFrame(
-        [(k, ts, i, et) for (k, ts, i, et) in rows],
-        "k string, ts long, id long, event_type string",
-    ).select(
-        F.col("k").alias("key"), F.col("ts"), F.col("id").alias("event_id"),
-        compiled.symbol_column().alias("symbol"),
+    batch = kn.symbolize(
+        spark.createDataFrame(
+            [kn.row((k, ts, i, et)) for (k, ts, i, et) in rows], kn.schema
+        ),
+        compiled, key_col="k", ts_col="ts", id_col="id",
     )
     tracker = spark.sparkContext.statusTracker()
     fb(batch, 0)  # batch 0: includes the toPandas() source collect
@@ -239,14 +298,18 @@ def test_fastpath_driver_engine_runs_no_spark_jobs(spark, tmp_path):
         _driver_batch,
         _make_partition_runner,
     )
-    runner = _make_partition_runner(compiled)
+    spec = kn.spec(compiled)
+    runner = _make_partition_runner(spec)
     # reading the manifest, the touched buckets' state (pyarrow), the
     # advance, and the bucketed state write are all driver-local
     meta = stt.read_meta(
         str(tmp_path / "state"), 1, stt.DEFAULT_NUM_BUCKETS
     )
     assert meta["state_rows"] > 0  # batch 0 really carried state in
-    _driver_batch(runner, pdf, str(tmp_path / "state"), 1, meta, 0)
+    touched = stt.touched_buckets_of(pdf["key"], stt.DEFAULT_NUM_BUCKETS)
+    _driver_batch(
+        spec, runner, pdf, touched, str(tmp_path / "state"), 1, meta, 0
+    )
     after = set(tracker.getJobIdsForGroup(None) or [])
     assert before == after, (
         f"driver-route advance submitted Spark jobs: {sorted(after - before)}"
@@ -280,9 +343,17 @@ def test_fastpath_restart_resumes_exactly_once(spark, tmp_path):
     assert got.astype(str).equals(want.astype(str))
 
 
-@pytest.mark.parametrize("engine", ["driver", "arrow"])
+@pytest.mark.parametrize(
+    "kernel,engine",
+    [
+        pytest.param("sdfa", "driver", id="driver"),
+        pytest.param("sdfa", "arrow", id="arrow"),
+        pytest.param("register", "driver", id="register-driver"),
+        pytest.param("register", "arrow", id="register-arrow"),
+    ],
+)
 def test_fastpath_torn_write_replay_overwrites_stale_data(
-    spark, tmp_path, engine
+    spark, tmp_path, kernel, engine
 ):
     """The crash window the versioned protocol is designed around: a
     process died AFTER (partially or fully) writing v{b+1}'s state
@@ -298,10 +369,11 @@ def test_fastpath_torn_write_replay_overwrites_stale_data(
     import os
     import shutil
 
-    rows = _rows(seed=57)
+    kn = KERNELS[kernel]
+    rows = [kn.row(r) for r in _rows(seed=57)]
     src = str(tmp_path / "src")
     per = (len(rows) + 3) // 4
-    _write_chunks(spark, src, rows[: 3 * per], 3)
+    _write_chunks(spark, src, rows[: 3 * per], 3, kn.schema)
     state_dir = f"{tmp_path}/torn_state_{engine}"
 
     collected = []
@@ -312,12 +384,12 @@ def test_fastpath_torn_write_replay_overwrites_stale_data(
     def start():
         stream = (
             spark.readStream
-            .schema("k string, ts long, id long, event_type string")
+            .schema(kn.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/c*")
         )
-        return start_fastpath_detections(
-            stream, compile_pattern(PAT, DECLS),
+        return kn.start(
+            stream, kn.compile(),
             state_dir=state_dir,
             checkpoint_dir=f"{tmp_path}/torn_ckpt_{engine}",
             sink=sink, key_col="k", ts_col="ts", id_col="id",
@@ -335,7 +407,7 @@ def test_fastpath_torn_write_replay_overwrites_stale_data(
 
     # the 4th chunk arrives; restart runs batch 3 over the torn dir
     spark.createDataFrame(
-        rows[3 * per:], "k string, ts long, id long, event_type string"
+        rows[3 * per:], kn.schema
     ).coalesce(1).write.mode("overwrite").parquet(f"{src}/c3")
     q = start()
     assert q.awaitTermination(600), "replay did not drain"
@@ -345,12 +417,8 @@ def test_fastpath_torn_write_replay_overwrites_stale_data(
     got = got.sort_values(DET_COLS).reset_index(drop=True)
     got["detection_ts"] //= 1000
 
-    df = spark.createDataFrame(
-        rows, "k string, ts long, id long, event_type string"
-    )
-    cep = BatchCEP(
-        compile_pattern(PAT, DECLS), key_col="k", ts_col="ts", id_col="id"
-    )
+    df = spark.createDataFrame(rows, kn.schema)
+    cep = kn.cep(kn.compile(), key_col="k", ts_col="ts", id_col="id")
     want = cep.detections(df).toPandas()[DET_COLS]
     want = want.sort_values(DET_COLS).reset_index(drop=True)
     assert len(want) > 0
@@ -416,7 +484,10 @@ def test_fastpath_routes_distributed_on_big_state_small_batch(spark, tmp_path):
     } and m2["num_buckets"] == 4
 
 
-def test_fastpath_rewrites_only_touched_buckets(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("kernel", list(KERNELS))
+def test_fastpath_rewrites_only_touched_buckets(
+    spark, tmp_path, monkeypatch, kernel
+):
     """The r5 scaling contract: a batch's write is O(touched buckets),
     not O(live keys).  Batch 0 populates many buckets; batch 1 touches
     ONE key — its version must physically contain only the GROUP dir
@@ -432,22 +503,23 @@ def test_fastpath_rewrites_only_touched_buckets(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(stt, "TARGET_GROUP_ROWS", 16)
     B = 16
-    compiled = compile_pattern(PAT, DECLS)
+    kn = KERNELS[kernel]
+    compiled = kn.compile()
     src = str(tmp_path / "src")
-    rows0 = [(f"k{i}", 10 + i, i, "A") for i in range(200)]
-    _write_chunks(spark, src, rows0, 1)
+    rows0 = [kn.row((f"k{i}", 10 + i, i, "A")) for i in range(200)]
+    _write_chunks(spark, src, rows0, 1, kn.schema)
     spark.createDataFrame(
-        [("k7", 600, 9000, "B")],
-        "k string, ts long, id long, event_type string",
+        [kn.row(("k7", 600, 9000, "B"))],
+        kn.schema,
     ).coalesce(1).write.mode("overwrite").parquet(f"{src}/c1")
 
     stream = (
-        spark.readStream.schema("k string, ts long, id long, event_type string")
+        spark.readStream.schema(kn.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/c*")
     )
     state_dir = f"{tmp_path}/touch_state"
-    q = start_fastpath_detections(
+    q = kn.start(
         stream, compiled,
         state_dir=state_dir, checkpoint_dir=f"{tmp_path}/touch_ckpt",
         key_col="k", ts_col="ts", id_col="id",
@@ -485,15 +557,17 @@ def test_fastpath_rewrites_only_touched_buckets(spark, tmp_path, monkeypatch):
     assert m2["state_rows"] == 200  # no key lost across the carry
 
 
+@pytest.mark.parametrize("kernel", list(KERNELS))
 def test_fastpath_gc_preserves_idle_buckets_beyond_keep_versions(
-    spark, tmp_path
+    spark, tmp_path, kernel
 ):
     """A key idle for MORE batches than keep_versions must keep its
     carried state: its bucket's owning version outlives the replay
     window because the manifest still references it.  kx opens a match
     in batch 0, five batches of other-bucket traffic age the versions,
     then kx's B completes the match — with ttl off, it MUST detect."""
-    compiled = compile_pattern(PAT, DECLS)
+    kn = KERNELS[kernel]
+    compiled = kn.compile()
     B = 64
     # pick a filler key in a different bucket than kx
     from flink_rtcef_spark.streaming import state_table as stt
@@ -504,26 +578,26 @@ def test_fastpath_gc_preserves_idle_buckets_beyond_keep_versions(
     )
     src = str(tmp_path / "src")
     spark.createDataFrame(
-        [("kx", 10, 0, "A"), (filler, 11, 1, "C")],
-        "k string, ts long, id long, event_type string",
+        [kn.row(("kx", 10, 0, "A")), kn.row((filler, 11, 1, "C"))],
+        kn.schema,
     ).coalesce(1).write.mode("overwrite").parquet(f"{src}/c0")
     for c in range(1, 6):
         spark.createDataFrame(
-            [(filler, 20 + c, 10 + c, "C")],
-            "k string, ts long, id long, event_type string",
+            [kn.row((filler, 20 + c, 10 + c, "C"))],
+            kn.schema,
         ).coalesce(1).write.mode("overwrite").parquet(f"{src}/c{c}")
     spark.createDataFrame(
-        [("kx", 40, 100, "B")],
-        "k string, ts long, id long, event_type string",
+        [kn.row(("kx", 40, 100, "B"))],
+        kn.schema,
     ).coalesce(1).write.mode("overwrite").parquet(f"{src}/c6")
 
     collected = []
     stream = (
-        spark.readStream.schema("k string, ts long, id long, event_type string")
+        spark.readStream.schema(kn.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/c*")
     )
-    q = start_fastpath_detections(
+    q = kn.start(
         stream, compiled,
         state_dir=f"{tmp_path}/idle_state",
         checkpoint_dir=f"{tmp_path}/idle_ckpt",
@@ -604,3 +678,148 @@ def test_fastpath_offline_compaction_reclaims_and_resumes(spark, tmp_path):
     got = pd.concat(collected, ignore_index=True)
     assert len(got[got["key"] == "klive"]) == 1
     assert got[got["key"] == "stale0"].empty
+
+
+# event ids above 2**53: a float64 pass anywhere in a route rounds them
+BIG_ID = 2**60
+
+
+def _id_batches(kn, n_keys=24, seed=5):
+    """Three microbatches over ``n_keys`` keys with event ids above
+    2**53: batch 0 opens runs on every key, batches 1 and 2 touch only
+    a few keys, so most carried keys are idle (state only)."""
+    rng = random.Random(seed)
+    keys = [f"k{i}" for i in range(n_keys)]
+    plan = [keys, keys[:4], keys[2:8]]
+    batches, eid, ts = [], BIG_ID, 100
+    for batch_keys in plan:
+        rows = []
+        for _ in range(6 * len(batch_keys)):
+            ts += 1
+            eid += 1
+            rows.append(kn.row((rng.choice(batch_keys), ts, eid, rng.choice("AABBC"))))
+        batches.append(rows)
+    return batches
+
+
+def _state_rows(state_dir, version, num_buckets, kn):
+    from flink_rtcef_spark.streaming import state_table as stt
+
+    meta = stt.read_meta(state_dir, version, num_buckets)
+    st = stt.read_state_pandas(meta, state_dir, list(range(num_buckets)))
+    cols = ["key", *kn.spec.out.columns[4:]]
+    return st[cols].sort_values("key").reset_index(drop=True)
+
+
+@pytest.mark.parametrize("kernel", list(KERNELS))
+def test_fastpath_routes_agree_on_state_and_detections(spark, tmp_path, kernel):
+    """The same three microbatches pushed through every forced route
+    (driver, arrow and, for the SDFA, sql) leave equal state rows and
+    emit equal detections.  Event ids sit above 2**53, so a route that
+    lets an int64 column pass through float64 (a concat or Arrow
+    conversion that introduces NaN) emits rounded ids and fails here.
+    Most carried keys are idle in batches 1 and 2, so the arrow route's
+    passive/active split and the driver walk's verbatim pass-through
+    both carry state here."""
+    kn = KERNELS[kernel]
+    compiled = kn.compile()
+    batches = _id_batches(kn)
+    ids = {r[2] for rows in batches for r in rows}
+    results = {}
+    for route in kn.routes:
+        state_dir = str(tmp_path / f"state_{route}")
+        dets = []
+        fb = kn.make_fb(
+            compiled, state_dir, engine=route, num_buckets=2,
+            sink=lambda df, bid: dets.append(df.toPandas()),
+        )
+        for bid, rows in enumerate(batches):
+            fb(
+                kn.symbolize(
+                    spark.createDataFrame(rows, kn.schema), compiled,
+                    key_col="k", ts_col="ts", id_col="id",
+                ),
+                bid,
+            )
+        got = pd.concat(dets, ignore_index=True)[DET_COLS]
+        results[route] = (
+            got.sort_values(DET_COLS).reset_index(drop=True),
+            _state_rows(state_dir, len(batches), 2, kn),
+        )
+    base_dets, base_state = results["driver"]
+    assert len(base_dets) > 0 and len(base_state) == 24
+    assert set(base_dets["detection_event_id"]) <= ids
+    for route, (dets, state) in results.items():
+        pd.testing.assert_frame_equal(dets, base_dets, obj=route)
+        pd.testing.assert_frame_equal(state, base_state, obj=route)
+
+
+@pytest.mark.parametrize("kernel", list(KERNELS))
+def test_fastpath_idle_carried_keys_skip_the_kernel(
+    spark, tmp_path, monkeypatch, kernel
+):
+    """A carried key with no events in the batch is written back
+    without the kernel: the driver route's key walk passes its row
+    through verbatim (the spec's ``load`` never sees it), and the arrow
+    route's passive/active split keeps its row out of the Arrow pass
+    (counted by an accumulator around the key walk).  24 keys carry
+    state into batch 1, whose events touch only 4 of them; one bucket,
+    so every carried key is read."""
+    kn = KERNELS[kernel]
+    compiled = kn.compile()
+    batches = _id_batches(kn)[:2]
+    active = {r[0] for r in batches[1]}
+    assert len(active) == 4
+
+    loads = []
+    real_load = kn.spec.load
+    monkeypatch.setattr(
+        kn.spec, "load",
+        staticmethod(lambda *v: loads.append(v) or real_load(*v)),
+    )
+    state_in = spark.sparkContext.accumulator(0)
+    real_runner = fastpath._make_partition_runner
+
+    def counting_runner(spec):
+        run = real_runner(spec)
+
+        def counted(batches_):
+            def tally(it):
+                for pdf in it:
+                    state_in.add(int(pdf["is_state"].sum()))
+                    yield pdf
+            return run(tally(batches_))
+
+        return counted
+
+    monkeypatch.setattr(fastpath, "_make_partition_runner", counting_runner)
+
+    def push(route):
+        state_dir = str(tmp_path / f"state_{route}")
+        fb = kn.make_fb(compiled, state_dir, engine=route, num_buckets=1)
+        for bid, rows in enumerate(batches):
+            fb(
+                kn.symbolize(
+                    spark.createDataFrame(rows, kn.schema), compiled,
+                    key_col="k", ts_col="ts", id_col="id",
+                ),
+                bid,
+            )
+        return state_dir
+
+    driver_dir = push("driver")
+    # batch 0 carries nothing in; batch 1 loads only its 4 active keys
+    assert len(loads) == len(active), loads
+    before = _state_rows(driver_dir, 1, 1, kn)
+    after = _state_rows(driver_dir, 2, 1, kn)
+    idle = ~before["key"].isin(active)
+    assert idle.sum() == 20 and len(after) == 24
+    pd.testing.assert_frame_equal(
+        after[~after["key"].isin(active)].reset_index(drop=True),
+        before[idle].reset_index(drop=True),
+    )
+
+    state_in.value = 0  # only the arrow route's kernel input below
+    arrow_dir = push("arrow")
+    assert state_in.value == len(active)
+    pd.testing.assert_frame_equal(_state_rows(arrow_dir, 2, 1, kn), after)

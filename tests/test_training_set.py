@@ -6,8 +6,10 @@ same before and after)."""
 
 from __future__ import annotations
 
+import gc
 import logging
 import random
+import time
 
 import numpy as np
 import pandas as pd
@@ -31,6 +33,29 @@ FINANCE_COLS = dict(key_col="pan", ts_col="timestamp", id_col="id")
 
 def persistent_rdds(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.fixture(autouse=True)
+def _earlier_garbage_cleaned(spark):
+    """The leak checks compare Spark's whole persistent-RDD registry, and
+    earlier tests leave unreferenced persisted RDDs behind (the lazy
+    ``localCheckpoint`` of ``connected_components``, for one) that
+    Spark's ContextCleaner unpersists only after Python and the JVM have
+    collected them.  One such cleanup landing inside a check shrinks the
+    registry for a reason outside this module, so collect that garbage
+    and let the cleaner finish before each test."""
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    # the cleaner works asynchronously: wait until the registry has
+    # held still for 1 s (10 s at most)
+    seen, still = None, 0
+    for _ in range(40):
+        now = persistent_rdds(spark)
+        still = still + 1 if now == seen else 0
+        if still == 4:
+            break
+        seen = now
+        time.sleep(0.25)
 
 
 def _finance_factory(compiled) -> ModelFactory:

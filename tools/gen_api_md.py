@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "flink_rtcef_spark"
@@ -20,7 +21,16 @@ HEADER = [
 ]
 
 
-def main() -> None:
+def first_sentence(node) -> str:
+    """The docstring's first sentence, whitespace-collapsed: split at a
+    period followed by whitespace or the end, so a dotted name such as
+    ``ModelFactory.prepare`` does not end it."""
+    doc = ast.get_docstring(node) or ""
+    return " ".join(re.split(r"\.(?:\s|$)", doc, maxsplit=1)[0].split())
+
+
+def render() -> str:
+    """The text of docs/API.md."""
     lines = list(HEADER)
     for sub in ("plans", "operators", "models", "functions", "sources",
                 "streaming", "queries"):
@@ -32,18 +42,21 @@ def main() -> None:
             fns = []
             for node in tree.body:
                 if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
-                    d = " ".join((ast.get_docstring(node) or "").split(".")[0].split())
-                    fns.append((f"`{node.name}`", d[:140]))
+                    fns.append((f"`{node.name}`", first_sentence(node)[:140]))
                 if isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
-                    d = " ".join((ast.get_docstring(node) or "").split(".")[0].split())
-                    fns.append((f"`{node.name}` *(class)*", d[:140]))
+                    fns.append((f"`{node.name}` *(class)*", first_sentence(node)[:140]))
             if fns:
                 lines.append(f"## `{sub}/{p.name}` — {mod_doc}")
                 lines.append("")
                 lines.extend(f"- {n} — {d}" for n, d in fns)
                 lines.append("")
-    (ROOT / "docs" / "API.md").write_text("\n".join(lines) + "\n")
-    print(f"wrote docs/API.md ({len(lines)} lines)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    text = render()
+    (ROOT / "docs" / "API.md").write_text(text)
+    print(f"wrote docs/API.md ({len(text.splitlines())} lines)")
 
 
 if __name__ == "__main__":
