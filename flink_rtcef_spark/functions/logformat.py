@@ -43,7 +43,3 @@ def local_report_line(timestamp: int, key: str, runtime_mcc: float, batch_mcc: f
 
 def global_report_line(timestamp: int, runtime_mcc: float, batch_mcc: float) -> str:
     return _report("GLOBAL_REPORT", timestamp, "GLOBAL", runtime_mcc, batch_mcc)
-
-
-def instruction_line(payload_json: str) -> str:
-    return f"INSTRUCTION: {payload_json}"

@@ -29,18 +29,6 @@ def recall_expr(tp: Column, fn: Column) -> Column:
     return _ratio(tp.cast("double"), (tp + fn).cast("double"))
 
 
-def specificity_expr(tn: Column, fp: Column) -> Column:
-    return _ratio(tn.cast("double"), (tn + fp).cast("double"))
-
-
-def npv_expr(tn: Column, fn: Column) -> Column:
-    return _ratio(tn.cast("double"), (tn + fn).cast("double"))
-
-
-def accuracy_expr(tp: Column, tn: Column, fp: Column, fn: Column) -> Column:
-    return _ratio((tp + tn).cast("double"), (tp + tn + fp + fn).cast("double"))
-
-
 def f1_expr(tp: Column, fp: Column, fn: Column) -> Column:
     p = precision_expr(tp, fp)
     r = recall_expr(tp, fn)

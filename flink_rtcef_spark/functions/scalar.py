@@ -68,14 +68,3 @@ def bitstring_flag(bitstring: Column, position: int) -> Column:
     return F.when(bitstring == "-1", F.lit(-1.0)).otherwise(
         F.substring(bitstring, position + 1, 1).cast("double")
     )
-
-
-def ngrams_expr(tokens_sql: str, n: int, sep: str = " ") -> Column:
-    """Array of n-grams (token arrays joined by ``sep``) from an
-    array<string> SQL expression.  Built-in-only: ``transform`` over a
-    sliced ``sequence`` — no UDF, fully codegen'd.
-    """
-    return F.expr(
-        f"transform(sequence(1, greatest(size({tokens_sql}) - {n - 1}, 0)), "
-        f"i -> concat_ws('{sep}', slice({tokens_sql}, i, {n})))"
-    )

@@ -34,12 +34,6 @@ from pyspark.sql import functions as F
 DEFAULT_LG_K = 12
 
 
-def distinct_sketch(col: Column | str, lg_k: int = DEFAULT_LG_K) -> Column:
-    """HLL sketch aggregate for a column — a reusable, mergeable
-    distinct-count summary (binary, ~2^lg_k bytes)."""
-    return F.hll_sketch_agg(col, lg_k)
-
-
 def approx_distinct(
     df: DataFrame, cols: list[str], lg_k: int = DEFAULT_LG_K
 ) -> DataFrame:

@@ -89,24 +89,6 @@ def langid_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     )
 
 
-def rolling_fingerprint(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Order-sensitive polynomial rolling hash over token hashes —
-    cheap near-exact dedup key robust to whitespace differences."""
-    toks = whitespace_tokens(text_col)
-    flat = df.select(F.col(id_col), F.posexplode(toks).alias("pos", "tok")).select(
-        id_col,
-        (F.col("pos") + 1).alias("i"),
-        (portable_hash64(F.col("tok")) % 1000000007).alias("h"),
-    )
-    return flat.groupBy(id_col).agg(
-        (F.sum(F.col("h") * (((F.col("i") * 31) % 1000003) + 1)) % 1000000007).alias(
-            "fingerprint"
-        )
-    )
-
-
 def pack_sequences(
     df: DataFrame,
     budget: int,

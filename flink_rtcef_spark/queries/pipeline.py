@@ -893,23 +893,6 @@ _COIN_SQL = (
     " / 1152921504606846976.0"
 )
 
-_BERNOULLI_SQL = f"""
-    SELECT doc_id, lang FROM documents
-    WHERE {_COIN_SQL.format(key='doc_id')} < 0.25
-"""
-
-
-# (Registry slot retired in r3 for repetition_signals: the hash-coin
-# mechanism stays oracle-covered by sample_stratified / sample_token_budget,
-# which build on the same deterministic coin; bernoulli_sample itself stays
-# pytest-covered.)
-def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_rtcef_spark.operators.sampling import bernoulli_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bernoulli_sample(docs, 0.25, "doc_id").select("doc_id", "lang")
-
-
 _STRATIFIED_SQL = f"""
     SELECT event_id, event_type FROM events
     WHERE {_COIN_SQL.format(key='event_id')} <

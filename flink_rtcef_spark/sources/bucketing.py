@@ -148,12 +148,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table (bucketing metadata rides the catalog, so
-    this is just ``spark.table`` — named for pipeline readability)."""
-    return spark.table(table)
-
-
 def co_located_join(
     spark: SparkSession,
     left_table: str,

@@ -83,11 +83,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_events_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """JSONL event source with declared schema (no inference in prod)."""
     reader = spark.read

@@ -1,8 +1,10 @@
 """Structured-Streaming runtime + the RTCEF closed adaptation loop.
 
 Maps the reference's three Flink jobs + Kafka topics (SURVEY.md §3.2-3.3)
-onto Spark: one streaming query for the keyed engine path
-(applyInPandasWithState), foreachBatch for collector/reports, and a
+onto Spark: one streaming query for the keyed engine path — one
+applyInPandasWithState GroupState function (inference.py) running the
+foreachBatch fast path's kernel specs (fastpath.py,
+fastpath_register.py) — foreachBatch for collector/reports, and a
 driver-side control loop (observer -> controller -> factory) — the
 control plane is tiny (1-key state machines), so it needs no cluster.
 

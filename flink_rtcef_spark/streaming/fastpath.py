@@ -28,8 +28,8 @@ max-event-ts-minus-delay carried across batches in the state version's
 metadata; rows later than the watermark are dropped JVM-side, and
 (``state_ttl_ms`` > 0) runs whose last event is more than ttl behind
 the watermark are expired by a filter before the kernel sees them
-(ERFEngine.scala:213-216 run expiry, same clock as
-streaming/inference._expired_on_event_clock).  Expired rows in
+(ERFEngine.scala:213-216 run expiry, the same clock as the engine
+path's GroupState function in streaming/inference.py).  Expired rows in
 UNTOUCHED buckets are dropped lazily — at the next read of their
 bucket — which is observationally identical (they could never reach a
 kernel un-filtered) but means TTL bounds the LIVE state a batch
@@ -109,7 +109,6 @@ from pyspark.storagelevel import StorageLevel
 from flink_rtcef_spark.operators.cep import _run_sdfa_segment
 from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
 from flink_rtcef_spark.streaming import state_table as stt
-from flink_rtcef_spark.streaming.inference import _with_event_time
 
 # long-form union of events and carried state; state rows sort before
 # any real event of their key (ts = _STATE_TS)
@@ -135,13 +134,16 @@ _SPARK_INTS = {"tinyint", "smallint", "int", "bigint", "long"}
 class _OutSchema(NamedTuple):
     """A kernel's output rows (kind 0 = detection, 1 = carried state)
     as the Spark schema string, the Arrow schema, the column list and
-    the per-column Spark types, built by :func:`_out_schema` from one
-    field list."""
+    the per-column Spark types, plus the carried-state columns (a
+    kind=1 row after ``kind``, ``key``, ``event_id`` and ``ts``) as a
+    schema string — the engine path's GroupState row — all built by
+    :func:`_out_schema` from one field list."""
 
     sql: str
     arrow: pa.Schema
     columns: list[str]
     types: dict[str, str]
+    state: str
 
 
 def _out_schema(state_fields: list[tuple[str, str]]) -> _OutSchema:
@@ -160,6 +162,7 @@ def _out_schema(state_fields: list[tuple[str, str]]) -> _OutSchema:
         pa.schema([(n, _ARROW_TYPES[t]) for n, t in fields]),
         [n for n, _ in fields],
         dict(fields),
+        ", ".join(f"{n} {t}" for n, t in fields[4:]),
     )
 
 
@@ -662,6 +665,28 @@ def _make_foreach_batch(
         )
 
     return foreach_batch
+
+
+def _with_event_time(stream_df: DataFrame, ts_col: str):
+    """(df, event_time_col) with a watermark-able TIMESTAMP column.
+
+    TIMESTAMP passes through; TIMESTAMP_NTZ is re-tagged
+    wall-clock-as-UTC via the tz-free interval expression
+    (sources.io.ntz_as_utc — a plain cast would shift on non-UTC
+    sessions); numeric epoch-seconds get ``timestamp_seconds``.
+    """
+    from flink_rtcef_spark.sources.io import ntz_as_utc
+
+    dtype = dict(stream_df.dtypes).get(ts_col)
+    if dtype == "timestamp":
+        return stream_df, ts_col
+    if dtype == "timestamp_ntz":
+        converted = stream_df.withColumn(
+            "__event_time", ntz_as_utc(ts_col, stream_df.sparkSession)
+        )
+    else:
+        converted = stream_df.withColumn("__event_time", F.timestamp_seconds(F.col(ts_col)))
+    return converted, "__event_time"
 
 
 def _symbolize(

@@ -9,12 +9,11 @@ versioned, hash-bucketed state table, the routes, the null-key rule,
 the Spark actions per microbatch and the sink's lazy view.
 
 The cross-batch state is the per-key (configuration set, counter)
-pickled into a BINARY parquet column — identical content to the
-applyInPandasWithState twin's GroupState blob
-(streaming/inference.make_register_stateful_fn), carried as a normal
-columnar table instead.  The mandatory SREMO window bounds the config
-set (at most ``window`` concurrent runs per key), so blob size is
-O(window), not O(stream).
+pickled into a BINARY parquet column.  The applyInPandasWithState
+engine path (streaming/inference.streaming_register_detections) runs
+this same spec, so its GroupState row is this state row.  The
+mandatory SREMO window bounds the config set (at most ``window``
+concurrent runs per key), so blob size is O(window), not O(stream).
 
 Routes: ``driver``, ``arrow`` and ``auto`` (driver below both bounds,
 ``arrow`` above either).  There is no ``sql`` route here: register

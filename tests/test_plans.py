@@ -120,6 +120,75 @@ def test_register_cep_single_shuffle_and_jvm_bits(spark):
     assert m and len(m.group(1).split(",")) <= 5
 
 
+def _engine_stream(spark, tmp_path, builder: str):
+    """The keyed engine path's stream (streaming/inference.py) from
+    ``builder`` over an empty file source, event-clock TTL on."""
+    from flink_rtcef_spark.operators.cep import BatchCEP
+    from flink_rtcef_spark.models.spst import train_spst
+    from flink_rtcef_spark.plans.compiler import compile_pattern, compile_patterns
+    from flink_rtcef_spark.plans.nsra import compile_register_pattern
+    from flink_rtcef_spark.streaming import inference
+
+    pat = ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){partitionBy:k}"
+    decls = "~(IsEventTypePredicate(A),IsEventTypePredicate(B))"
+    schema = "k string, timestamp long, id long, event_type string, value double"
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = spark.readStream.schema(schema).parquet(str(src))
+    opts = dict(ts_col="timestamp", id_col="id", state_ttl_ms=600_000)
+    if builder == "detections":
+        return inference.streaming_detections(
+            stream, compile_pattern(pat, decls), **opts
+        )
+    if builder == "register":
+        cp = compile_register_pattern(
+            ';(IsEventTypePredicate(A)["x"],^(IsEventTypePredicate(B),'
+            'GTAttr(value,"x"))){partitionBy:k}{window:2}'
+        )
+        return inference.streaming_register_detections(stream, cp, **opts)
+    if builder == "multi":
+        compiled = compile_patterns(
+            f"{pat}&;(IsEventTypePredicate(B),IsEventTypePredicate(A))"
+            "{partitionBy:k}",
+            decls,
+        )
+        return inference.streaming_multi_detections(stream, compiled, **opts)
+    compiled = compile_pattern(
+        ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){order:1}"
+        "{partitionBy:k}",
+        decls,
+    )
+    events = spark.createDataFrame(
+        [("u", t, t, "AB"[t % 2], 0.0) for t in range(20)], schema
+    )
+    cep = BatchCEP(compiled, ts_col="timestamp", id_col="id")
+    spst = train_spst(
+        cep.symbolized(events), compiled, max_order=1, horizon=5, cutoff=0.0
+    )
+    return inference.streaming_forecasts(stream, spst, **opts)
+
+
+@pytest.mark.parametrize(
+    "builder", ["detections", "register", "multi", "forecasts"]
+)
+def test_engine_path_one_stateful_operator_and_jvm_symbolization(
+    spark, tmp_path, builder
+):
+    """Every engine-path builder plans as ONE
+    FlatMapGroupsInPandasWithState over ONE hash exchange on the key,
+    with no Python eval node below it: symbolization (the symbol or
+    bits columns) stays a JVM Project expression."""
+    df = _engine_stream(spark, tmp_path, builder)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandasWithState", plan)) == 1
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
+    assert "hashpartitioning(key" in plan
+    assert "EvalPython" not in plan
+    assert "CASE WHEN" in plan
+
+
 def test_curation_is_single_pass(spark):
     """The composed curation chain must stay one scan + two exchanges
     (doc aggregation, content-hash window); the groupBy+semi-join

@@ -43,19 +43,37 @@ def _earlier_garbage_cleaned(spark):
     Spark's ContextCleaner unpersists only after Python and the JVM have
     collected them.  One such cleanup landing inside a check shrinks the
     registry for a reason outside this module, so collect that garbage
-    and let the cleaner finish before each test."""
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    # the cleaner works asynchronously: wait until the registry has
-    # held still for 1 s (10 s at most)
+    and let the cleaner finish before each test.
+
+    py4j tells the JVM about a released Python-side object from a
+    finalizer thread that sleeps 1 s when idle, so a JVM collection
+    started right after ``gc.collect()`` can miss those objects and a
+    later, natural one (inside the check) reclaims them.  Hence each
+    round drains that queue before ``System.gc()``, and the rounds
+    repeat until the registry has held still for 4 of them (40 at
+    most).  The queue is a private attribute of PySpark's default
+    pinned-thread client (py4j's ``ClientServer``); without it
+    (``PYSPARK_PIN_THREAD=false``) the wait is skipped and the rounds
+    rely on the sleeps and the 4-round stillness alone, which also
+    covers a finalizer that has popped its last object but not yet
+    told the JVM."""
+    finalizer_queue = getattr(
+        spark.sparkContext._gateway._gateway_client, "finalizer_deque", None
+    )
     seen, still = None, 0
     for _ in range(40):
+        gc.collect()
+        for _ in range(100):
+            if not finalizer_queue:
+                break
+            time.sleep(0.05)
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.25)
         now = persistent_rdds(spark)
         still = still + 1 if now == seen else 0
         if still == 4:
             break
         seen = now
-        time.sleep(0.25)
 
 
 def _finance_factory(compiled) -> ModelFactory:
