@@ -10,9 +10,9 @@ confusable with a real regression.  Two windowed hot-key fixtures
 (reset-bearing vs reset-free) record the pre-split win and the
 certified fallback's quarantine cost; a 10x synthetic section
 measures one weak-scaling step for the CEP and dedup paths; and a
-streaming section replays the events table through the
-applyInPandasWithState path (8 microbatches AND 1 microbatch, so the
-per-batch fixed cost and the amortized per-event rate are separable).
+streaming section replays the events table through the foreachBatch
+fast path (8 microbatches AND 1 microbatch, so the per-batch fixed
+cost and the amortized per-event rate are separable).
 
 Headline set = one query per operator class that dominates cost at
 scale (scan+agg, joins, windows, CEP, dedup, similarity).  Each query
@@ -23,7 +23,9 @@ r9 additions (r8 verdict #1/#2): every headline query also records
 median-wall run (see _subtree_cpu_sec; wall-up-cpu-flat == host
 contention, not a code regression) — and ``queries_all_1shot`` times
 every registry query outside the headline set once, so no
-driver-checked query is perf-blind.
+driver-checked query is perf-blind.  A query that raises keeps a
+``-1.0`` wall there, and its cause ("Type: message") goes to
+``queries_failed``.
 """
 
 from __future__ import annotations
@@ -225,6 +227,7 @@ def main() -> None:
     # cpu_sec tells contention from code as for the headline set.
     all_wall: dict[str, float] = {}
     all_cpu: dict[str, float] = {}
+    failed: dict[str, str] = {}
     for name, fn in q.QUERIES.items():
         if name in timings:
             continue
@@ -232,6 +235,7 @@ def main() -> None:
             w1, c1 = _timed_cpu(lambda: fn(spark, sf_dir).count())
         except Exception as e:  # never let one query kill the artifact
             all_wall[name] = -1.0
+            failed[name] = f"{type(e).__name__}: {e}"
             print(f"# queries_all {name} failed: {e}", file=sys.stderr)
             continue
         all_wall[name] = round(w1, 3)
@@ -264,6 +268,7 @@ def main() -> None:
         "queries_cpu_sec": cpu,
         "queries_all_1shot": all_wall,
         "queries_all_cpu_sec": all_cpu,
+        "queries_failed": failed,
         "iterations": N_ITER,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cep_events_per_sec": marginal,
@@ -896,14 +901,10 @@ def streaming_throughput(spark, sf_dir: str) -> dict:
     Includes per-microbatch overhead, so it is a floor on the
     steady-state rate (larger batches amortize better).
 
-    Two engines, measured on the SAME replay: the foreachBatch fast
-    path (streaming/fastpath.py, versioned-state protocol, auto
-    driver/distributed routing — the production-recommended engine,
-    reported as ``streaming_cep_events_per_sec``) and the
-    applyInPandasWithState engine (streaming/inference.py, reported as
-    ``streaming_cep_state_engine_events_per_sec`` for r3 continuity —
-    its ~1 s/microbatch per-group machinery is the floor the fast path
-    exists to remove)."""
+    The foreachBatch fast path (streaming/fastpath.py, versioned-state
+    protocol, auto driver/distributed routing) runs the SDFA pattern in
+    8 microbatches and in one, and the register pattern in 8, on the
+    SAME replay."""
     import shutil
     import tempfile
 
@@ -916,7 +917,6 @@ def streaming_throughput(spark, sf_dir: str) -> dict:
     from flink_rtcef_spark.streaming.fastpath_register import (
         start_fastpath_register,
     )
-    from flink_rtcef_spark.streaming.inference import streaming_detections
 
     base = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -946,29 +946,6 @@ def streaming_throughput(spark, sf_dir: str) -> dict:
             "{partitionBy:k}",
             "~(IsEventTypePredicate(view),IsEventTypePredicate(purchase))",
         )
-
-        def run(files_per_trigger: int = 1) -> None:
-            stream = (
-                spark.readStream.schema(
-                    "k string, tsec long, id long, event_type string, "
-                    "value double"
-                )
-                .option("maxFilesPerTrigger", files_per_trigger)
-                .parquet(f"{workdir}/src/c*")
-            )
-            out = streaming_detections(
-                stream, compiled, key_col="k", ts_col="tsec", id_col="id",
-                watermark="60 seconds", state_ttl_ms=3_600_000,
-            )
-            q = (
-                out.writeStream.format("noop")
-                .option("checkpointLocation", f"{workdir}/ckpt")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            assert q.awaitTermination(600), "stream did not drain"
-            shutil.rmtree(f"{workdir}/ckpt", ignore_errors=True)
 
         def run_fastpath(files_per_trigger: int = 1) -> None:
             stream = (
@@ -1023,13 +1000,6 @@ def streaming_throughput(spark, sf_dir: str) -> dict:
         run_fastpath()  # warm-up (plan + python workers)
         fp = _median3(run_fastpath)
         fp1 = _median3(lambda: run_fastpath(8))
-        run()  # warm-up (plan + state store init)
-        dt = _median3(run)
-        # same replay in ONE microbatch: isolates the per-batch fixed
-        # cost (plan + state-store load + python worker round) from the
-        # per-event cost — the amortized rate is what a production
-        # trigger interval tunes toward
-        dt1 = _median3(lambda: run(8))
         return {
             "streaming_cep_events": n,
             "streaming_cep_engine": "fastpath_auto",
@@ -1038,10 +1008,6 @@ def streaming_throughput(spark, sf_dir: str) -> dict:
             "streaming_cep_microbatches": 8,
             "streaming_cep_1batch_sec": round(fp1, 3),
             "streaming_cep_1batch_events_per_sec": round(n / fp1),
-            "streaming_cep_state_engine_sec": round(dt, 3),
-            "streaming_cep_state_engine_events_per_sec": round(n / dt),
-            "streaming_cep_state_engine_1batch_sec": round(dt1, 3),
-            "streaming_cep_state_engine_1batch_events_per_sec": round(n / dt1),
             "streaming_register_cep_sec": round(rg, 3),
             "streaming_register_cep_events_per_sec": round(n / rg),
         }

@@ -42,19 +42,13 @@ def swap_mapping(old: SPST, new: SPST) -> np.ndarray:
     return mapping
 
 
-FORECAST_COLUMNS = [
-    "key", "ts", "event_id", "counter", "is_detection",
-    "prob", "start_ctr", "end_ctr", "positive",
-]
-
-
 def _forecast_run(syms, tss, init, main, swap=None):
     """THE forecast run kernel — shared verbatim by batch
     (ForecastCEP.forecasts / .confusion) and streaming
-    (streaming/inference.py), so the paths cannot diverge.
+    (streaming/fastpath._ForecastSpec), so the paths cannot diverge.
 
     One key segment; ``init`` = (state, counter0, swapped) carried
-    across Arrow batches / GroupState.  ``main`` = (delta, finals,
+    across Arrow batches / microbatches.  ``main`` = (delta, finals,
     started, ftable, resets); ``swap`` = None or (migrate, sync_time,
     delta2, finals2, started2, ftable2) for the synchronized per-event
     model swap (G4).  Sequential pass computes only the state
@@ -109,51 +103,33 @@ def _forecast_run(syms, tss, init, main, swap=None):
     return (counters, det_mask, fc_mask, fstart, fend, fprob, fpos), carry
 
 
+def _forecast_rows(tss, ids, runs) -> dict:
+    """The columns after ``key`` of one segment's output rows (the
+    schema of ForecastCEP.forecasts), as arrays: its detections (prob, start_ctr and end_ctr -1,
+    positive False), then its forecasts.  ``runs`` are
+    ``_forecast_run``'s per-event arrays."""
+    counters, det_mask, fc_mask, fstart, fend, fprob, fpos = runs
+    di, fi = np.flatnonzero(det_mask), np.flatnonzero(fc_mask)
+    idx = np.concatenate([di, fi])
+    det = np.arange(len(idx)) < len(di)
+    ctr = counters[idx]
+    return {
+        "ts": tss[idx].astype("int64"),
+        "event_id": ids[idx].astype("int64"),
+        "counter": ctr,
+        "is_detection": det,
+        "prob": np.where(det, -1.0, fprob[idx]),
+        "start_ctr": np.where(det, -1, ctr + fstart[idx].astype("int64")),
+        "end_ctr": np.where(det, -1, ctr + fend[idx].astype("int64")),
+        "positive": ~det & (fpos[idx] >= 1.0),
+    }
+
+
 def _run_forecast_segment(key, syms, tss, ids, init, main, swap=None):
     """One key segment through ``_forecast_run``, as output rows: the
-    key's detections and forecasts in the FORECAST_COLUMNS frame, plus
-    the carry."""
-    (counters, det_mask, fc_mask, fstart, fend, fprob, fpos), carry = _forecast_run(
-        syms, tss, init, main, swap
-    )
-    frames = []
-    if det_mask.any():
-        di = np.where(det_mask)[0]
-        frames.append(
-            pd.DataFrame(
-                {
-                    "key": key,
-                    "ts": tss[di].astype("int64"),
-                    "event_id": ids[di].astype("int64"),
-                    "counter": counters[di],
-                    "is_detection": True,
-                    "prob": -1.0,
-                    "start_ctr": -1,
-                    "end_ctr": -1,
-                    "positive": False,
-                }
-            )
-        )
-    if fc_mask.any():
-        fi = np.where(fc_mask)[0]
-        frames.append(
-            pd.DataFrame(
-                {
-                    "key": key,
-                    "ts": tss[fi].astype("int64"),
-                    "event_id": ids[fi].astype("int64"),
-                    "counter": counters[fi],
-                    "is_detection": False,
-                    "prob": fprob[fi],
-                    "start_ctr": counters[fi] + fstart[fi].astype("int64"),
-                    "end_ctr": counters[fi] + fend[fi].astype("int64"),
-                    "positive": fpos[fi] >= 1.0,
-                }
-            )
-        )
-    if not frames:
-        return pd.DataFrame(columns=FORECAST_COLUMNS), carry
-    return pd.concat(frames)[FORECAST_COLUMNS], carry
+    key's detections and forecasts as one frame, plus the carry."""
+    runs, carry = _forecast_run(syms, tss, init, main, swap)
+    return pd.DataFrame({"key": key, **_forecast_rows(tss, ids, runs)}), carry
 
 
 CONFUSION_COLUMNS = ["tp", "tn", "fp", "fn"]

@@ -1,61 +1,63 @@
-"""High-throughput streaming CEP: foreachBatch + state-as-DataFrame.
+"""Streaming CEP: foreachBatch + state-as-DataFrame, for every kernel.
 
-Why this exists.  The ``applyInPandasWithState`` path
-(streaming/inference.py) pays a measured ~1 s/microbatch of pure
-machinery on local[32] — profiled with a NO-OP stateful function it
-still costs ~1 s/batch (per-group Arrow round trips + state-store
-commit across 32 partitions), so no kernel optimization can recover
-it.  The batch operator (operators/cep.py BatchCEP, fused) is ~20x
-faster because it advances ALL keys in ONE mapInPandas pass per
-partition.  This module runs that same fused kernel per microbatch
-under ``foreachBatch``, carrying run state as a co-partitioned
-DataFrame instead of per-key GroupState rows.
+The reference runs every kernel through one keyed process function
+(WayebEngine.processElement, WayebEngine.java:225-316).  Here one
+``foreachBatch`` skeleton (:func:`_make_foreach_batch`) plays that
+role for all four kernels: the SDFA (:class:`_SdfaSpec`), the register
+automaton (streaming/fastpath_register.py), all patterns of a
+multi-pattern set at once (:class:`_MultiSpec`) and recognition plus
+forecasting (:class:`_ForecastSpec`).  Each microbatch advances ALL
+of its keys in one fused pass — the batch operators' own segment
+kernels (operators/cep.py BatchCEP, fused) — and carries run state as
+a co-partitioned DataFrame.  A per-key stateful operator instead pays
+per-group Arrow round trips and a state-store commit on every
+microbatch (measured ~9x slower on bench.py's sf0.1 replay), which no
+kernel optimization can recover.
 
 Flink parity.  The reference engine's run state is the per-key
 quintuple (state, counter, min_counter, min_ts, n_matched) inside a
 KeyedProcessFunction (WayebEngine.java:102-118); Flink snapshots it on
 the checkpoint interval and recovers by rewinding the Kafka source.
-Here the quintuple lives in a versioned, hash-BUCKETED parquet table
-(streaming/state_table.py): batch ``b`` reads only the buckets its
-keys hash into, advances them in one fused pass, and writes those
+Here a key's state row lives in a versioned, hash-BUCKETED parquet
+table (streaming/state_table.py): batch ``b`` reads only the buckets
+its keys hash into, advances them in one fused pass, and writes those
 buckets into ``v{b+1}``; untouched buckets carry forward by manifest
 reference.  Idempotent under Spark's microbatch replay (a re-run of
 batch ``b`` re-reads the same ``v{b}`` manifest and overwrites
 ``v{b+1}``), which is exactly-once without any state store.
 
-Event-time semantics match the default engine path: the watermark is
-max-event-ts-minus-delay carried across batches in the state version's
-metadata; rows later than the watermark are dropped JVM-side, and
-(``state_ttl_ms`` > 0) runs whose last event is more than ttl behind
-the watermark are expired by a filter before the kernel sees them
-(ERFEngine.scala:213-216 run expiry, the same clock as the engine
-path's GroupState function in streaming/inference.py).  Expired rows in
-UNTOUCHED buckets are dropped lazily — at the next read of their
-bucket — which is observationally identical (they could never reach a
-kernel un-filtered) but means TTL bounds the LIVE state a batch
-processes, not the bytes parked on disk; a periodic compaction (read
-+ rewrite every bucket) reclaims disk if that matters.
+Event-time semantics.  The watermark is max-event-ts-minus-delay
+(the reference's bounded out-of-orderness, InferenceJob.java:134-137)
+carried across batches in the state version's metadata; rows later
+than the watermark are dropped JVM-side, and (``state_ttl_ms`` > 0)
+runs whose last event is more than ttl behind the watermark are
+expired by a filter before the kernel sees them (ERFEngine.scala:
+213-216 run expiry, on the event clock).  Expired rows in UNTOUCHED
+buckets are dropped lazily — at the next read of their bucket — which
+is observationally identical (they could never reach a kernel
+un-filtered) but means TTL bounds the LIVE state a batch processes,
+not the bytes parked on disk; a periodic compaction (read + rewrite
+every bucket) reclaims disk if that matters.
 
 Scale design.  Per microbatch: ONE hash shuffle of (events ∪
 touched-bucket state) on the key, a within-partition sort, one
 Arrow-batched Python pass (or a pure-JVM fold), and a parquet write
 of O(touched-bucket rows).  NOTHING is proportional to the live-key
 population: a 10k-row batch against 10M carried keys reads and
-rewrites only the buckets its keys collide with (r4 rewrote the full
-table every batch — the one untested 100x axis the r4 verdict
-flagged).  Size ``num_buckets`` so a typical batch touches a fraction
-of them; the uniform-random-keys worst case degrades gracefully to
-the full rewrite.  At production scale the state table is a normal
-columnar table — re-clustering, TTL sweeps, and inspection are plain
-DataFrame operations rather than state-store internals.
+rewrites only the buckets its keys collide with.  Size
+``num_buckets`` so a typical batch touches a fraction of them; the
+uniform-random-keys worst case degrades gracefully to the full
+rewrite.  At production scale the state table is a normal columnar
+table — re-clustering, TTL sweeps, and inspection are plain DataFrame
+operations rather than state-store internals.
 
-The protocol contract, for both automata.  One skeleton
-(:func:`_make_foreach_batch`) runs every microbatch of the SDFA path
-here and of the register (SREMO/NSRA) path in
-streaming/fastpath_register.py; a kernel spec supplies only its event
-and state columns and ``load``/``step``/``dump`` around its segment
-kernel (plus, for the SDFA, a pure-JVM fold).  Every route of both
-kernels keeps this contract:
+A kernel spec supplies ``out`` (its :func:`_out_schema`), ``key``
+(the default key column), ``event_cols`` and the JVM ``columns()``
+that symbolize a stream into them, and ``load``/``step``/``dump``
+around its segment kernel (``step(cols, seg, carry) -> (rows,
+carry)``, each row the output fields after ``key``), plus, for the
+SDFA, a pure-JVM fold (``jvm_fold``; None elsewhere).  The protocol
+contract every route of every kernel keeps:
 
 - routes: ``driver`` advances the batch on the driver with zero Spark
   jobs; ``sql`` runs the JVM fold (SDFA only); ``arrow`` runs the
@@ -75,7 +77,7 @@ kernels keeps this contract:
   routes run the probe (auto only), one tiny per-bucket count
   aggregate (touched buckets + group sizing), on the arrow route one
   count that materializes the passive/active split, and the write of
-  the kernel's rows (kind 0 = detection, kind 1 = one state row per
+  the kernel's rows (kind 0 = output row, kind 1 = one state row per
   live key) into ``v{batch_id+1}`` (layout and footer-statistics
   recovery: streaming/state_table.py).
 - a carried key with no events in the batch writes its state row back
@@ -86,16 +88,20 @@ kernels keeps this contract:
   event) union fills the other's integer columns with typed zeros, and
   the kernel's output frame keeps Python ints, so event ids above
   2**53 survive every route.
-- ``sink(detections_df, batch_id)``, if given, receives a LAZY view
-  over the written detections (a no-op sink pays nothing).  Old
-  versions are GC'd after ``keep_versions`` batches EXCEPT bucket dirs
-  a live manifest still references; a sink that wants a durable
-  detection history must write it onward — the standard foreachBatch
-  delivery contract.
+- ``sink(df, batch_id)``, if given, receives a LAZY view over the
+  batch's written output rows in the spec's sink columns (a no-op sink
+  pays nothing): ``state_table.DET_SCHEMA`` for the SDFA and register
+  kernels, :data:`MULTI_OUTPUT_SCHEMA` and
+  :data:`FORECAST_OUTPUT_SCHEMA` for the other two.  Old versions are
+  GC'd after ``keep_versions`` batches EXCEPT bucket dirs a live
+  manifest still references; a sink that wants a durable history must
+  write it onward, idempotently per ``batch_id`` (a replayed batch
+  re-delivers its rows) — the standard foreachBatch delivery contract.
 """
 
 from __future__ import annotations
 
+import pickle
 from typing import NamedTuple
 
 import numpy as np
@@ -107,6 +113,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from flink_rtcef_spark.operators.cep import _run_sdfa_segment
+from flink_rtcef_spark.operators.forecast import _forecast_rows, _forecast_run
 from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
 from flink_rtcef_spark.streaming import state_table as stt
 
@@ -124,49 +131,82 @@ DRIVER_MAX_STATE_ROWS = 75_000
 
 _ARROW_TYPES = {
     "int": pa.int32(), "long": pa.int64(), "string": pa.string(),
-    "binary": pa.binary(),
+    "binary": pa.binary(), "double": pa.float64(), "boolean": pa.bool_(),
 }
-_NUMPY_INTS = {"int": np.int32, "long": np.int64}
+_NUMPY_TYPES = {
+    "int": np.int32, "long": np.int64, "double": np.float64,
+    "boolean": np.bool_,
+}
 # Spark's simple-string names of the integer types (DataFrame.dtypes)
 _SPARK_INTS = {"tinyint", "smallint", "int", "bigint", "long"}
 
+MULTI_OUTPUT_SCHEMA = (
+    "pattern_id int, key string, detection_event_id long, detection_ts long, "
+    "counter long, min_counter long, n_matched int"
+)
+FORECAST_OUTPUT_SCHEMA = (
+    "key string, ts long, event_id long, counter long, is_detection boolean, "
+    "prob double, start_ctr long, end_ctr long, positive boolean"
+)
+
 
 class _OutSchema(NamedTuple):
-    """A kernel's output rows (kind 0 = detection, 1 = carried state)
-    as the Spark schema string, the Arrow schema, the column list and
-    the per-column Spark types, plus the carried-state columns (a
-    kind=1 row after ``kind``, ``key``, ``event_id`` and ``ts``) as a
-    schema string — the engine path's GroupState row — all built by
-    :func:`_out_schema` from one field list."""
+    """A kernel's written rows, built by :func:`_out_schema`: the Spark
+    schema string, the Arrow schema, the column list and the per-column
+    Spark types; the carried-state columns (a kind=1 row's fields
+    after ``key``, ending in ``last_ts``) as a list and as a schema
+    string; the output fields a kind=0 row fills after ``key``; and the
+    sink's schema string."""
 
     sql: str
     arrow: pa.Schema
     columns: list[str]
     types: dict[str, str]
+    carried: list[str]
     state: str
+    row: list[str]
+    sink: str
 
 
-def _out_schema(state_fields: list[tuple[str, str]]) -> _OutSchema:
-    """The output schema of a kernel whose carried state adds
-    ``state_fields`` to the detection columns every kernel writes; a
-    kind=1 row carries its state in ``counter``, ``min_counter``,
-    ``n_matched`` and ``state_fields``, then ``last_ts`` (the TTL and
-    watermark clock)."""
-    fields = [
-        ("kind", "int"), ("key", "string"), ("event_id", "long"),
-        ("ts", "long"), ("counter", "long"), ("min_counter", "long"),
-        ("n_matched", "int"), *state_fields, ("last_ts", "long"),
-    ]
+def _out_schema(
+    row_fields: list[tuple[str, str]],
+    state_fields: list[tuple[str, str]],
+    sink: str = stt.DET_SCHEMA,
+) -> _OutSchema:
+    """The written rows of a kernel whose output rows are
+    ``(0, key, *row_fields)`` and whose state rows are ``(1, key, ...,
+    *state_fields, last_ts)`` — ``last_ts`` is the TTL and watermark
+    clock.  A field in both lists is ONE column, so the state fields
+    must continue the row fields' tail (the SDFA's counter,
+    min_counter and n_matched are both).  ``sink`` is the schema of the
+    sink's view, whose columns state_table.detections_view reads from
+    the written ones."""
+    fields = [("kind", "int"), ("key", "string"), *row_fields]
+    fields += [f for f in state_fields if f not in row_fields]
+    fields.append(("last_ts", "long"))
+    carried = fields[-1 - len(state_fields):]
+    if carried[:-1] != list(state_fields):
+        raise ValueError(f"state fields {state_fields} must end the row fields")
     return _OutSchema(
         ", ".join(f"{n} {t}" for n, t in fields),
         pa.schema([(n, _ARROW_TYPES[t]) for n, t in fields]),
         [n for n, _ in fields],
         dict(fields),
-        ", ".join(f"{n} {t}" for n, t in fields[4:]),
+        [n for n, _ in carried],
+        ", ".join(f"{n} {t}" for n, t in carried),
+        [n for n, _ in row_fields],
+        sink,
     )
 
 
-_SDFA_OUT = _out_schema([("state", "int"), ("min_ts", "long")])
+# a detection row of the SDFA and register kernels
+_DET_FIELDS = [
+    ("event_id", "long"), ("ts", "long"), ("counter", "long"),
+    ("min_counter", "long"), ("n_matched", "int"),
+]
+_SDFA_OUT = _out_schema(
+    _DET_FIELDS, [*_DET_FIELDS[2:], ("state", "int"), ("min_ts", "long")]
+)
 _OUT_SCHEMA = _SDFA_OUT.sql
 
 
@@ -179,10 +219,14 @@ class _SdfaSpec:
 
     def __init__(self, compiled: CompiledPattern):
         self.compiled = compiled
+        self.key = compiled.partition_by
         self.event_cols = ["key", "ts", "event_id", "symbol"]
         self.delta, self.take, self.finals = transition_tables(compiled.sdfa)
         self.window, self.window_type = compiled.window, compiled.window_type
         self.resets = compiled.reset_symbols()
+
+    def columns(self) -> list:
+        return [self.compiled.symbol_column().alias("symbol")]
 
     @staticmethod
     def load(counter, min_counter, n_matched, state, min_ts):
@@ -209,6 +253,114 @@ class _SdfaSpec:
         return _SqlFold(self.compiled)
 
 
+class _MultiSpec:
+    """Streaming twin of MultiPatternCEP (operators/multi_cep.py): the
+    reference feeds every event to ALL loaded FSMs (ERFEngine.scala:204).
+    Every pattern contributes its own JVM symbol column, and one
+    ``_SdfaSpec`` per pattern advances over it; the carry vector (one
+    quintuple per pattern) is pickled into one binary state column.
+    Output rows are (pattern_id, *detection)."""
+
+    out = _out_schema(
+        [("pattern_id", "int"), *_DET_FIELDS], [("carries", "binary")],
+        MULTI_OUTPUT_SCHEMA,
+    )
+    jvm_fold = None
+
+    def __init__(self, compiled_list):
+        if not compiled_list:
+            raise ValueError("need at least one pattern")
+        self.specs = [_SdfaSpec(c) for c in compiled_list]
+        keys = {c.partition_by for c in compiled_list if c.partition_by}
+        # patterns that disagree on partitionBy need an explicit key_col
+        self.key = keys.pop() if len(keys) == 1 else None
+        self.event_cols = [
+            "key", "ts", "event_id", *(f"symbol{p}" for p in range(len(self.specs)))
+        ]
+
+    def columns(self) -> list:
+        return [
+            s.compiled.symbol_column().alias(f"symbol{p}")
+            for p, s in enumerate(self.specs)
+        ]
+
+    @staticmethod
+    def load(blob):
+        return pickle.loads(blob)
+
+    def step(self, cols, seg, carry):
+        carry = carry or [None] * len(self.specs)
+        out = []
+        for p, spec in enumerate(self.specs):
+            rows, carry[p] = spec.step(
+                {**cols, "symbol": cols[f"symbol{p}"]}, seg, carry[p]
+            )
+            out.extend((p, *r) for r in rows)
+        return out, carry
+
+    @staticmethod
+    def dump(carry):
+        return (pickle.dumps(carry),)
+
+
+class _ForecastSpec:
+    """Streaming twin of ForecastCEP: per-key virtual state + counter,
+    detections and forecasts from the SAME ``_forecast_run`` kernel the
+    batch operator uses — the reference's online inference path
+    (WayebEngine.processElement:225-316).  Forecast state is run state,
+    so it expires with the run (ERFEngine.scala:213-216)."""
+
+    # counter ends the row fields so the state row shares its column
+    out = _out_schema(
+        [
+            ("ts", "long"), ("event_id", "long"), ("is_detection", "boolean"),
+            ("prob", "double"), ("start_ctr", "long"), ("end_ctr", "long"),
+            ("positive", "boolean"), ("counter", "long"),
+        ],
+        [("counter", "long"), ("state", "int")],
+        FORECAST_OUTPUT_SCHEMA,
+    )
+    jvm_fold = None
+    event_cols = ["key", "ts", "event_id", "symbol"]
+
+    def __init__(
+        self, spst, method="classify_nextk", confidence_threshold=0.5, spread=5
+    ):
+        self.compiled = spst.compiled
+        self.key = spst.compiled.partition_by
+        self.main = (
+            spst.delta,
+            spst.finals,
+            spst.started,
+            spst.forecast_table(method, confidence_threshold, spread),
+            spst.compiled.reset_symbols(),
+        )
+
+    def columns(self) -> list:
+        return [self.compiled.symbol_column().alias("symbol")]
+
+    @staticmethod
+    def load(counter, state):
+        return int(state), int(counter)
+
+    def step(self, cols, seg, carry):
+        st, counter = carry or (0, 0)
+        tss = cols["ts"][seg]
+        runs, (st, counter, _) = _forecast_run(
+            cols["symbol"][seg], tss, (st, counter, True), self.main
+        )
+        rows = _forecast_rows(tss, cols["event_id"][seg], runs)
+        return (
+            zip(*(rows[c].tolist() for c in self.out.row)),
+            (int(st), int(counter)),
+        )
+
+    @staticmethod
+    def dump(carry):
+        st, counter = carry
+        return counter, st
+
+
 def _make_partition_runner(spec):
     """The one key walk of every route: a fused pass over a partition
     of (state ∪ event) rows sorted by (key, ts, event_id).  Key
@@ -219,14 +371,16 @@ def _make_partition_runner(spec):
     has events, and a key with none writes its row back verbatim, byte
     for byte — at 1M uniform live keys almost every carried key rides
     through here with no event.  The key's carry-out is emitted as a
-    kind=1 row when the key closes.
+    kind=1 row when the key closes.  A kind=0 row is ``(0, key, *row)``
+    for each row ``step`` returns, padded to the written columns.
 
     The output frame is built with object columns: inferring dtypes
     from rows that mix ints and None would turn event ids into
     float64 and corrupt every id above 2**53."""
     out_cols = spec.out.columns
-    state_cols = out_cols[4:-1]
-    det_pad = (None,) * (len(out_cols) - 7)
+    state_cols = spec.out.carried[:-1]
+    lead = (None,) * (len(out_cols) - len(state_cols) - 3)
+    pad = (None,) * (len(out_cols) - 2 - len(spec.out.row))
 
     def run_partition(batches):
         out: list[tuple] = []
@@ -239,7 +393,7 @@ def _make_partition_runner(spec):
         def close_key():
             if key is not None:
                 vals = spec.dump(carry) if active else raw
-                out.append((1, key, None, None, *vals, last_ts))
+                out.append((1, key, *lead, *vals, last_ts))
 
         for pdf in batches:
             n = len(pdf)
@@ -271,11 +425,7 @@ def _make_partition_runner(spec):
                         active = True
                     rows, carry = spec.step(cols, slice(start, end), carry)
                     last_ts = max(last_ts, int(tss[end - 1]))
-                    out.extend(
-                        (0, k, int(eid), int(ets), int(c), int(mc), int(nm),
-                         *det_pad)
-                        for (eid, ets, c, mc, nm) in rows
-                    )
+                    out.extend((0, k, *row, *pad) for row in rows)
         close_key()
         yield pd.DataFrame(out, columns=out_cols, dtype=object)
 
@@ -329,13 +479,13 @@ def _wide_frame(spec, ev: pd.DataFrame, st) -> pd.DataFrame:
     values above 2**53 (event ids, long register attrs).  The other
     columns take the concat's nulls, as the distributed routes'
     typed-null fills do."""
-    state_cols = spec.out.columns[4:]
+    state_cols = spec.out.carried
     types = spec.out.types
     ev = ev.assign(
         is_state=False,
         **{
-            c: np.zeros(len(ev), dtype=_NUMPY_INTS[types[c]])
-            if types[c] in _NUMPY_INTS else None
+            c: np.zeros(len(ev), dtype=_NUMPY_TYPES[types[c]])
+            if types[c] in _NUMPY_TYPES else None
             for c in state_cols
         },
     )
@@ -382,7 +532,7 @@ def _arrow_plan(spec, runner, events: DataFrame, carried: DataFrame | None):
         return F.lit(0 if t in _SPARK_INTS else None).cast(t).alias(c)
 
     ev_types = dict(events.dtypes)
-    state_cols = spec.out.columns[4:]
+    state_cols = spec.out.carried
     unioned = events.select(
         *spec.event_cols,
         F.lit(False).alias("is_state"),
@@ -544,18 +694,51 @@ def _route_to_driver(
 def _make_foreach_batch(
     spec,
     state_dir: str,
-    sink,
+    sink=None,
     *,
-    watermark_delay_ms: int,
-    state_ttl_ms: int,
-    keep_versions: int,
-    engine: str,
-    driver_max_rows: int,
-    driver_max_state_rows: int | None,
-    num_buckets: int,
+    watermark_delay_ms: int = 60_000,
+    state_ttl_ms: int = 0,
+    keep_versions: int = 2,
+    engine: str = "auto",
+    driver_max_rows: int = 200_000,
+    driver_max_state_rows: int | None = None,
+    num_buckets: int = stt.DEFAULT_NUM_BUCKETS,
 ):
-    """The one ``foreachBatch`` body behind both fast paths (see the
-    module docstring for the contract it keeps)."""
+    """The one ``foreachBatch`` body of every kernel (see the module
+    docstring for the contract it keeps).  Its keyword options are the
+    options of every ``make_foreach_batch_*`` and ``start_fastpath_*``.
+
+    ``watermark_delay_ms`` is the bounded out-of-orderness (the
+    reference's 60 s); ``state_ttl_ms`` > 0 expires runs idle that long
+    on the event clock; the last ``keep_versions`` (>= 1) state
+    versions stay whole for replay; ``num_buckets`` pins the state
+    table's bucket function for the life of ``state_dir``.
+
+    ``engine="auto"`` (default) bounds both sides of each microbatch:
+    ``driver_max_rows`` the batch, ``driver_max_state_rows`` (default
+    :data:`DRIVER_MAX_STATE_ROWS` = the measured driver-vs-JVM
+    crossover) the carried state its touched buckets hold — a
+    huge-key-space stream with tiny batches therefore routes
+    DISTRIBUTED and the driver never materializes the state table; a
+    distributed microbatch has a measured ~0.35 s job floor regardless
+    of row count (see _driver_batch).  ``engine="sql"`` (SDFA only)
+    always uses the JVM aggregate-fold kernel (plans/sql_kernel.py) —
+    the whole microbatch is one Python-free Catalyst plan.
+    ``engine="arrow"`` uses the fused mapInPandas kernel instead — pick
+    it when a single key's per-batch event array would strain executor
+    memory, since the SQL path materializes one key's batch as one
+    array.  ``engine="driver"`` forces the driver path (testing only:
+    it skips the state-size bound).
+
+    Measured SDFA engine crossover (sf0.1 events, local[32], warm
+    medians): 8 microbatches of 12.5 k rows — driver 3.33 s, sql
+    4.50 s, arrow 5.89 s; 1 microbatch of 100 k rows — sql 0.84 s,
+    arrow 0.92 s; at batch scale (1 M rows, no streaming machinery) the
+    fused Arrow kernel wins instead (1.15 s vs 1.45 s — aggregate()
+    lambdas are interpreted, see plans/sql_kernel.py).  Hence auto
+    routes small→driver and large→sql: in the microbatch regime the
+    SQL plan's zero Python-worker round trips dominate, and by the time
+    the Arrow kernel would win the workload is a batch job."""
     engines = ("auto", "sql", "arrow", "driver") if spec.jvm_fold else (
         "auto", "arrow", "driver"
     )
@@ -595,7 +778,9 @@ def _make_foreach_batch(
         )
         if sink is not None:
             sink(
-                stt.detections_view(spark, state_dir, batch_id, spec.out.sql),
+                stt.detections_view(
+                    spark, state_dir, batch_id, spec.out.sql, spec.out.sink
+                ),
                 batch_id,
             )
         stt.gc_versions(state_dir, batch_id, keep_versions)
@@ -621,8 +806,8 @@ def _make_foreach_batch(
         events = batch_df.select(*spec.event_cols)
         if wm is not None:
             # rows later than the watermark are dropped, as in the
-            # engine path (withWatermark + state op) and the reference's
-            # bounded out-of-orderness (InferenceJob.java:134-137)
+            # reference's bounded out-of-orderness
+            # (InferenceJob.java:134-137)
             events = events.filter(F.col("ts") >= F.lit(int(wm)))
 
         # which buckets does this batch touch, and how many live rows?
@@ -667,50 +852,60 @@ def _make_foreach_batch(
     return foreach_batch
 
 
-def _with_event_time(stream_df: DataFrame, ts_col: str):
-    """(df, event_time_col) with a watermark-able TIMESTAMP column.
-
-    TIMESTAMP passes through; TIMESTAMP_NTZ is re-tagged
-    wall-clock-as-UTC via the tz-free interval expression
-    (sources.io.ntz_as_utc — a plain cast would shift on non-UTC
-    sessions); numeric epoch-seconds get ``timestamp_seconds``.
-    """
-    from flink_rtcef_spark.sources.io import ntz_as_utc
-
-    dtype = dict(stream_df.dtypes).get(ts_col)
-    if dtype == "timestamp":
-        return stream_df, ts_col
-    if dtype == "timestamp_ntz":
-        converted = stream_df.withColumn(
-            "__event_time", ntz_as_utc(ts_col, stream_df.sparkSession)
-        )
-    else:
-        converted = stream_df.withColumn("__event_time", F.timestamp_seconds(F.col(ts_col)))
-    return converted, "__event_time"
-
-
 def _symbolize(
     stream_df: DataFrame,
-    key: str,
-    ts_col: str,
-    id_col: str,
-    kernel_cols: list,
+    spec,
+    key_col: str | None = None,
+    ts_col: str = "timestamp",
+    id_col: str = "id",
 ) -> DataFrame:
-    """(key string, ts millis, event_id, *kernel_cols): the projection
-    both kernels' streams share."""
-    with_event_time, et_col = _with_event_time(stream_df, ts_col)
-    return with_event_time.select(
+    """The stream as ``spec.event_cols``: (key string, ts millis,
+    event_id, *spec.columns()).  Symbolization stays a JVM column
+    (identical to the batch operators), so foreachBatch receives only
+    narrow columns.  A TIMESTAMP ``ts_col`` passes through;
+    TIMESTAMP_NTZ is re-tagged wall-clock-as-UTC via the tz-free
+    interval expression (sources.io.ntz_as_utc — a plain cast would
+    shift on non-UTC sessions); numeric epoch-seconds get
+    ``timestamp_seconds``."""
+    from flink_rtcef_spark.sources.io import ntz_as_utc
+
+    key = key_col or spec.key
+    if key is None:
+        raise ValueError("the patterns name no single partitionBy; pass key_col")
+    dtype = dict(stream_df.dtypes).get(ts_col)
+    if dtype == "timestamp":
+        event_time = F.col(ts_col)
+    elif dtype == "timestamp_ntz":
+        event_time = ntz_as_utc(ts_col, stream_df.sparkSession)
+    else:
+        event_time = F.timestamp_seconds(F.col(ts_col))
+    return stream_df.select(
         F.col(key).cast("string").alias("key"),
-        F.unix_millis(F.col(et_col)).alias("ts"),
+        F.unix_millis(event_time).alias("ts"),
         F.col(id_col).alias("event_id"),
-        *kernel_cols,
+        *spec.columns(),
     )
 
 
-def _start(sym: DataFrame, fb, checkpoint_dir: str, trigger: dict | None):
-    """Start ``fb`` as the foreachBatch sink of the symbolized stream."""
+def _start(
+    spec,
+    stream_df: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    sink=None,
+    key_col: str | None = None,
+    ts_col: str = "timestamp",
+    id_col: str = "id",
+    trigger: dict | None = None,
+    **options,
+):
+    """Symbolize ``stream_df`` for ``spec`` and start the skeleton as its
+    foreachBatch sink (``trigger`` defaults to availableNow).  Returns
+    the StreamingQuery."""
+    fb = _make_foreach_batch(spec, state_dir, sink, **options)
     writer = (
-        sym.writeStream.foreachBatch(fb)
+        _symbolize(stream_df, spec, key_col, ts_col, id_col)
+        .writeStream.foreachBatch(fb)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )
@@ -718,58 +913,14 @@ def _start(sym: DataFrame, fb, checkpoint_dir: str, trigger: dict | None):
 
 
 def make_foreach_batch_detections(
-    compiled: CompiledPattern,
-    state_dir: str,
-    sink=None,
-    watermark_delay_ms: int = 60_000,
-    state_ttl_ms: int = 0,
-    keep_versions: int = 2,
-    engine: str = "auto",
-    driver_max_rows: int = 200_000,
-    driver_max_state_rows: int | None = None,
-    num_buckets: int = stt.DEFAULT_NUM_BUCKETS,
+    compiled: CompiledPattern, state_dir: str, sink=None, **options
 ):
-    """Build the ``foreachBatch`` function of an SDFA pattern; its
-    routes, state protocol, Spark actions and sink contract are the
-    module docstring's.
-
-    ``engine="auto"`` (default) bounds both sides of each microbatch:
-    ``driver_max_rows`` the batch, ``driver_max_state_rows`` (default
-    :data:`DRIVER_MAX_STATE_ROWS` = the measured driver-vs-JVM
-    crossover) the carried state its touched buckets hold — a
-    huge-key-space stream with tiny batches therefore routes
-    DISTRIBUTED and the driver never materializes the state table (r4
-    verdict "what's wrong" #2); a distributed microbatch has a measured
-    ~0.35 s job floor regardless of row count (see _driver_batch).
-    ``engine="sql"`` always uses the JVM aggregate-fold kernel
-    (plans/sql_kernel.py) — the whole microbatch is one Python-free
-    Catalyst plan.  ``engine="arrow"`` uses the fused mapInPandas
-    kernel instead — pick it when a single key's per-batch event array
-    would strain executor memory, since the SQL path materializes one
-    key's batch as one array.  ``engine="driver"`` forces the driver
-    path (testing only: it skips the state-size bound).
-
-    Measured engine crossover (sf0.1 events, local[32], warm medians):
-    8 microbatches of 12.5 k rows — driver 3.33 s, sql 4.50 s, arrow
-    5.89 s; 1 microbatch of 100 k rows — sql 0.84 s, arrow 0.92 s; at
-    batch scale (1 M rows, no streaming machinery) the fused Arrow
-    kernel wins instead (1.15 s vs 1.45 s — aggregate() lambdas are
-    interpreted, see plans/sql_kernel.py).  Hence auto routes
-    small→driver and large→sql: in the microbatch regime the SQL
-    plan's zero Python-worker round trips dominate, and by the time
-    the Arrow kernel would win the workload is a batch job.
-
-    The input batch must already be symbolized to (key string,
-    ts long-millis, event_id long, symbol int) — use
-    :func:`symbolize_stream`."""
-    return _make_foreach_batch(
-        _SdfaSpec(compiled), state_dir, sink,
-        watermark_delay_ms=watermark_delay_ms, state_ttl_ms=state_ttl_ms,
-        keep_versions=keep_versions, engine=engine,
-        driver_max_rows=driver_max_rows,
-        driver_max_state_rows=driver_max_state_rows,
-        num_buckets=num_buckets,
-    )
+    """Build the ``foreachBatch`` function of an SDFA pattern over a
+    stream symbolized by :func:`symbolize_stream`.  ``options`` are the
+    skeleton's (``_make_foreach_batch``): watermark_delay_ms,
+    state_ttl_ms, keep_versions, engine (auto/sql/arrow/driver),
+    driver_max_rows, driver_max_state_rows and num_buckets."""
+    return _make_foreach_batch(_SdfaSpec(compiled), state_dir, sink, **options)
 
 
 def symbolize_stream(
@@ -782,10 +933,7 @@ def symbolize_stream(
     """Streaming-side projection to (key, ts millis, event_id, symbol):
     symbolization stays a JVM CASE column (identical to BatchCEP), so
     foreachBatch receives 4 narrow columns."""
-    return _symbolize(
-        stream_df, key_col or compiled.partition_by, ts_col, id_col,
-        [compiled.symbol_column().alias("symbol")],
-    )
+    return _symbolize(stream_df, _SdfaSpec(compiled), key_col, ts_col, id_col)
 
 
 def start_fastpath_detections(
@@ -797,25 +945,65 @@ def start_fastpath_detections(
     key_col: str | None = None,
     ts_col: str = "timestamp",
     id_col: str = "id",
-    watermark_delay_ms: int = 60_000,
-    state_ttl_ms: int = 0,
-    keep_versions: int = 2,
     trigger: dict | None = None,
-    engine: str = "auto",
-    driver_max_rows: int = 200_000,
-    driver_max_state_rows: int | None = None,
-    num_buckets: int = stt.DEFAULT_NUM_BUCKETS,
+    **options,
 ):
-    """Wire the fast path end-to-end and start it.  ``sink(df,
-    batch_id)`` gets each batch's detections.  Returns the
-    StreamingQuery."""
-    sym = symbolize_stream(stream_df, compiled, key_col, ts_col, id_col)
-    fb = make_foreach_batch_detections(
-        compiled, state_dir, sink,
-        watermark_delay_ms=watermark_delay_ms, state_ttl_ms=state_ttl_ms,
-        keep_versions=keep_versions, engine=engine,
-        driver_max_rows=driver_max_rows,
-        driver_max_state_rows=driver_max_state_rows,
-        num_buckets=num_buckets,
+    """Wire the SDFA fast path end-to-end and start it: ``sink(df,
+    batch_id)`` gets each batch's detections (``state_table.DET_SCHEMA``
+    columns); ``options`` as in :func:`make_foreach_batch_detections`.
+    Returns the StreamingQuery."""
+    return _start(
+        _SdfaSpec(compiled), stream_df, state_dir, checkpoint_dir, sink,
+        key_col, ts_col, id_col, trigger, **options,
     )
-    return _start(sym, fb, checkpoint_dir, trigger)
+
+
+def start_fastpath_multi(
+    stream_df: DataFrame,
+    compiled_list,
+    state_dir: str,
+    checkpoint_dir: str,
+    sink=None,
+    key_col: str | None = None,
+    ts_col: str = "timestamp",
+    id_col: str = "id",
+    trigger: dict | None = None,
+    **options,
+):
+    """Start the multi-pattern fast path: the stream shuffles ONCE on
+    the shared key and one pass advances every pattern of
+    ``compiled_list`` (plans/compiler.compile_patterns); ``sink`` gets
+    each batch's detections tagged with ``pattern_id``
+    (:data:`MULTI_OUTPUT_SCHEMA`).  Routes ``auto``/``arrow``/``driver``;
+    ``options`` as in :func:`make_foreach_batch_detections`."""
+    return _start(
+        _MultiSpec(compiled_list), stream_df, state_dir, checkpoint_dir,
+        sink, key_col, ts_col, id_col, trigger, **options,
+    )
+
+
+def start_fastpath_forecasts(
+    stream_df: DataFrame,
+    spst,
+    state_dir: str,
+    checkpoint_dir: str,
+    sink=None,
+    key_col: str | None = None,
+    ts_col: str = "timestamp",
+    id_col: str = "id",
+    method: str = "classify_nextk",
+    confidence_threshold: float = 0.5,
+    spread: int = 5,
+    trigger: dict | None = None,
+    **options,
+):
+    """Start streaming recognition + forecasting with ``spst``:
+    ``sink`` gets each batch's detections and forecasts in one frame,
+    split by ``is_detection`` (:data:`FORECAST_OUTPUT_SCHEMA`, the rows
+    of ForecastCEP.forecasts).  Routes ``auto``/``arrow``/``driver``;
+    ``options`` as in :func:`make_foreach_batch_detections`."""
+    return _start(
+        _ForecastSpec(spst, method, confidence_threshold, spread), stream_df,
+        state_dir, checkpoint_dir, sink, key_col, ts_col, id_col, trigger,
+        **options,
+    )

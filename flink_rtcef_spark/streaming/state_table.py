@@ -1,8 +1,9 @@
 """Versioned, hash-BUCKETED state table for the foreachBatch fast paths.
 
 The state store of the foreachBatch fast-path skeleton
-(streaming/fastpath.py), whichever kernel it runs (deterministic SDFA
-runs, or register/NSRA runs via streaming/fastpath_register.py).
+(streaming/fastpath.py), whichever kernel it runs (SDFA,
+multi-pattern or forecast runs there, register/NSRA runs via
+streaming/fastpath_register.py).
 Fixes the r4 design's key-cardinality scaling: r4 rewrote the ENTIRE
 state table every microbatch — per-batch cost O(live keys), not
 O(batch).  At tens of millions of live keys (vessels/sessions) every
@@ -82,11 +83,14 @@ from pyspark.sql import functions as F
 #: partition value holding a batch's detections (kind=0 rows)
 DETS_PART = "d"
 
-#: the sink's view of a batch's detections, whichever kernel wrote them
+#: the sink's view of a batch's detections from the SDFA or register
+#: kernel
 DET_SCHEMA = (
     "key string, detection_event_id long, detection_ts long, counter long, "
     "min_counter long, n_matched int"
 )
+#: sink columns read from a differently named written column
+_SINK_SOURCES = {"detection_event_id": "event_id", "detection_ts": "ts"}
 
 #: default LOGICAL bucket count — at ~50k rows per bucket this covers
 #: ~10M live keys; raise it for larger key spaces (the manifest is
@@ -408,22 +412,24 @@ def read_state_spark(
     return out
 
 
-def detections_view(spark, state_dir: str, batch_id: int, out_schema: str):
-    """Lazy view over the written batch's detections (the ``pdir=d``
-    dir of ``v{batch_id + 1}``); an empty frame when the batch detected
-    nothing (no dir is written then)."""
+def detections_view(
+    spark, state_dir: str, batch_id: int, out_schema: str,
+    sink_schema: str = DET_SCHEMA,
+):
+    """Lazy view over the written batch's output rows (the ``pdir=d``
+    dir of ``v{batch_id + 1}``) in the ``sink_schema`` columns, each
+    read from the written column of the same name — or, for
+    ``detection_event_id``/``detection_ts``, from ``event_id``/``ts``;
+    an empty frame when the batch emitted nothing (no dir is written
+    then)."""
     p = dets_path(state_dir, batch_id + 1)
     if not os.path.isdir(p):
-        return spark.createDataFrame([], DET_SCHEMA)
+        return spark.createDataFrame([], sink_schema)
+    names = [f.split()[0] for f in sink_schema.split(", ")]
     return (
         spark.read.schema(out_schema).parquet(p)
         .filter(F.col("kind") == 0)
-        .select(
-            F.col("key"),
-            F.col("event_id").alias("detection_event_id"),
-            F.col("ts").alias("detection_ts"),
-            "counter", "min_counter", "n_matched",
-        )
+        .select(*[F.col(_SINK_SOURCES.get(c, c)).alias(c) for c in names])
     )
 
 

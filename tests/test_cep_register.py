@@ -342,7 +342,7 @@ def test_streaming_register_equals_batch(spark, tmp_path):
     import pandas as pd
 
     from flink_rtcef_spark.operators.cep_register import RegisterCEP
-    from flink_rtcef_spark.streaming.inference import streaming_register_detections
+    from flink_rtcef_spark.streaming.fastpath_register import start_fastpath_register
 
     rng = random.Random(5)
     rows = []
@@ -373,16 +373,15 @@ def test_streaming_register_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "c*"))
     )
-    out = streaming_register_detections(stream, cp, ts_col="timestamp", id_col="id")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stream_reg_dets")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    collected = []
+    q = start_fastpath_register(
+        stream, cp,
+        state_dir=str(tmp_path / "state"), checkpoint_dir=str(tmp_path / "ckpt"),
+        sink=lambda df, batch_id: collected.append(df.toPandas()),
+        ts_col="timestamp", id_col="id",
     )
     assert q.awaitTermination(600), "stream did not drain"
-    got = spark.sql("select * from stream_reg_dets").toPandas()
+    got = pd.concat(collected, ignore_index=True)
 
     batch = RegisterCEP(cp, ts_col="timestamp", id_col="id").detections(
         spark.createDataFrame(pdf)
@@ -433,11 +432,11 @@ def test_streaming_register_checkpoint_restart(spark, tmp_path):
     """Kill the query after half the input, restart from the
     checkpoint: the pickled configuration-set state must recover and
     the union of both runs' outputs must equal the batch result (A20
-    for the register path; parquet sink — memory sinks can't restart)."""
+    for the register path)."""
     import pandas as pd
 
     from flink_rtcef_spark.operators.cep_register import RegisterCEP
-    from flink_rtcef_spark.streaming.inference import streaming_register_detections
+    from flink_rtcef_spark.streaming.fastpath_register import start_fastpath_register
 
     rng = random.Random(29)
     rows = []
@@ -453,7 +452,8 @@ def test_streaming_register_checkpoint_restart(spark, tmp_path):
     src.mkdir()
     chunks = np.array_split(pdf.sort_values("timestamp"), 4)
     schema = "k string, timestamp long, id long, event_type string, value double"
-    ckpt, sink = str(tmp_path / "ckpt"), str(tmp_path / "sink")
+    ckpt, state = str(tmp_path / "ckpt"), str(tmp_path / "state")
+    collected = []
 
     def run_once():
         stream = (
@@ -461,14 +461,10 @@ def test_streaming_register_checkpoint_restart(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src / "c*"))
         )
-        out = streaming_register_detections(stream, cp, ts_col="timestamp", id_col="id")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        q = start_fastpath_register(
+            stream, cp, state_dir=state, checkpoint_dir=ckpt,
+            sink=lambda df, batch_id: collected.append(df.toPandas()),
+            ts_col="timestamp", id_col="id",
         )
         assert q.awaitTermination(600), "stream did not drain"
 
@@ -479,7 +475,7 @@ def test_streaming_register_checkpoint_restart(spark, tmp_path):
         spark.createDataFrame(chunk).coalesce(1).write.mode("overwrite").parquet(str(src / f"c{c}"))
     run_once()
 
-    got = spark.read.parquet(sink).toPandas()
+    got = pd.concat(collected, ignore_index=True)
     batch = RegisterCEP(cp, ts_col="timestamp", id_col="id").detections(
         spark.createDataFrame(pdf)
     ).toPandas()

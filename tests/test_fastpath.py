@@ -1,10 +1,6 @@
-"""foreachBatch fast-path streaming CEP (streaming/fastpath.py).
-
-The applyInPandasWithState engine path pays ~1 s/microbatch of pure
-per-group machinery (profiled with a no-op stateful fn — see
-streaming/fastpath.py docstring); this path carries run state as a
-versioned DataFrame and advances all keys in one pass per batch.
-Gates here:
+"""foreachBatch fast-path streaming CEP (streaming/fastpath.py): run
+state carried as a versioned DataFrame, all keys advanced in one pass
+per batch.  Gates here:
 
 - stream == batch detections (ttl=0, both engines)
 - SQL (Catalyst aggregate-fold) engine == Arrow engine under TTL
@@ -13,12 +9,16 @@ Gates here:
 - crash/restart resume over the same checkpoint + state dir is exactly-once
 - the protocol gates (zero-job driver route, torn-write replay, touched-
   bucket rewrites, GC of idle buckets) and the route-agreement gates run
-  for BOTH kernels of the one skeleton: the SDFA and the register (NSRA)
-  spec (``kernel`` parameter)
+  for ALL kernels of the one skeleton: the SDFA, register (NSRA),
+  multi-pattern and forecast specs (``kernel`` parameter)
+- the resume layout: the SDFA and register state rows and the
+  detection sink keep their columns, so state dirs written by earlier
+  versions resume
 """
 
 from __future__ import annotations
 
+import functools
 import random
 from typing import Callable, NamedTuple
 
@@ -27,13 +27,19 @@ import pytest
 
 from flink_rtcef_spark.operators.cep import BatchCEP
 from flink_rtcef_spark.operators.cep_register import RegisterCEP
-from flink_rtcef_spark.plans.compiler import compile_pattern
+from flink_rtcef_spark.operators.forecast import ForecastCEP
+from flink_rtcef_spark.operators.multi_cep import MultiPatternCEP
+from flink_rtcef_spark.plans.compiler import compile_pattern, compile_patterns
 from flink_rtcef_spark.plans.nsra import compile_register_pattern
 from flink_rtcef_spark.streaming import fastpath
 from flink_rtcef_spark.streaming.fastpath import (
+    _ForecastSpec,
+    _MultiSpec,
     _SdfaSpec,
     make_foreach_batch_detections,
     start_fastpath_detections,
+    start_fastpath_forecasts,
+    start_fastpath_multi,
     symbolize_stream,
 )
 from flink_rtcef_spark.streaming.fastpath_register import (
@@ -50,8 +56,8 @@ DECLS = "~(IsEventTypePredicate(A),IsEventTypePredicate(B))"
 
 
 class Kernel(NamedTuple):
-    """One automaton's entry points into the fast-path skeleton, so a
-    protocol test runs unchanged over both kernels."""
+    """One kernel's entry points into the fast-path skeleton, so a
+    protocol test runs unchanged over every kernel."""
 
     schema: str
     compile: Callable
@@ -62,6 +68,9 @@ class Kernel(NamedTuple):
     cep: type
     row: Callable  # (k, ts, id, event_type) -> a row of ``schema``
     routes: tuple
+    cols: list  # the sink's columns
+    eid: str  # the sink's event-id column
+    dets: Callable  # sink frame -> its detection rows
 
 
 def _register_row(r):
@@ -70,27 +79,87 @@ def _register_row(r):
     return (*r, {"A": 1.0, "B": 5.0}.get(r[3], 0.0))
 
 
+@functools.lru_cache(maxsize=None)
+def _spst():
+    """An order-1 SPST of the A -> B pattern, trained on a fixed
+    A/B/C sequence."""
+    from pyspark.sql import SparkSession
+
+    from flink_rtcef_spark.models.spst import train_spst
+
+    compiled = compile_pattern(
+        ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){order:1}"
+        "{partitionBy:k}",
+        DECLS,
+    )
+    rng = random.Random(3)
+    events = SparkSession.getActiveSession().createDataFrame(
+        [("u", t, t, rng.choice("AABBC")) for t in range(200)],
+        "k string, ts long, id long, event_type string",
+    )
+    cep = BatchCEP(compiled, key_col="k", ts_col="ts", id_col="id")
+    return train_spst(
+        cep.symbolized(events), compiled, max_order=1, horizon=5, cutoff=0.0
+    )
+
+
+def _skeleton_fb(spec):
+    """``make_fb`` for a kernel without a ``make_foreach_batch_*``."""
+    return lambda compiled, state_dir, sink=None, **options: (
+        fastpath._make_foreach_batch(spec(compiled), state_dir, sink, **options)
+    )
+
+
+def _skeleton_symbolize(spec):
+    return lambda df, compiled, **cols: fastpath._symbolize(
+        df, spec(compiled), **cols
+    )
+
+
+DET_COLS = [
+    "key", "detection_event_id", "detection_ts", "counter", "min_counter",
+    "n_matched",
+]
+SCHEMA = "k string, ts long, id long, event_type string"
+
 KERNELS = {
     "sdfa": Kernel(
-        "k string, ts long, id long, event_type string",
+        SCHEMA,
         lambda: compile_pattern(PAT, DECLS),
         start_fastpath_detections, make_foreach_batch_detections,
         symbolize_stream, _SdfaSpec, BatchCEP, lambda r: r,
-        ("driver", "arrow", "sql"),
+        ("driver", "arrow", "sql"), DET_COLS, "detection_event_id",
+        lambda f: f,
     ),
     "register": Kernel(
         REG_SCHEMA,
         lambda: compile_register_pattern(REG_PAT),
         start_fastpath_register, make_foreach_batch_register,
         symbolize_register_stream, _RegisterSpec, RegisterCEP,
-        _register_row, ("driver", "arrow"),
+        _register_row, ("driver", "arrow"), DET_COLS, "detection_event_id",
+        lambda f: f,
+    ),
+    # A -> B and B -> A: an A then a B completes only the first
+    "multi": Kernel(
+        SCHEMA,
+        lambda: compile_patterns(
+            f"{PAT}&;(IsEventTypePredicate(B),IsEventTypePredicate(A))"
+            "{partitionBy:k}",
+            DECLS,
+        ),
+        start_fastpath_multi, _skeleton_fb(_MultiSpec),
+        _skeleton_symbolize(_MultiSpec), _MultiSpec, MultiPatternCEP,
+        lambda r: r, ("driver", "arrow"), ["pattern_id", *DET_COLS],
+        "detection_event_id", lambda f: f,
+    ),
+    "forecast": Kernel(
+        SCHEMA, _spst, start_fastpath_forecasts,
+        _skeleton_fb(_ForecastSpec), _skeleton_symbolize(_ForecastSpec),
+        _ForecastSpec, ForecastCEP, lambda r: r, ("driver", "arrow"),
+        [f.split()[0] for f in fastpath.FORECAST_OUTPUT_SCHEMA.split(", ")],
+        "event_id", lambda f: f[f["is_detection"]],
     ),
 }
-
-DET_COLS = [
-    "key", "detection_event_id", "detection_ts", "counter", "min_counter",
-    "n_matched",
-]
 
 
 def _rows(n=400, seed=13):
@@ -607,8 +676,9 @@ def test_fastpath_gc_preserves_idle_buckets_beyond_keep_versions(
         keep_versions=1,  # aggressive GC: the manifest must protect kx
     )
     assert q.awaitTermination(600), "stream did not drain"
-    got = pd.concat(collected, ignore_index=True) if collected else pd.DataFrame(columns=DET_COLS)
-    kx = got[got["key"] == "kx"]
+    got = pd.concat(collected, ignore_index=True) if collected else pd.DataFrame(columns=kn.cols)
+    kx = kn.dets(got)
+    kx = kx[kx["key"] == "kx"]
     assert len(kx) == 1, got  # the idle bucket's A survived 6 batches
 
 
@@ -707,7 +777,7 @@ def _state_rows(state_dir, version, num_buckets, kn):
 
     meta = stt.read_meta(state_dir, version, num_buckets)
     st = stt.read_state_pandas(meta, state_dir, list(range(num_buckets)))
-    cols = ["key", *kn.spec.out.columns[4:]]
+    cols = ["key", *kn.spec.out.carried]
     return st[cols].sort_values("key").reset_index(drop=True)
 
 
@@ -741,14 +811,14 @@ def test_fastpath_routes_agree_on_state_and_detections(spark, tmp_path, kernel):
                 ),
                 bid,
             )
-        got = pd.concat(dets, ignore_index=True)[DET_COLS]
+        got = pd.concat(dets, ignore_index=True)[kn.cols]
         results[route] = (
-            got.sort_values(DET_COLS).reset_index(drop=True),
+            got.sort_values(kn.cols).reset_index(drop=True),
             _state_rows(state_dir, len(batches), 2, kn),
         )
     base_dets, base_state = results["driver"]
     assert len(base_dets) > 0 and len(base_state) == 24
-    assert set(base_dets["detection_event_id"]) <= ids
+    assert set(base_dets[kn.eid]) <= ids
     for route, (dets, state) in results.items():
         pd.testing.assert_frame_equal(dets, base_dets, obj=route)
         pd.testing.assert_frame_equal(state, base_state, obj=route)
@@ -823,3 +893,29 @@ def test_fastpath_idle_carried_keys_skip_the_kernel(
     arrow_dir = push("arrow")
     assert state_in.value == len(active)
     pd.testing.assert_frame_equal(_state_rows(arrow_dir, 2, 1, kn), after)
+
+
+def test_fastpath_resume_layout_is_pinned():
+    """A state dir outlives the code that wrote it: the SDFA and
+    register written rows, their carried-state columns and the
+    detection sink keep exactly these columns, so a state dir an
+    earlier version wrote still resumes, and generalizing
+    ``_out_schema`` cannot silently move a column."""
+    from flink_rtcef_spark.streaming import fastpath_register
+    from flink_rtcef_spark.streaming import state_table as stt
+
+    det = "counter long, min_counter long, n_matched int"
+    assert fastpath._OUT_SCHEMA == (
+        f"kind int, key string, event_id long, ts long, {det}, state int, "
+        "min_ts long, last_ts long"
+    )
+    assert _SdfaSpec.out.state == f"{det}, state int, min_ts long, last_ts long"
+    assert fastpath_register._OUT_SCHEMA == (
+        f"kind int, key string, event_id long, ts long, {det}, blob binary, "
+        "last_ts long"
+    )
+    assert _RegisterSpec.out.state == f"{det}, blob binary, last_ts long"
+    assert stt.DET_SCHEMA == (
+        "key string, detection_event_id long, detection_ts long, counter long, "
+        "min_counter long, n_matched int"
+    )

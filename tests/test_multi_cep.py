@@ -82,7 +82,7 @@ def test_streaming_multi_equals_batch(spark, tmp_path):
     carries pickled per key."""
     import numpy as np
 
-    from flink_rtcef_spark.streaming.inference import streaming_multi_detections
+    from flink_rtcef_spark.streaming.fastpath import start_fastpath_multi
 
     rng = random.Random(29)
     pdf = pd.DataFrame(
@@ -104,17 +104,16 @@ def test_streaming_multi_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "c*"))
     )
-    out = streaming_multi_detections(
-        stream, compiled, ts_col="timestamp", id_col="id"
-    )
-    q = (
-        out.writeStream.format("memory").queryName("smulti")
-        .outputMode("append").trigger(availableNow=True).start()
+    collected = []
+    q = start_fastpath_multi(
+        stream, compiled,
+        state_dir=str(tmp_path / "state"), checkpoint_dir=str(tmp_path / "ckpt"),
+        sink=lambda df, batch_id: collected.append(df.toPandas()),
+        ts_col="timestamp", id_col="id",
     )
     assert q.awaitTermination(600), "stream did not drain"
     got = (
-        spark.sql("select * from smulti")
-        .toPandas()
+        pd.concat(collected, ignore_index=True)
         .sort_values(["pattern_id", "key", "counter"])
         .reset_index(drop=True)
     )
@@ -138,7 +137,7 @@ def test_streaming_multi_checkpoint_restart(spark, tmp_path):
     both runs equals the batch result (A20 for the multi path)."""
     import numpy as np
 
-    from flink_rtcef_spark.streaming.inference import streaming_multi_detections
+    from flink_rtcef_spark.streaming.fastpath import start_fastpath_multi
 
     rng = random.Random(31)
     pdf = pd.DataFrame(
@@ -152,7 +151,8 @@ def test_streaming_multi_checkpoint_restart(spark, tmp_path):
     src = tmp_path / "rsrc"
     src.mkdir()
     chunks = np.array_split(pdf.sort_values("timestamp"), 4)
-    ckpt, sink = str(tmp_path / "ckpt"), str(tmp_path / "sink")
+    ckpt, state = str(tmp_path / "ckpt"), str(tmp_path / "state")
+    collected = []
 
     def run_once():
         stream = (
@@ -162,16 +162,10 @@ def test_streaming_multi_checkpoint_restart(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src / "c*"))
         )
-        out = streaming_multi_detections(
-            stream, compiled, ts_col="timestamp", id_col="id"
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        q = start_fastpath_multi(
+            stream, compiled, state_dir=state, checkpoint_dir=ckpt,
+            sink=lambda df, batch_id: collected.append(df.toPandas()),
+            ts_col="timestamp", id_col="id",
         )
         assert q.awaitTermination(600), "stream did not drain"
 
@@ -183,8 +177,7 @@ def test_streaming_multi_checkpoint_restart(spark, tmp_path):
     run_once()
 
     got = (
-        spark.read.parquet(sink)
-        .toPandas()
+        pd.concat(collected, ignore_index=True)
         .sort_values(["pattern_id", "key", "counter"])
         .reset_index(drop=True)
     )

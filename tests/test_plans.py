@@ -121,13 +121,14 @@ def test_register_cep_single_shuffle_and_jvm_bits(spark):
 
 
 def _engine_stream(spark, tmp_path, builder: str):
-    """The keyed engine path's stream (streaming/inference.py) from
-    ``builder`` over an empty file source, event-clock TTL on."""
+    """The fast path's symbolized stream (streaming/fastpath._symbolize)
+    for ``builder``'s kernel spec, over an empty file source."""
     from flink_rtcef_spark.operators.cep import BatchCEP
     from flink_rtcef_spark.models.spst import train_spst
     from flink_rtcef_spark.plans.compiler import compile_pattern, compile_patterns
     from flink_rtcef_spark.plans.nsra import compile_register_pattern
-    from flink_rtcef_spark.streaming import inference
+    from flink_rtcef_spark.streaming import fastpath
+    from flink_rtcef_spark.streaming.fastpath_register import _RegisterSpec
 
     pat = ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){partitionBy:k}"
     decls = "~(IsEventTypePredicate(A),IsEventTypePredicate(B))"
@@ -135,37 +136,33 @@ def _engine_stream(spark, tmp_path, builder: str):
     src = tmp_path / "src"
     src.mkdir()
     stream = spark.readStream.schema(schema).parquet(str(src))
-    opts = dict(ts_col="timestamp", id_col="id", state_ttl_ms=600_000)
     if builder == "detections":
-        return inference.streaming_detections(
-            stream, compile_pattern(pat, decls), **opts
-        )
-    if builder == "register":
-        cp = compile_register_pattern(
+        spec = fastpath._SdfaSpec(compile_pattern(pat, decls))
+    elif builder == "register":
+        spec = _RegisterSpec(compile_register_pattern(
             ';(IsEventTypePredicate(A)["x"],^(IsEventTypePredicate(B),'
             'GTAttr(value,"x"))){partitionBy:k}{window:2}'
-        )
-        return inference.streaming_register_detections(stream, cp, **opts)
-    if builder == "multi":
-        compiled = compile_patterns(
+        ))
+    elif builder == "multi":
+        spec = fastpath._MultiSpec(compile_patterns(
             f"{pat}&;(IsEventTypePredicate(B),IsEventTypePredicate(A))"
             "{partitionBy:k}",
             decls,
+        ))
+    else:
+        compiled = compile_pattern(
+            ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){order:1}"
+            "{partitionBy:k}",
+            decls,
         )
-        return inference.streaming_multi_detections(stream, compiled, **opts)
-    compiled = compile_pattern(
-        ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){order:1}"
-        "{partitionBy:k}",
-        decls,
-    )
-    events = spark.createDataFrame(
-        [("u", t, t, "AB"[t % 2], 0.0) for t in range(20)], schema
-    )
-    cep = BatchCEP(compiled, ts_col="timestamp", id_col="id")
-    spst = train_spst(
-        cep.symbolized(events), compiled, max_order=1, horizon=5, cutoff=0.0
-    )
-    return inference.streaming_forecasts(stream, spst, **opts)
+        events = spark.createDataFrame(
+            [("u", t, t, "AB"[t % 2], 0.0) for t in range(20)], schema
+        )
+        cep = BatchCEP(compiled, ts_col="timestamp", id_col="id")
+        spec = fastpath._ForecastSpec(train_spst(
+            cep.symbolized(events), compiled, max_order=1, horizon=5, cutoff=0.0
+        ))
+    return fastpath._symbolize(stream, spec, ts_col="timestamp", id_col="id")
 
 
 @pytest.mark.parametrize(
@@ -174,17 +171,13 @@ def _engine_stream(spark, tmp_path, builder: str):
 def test_engine_path_one_stateful_operator_and_jvm_symbolization(
     spark, tmp_path, builder
 ):
-    """Every engine-path builder plans as ONE
-    FlatMapGroupsInPandasWithState over ONE hash exchange on the key,
-    with no Python eval node below it: symbolization (the symbol or
-    bits columns) stays a JVM Project expression."""
+    """Every kernel's stream reaches its foreachBatch symbolized by a
+    JVM Project expression (the symbol or bits columns), with no Python
+    eval node in the plan."""
     df = _engine_stream(spark, tmp_path, builder)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandasWithState", plan)) == 1
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-    assert "hashpartitioning(key" in plan
     assert "EvalPython" not in plan
     assert "CASE WHEN" in plan
 

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from flink_rtcef_spark.operators.cep import BatchCEP
 from flink_rtcef_spark.plans.compiler import compile_pattern
-from flink_rtcef_spark.streaming.inference import streaming_detections
+from flink_rtcef_spark.streaming.fastpath import start_fastpath_detections
 
 PAT = ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){partitionBy:k}"
 DECLS = "~(IsEventTypePredicate(A),IsEventTypePredicate(B))"
@@ -61,7 +61,7 @@ class _LineServer(threading.Thread):
                 pass
 
 
-def test_socket_cep_stream_equals_batch(spark):
+def test_socket_cep_stream_equals_batch(spark, tmp_path):
     rows = _rows()
     lines = [f"{k},{ts},{i},{et}" for (k, ts, i, et) in rows]
     server = _LineServer(lines)
@@ -81,12 +81,16 @@ def test_socket_cep_stream_equals_batch(spark):
         parts[2].cast("long").alias("id"),
         parts[3].alias("event_type"),
     )
-    out = streaming_detections(parsed, compiled, ts_col="timestamp", id_col="id")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("socket_dets")
-        .outputMode("append")
-        .start()
+    collected = []
+    q = start_fastpath_detections(
+        parsed, compiled,
+        state_dir=str(tmp_path / "state"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        sink=lambda df, batch_id: collected.append(
+            df.select("key", "detection_event_id").toPandas()
+        ),
+        ts_col="timestamp", id_col="id",
+        trigger={"processingTime": "0 seconds"},
     )
     try:
         batch_df = spark.createDataFrame(
@@ -102,9 +106,10 @@ def test_socket_cep_stream_equals_batch(spark):
         got = None
         while time.time() < deadline:
             q.processAllAvailable()
-            got = spark.sql(
-                "SELECT key, detection_event_id FROM socket_dets"
-            ).toPandas()
+            got = pd.concat(
+                collected or [pd.DataFrame(columns=["key", "detection_event_id"])],
+                ignore_index=True,
+            )
             if len(got) >= len(want):
                 break
             time.sleep(1.0)

@@ -12,10 +12,33 @@ from flink_rtcef_spark.models.spst import train_spst
 from flink_rtcef_spark.operators.cep import BatchCEP
 from flink_rtcef_spark.operators.forecast import ForecastCEP
 from flink_rtcef_spark.plans.compiler import compile_pattern
-from flink_rtcef_spark.streaming.inference import streaming_forecasts
+from flink_rtcef_spark.streaming.fastpath import start_fastpath_forecasts
 
 PAT = ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){order:1}{partitionBy:k}"
 DECLS = "~(IsEventTypePredicate(A),IsEventTypePredicate(B))"
+
+
+def _run(spark, src, tmp_path, name, spst, **options):
+    """Stream the chunk files under ``src`` (one microbatch each)
+    through the forecast fast path; return the rows its sink
+    collected."""
+    stream = (
+        spark.readStream.schema("k string, timestamp long, id long, event_type string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src / "c*"))
+    )
+    collected = []
+    q = start_fastpath_forecasts(
+        stream, spst,
+        state_dir=str(tmp_path / f"{name}_state"),
+        checkpoint_dir=str(tmp_path / f"{name}_ckpt"),
+        sink=lambda df, batch_id: collected.append(df.toPandas()),
+        ts_col="timestamp", id_col="id",
+        method="classify_nextk", confidence_threshold=0.4, spread=3,
+        **options,
+    )
+    assert q.awaitTermination(600), "stream did not drain"
+    return pd.concat(collected, ignore_index=True)
 
 
 def test_streaming_forecasts_equal_batch(spark, tmp_path):
@@ -35,21 +58,7 @@ def test_streaming_forecasts_equal_batch(spark, tmp_path):
         spark.createDataFrame(chunk).coalesce(1).write.mode("overwrite").parquet(
             str(src / f"c{c}")
         )
-    stream = (
-        spark.readStream.schema("k string, timestamp long, id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "c*"))
-    )
-    out = streaming_forecasts(
-        stream, spst, ts_col="timestamp", id_col="id",
-        method="classify_nextk", confidence_threshold=0.4, spread=3,
-    )
-    q = (
-        out.writeStream.format("memory").queryName("sfc")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(600), "stream did not drain"
-    got = spark.sql("select * from sfc").toPandas()
+    got = _run(spark, src, tmp_path, "sfc", spst)
 
     fcep = ForecastCEP(
         spst, key_col="k", ts_col="timestamp", id_col="id",
@@ -96,22 +105,11 @@ def test_streaming_forecast_ttl_expires_run_state(spark, tmp_path):
         spark.createDataFrame(chunk).coalesce(1).write.mode("overwrite").parquet(
             str(src / f"c{c}")
         )
-    stream = (
-        spark.readStream.schema("k string, timestamp long, id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "c*"))
+    got = _run(
+        spark, src, tmp_path, "sfc_ttl", spst,
+        watermark_delay_ms=0, state_ttl_ms=600_000,
     )
-    out = streaming_forecasts(
-        stream, spst, ts_col="timestamp", id_col="id", watermark="0 seconds",
-        method="classify_nextk", confidence_threshold=0.4, spread=3,
-        state_ttl_ms=600_000,
-    )
-    q = (
-        out.writeStream.format("memory").queryName("sfc_ttl")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(600), "stream did not drain"
-    got = spark.sql("select * from sfc_ttl where key = 'u1'").toPandas()
+    got = got[got.key == "u1"]
     dets = got[got.is_detection].sort_values("event_id")
     # both A;B matches detected...
     assert list(dets["event_id"]) == [1, 5]
