@@ -12,14 +12,17 @@ Matches model/vmm/pst/CounterSuffixTree.scala semantics:
 
 The distributed builder computes exactly those counts with lag windows
 + explode + groupBy — a plain shuffle-once aggregation that scales to
-arbitrary streams; the tree itself is assembled driver-side from the
-count table (bounded by observed contexts, not by alphabet^order).
+arbitrary streams; its driver twin (``cst_counts_pandas``) counts a
+collected key-sorted frame with numpy.  The tree itself is assembled
+driver-side from the count table (bounded by observed contexts, not by
+alphabet^order).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W
@@ -151,6 +154,60 @@ def cst_counts_spark(
         for word, cnt in zip(counts_pdf["word"], counts_pdf["cnt"])
     }
     return counts, total
+
+
+def key_starts(keys: np.ndarray) -> np.ndarray:
+    """True where a key segment of a key-sorted column starts.  NULL keys
+    compare equal, so the NULL-key rows are one segment, as they are one
+    group of Spark's ``partitionBy``/``groupBy``."""
+    null = pd.isna(keys)
+    starts = np.ones(len(keys), dtype=bool)
+    starts[1:] = (keys[1:] != keys[:-1]) & ~(null[1:] & null[:-1])
+    return starts
+
+
+def cst_counts_pandas(
+    sorted_pdf: pd.DataFrame, max_order: int
+) -> tuple[dict[tuple[int, ...], int], int]:
+    """The driver twin of ``cst_counts_spark``, for a (key, ts, event_id,
+    symbol) frame already in ``key_sorted`` order: the same
+    ``{word: count}`` table and total, with no Spark job.
+
+    Each position's word of length k is its own symbol and the k-1
+    before it in its key segment, most-recent-first; a position with
+    fewer than k-1 predecessors has no word of that length, as the
+    Spark builder's NULL lag drops it.  A word is counted as one int64
+    code, its symbols as digits in base ``max(symbol) + 1`` (a 1-D
+    ``np.unique``, about 20 times faster than a row-wise one), unless
+    the longest word's code would overflow."""
+    syms = sorted_pdf["symbol"].to_numpy(dtype=np.int64)
+    n = len(syms)
+    starts = np.flatnonzero(key_starts(sorted_pdf["key"].to_numpy()))
+    pos = np.arange(n) - np.repeat(starts, np.diff(np.append(starts, n)))
+    base = int(syms.max()) + 1 if n else 1
+    coded = base ** (max_order + 1) < 2**63
+    counts: dict[tuple[int, ...], int] = {}
+    for k in range(1, max_order + 2):
+        at = np.flatnonzero(pos >= k - 1)
+        if len(at) == 0:
+            break
+        digits = [syms[at - i] for i in range(k)]
+        if coded:
+            code = np.zeros(len(at), dtype=np.int64)
+            for d in digits:
+                code = code * base + d
+            code, cnts = np.unique(code, return_counts=True)
+            words = np.stack(
+                [code // base ** (k - 1 - i) % base for i in range(k)], axis=1
+            )
+        else:
+            words, cnts = np.unique(
+                np.stack(digits, axis=1), axis=0, return_counts=True
+            )
+        counts.update(
+            (tuple(int(x) for x in w), int(c)) for w, c in zip(words, cnts)
+        )
+    return counts, n
 
 
 def cst_from_spark(

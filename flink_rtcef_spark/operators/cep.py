@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -275,6 +276,22 @@ def _run_sdfa_batch_vectorized(
     return rows, (keys[-1], carry_out)
 
 
+KEY_ORDER = ("key", "ts", "event_id")
+#: the columns of ``BatchCEP.symbolized``
+SYMBOLIZED = (*KEY_ORDER, "symbol")
+
+
+def key_sorted_pandas(table: pa.Table) -> pd.DataFrame:
+    """The driver twin of ``BatchCEP.key_sorted`` for a collected
+    ``symbolized`` table: its rows sorted by (key, ts, event_id) with
+    NULLs first, as Spark's ascending sort places them, returned as
+    pandas.  An integer column holding NULLs becomes Python ints rather
+    than float64, so ids above 2**53 stay exact."""
+    return table.sort_by(
+        [(c, "ascending") for c in KEY_ORDER], null_placement="at_start"
+    ).to_pandas(integer_object_nulls=True)
+
+
 class BatchCEP:
     """Batch Complex Event Recognition over a DataFrame; `key_sorted` is
     the one key shuffle of every per-key kernel (detections, forecasts,
@@ -298,16 +315,21 @@ class BatchCEP:
         self.ts_col = ts_col
         self.id_col = id_col
 
+    def symbol_columns(self, df: DataFrame, prefix: str = "") -> list:
+        """``symbolized``'s four columns over ``df`` — key, ts_millis, id,
+        symbol — named ``prefix`` + ``SYMBOLIZED``, for a projection that
+        keeps ``df``'s own columns next to them."""
+        return [
+            F.col(self.key_col).alias(prefix + "key"),
+            ts_millis(df, self.ts_col).alias(prefix + "ts"),
+            F.col(self.id_col).alias(prefix + "event_id"),
+            self.compiled.symbol_column().alias(prefix + "symbol"),
+        ]
+
     def symbolized(self, df: DataFrame) -> DataFrame:
         """Project to (key, ts_millis, id, symbol) — everything heavier
         stays JVM-side and the shuffle payload is minimal."""
-        ts_ms = ts_millis(df, self.ts_col)
-        return df.select(
-            F.col(self.key_col).alias("key"),
-            ts_ms.alias("ts"),
-            F.col(self.id_col).alias("event_id"),
-            self.compiled.symbol_column().alias("symbol"),
-        )
+        return df.select(*self.symbol_columns(df))
 
     def key_sorted(self, df: DataFrame) -> DataFrame:
         """The one shuffle of every per-key kernel: ``symbolized(df)``
@@ -316,7 +338,7 @@ class BatchCEP:
         return (
             self.symbolized(df)
             .repartition("key")
-            .sortWithinPartitions("key", "ts", "event_id")
+            .sortWithinPartitions(*KEY_ORDER)
         )
 
     def detections(self, df: DataFrame, fused: bool = True) -> DataFrame:

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_rtcef_spark.models.cst import key_starts
 from flink_rtcef_spark.models.spst import SPST
 from flink_rtcef_spark.operators.cep import BatchCEP
 
@@ -169,6 +170,30 @@ def _score_key(key, pieces) -> np.ndarray:
     )
 
 
+def _score_batches(batches, main_tables) -> np.ndarray:
+    """The scorer of both routes: (tp, tn, fp, fn) of the forecasts of
+    one SPST (``main_tables``, ``_forecast_run``'s) over key-sorted
+    pandas batches — the Arrow batches of one partition of a
+    ``key_sorted`` frame, or the driver's one collected frame.  Each key
+    is scored against its own detection counters when its run closes."""
+
+    def step(key, syms, tss, ids, init):
+        return _score_inputs(syms, tss, init, main_tables)
+
+    counts = np.zeros(len(CONFUSION_COLUMNS), dtype=np.int64)
+    key, pieces = None, []
+    for segs in _key_segments(batches, (0, 0, True), step):
+        for k, continues, piece in segs:
+            if pieces and not continues:
+                counts += _score_key(key, pieces)
+                pieces = []
+            key = k
+            pieces.append(piece)
+    if pieces:
+        counts += _score_key(key, pieces)
+    return counts
+
+
 _NO_KEY = object()  # no open key yet (None is a key: the NULL key)
 
 
@@ -191,14 +216,12 @@ def _key_segments(batches, fresh, step):
         syms = pdf["symbol"].to_numpy()
         tss = pdf["ts"].to_numpy()
         ids = pdf["event_id"].to_numpy()
-        null = pd.isna(keys)
-        change = (keys[1:] != keys[:-1]) & ~(null[1:] & null[:-1])
-        bounds = [0, *(np.flatnonzero(change) + 1), n]
+        bounds = [*np.flatnonzero(key_starts(keys)), n]
         segs = []
         for start, end in zip(bounds[:-1], bounds[1:]):
             k = keys[start]
             continues = start == 0 and (
-                k == open_key or bool(null[0]) and pd.isna(open_key)
+                k == open_key or pd.isna(k) and pd.isna(open_key)
             )
             out, carry = step(
                 k, syms[start:end], tss[start:end], ids[start:end],
@@ -289,11 +312,15 @@ class ForecastCEP(BatchCEP):
         range self-join."""
         return self.confusion_key_sorted(self.key_sorted(df))
 
-    def confusion_key_sorted(self, sorted_df: DataFrame) -> dict[str, int]:
+    def confusion_key_sorted(self, sorted_df: DataFrame | pd.DataFrame) -> dict[str, int]:
         """``confusion`` of a frame already in ``key_sorted`` shape (or a
-        materialization of one): one Python pass and no Exchange.  Each
-        key is scored against its own detection counters when its run
-        closes; the per-partition count rows are summed on the driver."""
+        materialization of one): one Python pass and no Exchange, the
+        per-partition count rows summed on the driver.  A pandas frame
+        (``key_sorted_pandas`` of a collected ``symbolized`` table) is
+        scored on the driver by the same kernel, with no Spark job."""
+        if isinstance(sorted_df, pd.DataFrame):
+            counts = _score_batches([sorted_df], self._tables(self.spst))
+            return dict(zip(CONFUSION_COLUMNS, (int(c) for c in counts)))
         rows = self._partition_counts(sorted_df).collect()
         return {c: sum(int(r[c]) for r in rows) for c in CONFUSION_COLUMNS}
 
@@ -305,21 +332,8 @@ class ForecastCEP(BatchCEP):
         """One (tp, tn, fp, fn) row per partition of ``sorted_df``."""
         main_tables = self._tables(self.spst)
 
-        def step(key, syms, tss, ids, init):
-            return _score_inputs(syms, tss, init, main_tables)
-
         def score_partition(batches):
-            counts = np.zeros(len(CONFUSION_COLUMNS), dtype=np.int64)
-            key, pieces = None, []
-            for segs in _key_segments(batches, (0, 0, True), step):
-                for k, continues, piece in segs:
-                    if pieces and not continues:
-                        counts += _score_key(key, pieces)
-                        pieces = []
-                    key = k
-                    pieces.append(piece)
-            if pieces:
-                counts += _score_key(key, pieces)
+            counts = _score_batches(batches, main_tables)
             yield pd.DataFrame([counts], columns=CONFUSION_COLUMNS)
 
         return sorted_df.mapInPandas(

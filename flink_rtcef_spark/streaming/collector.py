@@ -5,17 +5,28 @@ into wall-clock-aligned buckets (bucket_id = floor(ts/bucket_size) *
 bucket_size, :121), notifies the factory of new dataset versions, and
 deletes buckets below the assembled range once the factory ACKs.
 
-Spark shape: ``df.write.partitionBy("bucket_id")`` parquet — at scale
-this is the partitioned event lake that partition-prunes at assembly.
+Layout: a hive-partitioned parquet lake, ``bucket_id=<b>/`` per bucket,
+which partition-prunes at assembly.  A window the adaptation loop has
+already collected to the driver (an Arrow table carrying the
+``bucket_col`` column) is written with ``pyarrow.parquet``, one file
+per bucket and no Spark job; a larger one with
+``df.write.partitionBy("bucket_id")``.  Both writers produce the same
+layout, so a lake may mix them.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
+import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -36,16 +47,29 @@ class BucketCollector:
     version: int = 0
     seen_buckets: set[int] = field(default_factory=set)
 
-    def collect(self, df: DataFrame, ts_col: str = "timestamp") -> DatasetNotification | None:
-        """Append a microbatch into bucket partitions; emit a dataset
-        notification when a new bucket appears (Collector.java:245-270)."""
-        bucket = (F.col(ts_col).cast("long") / self.bucket_size).cast("long") * self.bucket_size
-        with_bucket = df.withColumn("bucket_id", bucket)
-        with_bucket.write.mode("append").partitionBy("bucket_id").parquet(self.base_path)
-        buckets_now = {
-            int(r[0])
-            for r in with_bucket.select("bucket_id").distinct().collect()
-        }
+    def bucket_col(self, ts_col: str = "timestamp") -> Column:
+        """The bucket of each event (Collector.java:121), as a Column."""
+        return (F.col(ts_col).cast("long") / self.bucket_size).cast("long") * self.bucket_size
+
+    def collect(
+        self, window: DataFrame | pa.Table, ts_col: str = "timestamp"
+    ) -> DatasetNotification | None:
+        """Append a window into bucket partitions; emit a dataset
+        notification when a new bucket appears (Collector.java:245-270).
+
+        ``window`` is a DataFrame (one partitioned Spark write, one job
+        for its distinct buckets) or an Arrow table already holding a
+        ``bucket_id`` column computed by :meth:`bucket_col` (one
+        ``pyarrow.parquet`` file per bucket, no Spark job)."""
+        if isinstance(window, pa.Table):
+            buckets_now = self._write_arrow(window)
+        else:
+            with_bucket = window.withColumn("bucket_id", self.bucket_col(ts_col))
+            with_bucket.write.mode("append").partitionBy("bucket_id").parquet(self.base_path)
+            buckets_now = {
+                int(r[0])
+                for r in with_bucket.select("bucket_id").distinct().collect()
+            }
         new_buckets = buckets_now - self.seen_buckets
         self.seen_buckets |= buckets_now
         if not new_buckets:
@@ -59,6 +83,25 @@ class BucketCollector:
             version=self.version,
             bucket_count=len(covered),
         )
+
+    def _write_arrow(self, table: pa.Table) -> set[int]:
+        """Write ``table``'s rows under their ``bucket_id=<b>`` dirs, the
+        column itself dropped as Spark's partitioned write drops it; the
+        Arrow types are written as they are (no pandas round trip), so
+        an integer column holding NULLs stays an integer column.  Each
+        file is written under a dot name, which Spark's reader skips,
+        and renamed into place, so a crash leaves no torn file.  Returns
+        the buckets written."""
+        ids = table.column("bucket_id")
+        data = table.drop_columns(["bucket_id"])
+        buckets = {int(b) for b in pc.unique(ids).to_pylist()}
+        for b in buckets:
+            part = Path(self.base_path) / f"bucket_id={b}"
+            part.mkdir(parents=True, exist_ok=True)
+            name = f"part-{uuid.uuid4().hex}.parquet"
+            pq.write_table(data.filter(pc.equal(ids, b)), str(part / f".{name}"))
+            os.replace(part / f".{name}", part / name)
+        return buckets
 
     def assemble(self, spark: SparkSession, buckets_range: list[int]) -> DataFrame:
         """Union the requested buckets (ModelFactoryEngine.assembleDataset

@@ -1,10 +1,12 @@
 """Model factory: in-memory train/test on assembled datasets.
 
 G7 parity (WayebAdapter.scala:39-184 + ModelFactoryEngine.java:226-496):
-- prepare: assembled events -> symbolize -> key shuffle, materialized
-  once per session with their count and distributed CST; every
-  evaluation of the session reuses them (the reference re-loads the
-  locked dataset per opt_step, loadEvents:588-637);
+- prepare: assembled events -> symbolize, built once per session with
+  their count and CST; every evaluation of the session reuses them (the
+  reference re-loads the locked dataset per opt_step,
+  loadEvents:588-637).  Within the driver bound (``bounded.max_rows``)
+  the set is one driver collect, key-sorted in pandas (the reference's
+  ``testInMemory``); above it, a key shuffle materialized in Spark;
 - train: CST -> PST -> SPST (+ wt distributions) with the given
   (pMin, gamma) params;
 - test: replay the same events through a fresh forecasting engine and
@@ -19,13 +21,16 @@ import logging
 from contextlib import nullcontext
 from dataclasses import dataclass
 
+import pandas as pd
+
 from pyspark.sql import DataFrame
 
-from flink_rtcef_spark.models.cst import CounterSuffixTree, cst_from_spark
+from flink_rtcef_spark.models.cst import CounterSuffixTree, cst_counts_pandas, cst_from_spark
 from flink_rtcef_spark.models.spst import SPST, spst_from_cst
-from flink_rtcef_spark.operators.cep import BatchCEP
+from flink_rtcef_spark.operators.cep import BatchCEP, key_sorted_pandas
 from flink_rtcef_spark.operators.forecast import ForecastCEP
 from flink_rtcef_spark.plans.compiler import CompiledPattern
+from flink_rtcef_spark.streaming import bounded
 
 MIN_EVENTS = 50
 
@@ -45,12 +50,13 @@ class TrainResult:
 @dataclass
 class TrainingSet:
     """One session's training data, built once by ``ModelFactory.prepare``:
-    the events in ``BatchCEP.key_sorted`` shape, materialized, with
-    their row count and context counts (``cst`` is None under the
-    min-data guard).  Leaving its ``with`` block releases the
-    materialization, on every exit path."""
+    the events in ``BatchCEP.key_sorted`` shape — a materialized Spark
+    frame, or below the driver bound its pandas twin
+    (``key_sorted_pandas``) — with their row count and context counts
+    (``cst`` is None under the min-data guard).  Leaving its ``with``
+    block releases a materialization, on every exit path."""
 
-    frame: DataFrame
+    frame: DataFrame | pd.DataFrame
     n: int = 0
     cst: CounterSuffixTree | None = None
 
@@ -63,13 +69,15 @@ class TrainingSet:
     def release(self) -> None:
         # a localCheckpoint'ed frame is a LogicalRDD over the persisted
         # checkpoint RDD; unpersisting that RDD frees its blocks
-        self.frame._jdf.queryExecution().logical().rdd().unpersist(True)
+        if isinstance(self.frame, DataFrame):
+            self.frame._jdf.queryExecution().logical().rdd().unpersist(True)
 
 
 class ModelFactory:
     """In-memory train/test of SPST models: `prepare` builds a session's
-    `TrainingSet` once (one key shuffle, one count, one context count);
-    `train_and_test` trains one (pMin, gamma) on it and scores it."""
+    `TrainingSet` once (one driver collect below the bound; else one key
+    shuffle, one count, one context count); `train_and_test` trains one
+    (pMin, gamma) on it and scores it."""
 
     def __init__(
         self,
@@ -94,16 +102,31 @@ class ModelFactory:
         self.spread = spread
 
     def prepare(self, events: DataFrame) -> TrainingSet:
-        """Symbolize and key-shuffle ``events`` once, materialize them,
-        and count them and their contexts: everything of a train/test
-        call that does not depend on (pMin, gamma).
+        """Symbolize and key-sort ``events`` once, and count them and
+        their contexts: everything of a train/test call that does not
+        depend on (pMin, gamma).
 
-        ``localCheckpoint(eager=True)`` rather than ``persist()``: a
-        cached plan keeps all ``spark.sql.shuffle.partitions``
-        partitions of the shuffle, while the checkpoint keeps AQE's
-        coalesced read, so each score stays one Python task on a small
-        set."""
+        Within the driver bound (``bounded.max_rows``: ``DRIVER_MAX_ROWS``
+        events of a string key), one bounded collect brings them to the
+        driver, where they are sorted and counted
+        (``cst_counts_pandas``), so each evaluation is ``spst_from_cst``
+        plus one kernel call with no Spark job.  Above it, they are
+        key-shuffled and materialized with ``localCheckpoint(eager=True)``
+        rather than ``persist()``: a cached plan keeps all
+        ``spark.sql.shuffle.partitions`` partitions of the shuffle,
+        while the checkpoint keeps AQE's coalesced read, so each score
+        stays one Python task on a small set."""
         cep = BatchCEP(self.compiled, key_col=self.key_col, ts_col=self.ts_col, id_col=self.id_col)
+        symbolized = cep.symbolized(events)
+        table = bounded.collect_bounded(symbolized, bounded.max_rows(symbolized))
+        if table is not None:
+            frame = key_sorted_pandas(table)
+            data = TrainingSet(frame, len(frame))
+            if data.n >= MIN_EVENTS:
+                data.cst = CounterSuffixTree.from_counts(
+                    *cst_counts_pandas(frame, self.max_order)
+                )
+            return data
         data = TrainingSet(cep.key_sorted(events).localCheckpoint(eager=True))
         try:
             data.n = data.frame.count()

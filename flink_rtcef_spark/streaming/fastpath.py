@@ -116,6 +116,7 @@ from flink_rtcef_spark.operators.cep import _run_sdfa_segment
 from flink_rtcef_spark.operators.forecast import _forecast_rows, _forecast_run
 from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
 from flink_rtcef_spark.streaming import state_table as stt
+from flink_rtcef_spark.streaming.bounded import DRIVER_MAX_ROWS, collect_bounded
 
 # long-form union of events and carried state; state rows sort before
 # any real event of their key (ts = _STATE_TS)
@@ -652,16 +653,17 @@ def _route_to_driver(
 ):
     """The auto/driver routing decision: collect the batch to driver
     pandas when (a) engine == "driver", or (b) engine == "auto" AND
-    both bounds hold — the batch fits (``limit(n+1)`` probe) and the
-    carried state its touched buckets hold fits (manifest counts — no
-    scan).  Returns (the batch's live events — rows later than the
-    watermark dropped — as pandas, the buckets they touch), or None →
-    a distributed route.
+    both bounds hold — the batch fits (the ``limit(n+1)`` probe of
+    :func:`bounded.collect_bounded`, shared with the adaptation loop)
+    and the carried state its touched buckets hold fits (manifest
+    counts — no scan).  Returns (the batch's live events — rows later
+    than the watermark dropped — as pandas, the buckets they touch), or
+    None → a distributed route.
 
-    ``.toArrow().to_pandas()`` over ``.toPandas()``: same rows, same
-    dtypes for these non-null columns, but the Arrow collect skips the
-    row-wise conversion layer — measured 204 → 77 ms on a 12.5k-row
-    microbatch probe, a fifth of the per-batch floor.
+    The Arrow collect over ``.toPandas()``: same rows, same dtypes for
+    these non-null columns, but it skips the row-wise conversion layer
+    — measured 204 → 77 ms on a 12.5k-row microbatch probe, a fifth of
+    the per-batch floor.
 
     Negative result (r4 verdict item 8, measured r5): skipping the
     probe via a previous-batch-size prior (plain ``toPandas`` when the
@@ -674,12 +676,12 @@ def _route_to_driver(
     the simpler, oversize-safe form."""
     if engine not in ("auto", "driver"):
         return None
-    batch = batch_df.select(*cols)
-    if engine == "auto":
-        batch = batch.limit(driver_max_rows + 1)
-    pdf = batch.toArrow().to_pandas()
-    if engine == "auto" and len(pdf) > driver_max_rows:
+    table = collect_bounded(
+        batch_df.select(*cols), driver_max_rows if engine == "auto" else None
+    )
+    if table is None:
         return None
+    pdf = table.to_pandas()
     wm = meta["watermark_ms"]
     live = pdf if wm is None else pdf[pdf["ts"] >= int(wm)]
     touched = stt.touched_buckets_of(live["key"], meta["num_buckets"])
@@ -700,7 +702,7 @@ def _make_foreach_batch(
     state_ttl_ms: int = 0,
     keep_versions: int = 2,
     engine: str = "auto",
-    driver_max_rows: int = 200_000,
+    driver_max_rows: int = DRIVER_MAX_ROWS,
     driver_max_state_rows: int | None = None,
     num_buckets: int = stt.DEFAULT_NUM_BUCKETS,
 ):
@@ -774,7 +776,9 @@ def _make_foreach_batch(
             wm = cand if wm is None else max(int(wm), cand)
         stt.write_meta(
             state_dir, batch_id + 1,
-            stt.next_meta(meta, batch_id, touched_rows, wm, engine_used, g),
+            stt.next_meta(
+                meta, batch_id, touched_rows, wm, engine_used, g, spec.out.sql
+            ),
         )
         if sink is not None:
             sink(

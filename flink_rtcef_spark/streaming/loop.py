@@ -4,10 +4,14 @@ factory -> model swap, docker/Kafka-free.
 Roles map 1:1 to the reference's jobs (SURVEY.md §3.2-3.3); transport
 is in-process (the control plane is a 1-key state machine — running it
 on a cluster buys nothing, exactly why the reference runs its
-controller at parallelism 1).  The data plane stays Spark: detection/
-forecasting per microbatch via the CEP operators, dataset persistence
-via the bucket-partitioned collector, training via the distributed
-train path.
+controller at parallelism 1).  The data plane takes the fast path's
+bounded driver route (streaming/bounded.py): a report window within
+``bounded.max_rows`` (``DRIVER_MAX_ROWS``, fewer for wide rows) is
+collected once, as Arrow, and that one collect feeds both the
+collector's bucket write and the engine's scorer; the factory's
+training set takes the same route.  Above the bound each role runs its
+distributed Spark plan (the partitioned write, ``ForecastCEP.confusion``,
+the materialized key shuffle), so the loop scales past driver memory.
 
 Semantic deltas vs the reference, both documented in their own
 differences.md spirit:
@@ -21,12 +25,16 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_rtcef_spark.models.spst import SPST
+from flink_rtcef_spark.operators.cep import SYMBOLIZED, key_sorted_pandas
 from flink_rtcef_spark.operators.forecast import ForecastCEP
 from flink_rtcef_spark.plans.compiler import CompiledPattern
+from flink_rtcef_spark.streaming import bounded
 from flink_rtcef_spark.streaming.collector import BucketCollector
 from flink_rtcef_spark.streaming.factory import ModelFactory, TrainingSet, TrainResult, _mcc
 from flink_rtcef_spark.streaming.observer import Instruction, Observer
@@ -34,17 +42,24 @@ from flink_rtcef_spark.streaming.optimizer import BayesLiteOptimizer
 
 log = logging.getLogger(__name__)
 
+# the scorer's symbolized columns a driver-route window carries next to
+# the batch's own; they are dropped before the collector writes the window
+_SCORER = "__scorer_"
+_SCORER_COLS = [_SCORER + c for c in SYMBOLIZED]
+
 
 @dataclass
 class ReportPoint:
-    """One report: timestamp, runtime/batch MCC, event, and `cause` (the
-    `TrainResult.cause` of the instruction's last failed train)."""
+    """One report: timestamp, runtime/batch MCC, event, `cause` (the
+    `TrainResult.cause` of the instruction's last failed train) and
+    `route`, how the window was collected and scored."""
 
     timestamp: int
     runtime_mcc: float
     batch_mcc: float
     event: str = ""  # "" | optimize | retrain | deploy
     cause: str = ""  # TrainResult.cause of the instruction's last failed train
+    route: str = ""  # driver | distributed
 
 
 @dataclass
@@ -71,11 +86,8 @@ class RTCEFLoop:
         self.cum = {"tp": 0, "tn": 0, "fp": 0, "fn": 0}
 
     # ------------------------------------------------------------ engine
-    def _engine_report(self, batch: DataFrame) -> tuple[float, float, dict]:
-        """Run the current model over one microbatch; return (runtime
-        mcc over cumulative counts, batch mcc, batch counts) — the
-        runtime/batch duality of WayebEngine.checkAndReportStats:370-430."""
-        fcep = ForecastCEP(
+    def _forecaster(self) -> ForecastCEP:
+        return ForecastCEP(
             self.model,
             key_col=self.key_col,
             ts_col=self.ts_col,
@@ -84,7 +96,31 @@ class RTCEFLoop:
             confidence_threshold=self.factory.confidence_threshold,
             spread=self.factory.spread,
         )
-        counts = fcep.confusion(batch)
+
+    def _collect_window(self, batch: DataFrame) -> pa.Table | None:
+        """The window as one Arrow table when it fits
+        ``bounded.max_rows``, else None: one Spark job whose JVM
+        projection adds the collector's ``bucket_id`` and the scorer's
+        symbolized columns to the batch's columns."""
+        projected = batch.withColumn(
+            "bucket_id", self.collector.bucket_col(self.ts_col)
+        ).select(
+            "*", *self._forecaster().symbol_columns(batch, prefix=_SCORER)
+        )
+        return bounded.collect_bounded(projected, bounded.max_rows(projected))
+
+    def _engine_report(self, window: DataFrame | pa.Table) -> tuple[float, float, dict]:
+        """Run the current model over one window — a DataFrame, or its
+        driver collect from ``_collect_window``, scored on the driver by
+        the same kernel; return (runtime mcc over cumulative counts,
+        batch mcc, batch counts) — the runtime/batch duality of
+        WayebEngine.checkAndReportStats:370-430."""
+        fcep = self._forecaster()
+        if isinstance(window, pa.Table):
+            symbolized = window.select(_SCORER_COLS).rename_columns(list(SYMBOLIZED))
+            counts = fcep.confusion_key_sorted(key_sorted_pandas(symbolized))
+        else:
+            counts = fcep.confusion(window)
         for k, v in counts.items():
             self.cum[k] += v
         runtime = _mcc(**self.cum)
@@ -92,10 +128,16 @@ class RTCEFLoop:
         return runtime, batch_mcc, counts
 
     # -------------------------------------------------------- controller
-    def _run_optimize_session(self, data: TrainingSet) -> list[TrainResult]:
-        """PAUSE -> ask/tell loop -> retrain best -> PLAY
+    def _run_optimize_session(
+        self, data: TrainingSet
+    ) -> tuple[list[TrainResult], TrainResult]:
+        """PAUSE -> ask/tell loop -> best -> PLAY
         (controller_coprocess.py:130-155 + optimizer.py:242-395).
-        Returns every evaluation's result, the final retrain last."""
+        Returns every evaluation's result and the best one.  The
+        reference retrains the best point; here every evaluation trains
+        on the same ``TrainingSet`` and ``spst_from_cst`` is
+        deterministic, so the best evaluation's model IS that retrain's
+        and is deployed as it is."""
         self.paused = True
         opt = BayesLiteOptimizer(self.opt_space, n_initial=self.n_initial, seed=self.seed)
         results = []
@@ -104,10 +146,8 @@ class RTCEFLoop:
             result = self.factory.train_and_test(data, pmin=x[0], gamma=x[1])
             opt.tell(x, result.f_val if result.status == "success" else 0.0)
             results.append(result)
-        best_x, _ = opt.best
-        results.append(self.factory.train_and_test(data, pmin=best_x[0], gamma=best_x[1]))
         self.paused = False
-        return results
+        return results, results[opt.best_i]
 
     def handle_instruction(self, instr: Instruction) -> tuple[str, str]:
         """Assemble the last-K dataset, prepare it once, and run the
@@ -120,15 +160,15 @@ class RTCEFLoop:
         assembled = self.collector.assemble(self.spark, covered)
         with self.factory.prepare(assembled) as data:
             if instr.instruction_type == "optimize":
-                results = self._run_optimize_session(data)
+                results, final = self._run_optimize_session(data)
             else:
-                results = [self.factory.train_and_test(data, pmin=0.001, gamma=0.001)]
+                final = self.factory.train_and_test(data, pmin=0.001, gamma=0.001)
+                results = [final]
         self.collector.ack(covered)
         failed = [r for r in results if r.status != "success"]
         for r in failed:
             log.warning("%s train failed for %s: %s", instr.instruction_type, r.params, r.cause)
         cause = failed[-1].cause if failed else ""
-        final = results[-1]
         if final.status != "success":
             return "", cause
         self.model = final.spst
@@ -138,12 +178,21 @@ class RTCEFLoop:
 
     # -------------------------------------------------------------- loop
     def process_batch(self, batch: DataFrame, batch_ts: int) -> ReportPoint | None:
-        """One microbatch through the whole loop."""
-        self.collector.collect(batch, ts_col=self.ts_col)
+        """One microbatch through the whole loop.  A window within the
+        driver bound is collected once (one Spark job) and both the
+        collector and the engine report read that collect; a larger
+        one runs their distributed plans."""
+        window = self._collect_window(batch)
+        if window is None:
+            window, route = batch, "distributed"
+            self.collector.collect(batch, ts_col=self.ts_col)
+        else:
+            route = "driver"
+            self.collector.collect(window.drop_columns(_SCORER_COLS), ts_col=self.ts_col)
         if self.paused:  # engine frozen during optimization (G3)
             return None
-        runtime, batch_mcc, counts = self._engine_report(batch)
-        point = ReportPoint(batch_ts, runtime, batch_mcc)
+        runtime, batch_mcc, counts = self._engine_report(window)
+        point = ReportPoint(batch_ts, runtime, batch_mcc, route=route)
         instr = self.observer.on_report(
             batch_ts, batch_mcc, counts["tp"], counts["fp"], counts["fn"]
         )
@@ -184,14 +233,17 @@ class RTCEFLoop:
         event-time simulation.  Returns the StreamingQuery."""
 
         def process(batch_df: DataFrame, epoch_id: int) -> None:
-            if batch_df.isEmpty():
+            # one job for the batch's size and latest ts
+            n, batch_ts = batch_df.agg(
+                F.count(F.lit(1)), F.max(F.col(self.ts_col).cast("long"))
+            ).collect()[0]
+            if n == 0:
                 return
-            batch_ts = int(
-                batch_df.agg(
-                    F.max(F.col(self.ts_col).cast("long"))
-                ).collect()[0][0]
-            )
-            self.process_batch(batch_df, batch_ts)
+            if batch_ts is None:
+                raise ValueError(
+                    f"microbatch {epoch_id} holds {n} rows and no {self.ts_col} value"
+                )
+            self.process_batch(batch_df, int(batch_ts))
 
         writer = stream_df.writeStream.foreachBatch(process).option(
             "checkpointLocation", checkpoint_dir

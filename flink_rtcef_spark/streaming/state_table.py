@@ -287,10 +287,13 @@ def next_meta(
     new_wm,
     engine_used: str,
     new_group_size: int,
+    schema: str,
 ) -> dict:
     """Manifest for ``v{batch_id + 1}``: touched buckets re-owned by the
     new version with their fresh counts, untouched buckets carried
-    forward BY REFERENCE (their entries copy over unchanged)."""
+    forward BY REFERENCE (their entries copy over unchanged).
+    ``schema`` is the kernel's written-row schema string, recorded so
+    offline tools (``compact_state``) can read the table without it."""
     buckets = dict(meta["buckets"])
     for bid, rows in touched_rows.items():
         buckets[str(bid)] = [batch_id + 1, int(rows)]
@@ -301,6 +304,7 @@ def next_meta(
         "buckets": buckets,
         "state_rows": int(sum(v[1] for v in buckets.values())),
         "engine_used": engine_used,
+        "schema": schema,
     }
 
 
@@ -563,7 +567,7 @@ def write_distributed_output(
 def compact_state(
     spark,
     state_dir: str,
-    schema: str,
+    schema: str | None = None,
     state_ttl_ms: int = 0,
     watermark_ms: int | None = None,
 ) -> dict:
@@ -583,8 +587,13 @@ def compact_state(
     collide with; GC treats them like any other owner — kept while
     referenced, pruned after.  Re-running compaction is safe (it reads
     whatever the manifest currently points at and writes the next
-    epoch).  ``schema`` is the fast path's state schema string
-    (fastpath._OUT_SCHEMA or fastpath_register._OUT_SCHEMA).
+    epoch).  ``schema`` is the kernel's written-row schema string; by
+    default it is read from the manifest, where every fast-path kernel
+    (SDFA, register, multi-pattern, forecast) records it.  A manifest
+    written before kernels recorded it needs it passed: the ``.out.sql``
+    of the kernel's spec (``fastpath._OUT_SCHEMA``,
+    ``fastpath_register._OUT_SCHEMA``, ``fastpath._MultiSpec`` or
+    ``fastpath._ForecastSpec``).
 
     Returns {"epoch", "rows_before", "rows_after"}.
 
@@ -608,6 +617,13 @@ def compact_state(
     latest = max(versions)
     with open(os.path.join(version_path(state_dir, latest), "meta.json")) as f:
         meta = json.load(f)
+    schema = schema or meta.get("schema")
+    if schema is None:
+        raise ValueError(
+            f"state manifest of {state_dir} records no row schema (it was "
+            f"written before kernels recorded one); pass compact_state's "
+            f"schema argument: the .out.sql of the kernel's spec"
+        )
     num_buckets = meta["num_buckets"]
     stored_wm = meta["watermark_ms"]
     if (
@@ -671,6 +687,7 @@ def compact_state(
         "buckets": {},
         "state_rows": 0,
         "engine_used": "compact",
+        "schema": schema,
     })
     # re-point EVERY live bucket at the epoch; the latest version's own
     # group_size field stays (it describes that version's now-orphaned
@@ -683,6 +700,7 @@ def compact_state(
             str(t): [epoch, int(r)] for t, r in touched_rows.items() if r > 0
         },
         "engine_used": meta.get("engine_used", "compact"),
+        "schema": schema,
     }
     new_meta["state_rows"] = int(
         sum(r for _o, r in new_meta["buckets"].values())

@@ -17,3 +17,13 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     spark = get_spark("tests")
     yield spark
+
+
+@pytest.fixture
+def distributed_route(monkeypatch):
+    """Send every non-empty frame of the adaptation loop and the model
+    factory down their distributed Spark plans: a driver bound of 0
+    rows."""
+    from flink_rtcef_spark.streaming import bounded
+
+    monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 0)

@@ -750,6 +750,50 @@ def test_fastpath_offline_compaction_reclaims_and_resumes(spark, tmp_path):
     assert got[got["key"] == "stale0"].empty
 
 
+@pytest.mark.parametrize("kernel", ["multi", "forecast"])
+def test_compact_state_reads_the_row_schema_from_the_manifest(
+    spark, tmp_path, kernel
+):
+    """Every kernel's manifest records its written-row schema, so
+    compact_state sweeps a multi-pattern or forecast state dir without
+    being handed it, and the state rows before and after compaction are
+    equal.  A manifest without the field names the argument to pass."""
+    import json
+
+    from flink_rtcef_spark.streaming import state_table as stt
+
+    kn = KERNELS[kernel]
+    compiled = kn.compile()
+    batches = _id_batches(kn)
+    state_dir = str(tmp_path / "state")
+    fb = kn.make_fb(compiled, state_dir, engine="driver", num_buckets=2)
+    for bid, rows in enumerate(batches):
+        fb(
+            kn.symbolize(
+                spark.createDataFrame(rows, kn.schema), compiled,
+                key_col="k", ts_col="ts", id_col="id",
+            ),
+            bid,
+        )
+    latest = f"{state_dir}/v{len(batches)}/meta.json"
+    with open(latest) as f:
+        meta = json.load(f)
+    assert meta["schema"] == kn.spec.out.sql
+    before = _state_rows(state_dir, len(batches), 2, kn)
+    res = stt.compact_state(spark, state_dir)
+    assert res["rows_before"] == res["rows_after"] == len(before) == 24
+    pd.testing.assert_frame_equal(
+        _state_rows(state_dir, len(batches), 2, kn), before
+    )
+
+    with open(latest) as f:
+        meta = json.load(f)
+    del meta["schema"]
+    stt.write_meta(state_dir, len(batches), meta)
+    with pytest.raises(ValueError, match="schema argument"):
+        stt.compact_state(spark, state_dir)
+
+
 # event ids above 2**53: a float64 pass anywhere in a route rounds them
 BIG_ID = 2**60
 

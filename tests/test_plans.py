@@ -351,10 +351,11 @@ def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
-def test_prepare_is_one_key_shuffle(spark, monkeypatch):
-    """ModelFactory.prepare materializes ONE hash shuffle on the key
-    (symbolize -> repartition -> sortWithinPartitions), once per
-    session: the plan it checkpoints is captured at the checkpoint."""
+def test_prepare_is_one_key_shuffle(spark, monkeypatch, distributed_route):
+    """ModelFactory.prepare above the driver bound materializes ONE hash
+    shuffle on the key (symbolize -> repartition -> sortWithinPartitions),
+    once per session: the plan it checkpoints is captured at the
+    checkpoint."""
     from tests.test_forecast import _ab_forecaster, _ab_stream
     from flink_rtcef_spark.streaming.factory import ModelFactory
 
@@ -380,8 +381,9 @@ def test_prepare_is_one_key_shuffle(spark, monkeypatch):
     assert "MapInPandas" not in plan
 
 
-def test_prepared_score_pass_has_no_exchange(spark):
-    """Scoring on a prepared training set reuses its key shuffle: ONE
+def test_prepared_score_pass_has_no_exchange(spark, distributed_route):
+    """Scoring on a training set prepared above the driver bound reuses
+    its key shuffle: ONE
     MapInPandas straight over the materialized frame, no Exchange, and
     on AQE's coalesced partitions (a persist() of the shuffle would
     keep all spark.sql.shuffle.partitions of them)."""

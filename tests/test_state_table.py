@@ -69,13 +69,14 @@ def test_next_meta_transfers_only_touched_and_preserves_totals():
         "buckets": {"1": [3, 10], "2": [5, 20], "7": [5, 5]},
         "state_rows": 35,
     }
-    nxt = stt.next_meta(meta, 9, {2: 25, 4: 7}, 6, "driver", 4)
+    nxt = stt.next_meta(meta, 9, {2: 25, 4: 7}, 6, "driver", 4, "key string, ts long")
     assert nxt["buckets"]["1"] == [3, 10]       # untouched: by reference
     assert nxt["buckets"]["2"] == [10, 25]      # touched: re-owned by v10
     assert nxt["buckets"]["4"] == [10, 7]       # new bucket
     assert nxt["buckets"]["7"] == [5, 5]
     assert nxt["state_rows"] == 10 + 25 + 7 + 5
     assert nxt["group_size"] == 4 and nxt["engine_used"] == "driver"
+    assert nxt["schema"] == "key string, ts long"
     # the input manifest is not mutated (replay reads it again)
     assert meta["buckets"]["2"] == [5, 20]
 

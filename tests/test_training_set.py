@@ -2,7 +2,9 @@
 every evaluation reuses it.  Training and scoring on the prepared set
 give exactly what a plain DataFrame gives, and the materialization is
 released on every exit path (Spark's persistent-RDD registry is the
-same before and after)."""
+same before and after).  The equivalence and release checks pin the
+distributed set, the one that materializes, so they run with the
+driver bound forced to 0 (``distributed_route``)."""
 
 from __future__ import annotations
 
@@ -83,6 +85,7 @@ def _finance_factory(compiled) -> ModelFactory:
     )
 
 
+@pytest.mark.usefixtures("distributed_route")
 @pytest.mark.parametrize("arrow_batch", ["default", "7 rows"])
 def test_prepared_set_matches_plain_frame(spark, request, arrow_batch):
     if arrow_batch == "7 rows":
@@ -140,6 +143,7 @@ def _ab_factory() -> ModelFactory:
     )
 
 
+@pytest.mark.usefixtures("distributed_route")
 @pytest.mark.parametrize("n", [MIN_EVENTS - 1, 4 * MIN_EVENTS])
 def test_train_and_test_on_plain_frame_releases_its_set(spark, n):
     before = persistent_rdds(spark)
@@ -148,6 +152,7 @@ def test_train_and_test_on_plain_frame_releases_its_set(spark, n):
     assert persistent_rdds(spark) == before
 
 
+@pytest.mark.usefixtures("distributed_route")
 def test_failed_prepare_releases_its_set(spark, monkeypatch):
     def broken_cst(*args, **kwargs):
         raise RuntimeError("counting failed")
@@ -179,6 +184,7 @@ def _loop(spark, tmp_path, observer=None) -> tuple[RTCEFLoop, object]:
     return loop, events
 
 
+@pytest.mark.usefixtures("distributed_route")
 @pytest.mark.parametrize("kind", ["optimize", "retrain"])
 def test_instruction_deploys_and_releases_its_set(spark, tmp_path, kind):
     loop, _ = _loop(spark, tmp_path)
@@ -189,8 +195,9 @@ def test_instruction_deploys_and_releases_its_set(spark, tmp_path, kind):
     assert loop.handle_instruction(Instruction(kind, 400, 0.0)) == ("deploy", "")
     assert persistent_rdds(spark) == before
     assert loop.model is not loop.initial_model
-    # every evaluation and the final retrain ran on the one prepared set
-    assert len(calls) == (3 if kind == "optimize" else 1)
+    # every evaluation ran on the one prepared set; the optimise
+    # session deploys its best evaluation's model without a retrain
+    assert len(calls) == (2 if kind == "optimize" else 1)
     assert len({id(c) for c in calls}) == 1
     assert isinstance(calls[0], factory_mod.TrainingSet)
 
@@ -214,7 +221,46 @@ def test_failed_train_reaches_the_report_stream(spark, tmp_path, monkeypatch, ca
         r for r in caplog.records
         if r.name == "flink_rtcef_spark.streaming.loop" and r.levelno == logging.WARNING
     ]
-    # one for the retrain, three for the optimise session's trains
-    assert len(warnings) == 4
+    # one for the retrain, two for the optimise session's evaluations
+    assert len(warnings) == 3
     assert all("tree exploded" in r.getMessage() for r in warnings)
     assert loop.metrics_csv().splitlines()[0] == "timestamp,human_time,runtime_mcc,batch_mcc,event"
+
+
+def test_driver_route_session_persists_nothing(spark, tmp_path):
+    """Below the driver bound the session's training set is a pandas
+    frame: an optimise session leaves Spark's persistent-RDD registry as
+    it found it."""
+    loop, _ = _loop(spark, tmp_path)
+    calls = []
+    train_and_test = loop.factory.train_and_test
+    loop.factory.train_and_test = lambda *a, **k: calls.append(a[0]) or train_and_test(*a, **k)
+    before = persistent_rdds(spark)
+    assert loop.handle_instruction(Instruction("optimize", 400, 0.0)) == ("deploy", "")
+    assert persistent_rdds(spark) == before
+    assert all(isinstance(c.frame, pd.DataFrame) for c in calls)
+
+
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_optimize_deploys_its_best_evaluation(spark, tmp_path, request, route):
+    """The optimise session deploys its best evaluation's model, which is
+    the model a retrain at the best point gives: same delta, finals and
+    forecast table."""
+    if route == "distributed":
+        request.getfixturevalue("distributed_route")
+    loop, _ = _loop(spark, tmp_path)
+    loop.n_opt_evals = 4
+    covered = sorted(loop.collector.seen_buckets)[-loop.collector.last_k :]
+    with loop.factory.prepare(loop.collector.assemble(spark, covered)) as data:
+        results, best = loop._run_optimize_session(data)
+        retrain = loop.factory.train_and_test(data, best.params["pMin"], best.params["gamma"])
+    assert best.status == retrain.status == "success"
+    assert best.f_val == min(r.f_val for r in results) == retrain.f_val
+    assert loop.handle_instruction(Instruction("optimize", 400, 0.0)) == ("deploy", "")
+    for spst in (best.spst, loop.model):
+        np.testing.assert_array_equal(spst.delta, retrain.spst.delta)
+        np.testing.assert_array_equal(spst.finals, retrain.spst.finals)
+        np.testing.assert_array_equal(
+            spst.forecast_table("classify_nextk", 0.5, 5),
+            retrain.spst.forecast_table("classify_nextk", 0.5, 5),
+        )
