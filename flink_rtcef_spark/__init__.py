@@ -10,7 +10,7 @@ capabilities Spark-first:
 - relational/evaluation surface  -> DataFrame / Spark SQL (Catalyst optimizes)
 - pattern language (SRE)         -> driver-side compiler in ``plans/``
 - pattern matching (CEP)         -> one custom stateful operator in
-                                    ``operators/cep.py`` (applyInPandas)
+                                    ``operators/cep.py`` (mapInPandas)
 - model training                 -> distributed aggregation + driver assembly
                                     in ``models/``
 - streaming + adaptation         -> Structured Streaming in ``streaming/``

@@ -121,41 +121,32 @@ def learn_hmm(
 def run_trace(detections_input: DataFrame, compiled, key_col: str, ts_col: str, id_col: str) -> DataFrame:
     """(key, ts, state, symbol) trace of the deterministic run over a
     batch — the training input for learn_hmm.  Symbolization is the
-    JVM Column; the state sequence replays the SDFA per key in the same
-    fused mapInPandas shape as the CEP operator."""
+    JVM Column; the state sequence replays the SDFA per key on the CEP
+    operator's key shuffle and key walk."""
     import pandas as pd
 
-    from flink_rtcef_spark.operators.cep import BatchCEP
+    from flink_rtcef_spark.operators.cep import BatchCEP, key_batches
     from flink_rtcef_spark.plans.compiler import transition_tables
 
     cep = BatchCEP(compiled, key_col=key_col, ts_col=ts_col, id_col=id_col)
-    sym_df = cep.symbolized(detections_input)
     delta, _, _ = transition_tables(compiled.sdfa)
 
     def trace_partition(batches):
-        open_key, st = None, 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["key"].to_numpy()
-            syms = pdf["symbol"].to_numpy()
-            tss = pdf["ts"].to_numpy()
+        st = 0
+        for keys, (syms, tss), bounds, continues in key_batches(batches, ("symbol", "ts")):
             states = np.empty(len(keys), dtype=np.int32)
-            for i in range(len(keys)):
-                if keys[i] != open_key:
-                    open_key, st = keys[i], 0
-                st = int(delta[st, syms[i]])
-                states[i] = st
+            for start, end in zip(bounds[:-1], bounds[1:]):
+                if start > 0 or not continues:
+                    st = 0
+                for i in range(start, end):
+                    st = int(delta[st, syms[i]])
+                    states[i] = st
             yield pd.DataFrame(
                 {"key": keys, "ts": tss, "state": states, "symbol": syms}
             )
 
     key_type = dict(detections_input.dtypes)[key_col]
-    return (
-        sym_df.repartition("key")
-        .sortWithinPartitions("key", "ts", "event_id")
-        .mapInPandas(
-            trace_partition,
-            schema=f"key {key_type}, ts long, state int, symbol int",
-        )
+    return cep.key_sorted(detections_input).mapInPandas(
+        trace_partition,
+        schema=f"key {key_type}, ts long, state int, symbol int",
     )

@@ -7,9 +7,9 @@ BeepBeep.runMatrixEstimation); ``forecasting --modelType fmm`` then
 derives waiting-time distributions from that matrix
 (model/forecaster/WtForecasterBuilder semantics).
 
-Spark shape: the state walk uses the same one-shuffle
-repartition(key) + sortWithinPartitions + fused mapInPandas strategy
-as the CEP operator (operators/cep.py), emitting per-partition dense
+Spark shape: the state walk runs on the CEP operator's key shuffle
+and key walk (operators/cep.py ``key_sorted`` + ``key_segments``, one
+mapInPandas pass), emitting per-partition dense
 transition counts; only the n_states x n_states count table crosses
 to the driver (a control-plane aggregate, not data).
 """
@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_rtcef_spark.models.wt import Forecast, WtDistribution
+from flink_rtcef_spark.operators.cep import key_segments, key_sorted
 from flink_rtcef_spark.plans.compiler import CompiledPattern
 
 
@@ -52,39 +53,29 @@ def transition_counts(sym_df: DataFrame, compiled: CompiledPattern) -> DataFrame
 
     def run_partition(batches):
         counts = np.zeros((n, n), dtype=np.int64)
-        carry: dict[object, int] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["key"].to_numpy()
-            syms = pdf["symbol"].to_numpy()
-            start, m = 0, len(keys)
-            while start < m:
-                end = start
-                k = keys[start]
-                while end < m and keys[end] == k:
-                    end += 1
-                state = carry.get(k, 0)
-                for sym in syms[start:end]:
-                    if sym in resets:
-                        # ResetEvent clears FSM state without a transition
-                        # (Run.scala:309-323), mirroring _run_sdfa — the
-                        # estimated chain must match the run semantics
-                        state = 0
-                        continue
-                    nxt = int(delta[state, sym])
-                    counts[state, nxt] += 1
-                    state = nxt
-                carry[k] = state
-                start = end
+
+        def step(key, cols, seg, state):
+            for sym in cols[0][seg]:
+                if sym in resets:
+                    # ResetEvent clears FSM state without a transition
+                    # (Run.scala:309-323), as the CEP run loop does — the
+                    # estimated chain must match the run semantics
+                    state = 0
+                    continue
+                nxt = int(delta[state, sym])
+                counts[state, nxt] += 1
+                state = nxt
+            return None, state
+
+        for _ in key_segments(batches, ("symbol",), 0, step):
+            pass
         frm, to = np.nonzero(counts)
         yield pd.DataFrame(
             {"from_state": frm, "to_state": to, "cnt": counts[frm, to]}
         )
 
     return (
-        sym_df.repartition("key")
-        .sortWithinPartitions("key", "ts", "event_id")
+        key_sorted(sym_df)
         .mapInPandas(run_partition, schema="from_state int, to_state int, cnt long")
         .groupBy("from_state", "to_state")
         .agg(F.sum("cnt").alias("cnt"))

@@ -15,10 +15,14 @@ be custom").  Semantics follow the reference's deterministic runtime
   the violating event is re-processed from the start state.
 
 Spark shape: symbolization is a Column (operators stay JVM-side until
-the int symbol is computed), then ``groupBy(key).applyInPandas`` runs
-the int-array DFA loop per key.  At scale this is one hash shuffle on
-the partition key — the same distribution Flink's keyBy performs — and
-the per-group payload is a single int column, not the full event row.
+the int symbol is computed), then ``key_sorted`` hash-partitions on the
+key and sorts each partition, and one ``mapInPandas`` pass runs the
+int-array DFA loop over the key segments ``key_batches`` finds.  At
+scale this is one hash shuffle on the partition key — the same
+distribution Flink's keyBy performs — and the shuffle payload is
+(key, ts, id, symbol), not the full event row.  Every batch per-key
+kernel (multi-pattern, register, forecast, Markov-chain counts, HMM
+trace) runs on the same ``key_sorted`` shuffle and key walk.
 
 Scale note: the Python loop is per-key linear and allocation-free on
 numpy int arrays; state is 3 machine words per key.  Skewed keys are
@@ -36,6 +40,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_rtcef_spark.models.cst import key_starts
 from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
 
 DETECTION_SCHEMA_SUFFIX = (
@@ -63,72 +68,15 @@ def ts_millis(df: DataFrame, ts_col: str):
     return ts.cast("long")
 
 
-def _run_sdfa(
-    symbols: np.ndarray,
-    ts: np.ndarray,
-    event_ids: np.ndarray,
-    delta: np.ndarray,
-    take: np.ndarray,
-    finals: np.ndarray,
-    window: int,
-    window_type: str,
-    reset_symbols: frozenset = frozenset(),
-) -> list[tuple[int, int, int, int, int]]:
-    """The deterministic run loop.  Returns detections as
-    (event_id, ts, counter, min_counter, n_matched)."""
-    out: list[tuple[int, int, int, int, int]] = []
-    state = 0
-    min_counter = -1
-    min_ts = -1
-    n_matched = 0
-    counter = 0
-    n = len(symbols)
-    i = 0
-    while i < n:
-        sym = symbols[i]
-        counter += 1
-        if sym in reset_symbols:
-            # ResetEvent: clear FSM state and match, consume the event
-            # without a transition (Run.scala:309-323)
-            state = 0
-            min_counter, min_ts, n_matched = -1, -1, 0
-            i += 1
-            continue
-        # window check before the transition (Run.scala:221-238): span
-        # counted from the first matched event; violation kills the run.
-        if window > 0 and min_counter != -1:
-            span = (counter - min_counter) if window_type == "count" else (ts[i] - min_ts)
-            if span >= window:
-                state = 0
-                min_counter = -1
-                min_ts = -1
-                n_matched = 0
-                # fall through: event is processed by the fresh run
-        nxt = int(delta[state, sym])
-        if take[state, sym]:
-            if min_counter == -1:
-                min_counter = counter
-                min_ts = ts[i]
-            n_matched += 1
-        if finals[nxt]:
-            out.append((int(event_ids[i]), int(ts[i]), counter, min_counter, n_matched))
-            # full match: clear the match, keep the state
-            # (Run.emitForecasts: matchedEvents.clear(), counter runs on)
-            min_counter = -1
-            min_ts = -1
-            n_matched = 0
-        state = nxt
-        i += 1
-    return out
-
-
 def _run_sdfa_segment(
     symbols, ts, event_ids, delta, take, finals, window, window_type,
     reset_symbols, init=None,
 ):
-    """_run_sdfa over one key segment with resumable state: ``init`` is
-    (state, counter, min_counter, min_ts, n_matched) carried from the
-    previous Arrow batch of the same key; returns (detections, state)."""
+    """The deterministic run loop over one key segment, with resumable
+    state: ``init`` is (state, counter, min_counter, min_ts, n_matched)
+    carried from the previous Arrow batch of the same key.  Returns the
+    detections as (event_id, ts, counter, min_counter, n_matched) and
+    the carry."""
     out = []
     state, counter, min_counter, min_ts, n_matched = init or (0, 0, -1, -1, 0)
     n = len(symbols)
@@ -137,9 +85,14 @@ def _run_sdfa_segment(
         sym = symbols[i]
         counter += 1
         if sym in reset_symbols:
+            # ResetEvent: clear FSM state and match, consume the event
+            # without a transition (Run.scala:309-323)
             state, min_counter, min_ts, n_matched = 0, -1, -1, 0
             i += 1
             continue
+        # window check before the transition (Run.scala:221-238): span
+        # counted from the first matched event; a violation kills the
+        # run and the event is processed by the fresh one
         if window > 0 and min_counter != -1:
             span = (counter - min_counter) if window_type == "count" else (ts[i] - min_ts)
             if span >= window:
@@ -151,6 +104,8 @@ def _run_sdfa_segment(
             n_matched += 1
         if finals[nxt]:
             out.append((int(event_ids[i]), int(ts[i]), counter, min_counter, n_matched))
+            # full match: clear the match, keep the state
+            # (Run.emitForecasts: matchedEvents.clear(), counter runs on)
             min_counter, min_ts, n_matched = -1, -1, 0
         state = nxt
         i += 1
@@ -159,7 +114,7 @@ def _run_sdfa_segment(
 
 def _run_sdfa_batch_vectorized(
     keys, symbols, ts, event_ids, delta, take, finals_arr, reset_symbols,
-    carry_key=None, carry=None,
+    carry=None,
 ):
     """Windowless fast path: one whole Arrow batch (all key segments) in
     O(n·S·log n) numpy instead of an O(n) Python loop.
@@ -178,18 +133,18 @@ def _run_sdfa_batch_vectorized(
     Match accounting (min_counter / n_matched per detection) is
     reconstructed per epoch — the stretches delimited by key starts,
     resets, and detections — with flatnonzero/searchsorted, all
-    vectorized.  Returns (rows, (last_key, carry_tuple)) bit-identical
-    to running _run_sdfa_segment over each key segment.
+    vectorized.  ``carry`` is the first key's state from the previous
+    batch, or None when that key starts here.  Returns (rows,
+    carry_out), bit-identical to running _run_sdfa_segment over each key
+    segment; ``carry_out`` is the last key's state.
     """
     n = len(symbols)
     if n == 0:
-        return [], (carry_key, carry)
+        return [], carry
     state0, counter0, minc0, mints0, nm0 = carry if carry is not None else (0, 0, -1, -1, 0)
 
-    key_start = np.empty(n, dtype=bool)
-    key_start[0] = True
-    key_start[1:] = keys[1:] != keys[:-1]
-    continuing = carry is not None and carry_key is not None and keys[0] == carry_key
+    key_start = key_starts(keys)
+    continuing = carry is not None
     is_reset = (
         np.isin(symbols, list(reset_symbols)) if reset_symbols else np.zeros(n, dtype=bool)
     )
@@ -272,8 +227,7 @@ def _run_sdfa_batch_vectorized(
             out_nm += nm0
             out_minc, out_mints = minc0, mints0
     out_state = 0 if is_reset[-1] else int(states[-1])
-    carry_out = (out_state, int(counters[-1]), out_minc, out_mints, out_nm)
-    return rows, (keys[-1], carry_out)
+    return rows, (out_state, int(counters[-1]), out_minc, out_mints, out_nm)
 
 
 KEY_ORDER = ("key", "ts", "event_id")
@@ -292,10 +246,60 @@ def key_sorted_pandas(table: pa.Table) -> pd.DataFrame:
     ).to_pandas(integer_object_nulls=True)
 
 
+def key_sorted(sym_df: DataFrame) -> DataFrame:
+    """The one key shuffle of every per-key kernel: a frame with
+    ``KEY_ORDER``'s columns hash-partitioned on the key, each partition
+    sorted by (key, ts, event_id)."""
+    return sym_df.repartition("key").sortWithinPartitions(*KEY_ORDER)
+
+
+_NO_KEY = object()  # no open key yet (None is a key: the NULL key)
+
+
+def key_batches(batches, names):
+    """The one key walk of every batch per-key kernel, over the pandas
+    Arrow batches of one ``key_sorted`` partition.  Yields, per
+    non-empty batch: the key column, the ``names`` columns (numpy), the
+    key segments' bounds (``[start, ..., n]``) and whether the first
+    segment continues the previous batch's last key.  NULL keys compare
+    equal, so a NULL-key run is one run like any other, however Arrow
+    cuts the partition into batches."""
+    open_key = _NO_KEY
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        keys = pdf["key"].to_numpy()
+        first = keys[0]
+        continues = first == open_key or pd.isna(first) and pd.isna(open_key)
+        bounds = [*np.flatnonzero(key_starts(keys)).tolist(), n]
+        yield keys, [pdf[c].to_numpy() for c in names], bounds, continues
+        open_key = keys[-1]
+
+
+def key_segments(batches, names, fresh, step):
+    """``key_batches`` with one call per key segment:
+    ``step(key, cols, seg, init) -> (out, carry)`` runs the rows
+    ``seg`` (a slice of ``cols``), ``init`` being the previous batch's
+    carry when the key continues it and ``fresh`` when the key starts.
+    Yields, per non-empty batch, the list of (key, continues, out)."""
+    carry = None
+    for keys, cols, bounds, continues in key_batches(batches, names):
+        segs = []
+        for start, end in zip(bounds[:-1], bounds[1:]):
+            cont = continues and start == 0
+            out, carry = step(
+                keys[start], cols, slice(start, end), carry if cont else fresh
+            )
+            segs.append((keys[start], cont, out))
+        yield segs
+
+
 class BatchCEP:
-    """Batch Complex Event Recognition over a DataFrame; `key_sorted` is
-    the one key shuffle of every per-key kernel (detections, forecasts,
-    the scorer and `ModelFactory.prepare`).
+    """Batch Complex Event Recognition over a DataFrame; its
+    `key_sorted` (the module's `key_sorted` of `symbolized`) is the key
+    shuffle of detections, forecasts, the scorer and
+    `ModelFactory.prepare`.
 
     >>> cep = BatchCEP(compiled, key_col="user_id", ts_col="ts", id_col="event_id")
     >>> detections = cep.detections(events_df)
@@ -332,26 +336,18 @@ class BatchCEP:
         return df.select(*self.symbol_columns(df))
 
     def key_sorted(self, df: DataFrame) -> DataFrame:
-        """The one shuffle of every per-key kernel: ``symbolized(df)``
-        hash-partitioned on the key, each partition sorted by (key, ts,
-        event_id)."""
-        return (
-            self.symbolized(df)
-            .repartition("key")
-            .sortWithinPartitions(*KEY_ORDER)
-        )
+        """``key_sorted`` of ``symbolized(df)``."""
+        return key_sorted(self.symbolized(df))
 
-    def detections(self, df: DataFrame, fused: bool = True) -> DataFrame:
+    def detections(self, df: DataFrame) -> DataFrame:
         """(key, detection_event_id, detection_ts, counter, min_counter,
         n_matched) — one row per full match, per key.
 
-        Default physical strategy (``fused``): hash-repartition on the
-        key + sortWithinPartitions(key, ts, id) + ONE mapInPandas pass
-        that walks key segments inside each Arrow batch and carries the
-        open key's run state across batches.  Same shuffle as
-        groupBy().applyInPandas but one Python invocation per batch
-        instead of per key — the per-group overhead dominates when keys
-        are many and small (the common CEP regime)."""
+        One key shuffle (``key_sorted``) and ONE mapInPandas pass over
+        the key walk (``key_batches``): one Python invocation per Arrow
+        batch instead of per key, since the per-group overhead
+        dominates when keys are many and small (the common CEP
+        regime)."""
         delta, take, finals = transition_tables(self.compiled.sdfa)
         window = self.compiled.window
         window_type = self.compiled.window_type
@@ -366,64 +362,34 @@ class BatchCEP:
             "min_counter",
             "n_matched",
         ]
+        names = ("symbol", "ts", "event_id")
 
-        if not fused:
-            def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-                rows = _run_sdfa(
-                    pdf["symbol"].to_numpy(),
-                    pdf["ts"].to_numpy(),
-                    pdf["event_id"].to_numpy(),
-                    delta, take, finals, window, window_type, resets,
-                )
-                key = pdf["key"].iloc[0]
-                return pd.DataFrame([(key, *r) for r in rows], columns=columns)
-
-            return (
-                self.symbolized(df).groupBy("key").applyInPandas(run_group, schema=schema)
-            )
-
-        def run_partition(batches):
-            # state of the key spanning a batch boundary:
-            # (key, dfa_state, counter, min_counter, min_ts, n_matched)
-            open_key = None
+        def run_vectorized(batches):
             carry = None
-            # prefix-composition scan costs O(S) per event; past ~64
-            # states (large disambiguated automata) the O(1)-per-event
-            # loop wins — and windows break composition entirely
-            vectorized = window == 0 and delta.shape[0] <= 64
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keys = pdf["key"].to_numpy()
-                syms = pdf["symbol"].to_numpy()
-                tss = pdf["ts"].to_numpy()
-                ids = pdf["event_id"].to_numpy()
-                if vectorized:
-                    rows, (open_key, carry) = _run_sdfa_batch_vectorized(
-                        keys, syms, tss, ids, delta, take, finals, resets,
-                        carry_key=open_key, carry=carry,
-                    )
-                    yield pd.DataFrame(rows, columns=columns)
-                    continue
-                out = []
-                # walk contiguous key segments
-                start = 0
-                n = len(keys)
-                while start < n:
-                    end = start
-                    k = keys[start]
-                    while end < n and keys[end] == k:
-                        end += 1
-                    init = carry if (open_key is not None and k == open_key) else None
-                    rows, carry_state = _run_sdfa_segment(
-                        syms[start:end], tss[start:end], ids[start:end],
-                        delta, take, finals, window, window_type, resets,
-                        init,
-                    )
-                    out.extend((k, *r) for r in rows)
-                    open_key, carry = k, carry_state
-                    start = end
-                yield pd.DataFrame(out, columns=columns)
+            for keys, cols, _, continues in key_batches(batches, names):
+                rows, carry = _run_sdfa_batch_vectorized(
+                    keys, *cols, delta, take, finals, resets,
+                    carry=carry if continues else None,
+                )
+                yield pd.DataFrame(rows, columns=columns)
 
-        return self.key_sorted(df).mapInPandas(run_partition, schema=schema)
+        def step(key, cols, seg, init):
+            rows, carry = _run_sdfa_segment(
+                *(c[seg] for c in cols),
+                delta, take, finals, window, window_type, resets, init,
+            )
+            return [(key, *r) for r in rows], carry
+
+        def run_loop(batches):
+            for segs in key_segments(batches, names, None, step):
+                yield pd.DataFrame(
+                    [r for _, _, rows in segs for r in rows], columns=columns
+                )
+
+        # prefix-composition scan costs O(S) per event; past ~64 states
+        # (large disambiguated automata) the O(1)-per-event loop wins —
+        # and windows break composition entirely
+        vectorized = window == 0 and delta.shape[0] <= 64
+        return self.key_sorted(df).mapInPandas(
+            run_vectorized if vectorized else run_loop, schema=schema
+        )

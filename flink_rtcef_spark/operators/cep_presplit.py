@@ -239,8 +239,7 @@ def presplit_detections(
             # unsharded kernel — the shard is one key segment
             kconst = np.zeros(len(syms), dtype=np.int8)
             krows, _ = _run_sdfa_batch_vectorized(
-                kconst, syms, tss, ids, delta, take, finals, resets,
-                carry_key=0, carry=init,
+                kconst, syms, tss, ids, delta, take, finals, resets, carry=init,
             )
             rows = [r[1:] for r in krows]
         else:
@@ -273,7 +272,7 @@ def presplit_detections(
         seg_ids = np.cumsum(seg_of[sel]) - 1
         krows, _ = _run_sdfa_batch_vectorized(
             seg_ids, syms_a[sel], tss_a[sel], ids_a[sel],
-            delta, take, finals, resets, carry_key=None, carry=None,
+            delta, take, finals, resets,
         )
         per_seg: dict[int, list] = {}
         for kr in krows:

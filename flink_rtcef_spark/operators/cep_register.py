@@ -8,8 +8,8 @@ event), Configuration.scala (state + valuation), Valuation.scala
 (docs/lang.md:129-135).  A run terminates when it reaches a final
 state (full match) or when its window expires.
 
-Physical strategy mirrors operators/cep.py: hash-repartition on the
-key + sortWithinPartitions + ONE mapInPandas pass walking key segments,
+Physical strategy is operators/cep.py's: its ``key_sorted`` shuffle
+and ONE mapInPandas pass over its key walk (``key_segments``),
 carrying open-key configurations across Arrow batches.  The shuffle
 payload is (key, ts, id, bits, <register attrs>): every register-free
 predicate is folded JVM-side into the bit-encoded ``bits`` column, so
@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_rtcef_spark.operators.cep import ts_millis
+from flink_rtcef_spark.operators.cep import key_segments, key_sorted, ts_millis
 from flink_rtcef_spark.plans.nsra import CompiledRegisterPattern
 
 DETECTION_COLUMNS = [
@@ -207,40 +207,21 @@ class RegisterCEP:
             schema += ", matched_event_ids array<long>"
             columns = columns + ["matched_event_ids"]
 
-        def run_partition(batches):
-            open_key = None
-            carry = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keys = pdf["key"].to_numpy()
-                bits = pdf["bits"].to_numpy()
-                tss = pdf["ts"].to_numpy()
-                ids = pdf["event_id"].to_numpy()
-                attr_arrays = {a: pdf[a].to_numpy() for a in attrs}
-                out = []
-                start = 0
-                n = len(keys)
-                while start < n:
-                    end = start
-                    k = keys[start]
-                    while end < n and keys[end] == k:
-                        end += 1
-                    init = carry if (open_key is not None and k == open_key) else None
-                    seg_attrs = {a: arr[start:end] for a, arr in attr_arrays.items()}
-                    rows, carry = _run_nsra_segment(
-                        bits[start:end], tss[start:end], ids[start:end],
-                        seg_attrs, table, finals, start_states,
-                        window, window_type, init,
-                        enumerate_matches=enumerate_matches,
-                    )
-                    out.extend((k, *r) for r in rows)
-                    open_key = k
-                    start = end
-                yield pd.DataFrame(out, columns=columns)
+        names = ("bits", "ts", "event_id", *attrs)
 
-        return (
-            sym_df.repartition("key")
-            .sortWithinPartitions("key", "ts", "event_id")
-            .mapInPandas(run_partition, schema=schema)
-        )
+        def step(key, cols, seg, init):
+            bits, tss, ids, *attr_cols = (c[seg] for c in cols)
+            rows, carry = _run_nsra_segment(
+                bits, tss, ids, dict(zip(attrs, attr_cols)), table, finals,
+                start_states, window, window_type, init,
+                enumerate_matches=enumerate_matches,
+            )
+            return [(key, *r) for r in rows], carry
+
+        def run_partition(batches):
+            for segs in key_segments(batches, names, None, step):
+                yield pd.DataFrame(
+                    [r for _, _, rows in segs for r in rows], columns=columns
+                )
+
+        return key_sorted(sym_df).mapInPandas(run_partition, schema=schema)

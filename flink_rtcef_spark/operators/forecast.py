@@ -21,9 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_rtcef_spark.models.cst import key_starts
 from flink_rtcef_spark.models.spst import SPST
-from flink_rtcef_spark.operators.cep import BatchCEP
+from flink_rtcef_spark.operators.cep import BatchCEP, key_segments
 
 
 def swap_mapping(old: SPST, new: SPST) -> np.ndarray:
@@ -177,12 +176,13 @@ def _score_batches(batches, main_tables) -> np.ndarray:
     ``key_sorted`` frame, or the driver's one collected frame.  Each key
     is scored against its own detection counters when its run closes."""
 
-    def step(key, syms, tss, ids, init):
-        return _score_inputs(syms, tss, init, main_tables)
+    def step(key, cols, seg, init):
+        syms, tss = cols
+        return _score_inputs(syms[seg], tss[seg], init, main_tables)
 
     counts = np.zeros(len(CONFUSION_COLUMNS), dtype=np.int64)
     key, pieces = None, []
-    for segs in _key_segments(batches, (0, 0, True), step):
+    for segs in key_segments(batches, ("symbol", "ts"), (0, 0, True), step):
         for k, continues, piece in segs:
             if pieces and not continues:
                 counts += _score_key(key, pieces)
@@ -192,44 +192,6 @@ def _score_batches(batches, main_tables) -> np.ndarray:
     if pieces:
         counts += _score_key(key, pieces)
     return counts
-
-
-_NO_KEY = object()  # no open key yet (None is a key: the NULL key)
-
-
-def _key_segments(batches, fresh, step):
-    """The fused walk shared by ForecastCEP.forecasts and .confusion
-    (strategy of BatchCEP.detections): one Python call per Arrow batch
-    of a key-sorted partition, key segments found inside the batch,
-    the open key's carry handed on across batches.  NULL keys compare
-    equal, so a NULL-key run is one run like any other.
-
-    ``step(key, syms, tss, ids, init) -> (out, carry)`` runs one
-    segment, ``init`` being ``fresh`` for a new key.  Yields, per
-    non-empty batch, the list of (key, continues_open_key, out)."""
-    open_key, carry = _NO_KEY, None
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        keys = pdf["key"].to_numpy()
-        syms = pdf["symbol"].to_numpy()
-        tss = pdf["ts"].to_numpy()
-        ids = pdf["event_id"].to_numpy()
-        bounds = [*np.flatnonzero(key_starts(keys)), n]
-        segs = []
-        for start, end in zip(bounds[:-1], bounds[1:]):
-            k = keys[start]
-            continues = start == 0 and (
-                k == open_key or pd.isna(k) and pd.isna(open_key)
-            )
-            out, carry = step(
-                k, syms[start:end], tss[start:end], ids[start:end],
-                carry if continues else fresh,
-            )
-            segs.append((k, continues, out))
-            open_key = k
-        yield segs
 
 
 class ForecastCEP(BatchCEP):
@@ -293,13 +255,13 @@ class ForecastCEP(BatchCEP):
             swap_tables = (migrate, sync_time, delta2, finals2, started2, ftable2)
         fresh = (0, 0, new_model is None)
 
-        def step(key, syms, tss, ids, init):
+        def step(key, cols, seg, init):
             return _run_forecast_segment(
-                key, syms, tss, ids, init, main_tables, swap_tables
+                key, *(c[seg] for c in cols), init, main_tables, swap_tables
             )
 
         def run_partition(batches):
-            for segs in _key_segments(batches, fresh, step):
+            for segs in key_segments(batches, ("symbol", "ts", "event_id"), fresh, step):
                 yield pd.concat([frame for _, _, frame in segs])
 
         return self.key_sorted(df).mapInPandas(run_partition, schema=schema)

@@ -14,14 +14,18 @@ engine has the same constraint per job — keyBy happens once).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
-from flink_rtcef_spark.operators.cep import _run_sdfa_segment, ts_millis
+from flink_rtcef_spark.operators.cep import (
+    _run_sdfa_segment,
+    key_segments,
+    key_sorted,
+    ts_millis,
+)
 
 
 class MultiPatternCEP:
@@ -81,43 +85,26 @@ class MultiPatternCEP:
             "n_matched",
         ]
 
-        def run_partition(batches):
-            open_key = None
-            carries: list = [None] * n_pat
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keys = pdf["key"].to_numpy()
-                tss = pdf["ts"].to_numpy()
-                ids = pdf["event_id"].to_numpy()
-                sym_arrays = [pdf[f"symbol{p}"].to_numpy() for p in range(n_pat)]
-                out = []
-                start, n = 0, len(keys)
-                while start < n:
-                    end = start
-                    k = keys[start]
-                    while end < n and keys[end] == k:
-                        end += 1
-                    fresh = not (open_key is not None and k == open_key)
-                    for p in range(n_pat):
-                        delta, take, finals = tables[p]
-                        window, wtype = windows[p]
-                        init = None if fresh else carries[p]
-                        rows, carry = _run_sdfa_segment(
-                            sym_arrays[p][start:end],
-                            tss[start:end],
-                            ids[start:end],
-                            delta, take, finals, window, wtype, resets[p],
-                            init,
-                        )
-                        out.extend((p, k, *r) for r in rows)
-                        carries[p] = carry
-                    open_key = k
-                    start = end
-                yield pd.DataFrame(out, columns=columns)
+        names = ("ts", "event_id", *(f"symbol{p}" for p in range(n_pat)))
 
-        return (
-            sym_df.repartition("key")
-            .sortWithinPartitions("key", "ts", "event_id")
-            .mapInPandas(run_partition, schema=schema)
-        )
+        def step(key, cols, seg, init):
+            tss, ids = cols[0][seg], cols[1][seg]
+            out, carries = [], []
+            for p, (syms, carry) in enumerate(zip(cols[2:], init)):
+                delta, take, finals = tables[p]
+                window, wtype = windows[p]
+                rows, carry = _run_sdfa_segment(
+                    syms[seg], tss, ids, delta, take, finals, window, wtype,
+                    resets[p], carry,
+                )
+                out.extend((p, key, *r) for r in rows)
+                carries.append(carry)
+            return out, carries
+
+        def run_partition(batches):
+            for segs in key_segments(batches, names, [None] * n_pat, step):
+                yield pd.DataFrame(
+                    [r for _, _, rows in segs for r in rows], columns=columns
+                )
+
+        return key_sorted(sym_df).mapInPandas(run_partition, schema=schema)

@@ -53,7 +53,7 @@ def cep_seq_contiguous_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The same pattern through the REAL engine path: SRE text -> compiler
 # (parse, minterms, SNFA, SDFA) -> JVM-side symbolization Column ->
-# applyInPandas SDFA run.  Same oracle as above — DuckDB cross-validates
+# mapInPandas SDFA run.  Same oracle as above — DuckDB cross-validates
 # the custom operator end-to-end.
 _SEQ_PATTERN = (
     ";(IsEventTypePredicate(view),IsEventTypePredicate(click),"

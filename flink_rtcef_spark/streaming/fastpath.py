@@ -366,7 +366,7 @@ def _make_partition_runner(spec):
     """The one key walk of every route: a fused pass over a partition
     of (state ∪ event) rows sorted by (key, ts, event_id).  Key
     segments come from one numpy comparison per Arrow batch (as in
-    operators/forecast._key_segments), and a key's carry is handed on
+    the batch kernels' operators/cep.key_batches), and a key's carry is handed on
     across batches.  A key's leading state row (ts = _STATE_TS sorts it
     first) is its carry-in; the kernel ``load``s it only when the key
     has events, and a key with none writes its row back verbatim, byte

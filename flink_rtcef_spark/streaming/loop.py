@@ -255,15 +255,29 @@ class RTCEFLoop:
     def replay(self, events: DataFrame, batch_seconds: int | None = None) -> list[ReportPoint]:
         """Replay a bounded event DataFrame in event-time order as
         microbatches of ``batch_seconds`` (default: reporting_distance)
-        — the docker-free analogue of the reference's data_feeder.py."""
+        — the docker-free analogue of the reference's data_feeder.py.
+
+        One aggregate finds every non-empty window: the first and last
+        ts of each bucket aligned to multiples of ``batch_seconds``.  A window [t, t + step)
+        holds the tail of the bucket t falls in and the head of the
+        next, so it is non-empty iff the first bucket's last ts is at
+        least t or the next bucket's first ts is below t + step."""
         step = batch_seconds or self.reporting_distance
         ts = F.col(self.ts_col).cast("long")
-        bounds = events.agg(F.min(ts).alias("lo"), F.max(ts).alias("hi")).collect()[0]
-        lo, hi = int(bounds["lo"]), int(bounds["hi"])
-        t = lo
-        while t <= hi:
-            batch = events.filter((ts >= t) & (ts < t + step))
-            if batch.limit(1).count() > 0:
-                self.process_batch(batch, t + step)
-            t += step
+        spans = {
+            r["bucket"]: (r["lo"], r["hi"])
+            for r in events.groupBy((ts - F.pmod(ts, F.lit(step))).alias("bucket"))
+            .agg(F.min(ts).alias("lo"), F.max(ts).alias("hi"))
+            .collect()
+            if r["bucket"] is not None
+        }
+        if not spans:
+            return self.metrics
+        lo = min(first for first, _ in spans.values())
+        hi = max(last for _, last in spans.values())
+        for t in range(lo, hi + 1, step):
+            here = spans.get(t - t % step)
+            after = spans.get(t - t % step + step)
+            if here and here[1] >= t or after and after[0] < t + step:
+                self.process_batch(events.filter((ts >= t) & (ts < t + step)), t + step)
         return self.metrics

@@ -20,6 +20,17 @@ def spark():
 
 
 @pytest.fixture
+def small_arrow_batches(spark):
+    """7-row Arrow batches, so keys straddle batch boundaries and the
+    kernel's cross-batch carry is exercised."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield
+    spark.conf.set(key, prev)
+
+
+@pytest.fixture
 def distributed_route(monkeypatch):
     """Send every non-empty frame of the adaptation loop and the model
     factory down their distributed Spark plans: a driver bound of 0

@@ -1,4 +1,4 @@
-"""CEP operator tests: the Spark applyInPandas path and the run-loop
+"""CEP operator tests: the Spark mapInPandas path and the run-loop
 semantics (window, count policy, match bookkeeping)."""
 
 from __future__ import annotations
@@ -7,7 +7,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from flink_rtcef_spark.operators.cep import BatchCEP, _run_sdfa
+from flink_rtcef_spark.operators.cep import BatchCEP, _run_sdfa_segment
 from flink_rtcef_spark.plans.compiler import (
     NONOVERLAP,
     compile_pattern,
@@ -37,9 +37,10 @@ def _run(compiled, types: list[str], ts=None):
     n = len(types)
     ts = np.array(ts if ts is not None else range(1, n + 1))
     ids = np.arange(n)
-    return _run_sdfa(
-        syms, ts, ids, delta, take, finals, compiled.window, compiled.window_type
-    )
+    return _run_sdfa_segment(
+        syms, ts, ids, delta, take, finals, compiled.window, compiled.window_type,
+        frozenset(),
+    )[0]
 
 
 def test_detection_positions_and_match_bounds():
@@ -201,11 +202,12 @@ def test_vectorized_batch_equals_loop():
         got = []
         open_key, carry = None, None
         for lo, hi in zip(cuts, cuts[1:]):
-            rows, (open_key, carry) = _run_sdfa_batch_vectorized(
+            rows, carry = _run_sdfa_batch_vectorized(
                 keys[lo:hi], syms[lo:hi], tss[lo:hi], ids[lo:hi],
                 delta, take, finals, resets,
-                carry_key=open_key, carry=carry,
+                carry=carry if keys[lo] == open_key else None,
             )
+            open_key = keys[hi - 1]
             got.extend(rows)
         assert [tuple(int(x) for x in r) for r in got] == [
             tuple(int(x) for x in r) for r in expected

@@ -29,7 +29,6 @@ from flink_rtcef_spark.streaming.collector import BucketCollector
 from flink_rtcef_spark.streaming.factory import ModelFactory
 from flink_rtcef_spark.streaming.loop import RTCEFLoop
 from flink_rtcef_spark.streaming.observer import Observer
-from tests.test_forecast import small_arrow_batches  # noqa: F401  (fixture)
 
 PAT = ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){order:1}{partitionBy:k}"
 DECLS = "~(IsEventTypePredicate(A),IsEventTypePredicate(B))"
@@ -256,6 +255,38 @@ def test_plain_driver_window_is_one_spark_job(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert point.route == "driver" and point.event == ""
         assert len(tracker.getJobIdsForGroup(group)) == 1
+
+
+def test_replay_finds_nonempty_windows_in_one_aggregate(spark, tmp_path):
+    """``replay`` runs at most two Spark jobs outside ``process_batch``
+    (one aggregate) however many windows it walks, and skips exactly
+    the empty windows: here [121, 241), whose neighbouring aligned
+    buckets hold ts 120 and 241, one step either side of it."""
+    events = _events(spark).filter("timestamp <= 120 OR timestamp > 240")
+    loop = _loop(spark, str(tmp_path / "lake"), Observer(low_score=-2.0))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"replay-{id(loop)}"
+    process_batch = loop.process_batch
+    windows = []
+
+    def in_own_group(batch, batch_ts):
+        windows.append(batch_ts)
+        sc.setJobGroup(f"{group}-window-{batch_ts}", "one report window")
+        try:
+            return process_batch(batch, batch_ts)
+        finally:
+            sc.setJobGroup(group, "replay")
+
+    loop.process_batch = in_own_group
+    sc.setJobGroup(group, "replay")
+    try:
+        points = loop.replay(events, batch_seconds=120)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert windows == [121, 361, 481]
+    assert [p.timestamp for p in points] == windows
+    assert 1 <= len(tracker.getJobIdsForGroup(group)) <= 2
 
 
 def test_wide_rows_shrink_the_driver_bound(spark, tmp_path, monkeypatch):

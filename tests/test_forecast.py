@@ -239,17 +239,6 @@ def test_reference_report_trajectory_semantics(spark):
 CONFUSION = ["tp", "tn", "fp", "fn"]
 
 
-@pytest.fixture
-def small_arrow_batches(spark):
-    """7-row Arrow batches, so keys straddle batch boundaries and the
-    kernel's cross-batch carry is exercised."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "7")
-    yield
-    spark.conf.set(key, prev)
-
-
 def _assert_confusion_is_reference(fcep, df) -> pd.DataFrame:
     ref = evaluate_forecasts(fcep.forecasts(df)).toPandas()
     assert fcep.confusion(df) == {c: int(ref[c].sum()) for c in CONFUSION}

@@ -399,3 +399,32 @@ def test_prepared_score_pass_has_no_exchange(spark, distributed_route):
     assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1
     assert "Exchange" not in plan
     assert "Join" not in plan
+
+
+def _per_key_frame(spark, operator: str):
+    from tests.test_forecast import _ab_forecaster, _ab_stream
+    from tests.test_key_walk import KERNELS, _stream
+
+    if operator == "ForecastCEP.forecasts":
+        df = _ab_stream(spark)
+        return _ab_forecaster(df).forecasts(df)
+    return KERNELS[operator][0](_stream(spark))
+
+
+@pytest.mark.parametrize(
+    "operator",
+    ["cep", "ForecastCEP.forecasts", "multi", "register_detections", "run_trace",
+     "transition_counts"],
+)
+def test_per_key_operator_is_one_key_shuffle(spark, operator):
+    """Every batch per-key operator runs on ``key_sorted``: exactly one
+    hash Exchange on the key, then a Sort, then one MapInPandas over the
+    key walk.  ``transition_counts``' final (tiny) groupBy is a second
+    Exchange, not on the key, and is not counted."""
+    plan = _formatted(_per_key_frame(spark, operator))
+    [exchange] = re.findall(
+        r"^\((\d+)\) Exchange\n[^\n]*\nArguments: hashpartitioning\(key", plan, re.M
+    )
+    [sort] = re.findall(r"^\((\d+)\) Sort\n", plan, re.M)
+    [mapper] = re.findall(r"^\((\d+)\) MapInPandas", plan, re.M)
+    assert int(exchange) < int(sort) < int(mapper)

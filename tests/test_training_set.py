@@ -27,7 +27,6 @@ from flink_rtcef_spark.streaming.factory import MIN_EVENTS, ModelFactory, _mcc
 from flink_rtcef_spark.streaming.loop import RTCEFLoop
 from flink_rtcef_spark.streaming.observer import Instruction, Observer
 from tests.test_finance_trajectory import DECLS, PATTERN, synth_finance
-from tests.test_forecast import small_arrow_batches  # noqa: F401  (fixture)
 
 POINTS = [(0.001, 0.001), (1e-4, 0.001), (0.01, 0.0), (0.05, 0.004)]
 FINANCE_COLS = dict(key_col="pan", ts_col="timestamp", id_col="id")
