@@ -121,28 +121,19 @@ def learn_hmm(
 def run_trace(detections_input: DataFrame, compiled, key_col: str, ts_col: str, id_col: str) -> DataFrame:
     """(key, ts, state, symbol) trace of the deterministic run over a
     batch — the training input for learn_hmm.  Symbolization is the
-    JVM Column; the state sequence replays the SDFA per key on the CEP
-    operator's key shuffle and key walk."""
+    JVM Column; the states are the SDFA kernel's own
+    (operators/cep.sdfa_states) on the CEP operator's key shuffle, so a
+    RESET event shows state 0, as the run holds it."""
     import pandas as pd
 
-    from flink_rtcef_spark.operators.cep import BatchCEP, key_batches
-    from flink_rtcef_spark.plans.compiler import transition_tables
+    from flink_rtcef_spark.operators.cep import BatchCEP, sdfa_states
 
     cep = BatchCEP(compiled, key_col=key_col, ts_col=ts_col, id_col=id_col)
-    delta, _, _ = transition_tables(compiled.sdfa)
 
     def trace_partition(batches):
-        st = 0
-        for keys, (syms, tss), bounds, continues in key_batches(batches, ("symbol", "ts")):
-            states = np.empty(len(keys), dtype=np.int32)
-            for start, end in zip(bounds[:-1], bounds[1:]):
-                if start > 0 or not continues:
-                    st = 0
-                for i in range(start, end):
-                    st = int(delta[st, syms[i]])
-                    states[i] = st
+        for keys, cols, states, _ in sdfa_states(batches, compiled):
             yield pd.DataFrame(
-                {"key": keys, "ts": tss, "state": states, "symbol": syms}
+                {"key": keys, "ts": cols["ts"], "state": states, "symbol": cols["symbol"]}
             )
 
     key_type = dict(detections_input.dtypes)[key_col]

@@ -7,11 +7,11 @@ BeepBeep.runMatrixEstimation); ``forecasting --modelType fmm`` then
 derives waiting-time distributions from that matrix
 (model/forecaster/WtForecasterBuilder semantics).
 
-Spark shape: the state walk runs on the CEP operator's key shuffle
-and key walk (operators/cep.py ``key_sorted`` + ``key_segments``, one
-mapInPandas pass), emitting per-partition dense
-transition counts; only the n_states x n_states count table crosses
-to the driver (a control-plane aggregate, not data).
+Spark shape: the SDFA kernel's state walk (operators/cep.py
+``sdfa_states``) runs on the CEP operator's key shuffle, one
+mapInPandas pass emitting per-partition dense transition counts; only
+the n_states x n_states count table crosses to the driver (a
+control-plane aggregate, not data).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_rtcef_spark.models.wt import Forecast, WtDistribution
-from flink_rtcef_spark.operators.cep import key_segments, key_sorted
+from flink_rtcef_spark.operators.cep import key_sorted, sdfa_states
 from flink_rtcef_spark.plans.compiler import CompiledPattern
 
 
@@ -47,28 +47,14 @@ def transition_counts(sym_df: DataFrame, compiled: CompiledPattern) -> DataFrame
     the symbolized stream, per-key ordered.  One shuffle; counts are
     combined map-side into one dense table per partition before the
     final (tiny) groupBy."""
-    delta = compiled.sdfa.delta
     n = compiled.sdfa.n_states
-    resets = compiled.reset_symbols()
 
     def run_partition(batches):
         counts = np.zeros((n, n), dtype=np.int64)
-
-        def step(key, cols, seg, state):
-            for sym in cols[0][seg]:
-                if sym in resets:
-                    # ResetEvent clears FSM state without a transition
-                    # (Run.scala:309-323), as the CEP run loop does — the
-                    # estimated chain must match the run semantics
-                    state = 0
-                    continue
-                nxt = int(delta[state, sym])
-                counts[state, nxt] += 1
-                state = nxt
-            return None, state
-
-        for _ in key_segments(batches, ("symbol",), 0, step):
-            pass
+        for _, _, states, prev in sdfa_states(batches, compiled):
+            # a RESET event (prev -1) clears the run without a transition
+            moved = prev >= 0
+            np.add.at(counts, (prev[moved], states[moved]), 1)
         frm, to = np.nonzero(counts)
         yield pd.DataFrame(
             {"from_state": frm, "to_state": to, "cnt": counts[frm, to]}

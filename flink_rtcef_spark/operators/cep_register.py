@@ -8,12 +8,13 @@ event), Configuration.scala (state + valuation), Valuation.scala
 (docs/lang.md:129-135).  A run terminates when it reaches a final
 state (full match) or when its window expires.
 
-Physical strategy is operators/cep.py's: its ``key_sorted`` shuffle
-and ONE mapInPandas pass over its key walk (``key_segments``),
-carrying open-key configurations across Arrow batches.  The shuffle
-payload is (key, ts, id, bits, <register attrs>): every register-free
-predicate is folded JVM-side into the bit-encoded ``bits`` column, so
-Python evaluates only the register comparisons.
+Physical strategy is operators/cep.py's ``run_spec`` of the register
+kernel spec (``_RegisterSpec``, which the streaming fast path runs
+too): its ``key_sorted`` shuffle and ONE mapInPandas pass over its key
+walk, carrying open-key configurations across Arrow batches.  The
+shuffle payload is (key, ts, id, bits, <register attrs>): every
+register-free predicate is folded JVM-side into the bit-encoded
+``bits`` column, so Python evaluates only the register comparisons.
 
 Scale: live configurations per key are window-bounded (count window w
 -> at most w concurrent runs), so per-key state is O(w·|registers|)
@@ -23,22 +24,19 @@ exchange as the deterministic operator.
 
 from __future__ import annotations
 
-import pandas as pd
+import pickle
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_rtcef_spark.operators.cep import key_segments, key_sorted, ts_millis
+from flink_rtcef_spark.operators.cep import (
+    _DET_FIELDS,
+    DET_SCHEMA,
+    KernelOperator,
+    _KernelSpec,
+    _out_schema,
+)
 from flink_rtcef_spark.plans.nsra import CompiledRegisterPattern
-
-DETECTION_COLUMNS = [
-    "key",
-    "detection_event_id",
-    "detection_ts",
-    "counter",
-    "min_counter",
-    "n_matched",
-]
 
 
 def _val_key(valuation: dict) -> tuple:
@@ -142,8 +140,64 @@ def _run_nsra_segment(
     return out, (configs, counter)
 
 
-class RegisterCEP:
-    """Batch recognition for register (SREMO) patterns.
+class _RegisterSpec(_KernelSpec):
+    """The register kernel, ``_run_nsra_segment``: its (configs,
+    counter) carry is stored as ``counter`` and the pickled config set,
+    and unpickled only for a key with events in the batch.  With
+    ``enumerate_matches`` each row is one full match with its
+    ``matched_event_ids`` — a batch-only kernel, with no state row."""
+
+    out = _out_schema(_DET_FIELDS, [*_DET_FIELDS[2:], ("blob", "binary")])
+
+    def __init__(self, compiled, enumerate_matches: bool = False):
+        self.compiled = compiled
+        self.patterns = (compiled,)
+        self.key = compiled.partition_by
+        self.attrs = list(compiled.register_attrs)
+        self.event_cols = ["key", "ts", "event_id", "bits", *self.attrs]
+        self.table = compiled.table
+        self.finals = frozenset(compiled.nsra.finals)
+        self.start_states = compiled.start_states
+        self.window, self.window_type = compiled.window, compiled.window_type
+        self.enumerate_matches = enumerate_matches
+        if enumerate_matches:
+            matched = ("matched_event_ids", "array<long>")
+            self.out = _out_schema(
+                [*_DET_FIELDS, matched], [], f"{DET_SCHEMA}, {' '.join(matched)}"
+            )
+
+    def columns(self) -> list:
+        """Static predicates fold into the JVM ``bits`` column; only
+        register comparisons reach the Python kernel."""
+        return [
+            self.compiled.bits_column().alias("bits"),
+            *[F.col(a) for a in self.attrs],
+        ]
+
+    @staticmethod
+    def load(counter, _min_counter, _n_matched, blob):
+        return pickle.loads(blob), int(counter)
+
+    def step(self, cols, seg, carry):
+        return _run_nsra_segment(
+            cols["bits"][seg],
+            cols["ts"][seg].astype("int64"),
+            cols["event_id"][seg].astype("int64"),
+            {a: cols[a][seg] for a in self.attrs},
+            self.table, self.finals, self.start_states, self.window,
+            self.window_type, carry, self.enumerate_matches,
+        )
+
+    @staticmethod
+    def dump(carry):
+        configs, counter = carry
+        return int(counter), None, None, pickle.dumps(configs)
+
+
+class RegisterCEP(KernelOperator):
+    """Batch recognition for register (SREMO) patterns: ``detections``
+    gives one row per event completing >=1 full match (earliest start
+    reported), in BatchCEP's columns.
 
     >>> cp = compile_register_pattern(';(IsEventTypePredicate(view)["x"],'
     ...     '^(IsEventTypePredicate(click),GTAttr(value,"x")))'
@@ -158,28 +212,8 @@ class RegisterCEP:
         ts_col: str = "timestamp",
         id_col: str = "id",
     ):
+        super().__init__(_RegisterSpec(compiled), key_col, ts_col, id_col)
         self.compiled = compiled
-        self.key_col = key_col or compiled.partition_by
-        if not self.key_col:
-            raise ValueError("pattern needs {partitionBy:...} or an explicit key_col")
-        self.ts_col = ts_col
-        self.id_col = id_col
-
-    def symbolized(self, df: DataFrame) -> DataFrame:
-        ts_ms = ts_millis(df, self.ts_col)
-        cols = [
-            F.col(self.key_col).alias("key"),
-            ts_ms.alias("ts"),
-            F.col(self.id_col).alias("event_id"),
-            self.compiled.bits_column().alias("bits"),
-        ]
-        cols += [F.col(a) for a in self.compiled.register_attrs]
-        return df.select(*cols)
-
-    def detections(self, df: DataFrame) -> DataFrame:
-        """One row per event completing >=1 full match (earliest start
-        reported) — mirrors the deterministic path's output shape."""
-        return self._run(df, enumerate_matches=False)
 
     def matches(self, df: DataFrame) -> DataFrame:
         """Match ENUMERATION (F2, the nondeterministic run path): one
@@ -187,41 +221,4 @@ class RegisterCEP:
         id list (Match.scala events list).  Combinatorial under
         skip-till selection — same inherent cost as the reference's
         non-det runs; the window bounds it."""
-        return self._run(df, enumerate_matches=True)
-
-    def _run(self, df: DataFrame, enumerate_matches: bool) -> DataFrame:
-        sym_df = self.symbolized(df)
-        cp = self.compiled
-        table = cp.table
-        finals = frozenset(cp.nsra.finals)
-        start_states = cp.start_states
-        window, window_type = cp.window, cp.window_type
-        attrs = cp.register_attrs
-        key_type = dict(df.dtypes)[self.key_col]
-        schema = (
-            f"key {key_type}, detection_event_id long, detection_ts long, "
-            "counter long, min_counter long, n_matched int"
-        )
-        columns = list(DETECTION_COLUMNS)
-        if enumerate_matches:
-            schema += ", matched_event_ids array<long>"
-            columns = columns + ["matched_event_ids"]
-
-        names = ("bits", "ts", "event_id", *attrs)
-
-        def step(key, cols, seg, init):
-            bits, tss, ids, *attr_cols = (c[seg] for c in cols)
-            rows, carry = _run_nsra_segment(
-                bits, tss, ids, dict(zip(attrs, attr_cols)), table, finals,
-                start_states, window, window_type, init,
-                enumerate_matches=enumerate_matches,
-            )
-            return [(key, *r) for r in rows], carry
-
-        def run_partition(batches):
-            for segs in key_segments(batches, names, None, step):
-                yield pd.DataFrame(
-                    [r for _, _, rows in segs for r in rows], columns=columns
-                )
-
-        return key_sorted(sym_df).mapInPandas(run_partition, schema=schema)
+        return self._run(_RegisterSpec(self.compiled, enumerate_matches=True), df)

@@ -9,9 +9,11 @@ detections (SURVEY.md §2.F F6) — ``evaluate_forecasts`` as a join,
 ``ForecastCEP.confusion`` as per-key binary searches inside the same
 pass that produced the forecasts.
 
-Scale shape: identical to BatchCEP — one shuffle of (key, ts, id,
-symbol); the SPST tables and the per-state forecast table broadcast
-inside the serialized closure (a few numpy arrays)."""
+Scale shape: identical to BatchCEP — ``run_spec`` of the forecast
+kernel spec (``_ForecastSpec``, which the streaming fast path runs
+too), one shuffle of (key, ts, id, symbol); the SPST tables and the
+per-state forecast table broadcast inside the serialized closure (a
+few numpy arrays)."""
 
 from __future__ import annotations
 
@@ -22,7 +24,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_rtcef_spark.models.spst import SPST
-from flink_rtcef_spark.operators.cep import BatchCEP, key_segments
+from flink_rtcef_spark.operators.cep import BatchCEP, _KernelSpec, _out_schema, key_segments
+
+FORECAST_OUTPUT_SCHEMA = (
+    "key string, ts long, event_id long, counter long, is_detection boolean, "
+    "prob double, start_ctr long, end_ctr long, positive boolean"
+)
 
 
 def swap_mapping(old: SPST, new: SPST) -> np.ndarray:
@@ -43,9 +50,9 @@ def swap_mapping(old: SPST, new: SPST) -> np.ndarray:
 
 
 def _forecast_run(syms, tss, init, main, swap=None):
-    """THE forecast run kernel — shared verbatim by batch
-    (ForecastCEP.forecasts / .confusion) and streaming
-    (streaming/fastpath._ForecastSpec), so the paths cannot diverge.
+    """THE forecast run kernel — of the forecast spec
+    (``_ForecastSpec``, batch ForecastCEP.forecasts and streaming) and
+    of the scorer (ForecastCEP.confusion).
 
     One key segment; ``init`` = (state, counter0, swapped) carried
     across Arrow batches / microbatches.  ``main`` = (delta, finals,
@@ -125,11 +132,80 @@ def _forecast_rows(tss, ids, runs) -> dict:
     }
 
 
-def _run_forecast_segment(key, syms, tss, ids, init, main, swap=None):
-    """One key segment through ``_forecast_run``, as output rows: the
-    key's detections and forecasts as one frame, plus the carry."""
-    runs, carry = _forecast_run(syms, tss, init, main, swap)
-    return pd.DataFrame({"key": key, **_forecast_rows(tss, ids, runs)}), carry
+def _forecast_tables(spst: SPST, method: str, confidence_threshold: float, spread: int) -> tuple:
+    """``_forecast_run``'s (delta, finals, started, ftable, resets)."""
+    return (
+        spst.delta,
+        spst.finals,
+        spst.started,
+        spst.forecast_table(method, confidence_threshold, spread),
+        spst.compiled.reset_symbols(),
+    )
+
+
+class _ForecastSpec(_KernelSpec):
+    """Recognition + forecasting: per-key virtual state + counter,
+    detections and forecasts from ``_forecast_run`` — the reference's
+    online inference path (WayebEngine.processElement:225-316).  Its
+    rows are columnar (``_forecast_rows``).  Forecast state is run
+    state, so it expires with the run (ERFEngine.scala:213-216).
+
+    With ``new_model`` a key's run migrates into it at its first event
+    with ts >= ``sync_time`` (G4, batch only: the state row carries no
+    swap flag, and ``load`` resumes a run as swapped)."""
+
+    # counter ends the row fields so the state row shares its column
+    out = _out_schema(
+        [
+            ("ts", "long"), ("event_id", "long"), ("is_detection", "boolean"),
+            ("prob", "double"), ("start_ctr", "long"), ("end_ctr", "long"),
+            ("positive", "boolean"), ("counter", "long"),
+        ],
+        [("counter", "long"), ("state", "int")],
+        FORECAST_OUTPUT_SCHEMA,
+    )
+    event_cols = ["key", "ts", "event_id", "symbol"]
+
+    def __init__(
+        self, spst, method="classify_nextk", confidence_threshold=0.5, spread=5,
+        new_model: SPST | None = None, sync_time: int | None = None,
+    ):
+        self.compiled = spst.compiled
+        self.patterns = (spst.compiled,)
+        self.key = spst.compiled.partition_by
+        self.main = _forecast_tables(spst, method, confidence_threshold, spread)
+        self.swap = None
+        if new_model is not None:
+            delta2, finals2, started2, ftable2, _ = _forecast_tables(
+                new_model, method, confidence_threshold, spread
+            )
+            self.swap = (
+                swap_mapping(spst, new_model), sync_time, delta2, finals2,
+                started2, ftable2,
+            )
+
+    def columns(self) -> list:
+        return [self.compiled.symbol_column().alias("symbol")]
+
+    @staticmethod
+    def load(counter, state):
+        return int(state), int(counter), True
+
+    def step(self, cols, seg, carry):
+        tss = cols["ts"][seg]
+        runs, (st, counter, swapped) = _forecast_run(
+            cols["symbol"][seg], tss, carry or (0, 0, self.swap is None),
+            self.main, self.swap,
+        )
+        return (
+            _forecast_rows(tss, cols["event_id"][seg], runs),
+            (int(st), int(counter), swapped),
+        )
+
+    @staticmethod
+    def dump(carry):
+        st, counter, _ = carry
+        return counter, st
 
 
 CONFUSION_COLUMNS = ["tp", "tn", "fp", "fn"]
@@ -138,8 +214,8 @@ CONFUSION_COLUMNS = ["tp", "tn", "fp", "fn"]
 def _score_inputs(syms, tss, init, main):
     """One key segment through ``_forecast_run``, reduced to what
     scoring needs: (detection counters, forecast start_ctr, end_ctr,
-    positive) — the same values ``_run_forecast_segment`` emits as
-    rows — plus the carry."""
+    positive) — the same values ``_ForecastSpec.step`` emits as rows —
+    plus the carry."""
     (counters, det_mask, fc_mask, fstart, fend, _, fpos), carry = _forecast_run(
         syms, tss, init, main
     )
@@ -176,9 +252,8 @@ def _score_batches(batches, main_tables) -> np.ndarray:
     ``key_sorted`` frame, or the driver's one collected frame.  Each key
     is scored against its own detection counters when its run closes."""
 
-    def step(key, cols, seg, init):
-        syms, tss = cols
-        return _score_inputs(syms[seg], tss[seg], init, main_tables)
+    def step(cols, seg, init):
+        return _score_inputs(cols["symbol"][seg], cols["ts"][seg], init, main_tables)
 
     counts = np.zeros(len(CONFUSION_COLUMNS), dtype=np.int64)
     key, pieces = None, []
@@ -216,14 +291,10 @@ class ForecastCEP(BatchCEP):
         self.confidence_threshold = confidence_threshold
         self.spread = spread
 
-    def _tables(self, spst: SPST) -> tuple:
-        """``_forecast_run``'s (delta, finals, started, ftable, resets)."""
-        return (
-            spst.delta,
-            spst.finals,
-            spst.started,
-            spst.forecast_table(self.method, self.confidence_threshold, self.spread),
-            self.compiled.reset_symbols(),
+    def _spec(self, new_model: SPST | None = None, sync_time: int | None = None):
+        return _ForecastSpec(
+            self.spst, self.method, self.confidence_threshold, self.spread,
+            new_model, sync_time,
         )
 
     def forecasts(
@@ -241,30 +312,7 @@ class ForecastCEP(BatchCEP):
         event-time sync_time (G4) — each key's run migrates its state
         into the new model at the first event with ts >= sync_time,
         exactly the reference's per-event swap granularity."""
-        key_type = dict(df.dtypes)[self.key_col]
-        schema = (
-            f"key {key_type}, ts long, event_id long, counter long, "
-            "is_detection boolean, prob double, start_ctr long, end_ctr long, "
-            "positive boolean"
-        )
-        main_tables = self._tables(self.spst)
-        swap_tables = None
-        if new_model is not None:
-            delta2, finals2, started2, ftable2, _ = self._tables(new_model)
-            migrate = swap_mapping(self.spst, new_model)
-            swap_tables = (migrate, sync_time, delta2, finals2, started2, ftable2)
-        fresh = (0, 0, new_model is None)
-
-        def step(key, cols, seg, init):
-            return _run_forecast_segment(
-                key, *(c[seg] for c in cols), init, main_tables, swap_tables
-            )
-
-        def run_partition(batches):
-            for segs in key_segments(batches, ("symbol", "ts", "event_id"), fresh, step):
-                yield pd.concat([frame for _, _, frame in segs])
-
-        return self.key_sorted(df).mapInPandas(run_partition, schema=schema)
+        return self._run(self._spec(new_model, sync_time), df)
 
     def confusion(self, df: DataFrame) -> dict[str, int]:
         """Global confusion counts {"tp", "tn", "fp", "fn"} of this
@@ -281,7 +329,7 @@ class ForecastCEP(BatchCEP):
         (``key_sorted_pandas`` of a collected ``symbolized`` table) is
         scored on the driver by the same kernel, with no Spark job."""
         if isinstance(sorted_df, pd.DataFrame):
-            counts = _score_batches([sorted_df], self._tables(self.spst))
+            counts = _score_batches([sorted_df], self._spec().main)
             return dict(zip(CONFUSION_COLUMNS, (int(c) for c in counts)))
         rows = self._partition_counts(sorted_df).collect()
         return {c: sum(int(r[c]) for r in rows) for c in CONFUSION_COLUMNS}
@@ -292,7 +340,7 @@ class ForecastCEP(BatchCEP):
 
     def _partition_counts(self, sorted_df: DataFrame) -> DataFrame:
         """One (tp, tn, fp, fn) row per partition of ``sorted_df``."""
-        main_tables = self._tables(self.spst)
+        main_tables = self._spec().main
 
         def score_partition(batches):
             counts = _score_batches(batches, main_tables)

@@ -14,21 +14,77 @@ engine has the same constraint per job — keyBy happens once).
 
 from __future__ import annotations
 
-import pandas as pd
+import pickle
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
 from flink_rtcef_spark.operators.cep import (
-    _run_sdfa_segment,
-    key_segments,
-    key_sorted,
-    ts_millis,
+    _DET_FIELDS,
+    KernelOperator,
+    _KernelSpec,
+    _out_schema,
+    _SdfaSpec,
+)
+from flink_rtcef_spark.plans.compiler import CompiledPattern
+
+MULTI_OUTPUT_SCHEMA = (
+    "pattern_id int, key string, detection_event_id long, detection_ts long, "
+    "counter long, min_counter long, n_matched int"
 )
 
 
-class MultiPatternCEP:
+class _MultiSpec(_KernelSpec):
+    """Every pattern of a set over one key walk: each pattern
+    contributes its own JVM symbol column, and one ``_SdfaSpec`` per
+    pattern advances over it; the carry vector (one quintuple per
+    pattern) is pickled into one binary state column.  Output rows are
+    (pattern_id, *detection)."""
+
+    out = _out_schema(
+        [("pattern_id", "int"), *_DET_FIELDS], [("carries", "binary")],
+        MULTI_OUTPUT_SCHEMA,
+    )
+
+    def __init__(self, compiled_list):
+        if not compiled_list:
+            raise ValueError("need at least one pattern")
+        self.patterns = tuple(compiled_list)
+        self.specs = [_SdfaSpec(c) for c in compiled_list]
+        keys = {c.partition_by for c in compiled_list if c.partition_by}
+        # patterns that disagree on partitionBy need an explicit key_col
+        self.key = keys.pop() if len(keys) == 1 else None
+        self.event_cols = [
+            "key", "ts", "event_id", *(f"symbol{p}" for p in range(len(self.specs)))
+        ]
+
+    def columns(self) -> list:
+        return [
+            s.compiled.symbol_column().alias(f"symbol{p}")
+            for p, s in enumerate(self.specs)
+        ]
+
+    @staticmethod
+    def load(blob):
+        return pickle.loads(blob)
+
+    def step(self, cols, seg, carry):
+        carry = carry or [None] * len(self.specs)
+        out = []
+        for p, spec in enumerate(self.specs):
+            rows, carry[p] = spec.step(
+                {**cols, "symbol": cols[f"symbol{p}"]}, seg, carry[p]
+            )
+            out.extend((p, *r) for r in rows)
+        return out, carry
+
+    @staticmethod
+    def dump(carry):
+        return (pickle.dumps(carry),)
+
+
+class MultiPatternCEP(KernelOperator):
+    """``detections`` gives (pattern_id, key, detection_event_id,
+    detection_ts, counter, min_counter, n_matched) — all patterns, one
+    scan, one shuffle."""
+
     def __init__(
         self,
         compiled: list[CompiledPattern],
@@ -36,75 +92,5 @@ class MultiPatternCEP:
         ts_col: str = "timestamp",
         id_col: str = "id",
     ):
-        if not compiled:
-            raise ValueError("need at least one pattern")
-        keys = {c.partition_by for c in compiled if c.partition_by}
-        if key_col is None:
-            if len(keys) != 1:
-                raise ValueError(
-                    f"patterns disagree on partitionBy ({keys}); pass key_col"
-                )
-            key_col = keys.pop()
+        super().__init__(_MultiSpec(compiled), key_col, ts_col, id_col)
         self.compiled = compiled
-        self.key_col = key_col
-        self.ts_col = ts_col
-        self.id_col = id_col
-
-    def symbolized(self, df: DataFrame) -> DataFrame:
-        ts_ms = ts_millis(df, self.ts_col)
-        cols = [
-            F.col(self.key_col).alias("key"),
-            ts_ms.alias("ts"),
-            F.col(self.id_col).alias("event_id"),
-        ]
-        cols += [
-            c.symbol_column().alias(f"symbol{p}") for p, c in enumerate(self.compiled)
-        ]
-        return df.select(*cols)
-
-    def detections(self, df: DataFrame) -> DataFrame:
-        """(pattern_id, key, detection_event_id, detection_ts, counter,
-        min_counter, n_matched) — all patterns, one scan, one shuffle."""
-        sym_df = self.symbolized(df)
-        tables = [transition_tables(c.sdfa) for c in self.compiled]
-        windows = [(c.window, c.window_type) for c in self.compiled]
-        resets = [c.reset_symbols() for c in self.compiled]
-        n_pat = len(self.compiled)
-        key_type = dict(df.dtypes)[self.key_col]
-        schema = (
-            f"pattern_id int, key {key_type}, detection_event_id long, "
-            "detection_ts long, counter long, min_counter long, n_matched int"
-        )
-        columns = [
-            "pattern_id",
-            "key",
-            "detection_event_id",
-            "detection_ts",
-            "counter",
-            "min_counter",
-            "n_matched",
-        ]
-
-        names = ("ts", "event_id", *(f"symbol{p}" for p in range(n_pat)))
-
-        def step(key, cols, seg, init):
-            tss, ids = cols[0][seg], cols[1][seg]
-            out, carries = [], []
-            for p, (syms, carry) in enumerate(zip(cols[2:], init)):
-                delta, take, finals = tables[p]
-                window, wtype = windows[p]
-                rows, carry = _run_sdfa_segment(
-                    syms[seg], tss, ids, delta, take, finals, window, wtype,
-                    resets[p], carry,
-                )
-                out.extend((p, key, *r) for r in rows)
-                carries.append(carry)
-            return out, carries
-
-        def run_partition(batches):
-            for segs in key_segments(batches, names, [None] * n_pat, step):
-                yield pd.DataFrame(
-                    [r for _, _, rows in segs for r in rows], columns=columns
-                )
-
-        return key_sorted(sym_df).mapInPandas(run_partition, schema=schema)

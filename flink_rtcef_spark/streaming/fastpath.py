@@ -3,13 +3,16 @@
 The reference runs every kernel through one keyed process function
 (WayebEngine.processElement, WayebEngine.java:225-316).  Here one
 ``foreachBatch`` skeleton (:func:`_make_foreach_batch`) plays that
-role for all four kernels: the SDFA (:class:`_SdfaSpec`), the register
-automaton (streaming/fastpath_register.py), all patterns of a
-multi-pattern set at once (:class:`_MultiSpec`) and recognition plus
-forecasting (:class:`_ForecastSpec`).  Each microbatch advances ALL
-of its keys in one fused pass — the batch operators' own segment
-kernels (operators/cep.py BatchCEP, fused) — and carries run state as
-a co-partitioned DataFrame.  A per-key stateful operator instead pays
+role for all four kernel specs, the same spec objects the batch
+operators run (``run_spec``): the SDFA (operators/cep.py
+``_SdfaSpec``), the register automaton (operators/cep_register.py
+``_RegisterSpec``, started from streaming/fastpath_register.py), all
+patterns of a multi-pattern set at once (operators/multi_cep.py
+``_MultiSpec``) and recognition plus forecasting
+(operators/forecast.py ``_ForecastSpec``).  Each microbatch advances
+ALL of its keys in one pass over the batch operators' key walk
+(operators/cep.py ``key_batches``) and carries run state as a
+co-partitioned DataFrame.  A per-key stateful operator instead pays
 per-group Arrow round trips and a state-store commit on every
 microbatch (measured ~9x slower on bench.py's sf0.1 replay), which no
 kernel optimization can recover.
@@ -51,13 +54,12 @@ rewrite.  At production scale the state table is a normal columnar
 table — re-clustering, TTL sweeps, and inspection are plain DataFrame
 operations rather than state-store internals.
 
-A kernel spec supplies ``out`` (its :func:`_out_schema`), ``key``
-(the default key column), ``event_cols`` and the JVM ``columns()``
-that symbolize a stream into them, and ``load``/``step``/``dump``
-around its segment kernel (``step(cols, seg, carry) -> (rows,
-carry)``, each row the output fields after ``key``), plus, for the
-SDFA, a pure-JVM fold (``jvm_fold``; None elsewhere).  The protocol
-contract every route of every kernel keeps:
+A kernel spec (the protocol of operators/cep.py ``_KernelSpec``)
+supplies its written rows (``out``), its event columns and the JVM
+columns that symbolize a stream into them, and ``load``/``step``/
+``dump`` around its segment kernel; the SDFA also has a pure-JVM fold
+(``jvm_fold``, :class:`_SqlFold`).  The protocol contract every route
+of every kernel keeps:
 
 - routes: ``driver`` advances the batch on the driver with zero Spark
   jobs; ``sql`` runs the JVM fold (SDFA only); ``arrow`` runs the
@@ -84,10 +86,11 @@ contract every route of every kernel keeps:
   unchanged: verbatim on the driver route (the key walk passes it
   through) and the arrow route (the passive/active split keeps it out
   of the kernel); the sql fold re-emits it from its pseudo-event.
-- no int64 column passes through float64: each side of the (state ∪
-  event) union fills the other's integer columns with typed zeros, and
-  the kernel's output frame keeps Python ints, so event ids above
-  2**53 survive every route.
+- no int64 column passes through float64: a NULL event id is read as
+  operators/cep.NULL_ID (``_symbolize``) and back as NULL by the sink
+  view, each side of the (state ∪ event) union fills the other's
+  integer columns with typed zeros, and the kernel's output frame
+  keeps Python ints, so event ids above 2**53 survive every route.
 - ``sink(df, batch_id)``, if given, receives a LAZY view over the
   batch's written output rows in the spec's sink columns (a no-op sink
   pays nothing): ``state_table.DET_SCHEMA`` for the SDFA and register
@@ -101,20 +104,23 @@ contract every route of every kernel keeps:
 
 from __future__ import annotations
 
-import pickle
-from typing import NamedTuple
-
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from flink_rtcef_spark.operators.cep import _run_sdfa_segment
-from flink_rtcef_spark.operators.forecast import _forecast_rows, _forecast_run
-from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
+from flink_rtcef_spark.operators.cep import (
+    _SdfaSpec,
+    key_batches,
+    key_column,
+    non_null_id,
+    ts_millis,
+)
+from flink_rtcef_spark.operators.forecast import FORECAST_OUTPUT_SCHEMA, _ForecastSpec
+from flink_rtcef_spark.operators.multi_cep import MULTI_OUTPUT_SCHEMA, _MultiSpec
+from flink_rtcef_spark.plans.compiler import CompiledPattern
 from flink_rtcef_spark.streaming import state_table as stt
 from flink_rtcef_spark.streaming.bounded import DRIVER_MAX_ROWS, collect_bounded
 
@@ -130,10 +136,6 @@ _STATE_TS = -(1 << 62)
 #: fold somewhere above ~75k carried keys.
 DRIVER_MAX_STATE_ROWS = 75_000
 
-_ARROW_TYPES = {
-    "int": pa.int32(), "long": pa.int64(), "string": pa.string(),
-    "binary": pa.binary(), "double": pa.float64(), "boolean": pa.bool_(),
-}
 _NUMPY_TYPES = {
     "int": np.int32, "long": np.int64, "double": np.float64,
     "boolean": np.bool_,
@@ -141,239 +143,21 @@ _NUMPY_TYPES = {
 # Spark's simple-string names of the integer types (DataFrame.dtypes)
 _SPARK_INTS = {"tinyint", "smallint", "int", "bigint", "long"}
 
-MULTI_OUTPUT_SCHEMA = (
-    "pattern_id int, key string, detection_event_id long, detection_ts long, "
-    "counter long, min_counter long, n_matched int"
-)
-FORECAST_OUTPUT_SCHEMA = (
-    "key string, ts long, event_id long, counter long, is_detection boolean, "
-    "prob double, start_ctr long, end_ctr long, positive boolean"
-)
-
-
-class _OutSchema(NamedTuple):
-    """A kernel's written rows, built by :func:`_out_schema`: the Spark
-    schema string, the Arrow schema, the column list and the per-column
-    Spark types; the carried-state columns (a kind=1 row's fields
-    after ``key``, ending in ``last_ts``) as a list and as a schema
-    string; the output fields a kind=0 row fills after ``key``; and the
-    sink's schema string."""
-
-    sql: str
-    arrow: pa.Schema
-    columns: list[str]
-    types: dict[str, str]
-    carried: list[str]
-    state: str
-    row: list[str]
-    sink: str
-
-
-def _out_schema(
-    row_fields: list[tuple[str, str]],
-    state_fields: list[tuple[str, str]],
-    sink: str = stt.DET_SCHEMA,
-) -> _OutSchema:
-    """The written rows of a kernel whose output rows are
-    ``(0, key, *row_fields)`` and whose state rows are ``(1, key, ...,
-    *state_fields, last_ts)`` — ``last_ts`` is the TTL and watermark
-    clock.  A field in both lists is ONE column, so the state fields
-    must continue the row fields' tail (the SDFA's counter,
-    min_counter and n_matched are both).  ``sink`` is the schema of the
-    sink's view, whose columns state_table.detections_view reads from
-    the written ones."""
-    fields = [("kind", "int"), ("key", "string"), *row_fields]
-    fields += [f for f in state_fields if f not in row_fields]
-    fields.append(("last_ts", "long"))
-    carried = fields[-1 - len(state_fields):]
-    if carried[:-1] != list(state_fields):
-        raise ValueError(f"state fields {state_fields} must end the row fields")
-    return _OutSchema(
-        ", ".join(f"{n} {t}" for n, t in fields),
-        pa.schema([(n, _ARROW_TYPES[t]) for n, t in fields]),
-        [n for n, _ in fields],
-        dict(fields),
-        [n for n, _ in carried],
-        ", ".join(f"{n} {t}" for n, t in carried),
-        [n for n, _ in row_fields],
-        sink,
-    )
-
-
-# a detection row of the SDFA and register kernels
-_DET_FIELDS = [
-    ("event_id", "long"), ("ts", "long"), ("counter", "long"),
-    ("min_counter", "long"), ("n_matched", "int"),
-]
-_SDFA_OUT = _out_schema(
-    _DET_FIELDS, [*_DET_FIELDS[2:], ("state", "int"), ("min_ts", "long")]
-)
-_OUT_SCHEMA = _SDFA_OUT.sql
-
-
-class _SdfaSpec:
-    """The deterministic kernel: the per-key quintuple rides the state
-    row's typed columns, and ``step`` is BatchCEP's own
-    ``_run_sdfa_segment``."""
-
-    out = _SDFA_OUT
-
-    def __init__(self, compiled: CompiledPattern):
-        self.compiled = compiled
-        self.key = compiled.partition_by
-        self.event_cols = ["key", "ts", "event_id", "symbol"]
-        self.delta, self.take, self.finals = transition_tables(compiled.sdfa)
-        self.window, self.window_type = compiled.window, compiled.window_type
-        self.resets = compiled.reset_symbols()
-
-    def columns(self) -> list:
-        return [self.compiled.symbol_column().alias("symbol")]
-
-    @staticmethod
-    def load(counter, min_counter, n_matched, state, min_ts):
-        return (
-            int(state), int(counter), int(min_counter), int(min_ts),
-            int(n_matched),
-        )
-
-    def step(self, cols, seg, carry):
-        return _run_sdfa_segment(
-            cols["symbol"][seg].astype(np.int64),
-            cols["ts"][seg].astype(np.int64),
-            cols["event_id"][seg].astype(np.int64),
-            self.delta, self.take, self.finals, self.window,
-            self.window_type, self.resets, carry,
-        )
-
-    @staticmethod
-    def dump(carry):
-        state, counter, min_counter, min_ts, n_matched = carry
-        return counter, min_counter, n_matched, state, min_ts
-
-    def jvm_fold(self) -> _SqlFold:
-        return _SqlFold(self.compiled)
-
-
-class _MultiSpec:
-    """Streaming twin of MultiPatternCEP (operators/multi_cep.py): the
-    reference feeds every event to ALL loaded FSMs (ERFEngine.scala:204).
-    Every pattern contributes its own JVM symbol column, and one
-    ``_SdfaSpec`` per pattern advances over it; the carry vector (one
-    quintuple per pattern) is pickled into one binary state column.
-    Output rows are (pattern_id, *detection)."""
-
-    out = _out_schema(
-        [("pattern_id", "int"), *_DET_FIELDS], [("carries", "binary")],
-        MULTI_OUTPUT_SCHEMA,
-    )
-    jvm_fold = None
-
-    def __init__(self, compiled_list):
-        if not compiled_list:
-            raise ValueError("need at least one pattern")
-        self.specs = [_SdfaSpec(c) for c in compiled_list]
-        keys = {c.partition_by for c in compiled_list if c.partition_by}
-        # patterns that disagree on partitionBy need an explicit key_col
-        self.key = keys.pop() if len(keys) == 1 else None
-        self.event_cols = [
-            "key", "ts", "event_id", *(f"symbol{p}" for p in range(len(self.specs)))
-        ]
-
-    def columns(self) -> list:
-        return [
-            s.compiled.symbol_column().alias(f"symbol{p}")
-            for p, s in enumerate(self.specs)
-        ]
-
-    @staticmethod
-    def load(blob):
-        return pickle.loads(blob)
-
-    def step(self, cols, seg, carry):
-        carry = carry or [None] * len(self.specs)
-        out = []
-        for p, spec in enumerate(self.specs):
-            rows, carry[p] = spec.step(
-                {**cols, "symbol": cols[f"symbol{p}"]}, seg, carry[p]
-            )
-            out.extend((p, *r) for r in rows)
-        return out, carry
-
-    @staticmethod
-    def dump(carry):
-        return (pickle.dumps(carry),)
-
-
-class _ForecastSpec:
-    """Streaming twin of ForecastCEP: per-key virtual state + counter,
-    detections and forecasts from the SAME ``_forecast_run`` kernel the
-    batch operator uses — the reference's online inference path
-    (WayebEngine.processElement:225-316).  Forecast state is run state,
-    so it expires with the run (ERFEngine.scala:213-216)."""
-
-    # counter ends the row fields so the state row shares its column
-    out = _out_schema(
-        [
-            ("ts", "long"), ("event_id", "long"), ("is_detection", "boolean"),
-            ("prob", "double"), ("start_ctr", "long"), ("end_ctr", "long"),
-            ("positive", "boolean"), ("counter", "long"),
-        ],
-        [("counter", "long"), ("state", "int")],
-        FORECAST_OUTPUT_SCHEMA,
-    )
-    jvm_fold = None
-    event_cols = ["key", "ts", "event_id", "symbol"]
-
-    def __init__(
-        self, spst, method="classify_nextk", confidence_threshold=0.5, spread=5
-    ):
-        self.compiled = spst.compiled
-        self.key = spst.compiled.partition_by
-        self.main = (
-            spst.delta,
-            spst.finals,
-            spst.started,
-            spst.forecast_table(method, confidence_threshold, spread),
-            spst.compiled.reset_symbols(),
-        )
-
-    def columns(self) -> list:
-        return [self.compiled.symbol_column().alias("symbol")]
-
-    @staticmethod
-    def load(counter, state):
-        return int(state), int(counter)
-
-    def step(self, cols, seg, carry):
-        st, counter = carry or (0, 0)
-        tss = cols["ts"][seg]
-        runs, (st, counter, _) = _forecast_run(
-            cols["symbol"][seg], tss, (st, counter, True), self.main
-        )
-        rows = _forecast_rows(tss, cols["event_id"][seg], runs)
-        return (
-            zip(*(rows[c].tolist() for c in self.out.row)),
-            (int(st), int(counter)),
-        )
-
-    @staticmethod
-    def dump(carry):
-        st, counter = carry
-        return counter, st
+_OUT_SCHEMA = _SdfaSpec.out.sql
 
 
 def _make_partition_runner(spec):
     """The one key walk of every route: a fused pass over a partition
-    of (state ∪ event) rows sorted by (key, ts, event_id).  Key
-    segments come from one numpy comparison per Arrow batch (as in
-    the batch kernels' operators/cep.key_batches), and a key's carry is handed on
-    across batches.  A key's leading state row (ts = _STATE_TS sorts it
-    first) is its carry-in; the kernel ``load``s it only when the key
-    has events, and a key with none writes its row back verbatim, byte
-    for byte — at 1M uniform live keys almost every carried key rides
-    through here with no event.  The key's carry-out is emitted as a
-    kind=1 row when the key closes.  A kind=0 row is ``(0, key, *row)``
-    for each row ``step`` returns, padded to the written columns.
+    of (state ∪ event) rows sorted by (key, ts, event_id), on the batch
+    kernels' key walk (operators/cep.key_batches), a key's carry handed
+    on across Arrow batches.  A key's leading state row (ts = _STATE_TS
+    sorts it first) is its carry-in; the kernel ``load``s it only when
+    the key has events, and a key with none writes its row back
+    verbatim, byte for byte — at 1M uniform live keys almost every
+    carried key rides through here with no event.  The key's carry-out
+    is emitted as a kind=1 row when the key closes.  A kind=0 row is
+    ``(0, key, *row)`` for each row ``step`` returns, padded to the
+    written columns.
 
     The output frame is built with object columns: inferring dtypes
     from rows that mix ints and None would turn event ids into
@@ -382,6 +166,11 @@ def _make_partition_runner(spec):
     state_cols = spec.out.carried[:-1]
     lead = (None,) * (len(out_cols) - len(state_cols) - 3)
     pad = (None,) * (len(out_cols) - 2 - len(spec.out.row))
+    # column-at-a-time numpy views: a per-key pdf.iloc[...] row access
+    # costs ~50 us, which at 100k carried keys per partition dominated
+    # the whole batch (measured 7 s/batch pre-fix in the uniform
+    # key-cardinality bench)
+    names = [*spec.event_cols[1:], "is_state", "last_ts", *state_cols]
 
     def run_partition(batches):
         out: list[tuple] = []
@@ -396,36 +185,25 @@ def _make_partition_runner(spec):
                 vals = spec.dump(carry) if active else raw
                 out.append((1, key, *lead, *vals, last_ts))
 
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            # column-at-a-time numpy views: a per-key pdf.iloc[...] row
-            # access costs ~50 us, which at 100k carried keys per
-            # partition dominated the whole batch (measured 7 s/batch
-            # pre-fix in the uniform key-cardinality bench)
-            keys = pdf["key"].to_numpy()
-            is_state = pdf["is_state"].to_numpy()
-            tss = pdf["ts"].to_numpy()
-            c_last_ts = pdf["last_ts"].to_numpy()
-            c_state = [pdf[c].to_numpy() for c in state_cols]
-            cols = {c: pdf[c].to_numpy() for c in spec.event_cols}
-            bounds = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1), n]
+        for keys, cols, bounds, continues in key_batches(batches, names):
+            is_state = cols["is_state"]
             for start, end in zip(bounds[:-1], bounds[1:]):
                 k = keys[start]
-                if k != key:
+                if start > 0 or not continues:
                     close_key()
                     key, raw, carry, active, last_ts = k, None, None, False, -1
                 if is_state[start]:
-                    raw = tuple(c[start] for c in c_state)
-                    last_ts = int(c_last_ts[start])
+                    raw = tuple(cols[c][start] for c in state_cols)
+                    last_ts = int(cols["last_ts"][start])
                     start += int(is_state[start:end].sum())
                 if start < end:
                     if not active:
                         carry = None if raw is None else spec.load(*raw)
                         active = True
                     rows, carry = spec.step(cols, slice(start, end), carry)
-                    last_ts = max(last_ts, int(tss[end - 1]))
+                    last_ts = max(last_ts, int(cols["ts"][end - 1]))
+                    if isinstance(rows, dict):  # a columnar kernel
+                        rows = zip(*(rows[c].tolist() for c in spec.out.row))
                     out.extend((0, k, *row, *pad) for row in rows)
         close_key()
         yield pd.DataFrame(out, columns=out_cols, dtype=object)
@@ -761,7 +539,10 @@ def _make_foreach_batch(
     if driver_max_state_rows is None:
         driver_max_state_rows = DRIVER_MAX_STATE_ROWS
     runner = _make_partition_runner(spec)
-    fold = spec.jvm_fold() if spec.jvm_fold and engine in ("sql", "auto") else None
+    fold = (
+        _SqlFold(spec.compiled) if spec.jvm_fold and engine in ("sql", "auto")
+        else None
+    )
 
     def finish_batch(spark, batch_id, meta, written, engine_used) -> None:
         """Every route's tail once ``v{batch_id+1}``'s data exists:
@@ -866,27 +647,28 @@ def _symbolize(
     """The stream as ``spec.event_cols``: (key string, ts millis,
     event_id, *spec.columns()).  Symbolization stays a JVM column
     (identical to the batch operators), so foreachBatch receives only
-    narrow columns.  A TIMESTAMP ``ts_col`` passes through;
-    TIMESTAMP_NTZ is re-tagged wall-clock-as-UTC via the tz-free
-    interval expression (sources.io.ntz_as_utc — a plain cast would
-    shift on non-UTC sessions); numeric epoch-seconds get
-    ``timestamp_seconds``."""
-    from flink_rtcef_spark.sources.io import ntz_as_utc
-
-    key = key_col or spec.key
-    if key is None:
-        raise ValueError("the patterns name no single partitionBy; pass key_col")
+    narrow columns; a NULL event id is read as ``NULL_ID``, as in
+    ``key_sorted``, and the sink view reads it back as NULL.  A
+    TIMESTAMP or TIMESTAMP_NTZ ``ts_col`` reads as in BatchCEP
+    (``ts_millis``); a numeric one as epoch seconds — unless a pattern
+    has a time window, which raises: BatchCEP reads a numeric ts as
+    epoch millis, so the two would span windows 1000x apart."""
+    key = key_column(spec, key_col)
     dtype = dict(stream_df.dtypes).get(ts_col)
-    if dtype == "timestamp":
-        event_time = F.col(ts_col)
-    elif dtype == "timestamp_ntz":
-        event_time = ntz_as_utc(ts_col, stream_df.sparkSession)
+    if dtype in ("timestamp", "timestamp_ntz"):
+        ts = ts_millis(stream_df, ts_col)
+    elif any(p.window > 0 and p.window_type == "time" for p in spec.patterns):
+        raise ValueError(
+            f"ts column {ts_col!r} is {dtype}, which the fast path reads as "
+            "epoch seconds and BatchCEP as epoch millis, so a time window "
+            f"would differ between them: cast {ts_col!r} to TIMESTAMP"
+        )
     else:
-        event_time = F.timestamp_seconds(F.col(ts_col))
+        ts = F.unix_millis(F.timestamp_seconds(F.col(ts_col)))
     return stream_df.select(
         F.col(key).cast("string").alias("key"),
-        F.unix_millis(event_time).alias("ts"),
-        F.col(id_col).alias("event_id"),
+        ts.alias("ts"),
+        non_null_id(F.col(id_col)).alias("event_id"),
         *spec.columns(),
     )
 

@@ -1,8 +1,8 @@
 """foreachBatch fast path for register (SREMO/NSRA) patterns.
 
-The kernel spec of the nondeterministic register run
-(operators/cep_register._run_nsra_segment, the reference's
-non-deterministic run path ERFEngine.processEventAtRunNonDet:295) for
+Runs the register kernel spec (operators/cep_register._RegisterSpec,
+the kernel RegisterCEP runs in batch: the reference's
+non-deterministic run path ERFEngine.processEventAtRunNonDet:295) on
 the one fast-path skeleton in streaming/fastpath.py, whose module
 docstring states the protocol contract this path keeps: the
 versioned, hash-bucketed state table, the routes, the null-key rule,
@@ -22,70 +22,16 @@ its run closures), unlike the SDFA fold.
 
 from __future__ import annotations
 
-import pickle
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from flink_rtcef_spark.operators.cep_register import _run_nsra_segment
+from flink_rtcef_spark.operators.cep_register import _RegisterSpec
 from flink_rtcef_spark.streaming.fastpath import (
-    _DET_FIELDS,
     _make_foreach_batch,
-    _out_schema,
     _start,
     _symbolize,
 )
 
-_REGISTER_OUT = _out_schema(_DET_FIELDS, [*_DET_FIELDS[2:], ("blob", "binary")])
-_OUT_SCHEMA = _REGISTER_OUT.sql
-
-
-class _RegisterSpec:
-    """The register kernel: ``step`` is RegisterCEP's own
-    ``_run_nsra_segment``; its (configs, counter) carry is stored as
-    ``counter`` and the pickled config set, and unpickled only for a
-    key with events in the batch."""
-
-    out = _REGISTER_OUT
-    jvm_fold = None
-
-    def __init__(self, compiled):
-        self.compiled = compiled
-        self.key = compiled.partition_by
-        self.attrs = list(compiled.register_attrs)
-        self.event_cols = ["key", "ts", "event_id", "bits", *self.attrs]
-        self.table = compiled.table
-        self.finals = frozenset(compiled.nsra.finals)
-        self.start_states = compiled.start_states
-        self.window, self.window_type = compiled.window, compiled.window_type
-
-    def columns(self) -> list:
-        """Static predicates fold into the JVM ``bits`` column exactly
-        as in batch (RegisterCEP.symbolized); only register comparisons
-        reach the Python kernel."""
-        return [
-            self.compiled.bits_column().alias("bits"),
-            *[F.col(a) for a in self.attrs],
-        ]
-
-    @staticmethod
-    def load(counter, _min_counter, _n_matched, blob):
-        return pickle.loads(blob), int(counter)
-
-    def step(self, cols, seg, carry):
-        return _run_nsra_segment(
-            cols["bits"][seg],
-            cols["ts"][seg].astype("int64"),
-            cols["event_id"][seg].astype("int64"),
-            {a: cols[a][seg] for a in self.attrs},
-            self.table, self.finals, self.start_states, self.window,
-            self.window_type, carry,
-        )
-
-    @staticmethod
-    def dump(carry):
-        configs, counter = carry
-        return int(counter), None, None, pickle.dumps(configs)
+_OUT_SCHEMA = _RegisterSpec.out.sql
 
 
 def make_foreach_batch_register(compiled, state_dir: str, sink=None, **options):

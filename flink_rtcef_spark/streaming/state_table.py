@@ -80,17 +80,11 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from flink_rtcef_spark.operators.cep import DET_SCHEMA, sink_columns
+
 #: partition value holding a batch's detections (kind=0 rows)
 DETS_PART = "d"
 
-#: the sink's view of a batch's detections from the SDFA or register
-#: kernel
-DET_SCHEMA = (
-    "key string, detection_event_id long, detection_ts long, counter long, "
-    "min_counter long, n_matched int"
-)
-#: sink columns read from a differently named written column
-_SINK_SOURCES = {"detection_event_id": "event_id", "detection_ts": "ts"}
 
 #: default LOGICAL bucket count — at ~50k rows per bucket this covers
 #: ~10M live keys; raise it for larger key spaces (the manifest is
@@ -421,19 +415,17 @@ def detections_view(
     sink_schema: str = DET_SCHEMA,
 ):
     """Lazy view over the written batch's output rows (the ``pdir=d``
-    dir of ``v{batch_id + 1}``) in the ``sink_schema`` columns, each
-    read from the written column of the same name — or, for
-    ``detection_event_id``/``detection_ts``, from ``event_id``/``ts``;
+    dir of ``v{batch_id + 1}``) in the ``sink_schema`` columns — the
+    batch operators' output projection (operators/cep.sink_columns);
     an empty frame when the batch emitted nothing (no dir is written
     then)."""
     p = dets_path(state_dir, batch_id + 1)
     if not os.path.isdir(p):
         return spark.createDataFrame([], sink_schema)
-    names = [f.split()[0] for f in sink_schema.split(", ")]
     return (
         spark.read.schema(out_schema).parquet(p)
         .filter(F.col("kind") == 0)
-        .select(*[F.col(_SINK_SOURCES.get(c, c)).alias(c) for c in names])
+        .select(*sink_columns(sink_schema))
     )
 
 
@@ -592,8 +584,8 @@ def compact_state(
     (SDFA, register, multi-pattern, forecast) records it.  A manifest
     written before kernels recorded it needs it passed: the ``.out.sql``
     of the kernel's spec (``fastpath._OUT_SCHEMA``,
-    ``fastpath_register._OUT_SCHEMA``, ``fastpath._MultiSpec`` or
-    ``fastpath._ForecastSpec``).
+    ``fastpath_register._OUT_SCHEMA``, ``multi_cep._MultiSpec`` or
+    ``forecast._ForecastSpec``).
 
     Returns {"epoch", "rows_before", "rows_after"}.
 

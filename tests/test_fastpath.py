@@ -963,3 +963,34 @@ def test_fastpath_resume_layout_is_pinned():
         "key string, detection_event_id long, detection_ts long, counter long, "
         "min_counter long, n_matched int"
     )
+
+
+@pytest.mark.parametrize("kernel", ["sdfa", "multi"])
+def test_fastpath_rejects_a_time_window_over_a_numeric_ts(spark, kernel):
+    """BatchCEP reads a numeric ts as epoch millis and the fast path as
+    epoch seconds, so a time window over it would span 1000x more in
+    the stream (k1 A@1, B@3 with {window:5}: BatchCEP detects, the
+    stream would not): symbolizing raises, naming the column, when any
+    pattern has a time window.  A count window, or a TIMESTAMP column,
+    symbolizes as before."""
+    from pyspark.sql import functions as F
+
+    timed = (
+        ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){partitionBy:k}"
+        "{windowType:time}{window:5}"
+    )
+    patterns = {
+        "sdfa": (lambda p: compile_pattern(p, DECLS), symbolize_stream),
+        "multi": (
+            lambda p: compile_patterns(f"{PAT}&{p}", DECLS),
+            _skeleton_symbolize(_MultiSpec),
+        ),
+    }
+    compile_, symbolize = patterns[kernel]
+    df = spark.createDataFrame([("k1", 1, 1, "A"), ("k1", 3, 2, "B")], SCHEMA)
+    cols = dict(key_col="k", ts_col="ts", id_col="id")
+    with pytest.raises(ValueError, match="'ts'.*TIMESTAMP"):
+        symbolize(df, compile_(timed), **cols)
+    symbolize(df, compile_(timed.replace("{windowType:time}", "")), **cols)
+    stamped = df.withColumn("ts", F.timestamp_millis("ts"))
+    assert symbolize(stamped, compile_(timed), **cols).count() == 2

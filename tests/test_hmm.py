@@ -3,7 +3,10 @@ first-passage waiting-time unrolling."""
 
 from __future__ import annotations
 
+import random
+
 import numpy as np
+import pytest
 
 from flink_rtcef_spark.models.hmm import IsoHMM, learn_hmm, run_trace
 
@@ -129,3 +132,52 @@ def test_hmm_end_to_end_forecast(spark):
     assert not wt.is_empty() and sum(wt.wt.values()) <= 1.0 + 1e-9
     fc = wt.forecast("classify_nextk", confidence_threshold=0.0, spread=5)
     assert fc.valid
+
+
+RESET_DECLS = (
+    "+(IsEventTypePredicate(RESET))\n"
+    "~(IsEventTypePredicate(A),IsEventTypePredicate(B),IsEventTypePredicate(RESET))"
+)
+
+
+@pytest.mark.parametrize("selection", ["#", "@"])
+def test_run_trace_clears_state_on_reset(spark, selection):
+    """A RESET event clears the run without a transition
+    (Run.scala:309-323), so the trace learn_hmm trains on shows state 0
+    there, as the deterministic run holds it.  Under skip-till
+    selection RESET's own transition leaves state 0, so a trace that
+    took ``delta[state, RESET]`` would show a partial match instead.
+    Every state must equal an event-by-event ``_run_sdfa_segment``
+    replay of the key."""
+    from flink_rtcef_spark.operators.cep import _run_sdfa_segment
+    from flink_rtcef_spark.plans.compiler import compile_pattern, transition_tables
+
+    compiled = compile_pattern(
+        f"{selection}(;(IsEventTypePredicate(A),IsEventTypePredicate(B)))"
+        "{partitionBy:k}",
+        RESET_DECLS,
+    )
+    resets = compiled.reset_symbols()
+    delta, take, finals = transition_tables(compiled.sdfa)
+    assert delta[:, list(resets)].any()
+    rng = random.Random(17)
+    rows = [
+        (k, t, i * 100 + t, rng.choice(["A", "A", "B", "RESET"]))
+        for i, k in enumerate(("k1", "k2"))
+        for t in range(60)
+    ]
+    df = spark.createDataFrame(rows, "k string, ts long, id long, event_type string")
+    trace = run_trace(df, compiled, "k", "ts", "id").toPandas()
+    on_reset = trace["symbol"].isin(resets)
+    assert on_reset.any()
+    assert (trace["state"][on_reset] == 0).all()
+    for _, seg in trace.sort_values(["key", "ts"]).groupby("key"):
+        syms, tss = seg["symbol"].to_numpy(), seg["ts"].to_numpy()
+        carry, replay = None, []
+        for i in range(len(seg)):
+            _, carry = _run_sdfa_segment(
+                syms[i:i + 1], tss[i:i + 1], tss[i:i + 1], delta, take, finals,
+                0, "count", resets, carry,
+            )
+            replay.append(carry[0])
+        assert seg["state"].tolist() == replay

@@ -88,3 +88,46 @@ def test_null_key_rows_do_not_depend_on_arrow_batches(spark, request, kernel):
         assert any(r["key"] is None for r in default)
     request.getfixturevalue("small_arrow_batches")
     assert _rows(run(df)) == default
+
+
+BIG = 2**60
+
+
+def _forecasts(df):
+    from tests.test_forecast import _ab_forecaster
+
+    return _ab_forecaster(df).forecasts(df)
+
+
+ID_OPERATORS = {
+    "cep": (_cep(SEQ_AB), "detection_event_id"),
+    "cep_windowed": (_cep(SEQ_AB + "{window:5}"), "detection_event_id"),
+    "multi": (_multi, "detection_event_id"),
+    "register": (_register("detections"), "detection_event_id"),
+    "forecast": (_forecasts, "event_id"),
+}
+
+
+@pytest.mark.parametrize("operator", list(ID_OPERATORS))
+def test_event_ids_stay_exact_next_to_a_null_id(spark, operator):
+    """A NULL id must not round the other ids of its Arrow batch:
+    pandas reads an int64 column holding a NULL as float64, which
+    rounds every id above 2**53.  k1's C has a NULL id next to two ids
+    above 2**60; k3's detection is the NULL-id event itself, which
+    must come back as NULL."""
+    rows = [
+        ("k1", 1, BIG + 1, "A", 1.0), ("k1", 2, BIG + 3, "B", 5.0),
+        ("k1", 3, None, "C", 0.0),
+        ("k2", 1, BIG + 5, "A", 1.0), ("k2", 2, BIG + 7, "B", 5.0),
+        ("k3", 1, BIG + 9, "A", 1.0), ("k3", 2, None, "B", 5.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "k string, timestamp long, id long, event_type string, value double"
+    )
+    run, id_col = ID_OPERATORS[operator]
+    out = [r.asDict() for r in run(df).collect()]
+    detections = [r[id_col] for r in out if r.get("is_detection", True)]
+    assert sorted(detections, key=lambda i: (i is not None, i)) == [
+        None, BIG + 3, BIG + 7,
+    ]
+    assert {r[id_col] for r in out} <= {r[2] for r in rows}
