@@ -266,6 +266,11 @@ def non_null_id(event_id: Column) -> Column:
     return F.coalesce(event_id, F.lit(NULL_ID))
 
 
+def null_id(event_id: Column) -> Column:
+    """The inverse of ``non_null_id``: ``NULL_ID`` read back as NULL."""
+    return F.when(event_id != F.lit(NULL_ID), event_id)
+
+
 def key_sorted_pandas(table: pa.Table) -> pd.DataFrame:
     """The driver twin of ``BatchCEP.key_sorted`` for a collected
     ``symbolized`` table: its rows sorted by (key, ts, event_id) with
@@ -351,10 +356,6 @@ def sink_columns(sink_schema: str) -> list:
     columns of ``sink_schema``, each read from the kernel's column of
     the same name (``detection_event_id``/``detection_ts`` from
     ``event_id``/``ts``), with ``NULL_ID`` read back as NULL."""
-
-    def null_id(c):
-        return F.when(c != F.lit(NULL_ID), c)
-
     cols = []
     for name in (f.split()[0] for f in sink_schema.split(", ")):
         source = _SINK_SOURCES.get(name, name)

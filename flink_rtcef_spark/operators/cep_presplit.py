@@ -59,9 +59,12 @@ from pyspark.sql import functions as F
 
 from flink_rtcef_spark.operators.cep import (
     DETECTION_SCHEMA_SUFFIX,
+    NULL_ID,
     BatchCEP,
     _run_sdfa_batch_vectorized,
     _run_sdfa_segment,
+    non_null_id,
+    null_id,
 )
 from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
 
@@ -98,7 +101,11 @@ def presplit_detections(
             "warmup must be <= shard_span (replay only reaches one shard back)"
         )
     cep = BatchCEP(compiled, key_col=key_col, ts_col=ts_col, id_col=id_col)
-    sym = cep.symbolized(df)
+    # a NULL id would reach pandas as float64 and round its neighbours
+    # above 2**53: the kernel sees NULL_ID, the output reads it back
+    sym = cep.symbolized(df).withColumn(
+        "event_id", non_null_id(F.col("event_id"))
+    )
 
     span = F.lit(int(shard_span))
     home = F.floor(F.col("ts") / span).cast("long")
@@ -219,7 +226,7 @@ def presplit_detections(
                 if r[1] >= shard_start
             ]
             out.append(
-                (key, shard, None, None, None, None, None, exact, state_exact, True)
+                (key, shard, NULL_ID, None, None, None, None, exact, state_exact, True)
             )
         else:
             out = [
@@ -425,7 +432,7 @@ def presplit_detections(
     )
     return ev_b.cogroup(off_b).applyInPandas(
         lambda ev, of: run_bucket(ev, of), schema=schema
-    )
+    ).withColumn("detection_event_id", null_id(F.col("detection_event_id")))
 
 
 def _windowed_uncertified_keys(

@@ -918,48 +918,6 @@ def semantic_dedup_keep(
     return df.join(dropped, id_col, "left_anti")
 
 
-def levenshtein_verify(
-    pairs: DataFrame,
-    docs: DataFrame,
-    max_dist: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Edit-distance verification of candidate pairs — the character-
-    level complement to the shingle-Jaccard verify (catches small
-    in-place edits that shift every shingle; standard for short texts
-    where one token flip wipes most k-grams).
-
-    Pairs-first discipline: only the candidate ids join back to text,
-    so cost is |pairs| x string length, never corpus-quadratic.
-    Spark's built-in ``levenshtein(l, r, threshold)`` short-circuits
-    the O(len^2) DP as soon as the running distance exceeds the bound
-    — the threshold is a compute cap, not just a filter.  JVM + DuckDB
-    both ship the function, so the operator is oracle-checkable.
-
-    Output: id_a, id_b, edit_dist (<= max_dist).
-    """
-    ta = docs.select(
-        F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta")
-    )
-    tb = docs.select(
-        F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb")
-    )
-    dist = F.expr(f"levenshtein(__ta, __tb, {int(max_dist)})")
-    return (
-        pairs.select("id_a", "id_b")
-        .join(ta, "id_a")
-        .join(tb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            dist.cast("long").alias("edit_dist"),
-        )
-        .filter(F.col("edit_dist") >= 0)  # threshold exceed returns -1
-        .filter(F.col("edit_dist") <= max_dist)
-    )
-
-
 def keep_best_in_component(
     docs: DataFrame,
     components: DataFrame,

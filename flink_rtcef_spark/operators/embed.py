@@ -19,9 +19,6 @@ map-side normalize.  No UDFs, no driver state.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd  # noqa: F401  (pandas_udf type-hint resolution under
-#                       deferred annotations needs `pd` in module globals)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -145,49 +142,3 @@ def embedding_oracle_sql(
            END AS embedding
     FROM {table} d LEFT JOIN normed n USING (doc_id)
     """
-
-
-def hashed_embedding_column(
-    dim: int = 64,
-    ngram: int = 2,
-    text_col: str = "text",
-):
-    """STREAMING-SAFE per-row twin of :func:`hashed_text_embedding`:
-    the same md5 hash, bucket, sign, and normalization computed inside
-    one Arrow-batched pandas UDF — map-only, so embeddings derive at
-    the ingest edge of an append-mode stream (the batch operator keys
-    a groupBy, which append mode rejects).  Matches the batch floats
-    exactly — pinned by tests."""
-    import hashlib
-
-    from pyspark.sql import types as T
-
-    def _h(g: str) -> int:
-        return int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _embed(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            toks = [w for w in (t or "").lower().strip().split() if w]
-            vec = np.zeros(dim)
-            if ngram > 1:
-                grams = [
-                    " ".join(toks[i : i + ngram])
-                    for i in range(len(toks) - ngram + 1)
-                ]
-            else:
-                grams = toks
-            for g in grams:
-                h = _h(g)
-                vec[h % dim] += 1.0 - 2.0 * ((h // dim) % 2)
-            # match the batch operator's fp order: sequential
-            # sum-of-squares then one divide per element
-            acc = 0.0
-            for x in vec:
-                acc += x * x
-            nrm = acc ** 0.5
-            out.append(list(vec / nrm) if nrm > 0 else list(vec))
-        return pd.Series(out)
-
-    return _embed(F.col(text_col))

@@ -179,46 +179,6 @@ def extract_features(
     return df.select(*in_cols).mapInPandas(run, schema=schema)
 
 
-def frame_sample_plan(
-    df: DataFrame,
-    every_n: int = 10,
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Video frame sampling PLAN: expands (media, n_frames) into
-    (media, frame_idx) rows JVM-side with sequence+explode; the decode
-    of each sampled frame goes through extract_features.  The expansion
-    is the real Spark work — the per-frame decode is the stubbed seam."""
-    return (
-        df.filter(F.col("media_type") == "video")
-        .select(
-            id_col,
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.coalesce(F.col("meta.n_frames"), F.lit(1)) - 1, F.lit(0)),
-                    F.lit(every_n),
-                )
-            ).alias("frame_idx"),
-        )
-    )
-
-
-def resize_plan(df: DataFrame, max_side: int = 224) -> DataFrame:
-    """Resize METADATA computation (target dims preserving aspect) as
-    pure columns; actual pixel resize happens inside the decode seam."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.when(
-        F.greatest(w, h) > max_side, max_side / F.greatest(w, h).cast("double")
-    ).otherwise(F.lit(1.0))
-    return df.withColumn(
-        "target_dims",
-        F.struct(
-            F.round(w * scale).cast("int").alias("width"),
-            F.round(h * scale).cast("int").alias("height"),
-        ),
-    )
-
-
 def synthesize_media(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Deterministic binary fixtures from the documents table (no binary
     test table exists): payload = utf-8 bytes, metadata derived from

@@ -661,16 +661,6 @@ def kmv_merge(a: DataFrame, b: DataFrame, k: int = KMV_K) -> DataFrame:
     return a.unionByName(b).distinct().orderBy("h").limit(k)
 
 
-def kmv_distinct_estimate(sketch: DataFrame, k: int = KMV_K) -> float:
-    """(k-1)/theta with theta = the k-th minimum as a fraction of the
-    hash space; exact count when the domain has < k values."""
-    rows = _kmv_rows(sketch)
-    if len(rows) < k:
-        return float(len(rows))
-    theta = rows[k - 1] / _KMV_SPACE
-    return (k - 1) / theta
-
-
 def kmv_overlap_estimates(
     a: DataFrame, b: DataFrame, k: int = KMV_K
 ) -> dict[str, float]:

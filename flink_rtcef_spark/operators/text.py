@@ -496,32 +496,3 @@ def normalized_text(text_col: str = "text", form: str = "NFKC") -> Column:
         )
 
     return _norm(F.col(text_col))
-
-
-def compression_ratio_column(text_col: str = "text", level: int = 6) -> Column:
-    """Per-document zlib compression ratio (compressed/raw bytes) — the
-    Gopher/FineWeb-style redundancy signal: templated or repeated text
-    compresses far below ~0.4, high-entropy junk sits near 1.0.
-
-    Deflate has no JVM Column equivalent, so this is an Arrow-batched
-    pandas UDF — map-only (streaming-safe), no state, no shuffle; at
-    100 TB it costs one pass like the other signal columns.  Rounded
-    to 6 so results are engine-independent.  Empty text scores 0.
-    """
-    import zlib
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.DoubleType())
-    def _ratio(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            raw = (t or "").encode("utf-8")
-            if not raw:
-                out.append(0.0)
-                continue
-            out.append(round(len(zlib.compress(raw, level)) / len(raw), 6))
-        return pd.Series(out)
-
-    return _ratio(F.col(text_col))

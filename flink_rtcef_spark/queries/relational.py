@@ -346,21 +346,6 @@ def union_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Sort + limit / top-k (the wt-distribution argmax shape,
-# WtDistribution.getForecastArgMax:249) — global top-k with total-order
-# tiebreak.  (Registry slot retired in r3 for pii_redaction: the TakeOrdered
-# physical shape stays exercised here via pytest and by the orderBy+limit
-# inside cosine_topk / ann_*_topk.)
-def topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.orderBy(F.col("value").desc(), F.col("event_id").asc())
-        .limit(20)
-        .select("event_id", "user_id", "event_type", F.round("value", 4).alias("value"))
-    )
-
-
-# --------------------------------------------------------------------------
 # Top-k per group — per-key best runs (RunPool bookkeeping shape) via a
 # ranking window.
 @query(

@@ -148,20 +148,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def co_located_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: list[str] | str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join two identically-bucketed tables on their bucket key.  With
-    matching bucket specs Spark plans a SortMergeJoin with NO Exchange
-    on either side — verify with :func:`assert_no_exchange` in tests.
-    """
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,

@@ -122,29 +122,6 @@ def read_maritime_csv(spark: SparkSession, path: str) -> DataFrame:
     return parse_maritime(spark.read.csv(path, schema=schema, header=False))
 
 
-def normalize_events(
-    df: DataFrame,
-    id_field: str,
-    ts_field: str = "timestamp",
-    event_type_field: str | None = None,
-    constant_event_type: str | None = None,
-) -> DataFrame:
-    """Configurable-field event normalization (JsonEventParser.java:41-107
-    parity: idField/tsField/eventType are parameters, e.g. maritime uses
-    mmsi/timestamp, finance uses pan/timestamp).  Output carries the
-    GenericEvent core columns (key, timestamp, event_type) alongside the
-    original attributes; malformed rows (null id/ts) are dropped, the
-    PERMISSIVE-mode analogue of the reference's flatMap skip."""
-    out = df.withColumn("key", F.col(id_field).cast("string")).withColumn(
-        "timestamp", F.col(ts_field).cast("long")
-    )
-    if event_type_field:
-        out = out.withColumn("event_type", F.col(event_type_field))
-    elif constant_event_type:
-        out = out.withColumn("event_type", F.lit(constant_event_type))
-    return out.filter(F.col("key").isNotNull() & F.col("timestamp").isNotNull())
-
-
 # The wire schema spark-sql-kafka produces for every record; contract
 # tests build static frames with this schema so the parse chain is
 # exercised without a broker.

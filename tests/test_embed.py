@@ -103,42 +103,3 @@ def test_feeds_knn_join(spark):
     )
     nn = knn_join_brute(emb, k=3).toPandas()
     assert (nn.groupby("src_id").size() == 3).all()
-
-
-def test_streaming_column_matches_batch_exactly(spark, tmp_path):
-    from flink_rtcef_spark.operators.embed import hashed_embedding_column
-
-    docs = load_table(spark, SF_SMOKE, "documents").limit(60)
-    src = tmp_path / "embsrc"
-    docs.select("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(
-        str(src)
-    )
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = (
-        stream.select(
-            "doc_id", hashed_embedding_column(dim=DIM).alias("embedding")
-        )
-        .writeStream.format("memory")
-        .queryName("emb_stream")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    got = (
-        spark.sql("SELECT * FROM emb_stream")
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    q.stop()
-    want = (
-        hashed_text_embedding(docs, dim=DIM)
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    assert list(got.index) == list(want.index)
-    for i in got.index:
-        a = np.asarray(got.loc[i, "embedding"])
-        b = np.asarray(want.loc[i, "embedding"])
-        assert (a == b).all(), i

@@ -111,62 +111,6 @@ def test_auto_router_logs_why_it_probes(spark, caplog):
     assert (100, 101) in set(zip(got["id_a"], got["id_b"]))
 
 
-def test_levenshtein_verify_matches_duckdb(spark):
-    import duckdb
-
-    from flink_rtcef_spark.operators.dedup import (
-        levenshtein_verify,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-    from flink_rtcef_spark.sources.io import load_table
-    from tests.conftest import SF_SMOKE
-    from tools.check_oracle import compare
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    pairs = lsh_candidate_pairs(minhash_signatures(docs))
-    sdf = levenshtein_verify(pairs, docs, max_dist=40).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF_SMOKE}/documents.parquet')"
-    )
-    pd_pairs = pairs.toPandas()
-    con.register("cand", pd_pairs)
-    ddf = con.execute(
-        """
-        SELECT c.id_a, c.id_b,
-               CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist
-        FROM cand c
-        JOIN documents a ON a.doc_id = c.id_a
-        JOIN documents b ON b.doc_id = c.id_b
-        WHERE levenshtein(a.text, b.text) <= 40
-        """
-    ).df()
-    problems = compare("levenshtein_verify", sdf, ddf)
-    assert not problems, problems
-
-
-def test_levenshtein_threshold_short_circuit(spark):
-    from flink_rtcef_spark.operators.dedup import levenshtein_verify
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox"),
-            (2, "the quick brown fix"),      # dist 1 from doc 1
-            (3, "a completely different sentence entirely"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3)], "id_a long, id_b long"
-    )
-    got = levenshtein_verify(pairs, docs, max_dist=3).collect()
-    assert len(got) == 1
-    assert got[0]["id_a"] == 1 and got[0]["id_b"] == 2
-    assert got[0]["edit_dist"] == 1
-
-
 def test_keep_best_in_component(spark):
     from flink_rtcef_spark.operators.dedup import keep_best_in_component
 

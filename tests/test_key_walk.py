@@ -14,6 +14,10 @@ import pytest
 from flink_rtcef_spark.models.hmm import run_trace
 from flink_rtcef_spark.models.mc import transition_counts
 from flink_rtcef_spark.operators.cep import BatchCEP
+from flink_rtcef_spark.operators.cep_presplit import (
+    presplit_detections,
+    presplit_detections_certified,
+)
 from flink_rtcef_spark.operators.cep_register import RegisterCEP
 from flink_rtcef_spark.operators.multi_cep import MultiPatternCEP
 from flink_rtcef_spark.plans.compiler import compile_pattern, compile_patterns
@@ -99,12 +103,22 @@ def _forecasts(df):
     return _ab_forecaster(df).forecasts(df)
 
 
+def _presplit(run):
+    return lambda df: run(
+        df, compile_pattern(SEQ_AB, DECLS), shard_span=10, warmup=5, **COLS
+    )
+
+
 ID_OPERATORS = {
     "cep": (_cep(SEQ_AB), "detection_event_id"),
     "cep_windowed": (_cep(SEQ_AB + "{window:5}"), "detection_event_id"),
     "multi": (_multi, "detection_event_id"),
     "register": (_register("detections"), "detection_event_id"),
     "forecast": (_forecasts, "event_id"),
+    "presplit": (_presplit(presplit_detections), "detection_event_id"),
+    "presplit_certified": (
+        _presplit(presplit_detections_certified), "detection_event_id"
+    ),
 }
 
 

@@ -18,9 +18,7 @@ from flink_rtcef_spark.operators.dedup import (
 from flink_rtcef_spark.operators.multimodal import (
     extract_features,
     fake_decode,
-    frame_sample_plan,
     real_decode_stub,
-    resize_plan,
     synthesize_media,
 )
 from flink_rtcef_spark.operators.similarity import (
@@ -151,14 +149,6 @@ def test_multimodal_plumbing(spark):
         feats.sort_values("media_id").reset_index(drop=True),
         feats2.sort_values("media_id").reset_index(drop=True),
     )
-    # frame sampling expands only videos, JVM-side
-    frames = frame_sample_plan(media, every_n=7).toPandas()
-    n_videos = media.filter(F.col("media_type") == "video").count()
-    assert frames.media_id.nunique() == n_videos
-    assert (frames.frame_idx % 7 == 0).all()
-    # resize plan preserves aspect and caps the long side
-    dims = resize_plan(media, max_side=64).select("target_dims").toPandas()
-    assert all(d["width"] <= 64 and d["height"] <= 64 for d in dims.target_dims)
 
 
 def test_real_decode_stub_raises():

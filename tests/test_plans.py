@@ -68,15 +68,9 @@ def test_aggregation_is_partial_then_final(spark):
 
 
 def test_topk_compiles_to_take_ordered(spark):
-    # topk_events left the oracle registry in r3 (slot given to
-    # pii_redaction) but the TakeOrdered physical shape stays asserted
-    from flink_rtcef_spark.queries.relational import topk_events
-
-    df = topk_events(spark, SF_ORACLE)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "TakeOrderedAndProject" in plan
+    # a global orderBy+limit (cosine_topk's final top-k) plans as a
+    # TakeOrdered heap, never a full sort
+    assert "TakeOrderedAndProject" in plan_of(spark, "cosine_topk")
 
 
 def test_pairs_first_join_for_lsh_verify(spark):
@@ -305,14 +299,17 @@ def test_kmv_prefilter_cuts_rows_before_exchange(spark):
 
 
 def test_no_nested_loop_joins_sneak_into_registry(spark):
-    """Every driver query's physical plan is free of
+    """Every driver and retired query's physical plan is free of
     BroadcastNestedLoopJoin, except the three known single-row
     constant broadcasts (query vector / corpus stats) where the build
     side is 1 row by construction.  A new name appearing here means an
     all-pairs plan regressed into the registry."""
+    from tests.test_retired_queries import RETIRED
+
     allowed = {"cosine_topk", "unigram_perplexity", "bm25_topk"}
     offenders = {}
-    for name, fn in q.QUERIES.items():
+    retired = [(name, fn) for name, fn, _ in RETIRED]
+    for name, fn in [*q.QUERIES.items(), *retired]:
         df = fn(spark, SF_ORACLE)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

@@ -8,21 +8,30 @@ The driver cap is 50 entries; every retired query keeps the same
 Spark-vs-DuckDB hash gate here AT THE DRIVER'S SCALE (sf0.01, not the
 suite's usual sf0.001) so deregistration never means unverified, and
 ``test_registry_holds_driver_cap`` fails the suite if the registry
-ever outgrows the cap again."""
+ever changes from the curated 50.  ``RETIRED`` is the one table of the
+retirees: the sf0.001 oracle sweep and the nested-loop-join plan gate
+walk it next to the registry."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
 
+from flink_rtcef_spark import queries as q
 from flink_rtcef_spark.sources.io import TABLES
 from tests.conftest import SF_ORACLE
 
 from tools.check_oracle import compare
 
+# registration order is import order: load the registry the way the
+# driver does before this module imports any query module by name
+q.load_all()
+from flink_rtcef_spark.queries import cep_queries, pipeline, relational  # noqa: E402
+
 # The driver's CORRECTNESS check covers at most this many registry
 # entries (observed r6: registry 54, CORRECTNESS_r06.json rows 50 —
-# insertion order, last 4 dropped).
+# insertion order, last 4 dropped; r9 and r10 registered 63 and still
+# showed 50 rows).
 #
 # DRIVER_CAP is an OBSERVED constant, not a published one.  If the
 # driver ever raises its window, this repo would self-limit needlessly
@@ -34,28 +43,33 @@ from tools.check_oracle import compare
 # observed cap in that round's docs/r{N}-notes.md.
 DRIVER_CAP = 50
 
+#: the driver-checked registry, in insertion order
+CURATED = [
+    "pricing_summary", "tumbling_window_agg", "confusion_metrics",
+    "interval_join_eval", "broadcast_join_enrich", "rollup_revenue",
+    "topk_per_group", "ngram_counts", "geofence_within", "bitstring_decode",
+    "json_extract_props", "semi_anti_join", "fmm_transition_mle",
+    "sessionize", "asof_prior_click", "range_join_purchase_clicks",
+    "interval_overlap_orders", "sliding_window_agg",
+    "cep_seq_contiguous_sql", "cep_nonoverlap_sql", "cep_register_gtattr",
+    "cep_sdfa_detect", "dedup_exact", "langid_heuristic", "text_quality",
+    "minhash_signatures", "ngram_jaccard_dedup", "embedding_near_dup",
+    "embedding_near_dup_lsh", "token_counts_bpe", "ann_lsh_topk",
+    "ann_ivf_topk", "multimodal_features", "cosine_topk",
+    "dedup_components", "sample_stratified", "pack_sequences_2k",
+    "corpus_curation", "chunk_documents_50_30", "decontam_hits",
+    "pii_redaction", "repetition_signals", "unigram_perplexity",
+    "bm25_topk", "dedup_paragraphs", "semantic_dedup", "domain_pagerank",
+    "hll_distinct_texts", "hist_quantiles_value", "decontam_bloom_hits",
+]
+
 
 def test_registry_holds_driver_cap():
-    """r9 shape: the curated 50 occupy the first DRIVER_CAP insertion
-    slots UNCHANGED (so even a still-capped driver checks exactly the
-    r8 set), and every entry beyond the cap is a cap-probe entry —
-    retired queries gated at sf0.01 in this module (or, for the
-    composed ``pagerank_asof_enrich``, pytest-gated in
-    tests/test_pipeline_ops.py).  Nothing can sit in the registry
-    outside the hard signal."""
-    from flink_rtcef_spark import queries as q
-    from flink_rtcef_spark.queries.cap_probe import _PROBE
-
-    q.load_all()
-    names = list(q.QUERIES)
-    probe_names = [n for n, _, _ in _PROBE]
-    # probe entries append strictly AFTER the curated cap
-    assert names[DRIVER_CAP:] == probe_names, (
-        "registry tail is not exactly the cap probe; a new @query landed "
-        "beyond the driver cap and would silently lose the per-round hard "
-        "correctness signal — retire one into this module instead"
-    )
-    assert not set(names[:DRIVER_CAP]) & set(probe_names)
+    """The registry is exactly the curated 50, in order: a new @query
+    would land beyond the driver cap and silently lose the per-round
+    hard correctness signal — retire one into this module instead."""
+    assert len(CURATED) == DRIVER_CAP
+    assert list(q.QUERIES) == CURATED
 
 
 TIME_BUCKETING_SQL = """
@@ -76,21 +90,55 @@ UNION_ASSEMBLY_SQL = """
     FROM assembled GROUP BY event_type
 """
 
+PIVOT_EVENT_COUNTS_SQL = """
+    SELECT user_id,
+           CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
+           CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
+           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
+           CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error
+    FROM events GROUP BY user_id
+"""
 
-def test_cap_probe_oracles_match_retired_gates():
-    """The cap probe re-registers each retired query with an oracle;
-    a drifted copy would make the driver check DIFFERENT SQL than the
-    retired gate here.  Pin the two relational SQLs this module also
-    owns (the rest are imported from their source modules by both)."""
-    from flink_rtcef_spark.queries import cap_probe
+LAG_DELTA_SQL = """
+    SELECT user_id, event_id,
+           COUNT(*) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_events,
+           ROUND(SUM(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS cum_value,
+           COALESCE(LAG(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id), -1) AS prev_event_id
+    FROM events
+"""
 
-    assert cap_probe.TIME_BUCKETING_SQL.split() == TIME_BUCKETING_SQL.split()
-    assert cap_probe.UNION_ASSEMBLY_SQL.split() == UNION_ASSEMBLY_SQL.split()
-    assert (
-        cap_probe.PIVOT_EVENT_COUNTS_SQL.split()
-        == PIVOT_EVENT_COUNTS_SQL.split()
-    )
-    assert cap_probe.LAG_DELTA_SQL.split() == LAG_DELTA_SQL.split()
+#: (name, fn, oracle) of every retired query, in retirement order:
+#: r3 relational, then pipeline/cep, the composed chain last.
+#: ``pagerank_asof_enrich`` (iterative PageRank feeding an as-of join)
+#: is not SQL-expressible: it has no oracle here; its plan-shape,
+#: snapshot-semantics and threading gates live in
+#: tests/test_pipeline_ops.py.
+RETIRED = [
+    ("time_bucketing", relational.time_bucketing, TIME_BUCKETING_SQL),
+    ("union_assembly", relational.union_assembly, UNION_ASSEMBLY_SQL),
+    ("pivot_event_counts", relational.pivot_event_counts, PIVOT_EVENT_COUNTS_SQL),
+    ("lag_delta_reports", relational.lag_delta_reports, LAG_DELTA_SQL),
+    ("sample_topk_group", pipeline.sample_topk_group, pipeline._TOPK_GROUP_SQL),
+    (
+        "embedding_dup_clusters",
+        pipeline.embedding_dup_clusters,
+        pipeline._EMB_COMPONENTS_SQL,
+    ),
+    ("simhash_16", pipeline.simhash_16, pipeline._SIMHASH_SQL),
+    ("doc_fingerprint", pipeline.doc_fingerprint, pipeline._DOC_FINGERPRINT_SQL),
+    ("cep_presplit_detect", cep_queries.cep_presplit_detect, cep_queries._SEQ_SQL),
+    ("lsh_candidate_pairs", pipeline.lsh_candidate_pairs, pipeline._lsh_oracle()),
+    ("ann_pq_topk", pipeline.ann_pq_topk, pipeline._pq_oracle_sql()),
+    (
+        "sample_token_budget",
+        pipeline.sample_token_budget,
+        pipeline._TOKEN_BUDGET_SQL,
+    ),
+    ("pagerank_asof_enrich", pipeline.pagerank_asof_enrich, None),
+]
+_GATES = {name: (fn, sql) for name, fn, sql in RETIRED}
 
 
 @pytest.fixture(scope="module")
@@ -104,7 +152,8 @@ def duck():
     return con
 
 
-def _check(spark, duck, fn, sql, name):
+def _check(spark, duck, name):
+    fn, sql = _GATES[name]
     sdf = fn(spark, SF_ORACLE).toPandas()
     ddf = duck.execute(sql).df()
     problems = compare(name, sdf, ddf)
@@ -112,72 +161,27 @@ def _check(spark, duck, fn, sql, name):
 
 
 def test_time_bucketing_oracle(spark, duck):
-    from flink_rtcef_spark.queries.relational import time_bucketing
-
-    _check(spark, duck, time_bucketing, TIME_BUCKETING_SQL, "time_bucketing")
+    _check(spark, duck, "time_bucketing")
 
 
 def test_union_assembly_oracle(spark, duck):
-    from flink_rtcef_spark.queries.relational import union_assembly
-
-    _check(spark, duck, union_assembly, UNION_ASSEMBLY_SQL, "union_assembly")
+    _check(spark, duck, "union_assembly")
 
 
 def test_sample_topk_group_oracle(spark, duck):
-    from flink_rtcef_spark.queries.pipeline import (
-        _TOPK_GROUP_SQL,
-        sample_topk_group,
-    )
-
-    _check(spark, duck, sample_topk_group, _TOPK_GROUP_SQL, "sample_topk_group")
+    _check(spark, duck, "sample_topk_group")
 
 
 def test_embedding_dup_clusters_oracle(spark, duck):
-    from flink_rtcef_spark.queries.pipeline import (
-        _EMB_COMPONENTS_SQL,
-        embedding_dup_clusters,
-    )
-
-    _check(
-        spark, duck, embedding_dup_clusters, _EMB_COMPONENTS_SQL,
-        "embedding_dup_clusters",
-    )
-
-
-PIVOT_EVENT_COUNTS_SQL = """
-    SELECT user_id,
-           CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
-           CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-           CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error
-    FROM events GROUP BY user_id
-"""
+    _check(spark, duck, "embedding_dup_clusters")
 
 
 def test_pivot_event_counts_oracle(spark, duck):
-    from flink_rtcef_spark.queries.relational import pivot_event_counts
-
-    _check(
-        spark, duck, pivot_event_counts, PIVOT_EVENT_COUNTS_SQL,
-        "pivot_event_counts",
-    )
-
-
-LAG_DELTA_SQL = """
-    SELECT user_id, event_id,
-           COUNT(*) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_events,
-           ROUND(SUM(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS cum_value,
-           COALESCE(LAG(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id), -1) AS prev_event_id
-    FROM events
-"""
+    _check(spark, duck, "pivot_event_counts")
 
 
 def test_lag_delta_reports_oracle(spark, duck):
-    from flink_rtcef_spark.queries.relational import lag_delta_reports
-
-    _check(spark, duck, lag_delta_reports, LAG_DELTA_SQL, "lag_delta_reports")
+    _check(spark, duck, "lag_delta_reports")
 
 
 # ---- rotated out in r4 (slots given to hist_quantiles_value /
@@ -185,20 +189,11 @@ def test_lag_delta_reports_oracle(spark, duck):
 
 
 def test_simhash_16_oracle(spark, duck):
-    from flink_rtcef_spark.queries.pipeline import _SIMHASH_SQL, simhash_16
-
-    _check(spark, duck, simhash_16, _SIMHASH_SQL, "simhash_16")
+    _check(spark, duck, "simhash_16")
 
 
 def test_doc_fingerprint_oracle(spark, duck):
-    from flink_rtcef_spark.queries.pipeline import (
-        _DOC_FINGERPRINT_SQL,
-        doc_fingerprint,
-    )
-
-    _check(
-        spark, duck, doc_fingerprint, _DOC_FINGERPRINT_SQL, "doc_fingerprint"
-    )
+    _check(spark, duck, "doc_fingerprint")
 
 
 # ---- rotated out in r7 (curating the registry back to the 50-row
@@ -208,38 +203,16 @@ def test_doc_fingerprint_oracle(spark, duck):
 
 
 def test_cep_presplit_detect_oracle(spark, duck):
-    from flink_rtcef_spark.queries.cep_queries import (
-        _SEQ_SQL,
-        cep_presplit_detect,
-    )
-
-    _check(spark, duck, cep_presplit_detect, _SEQ_SQL, "cep_presplit_detect")
+    _check(spark, duck, "cep_presplit_detect")
 
 
 def test_lsh_candidate_pairs_oracle(spark, duck):
-    from flink_rtcef_spark.queries.pipeline import (
-        _lsh_oracle,
-        lsh_candidate_pairs,
-    )
-
-    _check(
-        spark, duck, lsh_candidate_pairs, _lsh_oracle(), "lsh_candidate_pairs"
-    )
+    _check(spark, duck, "lsh_candidate_pairs")
 
 
 def test_ann_pq_topk_oracle(spark, duck):
-    from flink_rtcef_spark.queries.pipeline import _pq_oracle_sql, ann_pq_topk
-
-    _check(spark, duck, ann_pq_topk, _pq_oracle_sql(), "ann_pq_topk")
+    _check(spark, duck, "ann_pq_topk")
 
 
 def test_sample_token_budget_oracle(spark, duck):
-    from flink_rtcef_spark.queries.pipeline import (
-        _TOKEN_BUDGET_SQL,
-        sample_token_budget,
-    )
-
-    _check(
-        spark, duck, sample_token_budget, _TOKEN_BUDGET_SQL,
-        "sample_token_budget",
-    )
+    _check(spark, duck, "sample_token_budget")

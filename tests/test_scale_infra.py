@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from flink_rtcef_spark.sources.bucketing import (
     assert_no_exchange,
-    co_located_join,
     plan_has_exchange,
     write_bucketed,
 )
@@ -41,7 +40,9 @@ def test_bucketed_join_has_no_exchange(spark, no_broadcast):
         write_bucketed(left, "t_bkt_left", "user_id", 8, sort_cols="user_id")
         write_bucketed(right, "t_bkt_right", "user_id", 8, sort_cols="user_id")
 
-        joined = co_located_join(spark, "t_bkt_left", "t_bkt_right", on="user_id")
+        joined = spark.table("t_bkt_left").join(
+            spark.table("t_bkt_right"), on="user_id"
+        )
         assert_no_exchange(joined)  # the co-location payoff
 
         # control: the same join on plain (unbucketed) frames shuffles

@@ -252,7 +252,7 @@ def test_approx_heavy_hitters_empty_input(spark):
 # -------------------------------------------------------- KMV / theta --
 def test_kmv_matches_duckdb_and_estimates(spark, docs):
     from flink_rtcef_spark.operators.sketch import (
-        kmv_distinct_estimate,
+        kmv_overlap_estimates,
         kmv_sketch,
         kmv_sketch_sql,
     )
@@ -270,8 +270,10 @@ def test_kmv_matches_duckdb_and_estimates(spark, docs):
         .fetchall()
     ]
     assert got == sorted(want)
+    # a sketch's union with itself is its distinct-count estimate
     exact = docs.select("text").distinct().count()
-    assert kmv_distinct_estimate(sk, k=64) == pytest.approx(exact, rel=0.4)
+    est = kmv_overlap_estimates(sk, sk, k=64)["union"]
+    assert est == pytest.approx(exact, rel=0.4)
 
 
 def test_kmv_prefilter_path_equals_exact_object(spark):
@@ -325,14 +327,14 @@ def test_kmv_overlap_estimates_accuracy(spark):
 
 def test_kmv_small_domain_exact(spark):
     from flink_rtcef_spark.operators.sketch import (
-        kmv_distinct_estimate,
+        kmv_overlap_estimates,
         kmv_sketch,
     )
 
     df = spark.createDataFrame([(str(i % 20),) for i in range(500)], "v string")
     sk = kmv_sketch(df, "v", k=64)
     assert sk.count() == 20
-    assert kmv_distinct_estimate(sk, k=64) == 20.0
+    assert kmv_overlap_estimates(sk, sk, k=64)["union"] == 20.0
 
 
 def test_approx_heavy_hitters_row_keyed_sampling_recall(spark):

@@ -1,11 +1,8 @@
-"""Source-layer tests: maritime parse (A4), configurable-field
-normalization (A5), metrics CSV shape."""
+"""Source-layer tests: maritime parse (A4), metrics CSV shape."""
 
 from __future__ import annotations
 
-import pandas as pd
-
-from flink_rtcef_spark.sources.io import normalize_events, parse_maritime
+from flink_rtcef_spark.sources.io import parse_maritime
 from flink_rtcef_spark.sources.schemas import BITSTRING_FLAGS, MARITIME_RAW_SCHEMA
 
 
@@ -28,22 +25,6 @@ def test_parse_maritime_bitstring_and_gap(spark):
     assert normal["slow_motion_start"] == 1.0
     assert sum(normal[f] for f in BITSTRING_FLAGS) == 1.0
     assert all(gap[f] == -1.0 for f in BITSTRING_FLAGS)
-
-
-def test_normalize_events_configurable_fields(spark):
-    pdf = pd.DataFrame(
-        {
-            "pan": ["c1", "c2", None],
-            "timestamp": [10, 20, 30],
-            "is_fraud": [0.0, 1.0, 0.0],
-        }
-    )
-    out = normalize_events(
-        spark.createDataFrame(pdf), id_field="pan", constant_event_type="txn"
-    ).toPandas()
-    assert list(out["key"]) == ["c1", "c2"]  # null id dropped
-    assert list(out["event_type"]) == ["txn", "txn"]
-    assert list(out["timestamp"]) == [10, 20]
 
 
 def test_metrics_csv_shape():

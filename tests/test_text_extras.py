@@ -160,54 +160,6 @@ def test_degenerate_inputs_pass_through(spark):
     assert temperature_sample(src_empty, "source", "id", alpha=1.0).count() == 0
 
 
-def test_compression_ratio_orders_redundancy(spark):
-    from flink_rtcef_spark.operators.text import compression_ratio_column
-
-    df = spark.createDataFrame(
-        [
-            (1, "spam " * 200),                        # highly repetitive
-            (2, "the quick brown fox jumps over the lazy dog " * 5),
-            (3, "k9$Qz!vX2@mW#pL8&nR4*jT6^hB1(cF3)dG5"),  # high entropy
-            (4, ""),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: r["ratio"]
-        for r in df.select(
-            "doc_id", compression_ratio_column().alias("ratio")
-        ).collect()
-    }
-    assert got[4] == 0.0
-    assert got[1] < got[2] < got[3]
-    assert got[1] < 0.05 and got[3] > 0.8
-
-
-def test_compression_ratio_streams(spark, tmp_path):
-    """Map-only column: runs unchanged on an append-mode stream."""
-    from flink_rtcef_spark.operators.text import compression_ratio_column
-
-    src = tmp_path / "crs"
-    df = spark.createDataFrame(
-        [(1, "aaaa " * 50), (2, "unique words here")],
-        "doc_id long, text string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(str(src))
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = (
-        stream.select("doc_id", compression_ratio_column().alias("ratio"))
-        .writeStream.format("memory")
-        .queryName("cr_stream")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    got = spark.sql("SELECT * FROM cr_stream").toPandas()
-    q.stop()
-    want = df.select("doc_id", compression_ratio_column().alias("ratio")).toPandas()
-    assert sorted(map(tuple, got.to_numpy())) == sorted(map(tuple, want.to_numpy()))
-
-
 # ----------------------------------------------------------- upsampling --
 def test_epoch_upsample_integer_weights_exact(spark):
     import pyspark.sql.functions as F
