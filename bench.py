@@ -40,12 +40,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from flink_rtcef_spark import queries as q  # noqa: E402
-from flink_rtcef_spark.session import get_spark  # noqa: E402
-
-# registration order is import order: load the registry the way the
-# driver does before importing any query module by name
-q.load_all()
 from flink_rtcef_spark.queries import cep_queries, pipeline  # noqa: E402
+from flink_rtcef_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
     "pricing_summary",

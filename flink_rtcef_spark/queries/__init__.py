@@ -6,7 +6,8 @@ query here.  Each entry pairs a Spark DataFrame implementation with an
 equivalent ANSI-SQL oracle that DuckDB runs on the same parquet tables;
 the driver hash-compares the two at sf0.01.
 
-Registration is decorator-based; modules register on import.
+Registration is decorator-based; modules register on import, and
+``load_all`` fixes the registry's order.
 """
 
 from __future__ import annotations
@@ -36,7 +37,15 @@ def query(name: str, oracle: str | None = None):
 
 
 def load_all() -> None:
-    """Import every query module (side effect: registration)."""
-    from flink_rtcef_spark.queries import relational  # noqa: F401
-    from flink_rtcef_spark.queries import cep_queries  # noqa: F401
-    from flink_rtcef_spark.queries import pipeline  # noqa: F401
+    """Import every query module (side effect: registration), then put
+    ``QUERIES`` and ``ORACLES`` in registry order: by module, in the
+    order below, each module's entries in definition order, whichever
+    module a process imported first."""
+    from flink_rtcef_spark.queries import cep_queries, pipeline, relational
+
+    rank = {m.__name__: i for i, m in enumerate((relational, cep_queries, pipeline))}
+    ordered = sorted(QUERIES.items(), key=lambda kv: rank.get(kv[1].__module__, len(rank)))
+    QUERIES.clear()
+    QUERIES.update(ordered)
+    oracles = [(name, ORACLES.pop(name)) for name in QUERIES if name in ORACLES]
+    ORACLES.update(oracles)

@@ -17,7 +17,8 @@ from __future__ import annotations
 
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: the most rows a driver route collects; a larger frame stays
 #: distributed (the fast path's microbatch bound, shared by the
@@ -30,17 +31,21 @@ DRIVER_MAX_ROWS = 200_000
 NARROW_ROW_BYTES = 40
 
 
-def max_rows(df: DataFrame) -> int:
-    """The driver bound for ``df``: ``DRIVER_MAX_ROWS`` for a row as
-    narrow as ``symbolized``'s, proportionally fewer rows for a wider
-    one, so a probe collects at most the bytes the bound was sized for.
+def max_rows(df: DataFrame | StructType) -> int:
+    """The driver bound for ``df``, a frame or a frame's schema:
+    ``DRIVER_MAX_ROWS`` for a row as narrow as ``symbolized``'s,
+    proportionally fewer rows for a wider one, so a probe collects at
+    most the bytes the bound was sized for.
 
     A row's width is Spark's own estimate, the schema's ``defaultSize``
     (20 bytes a string, 8 a long or double, 100 a binary), the one its
     planner uses for a relation without statistics; a string longer
     than 20 bytes is under-counted."""
-    width = df._jdf.schema().defaultSize()
-    return DRIVER_MAX_ROWS * NARROW_ROW_BYTES // max(width, NARROW_ROW_BYTES)
+    if isinstance(df, StructType):
+        jschema = SparkSession.active()._jsparkSession.parseDataType(df.json())
+    else:
+        jschema = df._jdf.schema()
+    return DRIVER_MAX_ROWS * NARROW_ROW_BYTES // max(jschema.defaultSize(), NARROW_ROW_BYTES)
 
 
 def collect_bounded(df: DataFrame, max_rows: int | None) -> pa.Table | None:

@@ -11,12 +11,17 @@ already collected to the driver (an Arrow table carrying the
 ``bucket_col`` column) is written with ``pyarrow.parquet``, one file
 per bucket and no Spark job; a larger one with
 ``df.write.partitionBy("bucket_id")``.  Both writers produce the same
-layout, so a lake may mix them.
+layout, so a lake may mix them.  Assembly reads the lake back the same
+way round: within the driver bound, with pyarrow into an in-memory
+frame of the schema and rows Spark's reader gives; above it, with
+``spark.read.parquet``.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 import uuid
 from dataclasses import dataclass, field
@@ -24,10 +29,18 @@ from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from flink_rtcef_spark.streaming import bounded
+
+#: the footer key under which Spark's parquet writer keeps its schema
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -105,9 +118,69 @@ class BucketCollector:
 
     def assemble(self, spark: SparkSession, buckets_range: list[int]) -> DataFrame:
         """Union the requested buckets (ModelFactoryEngine.assembleDataset
-        :130-182) — partition pruning keeps this a K-bucket scan."""
+        :130-182) as ``spark.read.parquet(base_path)`` filtered to them.
+
+        Within the driver bound (``bounded.max_rows`` of the lake's row
+        width), counted from the parquet footers, their files are read
+        with pyarrow, as the reference's factory reads its bucket files
+        in its own process, into an in-memory frame of that read's
+        schema and rows: no Spark job runs here.  Above it, Spark's
+        reader scans them, partition pruning keeping it a K-bucket
+        scan."""
+        buckets = [int(b) for b in buckets_range]
+        files = self._data_files()
+        if files:
+            schema = self._lake_schema(files)
+            covered = ds.dataset(
+                [f for b in buckets for f in files.get(b, [])],
+                schema=to_arrow_schema(schema), format="parquet",
+                partitioning="hive", partition_base_dir=self.base_path,
+            )
+            if covered.count_rows() <= bounded.max_rows(schema):
+                return spark.createDataFrame(covered.to_table(), schema)
         df = spark.read.parquet(self.base_path)
-        return df.filter(F.col("bucket_id").isin([int(b) for b in buckets_range]))
+        return df.filter(F.col("bucket_id").isin(buckets))
+
+    def _data_files(self) -> dict[int, list[str]]:
+        """The lake's data files by bucket, as Spark's reader lists them
+        (names starting with ``_`` or ``.`` skipped); empty when the
+        lake holds no file, or an entry that is no ``bucket_id=<int>``
+        dir, which only Spark's reader reads."""
+        files: dict[int, list[str]] = {}
+        try:
+            for name in os.listdir(self.base_path):
+                if name[0] in "_.":
+                    continue
+                b = re.fullmatch(r"bucket_id=(-?\d+)", name)
+                if b is None:
+                    return {}
+                part = os.path.join(self.base_path, name)
+                paths = [os.path.join(part, f) for f in os.listdir(part) if f[0] not in "_."]
+                if paths:
+                    files[int(b[1])] = paths
+        except OSError:
+            return {}
+        return files
+
+    @staticmethod
+    def _lake_schema(files: dict[int, list[str]]) -> StructType:
+        """The schema of ``spark.read.parquet`` over ``files``' lake.
+        With ``mergeSchema`` off, Spark reads one footer, the first
+        file's by path: its Spark schema when a Spark writer left one,
+        else its parquet types (a timestamp without a time zone is
+        TIMESTAMP_NTZ).  Every column is nullable, and ``bucket_id``
+        follows, an int when every bucket fits one, else a bigint."""
+        footer = pq.read_schema(min(f for names in files.values() for f in names))
+        written = (footer.metadata or {}).get(_SPARK_SCHEMA)
+        data = (
+            StructType.fromJson(json.loads(written)) if written
+            else from_arrow_schema(footer, prefer_timestamp_ntz=True)
+        )
+        bucket = IntegerType() if all(-(2**31) <= b < 2**31 for b in files) else LongType()
+        return StructType(
+            [StructField(f.name, f.dataType, True, f.metadata) for f in data]
+            + [StructField("bucket_id", bucket, True)]
+        )
 
     def ack(self, buckets_range: list[int]) -> list[int]:
         """Factory ACK -> retention: delete buckets strictly below the

@@ -52,11 +52,13 @@ class TrainingSet:
     """One session's training data, built once by ``ModelFactory.prepare``:
     the events in ``BatchCEP.key_sorted`` shape — a materialized Spark
     frame, or below the driver bound its pandas twin
-    (``key_sorted_pandas``) — with their row count and context counts
-    (``cst`` is None under the min-data guard).  Leaving its ``with``
+    (``key_sorted_pandas``) — with their row count, context counts
+    (``cst`` is None under the min-data guard) and ``route``, the one
+    its rows took (``driver`` | ``distributed``).  Leaving its ``with``
     block releases a materialization, on every exit path."""
 
     frame: DataFrame | pd.DataFrame
+    route: str
     n: int = 0
     cst: CounterSuffixTree | None = None
 
@@ -121,13 +123,13 @@ class ModelFactory:
         table = bounded.collect_bounded(symbolized, bounded.max_rows(symbolized))
         if table is not None:
             frame = key_sorted_pandas(table)
-            data = TrainingSet(frame, len(frame))
+            data = TrainingSet(frame, "driver", len(frame))
             if data.n >= MIN_EVENTS:
                 data.cst = CounterSuffixTree.from_counts(
                     *cst_counts_pandas(frame, self.max_order)
                 )
             return data
-        data = TrainingSet(cep.key_sorted(events).localCheckpoint(eager=True))
+        data = TrainingSet(cep.key_sorted(events).localCheckpoint(eager=True), "distributed")
         try:
             data.n = data.frame.count()
             if data.n >= MIN_EVENTS:

@@ -9,9 +9,12 @@ bounded driver route (streaming/bounded.py): a report window within
 ``bounded.max_rows`` (``DRIVER_MAX_ROWS``, fewer for wide rows) is
 collected once, as Arrow, and that one collect feeds both the
 collector's bucket write and the engine's scorer; the factory's
-training set takes the same route.  Above the bound each role runs its
-distributed Spark plan (the partitioned write, ``ForecastCEP.confusion``,
-the materialized key shuffle), so the loop scales past driver memory.
+training set takes the same route, and the collector reads the lake
+back for it with pyarrow, so an instruction below the bound is one
+Spark job.  Above the bound each role runs its distributed Spark plan
+(the partitioned write, ``ForecastCEP.confusion``, Spark's parquet
+read, the materialized key shuffle), so the loop scales past driver
+memory.
 
 Semantic deltas vs the reference, both documented in their own
 differences.md spirit:
@@ -159,6 +162,10 @@ class RTCEFLoop:
             return "", ""
         assembled = self.collector.assemble(self.spark, covered)
         with self.factory.prepare(assembled) as data:
+            log.info(
+                "%s: training set of %d rows over buckets %s, %s route",
+                instr.instruction_type, data.n, covered, data.route,
+            )
             if instr.instruction_type == "optimize":
                 results, final = self._run_optimize_session(data)
             else:

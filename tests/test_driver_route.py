@@ -10,6 +10,7 @@ values above 2**53, and 7-row Arrow batches."""
 
 from __future__ import annotations
 
+import logging
 import random
 
 import numpy as np
@@ -28,7 +29,7 @@ from flink_rtcef_spark.streaming import bounded
 from flink_rtcef_spark.streaming.collector import BucketCollector
 from flink_rtcef_spark.streaming.factory import ModelFactory
 from flink_rtcef_spark.streaming.loop import RTCEFLoop
-from flink_rtcef_spark.streaming.observer import Observer
+from flink_rtcef_spark.streaming.observer import Instruction, Observer
 
 PAT = ";(IsEventTypePredicate(A),IsEventTypePredicate(B)){order:1}{partitionBy:k}"
 DECLS = "~(IsEventTypePredicate(A),IsEventTypePredicate(B))"
@@ -196,11 +197,14 @@ def test_key_sorted_pandas_keeps_ids_exact_and_nulls_first():
     assert pdf["event_id"].tolist() == [None, BIG + 2, BIG + 3, BIG + 1]
 
 
-def test_mixed_lake_assembles_with_one_schema(spark, tmp_path):
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_mixed_lake_assembles_with_one_schema(spark, tmp_path, request, route):
     """A lake whose buckets were written by both writers (the window's
     Arrow table and a Spark write) assembles with the schema and rows of
     an all-Spark lake, ids above 2**53 and NULL ids included, and the
-    factory ACK deletes buckets of both kinds."""
+    factory ACK deletes buckets of both kinds, on both read routes."""
+    if route == "distributed":
+        request.getfixturevalue("distributed_route")
     rows = _rows(359)
     df = spark.createDataFrame(rows, SCHEMA).selectExpr(
         "*", "timestamp_seconds(timestamp) AS event_time",
@@ -235,6 +239,105 @@ def test_mixed_lake_assembles_with_one_schema(spark, tmp_path):
     assert not (lake / "bucket_id=120").exists()
     assert (lake / "bucket_id=240").exists()
     assert mixed.assemble(spark, [240]).count() == windows[2].count()
+
+
+def _scans_parquet(df) -> bool:
+    return "FileScan parquet" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "first, offset",
+    [("spark", 0), ("arrow", 0), ("arrow", 120 * 2**25)],  # 120 * 2**25 > 2**31
+    ids=["spark-bucket-first", "arrow-bucket-first", "arrow-bucket-first-bigint-buckets"],
+)
+def test_driver_assemble_equals_the_lake_read(spark, tmp_path, first, offset):
+    """Below the bound ``assemble`` reads the covered buckets with
+    pyarrow, not Spark's parquet scan, and gives what
+    ``spark.read.parquet(lake)`` filtered to them gives: schema, dtypes
+    and rows.  The lake mixes both writers, its first file by path from
+    either, and only that file has a ``note`` column, so the lake's
+    schema is that file's; it holds TIMESTAMP, TIMESTAMP_NTZ, double and
+    boolean columns, NULL ids and ids above 2**60, Spark's ``_SUCCESS``
+    and ``.crc`` files, and buckets past an int's range.  After ``ack``
+    the deleted buckets stay out, and the schema loses ``note``."""
+    rows = [(k, ts + offset, i, e) for k, ts, i, e in _rows(479)]
+    df = spark.createDataFrame(rows, SCHEMA).selectExpr(
+        "*", "timestamp_seconds(timestamp) AS event_time",
+        "CAST(timestamp_seconds(timestamp) AS TIMESTAMP_NTZ) AS wall_time",
+        "CAST(timestamp AS double) / 7 AS x", "timestamp % 2 = 0 AS flag",
+    )
+    lake = tmp_path / "lake"
+    col = BucketCollector(str(lake), bucket_size=120)
+    for i in range(4):
+        lo = offset + 120 * i
+        w = df.filter(f"timestamp >= {lo} AND timestamp < {lo + 120}")
+        if i == 0:
+            w = w.withColumn("note", F.lit("first"))
+        # the bucket dirs sort by path in write order
+        if (i % 2 == 0) == (first == "spark"):
+            col.collect(w)
+        else:
+            col.collect(w.withColumn("bucket_id", col.bucket_col()).toArrow())
+    buckets = sorted(col.seen_buckets)
+    assert (lake / "_SUCCESS").exists() and list(lake.glob("bucket_id=*/.*.crc"))
+
+    def assert_same(covered):
+        got = col.assemble(spark, covered)
+        want = spark.read.parquet(str(lake)).filter(F.col("bucket_id").isin(covered))
+        assert not _scans_parquet(got) and _scans_parquet(want)
+        assert got.schema == want.schema
+        assert got.dtypes == want.dtypes
+        assert got.orderBy("timestamp").collect() == want.orderBy("timestamp").collect()
+        return got
+
+    got = assert_same(buckets[1:])
+    types = dict(got.dtypes)
+    assert (types["event_time"], types["wall_time"], types["x"], types["flag"]) == (
+        "timestamp", "timestamp_ntz", "double", "boolean"
+    )
+    assert types["bucket_id"] == ("bigint" if offset else "int")
+    assert {r.note for r in got.select("note").collect()} == {None}
+    ids = [r.id for r in got.orderBy("timestamp").collect()]
+    assert None in ids and max(i for i in ids if i is not None) >= BIG
+    assert got.count() == df.filter(f"timestamp >= {buckets[1]}").count()
+
+    assert col.ack(buckets[2:]) == buckets[:2]
+    got = assert_same(buckets)
+    assert sorted({r.bucket_id for r in got.collect()}) == buckets[2:]
+    assert "note" not in got.columns
+
+
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_instruction_reads_the_lake_on_its_route(spark, tmp_path, request, caplog, route):
+    """Below the bound an optimise instruction runs exactly one Spark
+    job, the training set's bounded collect over the lake read back
+    with pyarrow; under ``distributed_route`` it reads the lake through
+    Spark's parquet scan.  Either way it logs its training set's route,
+    row count and covered buckets."""
+    if route == "distributed":
+        request.getfixturevalue("distributed_route")
+    events = _events(spark)
+    loop = _loop(spark, str(tmp_path / "lake"), Observer(low_score=-2.0))
+    for lo in (0, 120, 240):
+        loop.process_batch(events.filter(f"timestamp >= {lo} AND timestamp < {lo + 120}"), lo + 120)
+    assembled = []
+    assemble = loop.collector.assemble
+    loop.collector.assemble = lambda *a: assembled.append(assemble(*a)) or assembled[-1]
+    sc = spark.sparkContext
+    group = f"instruction-{id(loop)}"
+    sc.setJobGroup(group, "one optimise instruction")
+    caplog.set_level(logging.INFO, logger="flink_rtcef_spark.streaming.loop")
+    try:
+        assert loop.handle_instruction(Instruction("optimize", 360, 0.0)) == ("deploy", "")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert _scans_parquet(assembled[0]) == (route == "distributed")
+    assert jobs == 1 if route == "driver" else jobs > 1
+    n = _events(spark).filter("timestamp < 360").count()
+    assert f"optimize: training set of {n} rows over buckets [0, 120, 240], {route} route" in [
+        r.getMessage() for r in caplog.records
+    ]
 
 
 def test_plain_driver_window_is_one_spark_job(spark, tmp_path):

@@ -101,7 +101,10 @@ def test_optimizer_converges_deterministically():
     assert y1 < f([0.001, 0.0]) * 0.5  # actually improved over a corner
 
 
-def test_collector_buckets_and_retention(spark, tmp_path):
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_collector_buckets_and_retention(spark, tmp_path, request, route):
+    if route == "distributed":
+        request.getfixturevalue("distributed_route")
     col = BucketCollector(base_path=str(tmp_path / "lake"), bucket_size=100, last_k=2)
     pdf = pd.DataFrame(
         {"k": ["a"] * 6, "timestamp": [10, 50, 120, 180, 250, 260], "id": range(6), "event_type": list("ABABAB")}
