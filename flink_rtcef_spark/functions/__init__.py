@@ -10,6 +10,7 @@ from flink_rtcef_spark.functions.metrics import (
     precision_expr,
     recall_expr,
     f1_expr,
+    mcc,
     mcc_expr,
     confusion_agg,
 )
@@ -24,6 +25,7 @@ __all__ = [
     "precision_expr",
     "recall_expr",
     "f1_expr",
+    "mcc",
     "mcc_expr",
     "confusion_agg",
 ]

@@ -13,6 +13,8 @@ Catalyst codegens it.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -49,6 +51,21 @@ def mcc_expr(tp: Column, tn: Column, fp: Column, fn: Column) -> Column:
     fdr, fnr, fpr, fomr = 1.0 - p, 1.0 - r, 1.0 - spec, 1.0 - npv
     return F.when(any_zero, F.lit(0.0)).otherwise(
         F.sqrt(p * r * spec * npv) - F.sqrt(fdr * fnr * fpr * fomr)
+    )
+
+
+def mcc(tp: int, tn: int, fp: int, fn: int) -> float:
+    """:func:`mcc_expr` over Python counts, on the driver: the same
+    overflow-safe form (Scores.java:40-68), 0.0 when any marginal is
+    0."""
+    if (tp + fp) == 0 or (tp + fn) == 0 or (tn + fp) == 0 or (tn + fn) == 0:
+        return 0.0
+    p = tp / (tp + fp)
+    r = tp / (tp + fn)
+    spec = tn / (tn + fp)
+    npv = tn / (tn + fn)
+    return math.sqrt(p * r * spec * npv) - math.sqrt(
+        (1 - p) * (1 - r) * (1 - spec) * (1 - npv)
     )
 
 

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_rtcef_spark.functions.metrics import mcc
 from flink_rtcef_spark.models.spst import SPST
 from flink_rtcef_spark.operators.cep import BatchCEP, _KernelSpec, _out_schema, key_segments
 
@@ -596,20 +597,6 @@ def reference_report_trajectory(
 
     # --- global MetricsAggregator (driver-side, like the reference's
     # single ProcessAllWindowFunction with its in-memory HashMap) ---
-    def _mcc(tp: float, tn: float, fp: float, fn: float) -> float:
-        # Scores.java:21-57 (the overflow-safe product form; 0.0 when
-        # any marginal is empty)
-        tpfp, tpfn, tnfp, tnfn = tp + fp, tp + fn, tn + fp, tn + fn
-        if 0 in (tpfp, tpfn, tnfp, tnfn):
-            return 0.0
-        prec, rec = tp / tpfp, tp / tpfn
-        spec, npv = tn / tnfp, tn / tnfn
-        import math
-
-        return math.sqrt(prec * rec * spec * npv) - math.sqrt(
-            (1 - prec) * (1 - rec) * (1 - spec) * (1 - npv)
-        )
-
     lr = local_reports.sort_values(["report_ts", "key"])
     lr["window"] = (lr["report_ts"] // dist) * dist
     history: dict[str, tuple[int, int, int, int]] = {}
@@ -628,8 +615,8 @@ def reference_report_trajectory(
         rows.append(
             {
                 "timestamp": int(grp["report_ts"].max()),
-                "runtime_mcc": _mcc(gtp, gtn, gfp, gfn),
-                "batch_mcc": _mcc(btp, btn, bfp, bfn),
+                "runtime_mcc": mcc(gtp, gtn, gfp, gfn),
+                "batch_mcc": mcc(btp, btn, bfp, bfn),
                 "tp": gtp, "tn": gtn, "fp": gfp, "fn": gfn,
                 "batch_tp": btp, "batch_fp": bfp, "batch_fn": bfn,
                 "n_local_reports": len(grp),

@@ -3,11 +3,11 @@ columns with typed metadata.
 
 The Spark-side plumbing is real — schemas, Arrow batching through
 mapInPandas, partitioning by media type, deterministic feature
-extraction over raw bytes.  The actual codec decode is STUBBED: the
-image/audio libraries are not in this container, so ``decode=`` either
-raises NotImplementedError (strict mode) or produces deterministic
-byte-statistics fake features (test mode).  Swapping in a real decoder
-is a one-function change; batch shapes and schemas stay identical.
+extraction over raw bytes.  The actual codec decode is STUBBED: no
+image/audio library is a dependency, so ``decode=`` defaults to
+deterministic byte-statistics fake features.  Swapping in a real
+decoder is a one-function change; batch shapes and schemas stay
+identical.
 """
 
 from __future__ import annotations
@@ -44,15 +44,6 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 FEATURE_DIM = 16
-
-
-def real_decode_stub(payload: bytes, media_type: str) -> np.ndarray:
-    """The seam for a real decoder (PIL/torchaudio/decord).  Not
-    available in this container."""
-    raise NotImplementedError(
-        "media codecs not installed in this environment; use "
-        "fake_decode (deterministic byte statistics) or install decoders"
-    )
 
 
 def fake_decode(payload: bytes, media_type: str) -> np.ndarray:
@@ -197,73 +188,4 @@ def synthesize_media(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
             (F.length(text_col) % 100 + 1).cast("int").alias("n_frames"),
             F.lit("synthetic").alias("codec"),
         ).alias("meta"),
-    )
-
-
-def perceptual_hash(
-    df: DataFrame,
-    features_col: str = "features",
-    id_col: str = "media_id",
-    n_bits: int = 64,
-) -> DataFrame:
-    """dHash-style perceptual hash over decoded feature vectors: the
-    features resample (linear interpolation) to ``n_bits + 1`` points
-    and each bit is the sign of the adjacent difference — for real
-    image features this IS dHash; for the deterministic byte-stat
-    stub it exercises the identical contract.  Near-identical media
-    land within a few Hamming bits, which is what makes the banded
-    near-dup join below work.
-
-    Arrow-batched map-side pass; output (id, phash long).
-    """
-    import numpy as np  # noqa: F811
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = []
-            for f in pdf[features_col]:
-                v = np.asarray(f, dtype=np.float64)
-                if v.size == 0:
-                    hashes.append(0)
-                    continue
-                grid = np.interp(
-                    np.linspace(0, v.size - 1, n_bits + 1),
-                    np.arange(v.size),
-                    v,
-                )
-                bits = grid[1:] > grid[:-1]
-                h = 0
-                for b in bits:
-                    h = (h << 1) | int(b)
-                # two's-complement into a signed 64-bit long
-                if h >= 1 << 63:
-                    h -= 1 << 64
-                hashes.append(h)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "phash": hashes})
-
-    return df.select(id_col, features_col).mapInPandas(
-        run, schema=f"{id_col} long, phash long"
-    )
-
-
-def media_near_dup(
-    df: DataFrame,
-    decode=fake_decode,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    type_col: str = "media_type",
-    max_hamming: int = 3,
-    bands: int = 8,
-) -> DataFrame:
-    """Perceptual near-duplicate media pairs: decode -> perceptual hash
-    -> Hamming-banded candidate join (the simhash pigeonhole machinery,
-    exact recall for <= max_hamming with enough bands) -> verified
-    pairs (id_a, id_b, hamming).  No all-pairs join at any scale."""
-    from flink_rtcef_spark.operators.dedup import simhash_candidate_pairs
-
-    feats = extract_features(df, decode, payload_col, id_col, type_col)
-    hashed = perceptual_hash(feats, "features", id_col)
-    return simhash_candidate_pairs(
-        hashed, hash_col="phash", id_col=id_col,
-        max_hamming=max_hamming, bands=bands,
     )

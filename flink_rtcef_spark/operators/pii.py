@@ -65,16 +65,3 @@ def pii_scan(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> D
         total.cast("int").alias("n_pii"),
         redacted_column(text_col).alias("redacted"),
     )
-
-
-def drop_pii_documents(
-    df: DataFrame, text_col: str = "text", max_hits: int = 0
-) -> DataFrame:
-    """Filter variant: keep documents with at most ``max_hits`` PII
-    matches (the usual curation policy is 0).  The predicate is a pure
-    Column expression, so Catalyst keeps it next to the scan."""
-    counts = pii_count_columns(text_col)
-    total = None
-    for c in counts:
-        total = c if total is None else total + c
-    return df.filter(total <= max_hits)

@@ -922,30 +922,32 @@ def pq_fit_distributed(
             vec_col, lambda x: x.cast("double") / F.greatest(nrm, F.lit(1e-300))
         ).alias("__nv"),
     ).persist()
-    if init_ids is None:
-        init_ids = [
-            r[0]
-            for r in normed.select(id_col).orderBy(id_col).limit(k).collect()
-        ]
-    init_rows = (
-        normed.filter(F.col(id_col).isin(list(init_ids)))
-        .orderBy(id_col)
-        .collect()
-    )
-    init_vecs = np.array([np.asarray(r[1], np.float64) for r in init_rows])
-    books = np.empty((m, len(init_rows), sub))
-    for j in range(m):
-        sliced = normed.select(
-            F.slice("__nv", j * sub + 1, sub).alias("__sv")
+    try:
+        if init_ids is None:
+            init_ids = [
+                r[0]
+                for r in normed.select(id_col).orderBy(id_col).limit(k).collect()
+            ]
+        init_rows = (
+            normed.filter(F.col(id_col).isin(list(init_ids)))
+            .orderBy(id_col)
+            .collect()
         )
-        books[j] = _lloyd_distributed(
-            sliced,
-            init_vecs[:, j * sub : (j + 1) * sub],
-            n_iter,
-            "__sv",
-            metric="l2",
-        )
-    normed.unpersist()
+        init_vecs = np.array([np.asarray(r[1], np.float64) for r in init_rows])
+        books = np.empty((m, len(init_rows), sub))
+        for j in range(m):
+            sliced = normed.select(
+                F.slice("__nv", j * sub + 1, sub).alias("__sv")
+            )
+            books[j] = _lloyd_distributed(
+                sliced,
+                init_vecs[:, j * sub : (j + 1) * sub],
+                n_iter,
+                "__sv",
+                metric="l2",
+            )
+    finally:
+        normed.unpersist()
     pq.k = len(init_rows)
     pq.codebooks = books
     return pq

@@ -255,16 +255,3 @@ def pagerank_oracle_sql(
         )
     rank_expr = f"ROUND(rank, {round_to})" if round_to is not None else "rank"
     return ",\n".join(parts) + f"\nSELECT node, {rank_expr} AS rank FROM r{n_iter}"
-
-
-def rank_documents_by_host(
-    docs: DataFrame,
-    host_ranks: DataFrame,
-    host_col: str = "source",
-) -> DataFrame:
-    """Attach the host's rank to each document (curation weight).  The
-    rank table is o(hosts) — broadcast it; the corpus never shuffles."""
-    r = host_ranks.withColumnRenamed("node", host_col)
-    return docs.join(F.broadcast(r), host_col, "left").withColumn(
-        "rank", F.coalesce(F.col("rank"), F.lit(0.0))
-    )

@@ -10,11 +10,11 @@ tables injected as literal nested arrays — which keeps the whole
 kernel inside whole-stage codegen: no Python boundary, no Arrow
 round trip, and the plan is partial-aggregation-friendly upstream.
 
-Cost model: ``collect_list`` holds ONE key's per-batch (streaming) or
-per-dataset (batch) events in a single array — the same per-group
-memory contract as ``applyInPandas``.  The fold itself is sequential
-per key (runs are inherently sequential); parallelism comes from keys,
-exactly like the loop kernels.
+Cost model: ``collect_list`` holds ONE key's events of a microbatch
+in a single array — the same per-group memory contract as
+``applyInPandas``.  The fold itself is sequential per key (runs are
+inherently sequential); parallelism comes from keys, exactly like the
+loop kernels.
 
 Semantics are bit-identical to ``_run_sdfa_segment`` including window
 rewinds, RESET symbols, and match accounting — pinned by
@@ -26,17 +26,17 @@ kernel stays faster — sf0.1 0.772 s vs 0.804 s, x10 (1M events)
 Catalyst evaluates higher-order-function lambdas interpreted (no
 codegen for ``aggregate``), so the per-event fold pays interpreter
 dispatch that the vectorized numpy kernel amortizes.  ``cep_sdfa_detect``
-therefore keeps the Arrow kernel; this module remains the engine behind
-the streaming fast path's ``engine="sql"`` (where "no Python workers in
-the microbatch plan" buys predictable per-batch latency) and an
-explicit Python-free batch alternative via :func:`detections_sql`.
+therefore keeps the Arrow kernel, and this module is only the engine
+of the streaming fast path's distributed SDFA route
+(streaming/fastpath.py ``_SqlFold``), where "no Python workers in the
+microbatch plan" buys predictable per-batch latency.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from flink_rtcef_spark.plans.compiler import CompiledPattern, transition_tables
@@ -45,8 +45,7 @@ DET_STRUCT = (
     "struct<event_id:bigint,ts:bigint,counter:bigint,"
     "min_counter:bigint,n_matched:int>"
 )
-# lt carries max event ts seen (for streaming TTL accounting); unused
-# by the batch API but kept in one shared accumulator shape.
+# lt carries the max event ts seen (the state row's last_ts, for TTL)
 ACC_STRUCT = (
     "struct<s:int,c:bigint,mc:bigint,mts:bigint,nm:int,lt:bigint,"
     f"dets:array<{DET_STRUCT}>>"
@@ -65,15 +64,15 @@ def _bool_array_lit(arr: np.ndarray) -> str:
     return "array(" + ",".join(_bool_array_lit(row) for row in arr) + ")"
 
 
-def fold_step_sql(compiled: CompiledPattern, stateful_x: bool = False) -> str:
+def fold_step_sql(compiled: CompiledPattern) -> str:
     """The ``(a, x) -> step`` lambda body as SQL.  ``a`` is ACC_STRUCT,
-    ``x`` is struct<ts:bigint, event_id:bigint, symbol:int> — plus, when
-    ``stateful_x``, carried-state fields (is_state boolean, st int,
-    sc/smc/smts bigint, snm int, slts bigint): a state pseudo-row sorts
-    first in its key's array and REPLACES the accumulator, which is how
-    the streaming fast path resumes runs with ONE shuffle (no state
-    join).  Sub-expressions are repeated textually; whole-stage
-    codegen's subexpression elimination collapses them."""
+    ``x`` is struct<ts:bigint, event_id:bigint, symbol:int, is_state
+    boolean, st int, sc/smc/smts bigint, snm int, slts bigint>: a
+    state pseudo-row (``is_state``) sorts first in its key's array and
+    REPLACES the accumulator with its carried fields, which is how the
+    streaming fast path resumes runs with ONE shuffle (no state join).
+    Sub-expressions are repeated textually; whole-stage codegen's
+    subexpression elimination collapses them."""
     delta, take, finals = transition_tables(compiled.sdfa)
     window = compiled.window
     window_type = compiled.window_type
@@ -123,8 +122,6 @@ def fold_step_sql(compiled: CompiledPattern, stateful_x: bool = False) -> str:
         f"'dets', IF(NOT {is_reset} AND {fin}, array_append(a.dets, {det}), a.dets)"
         ")"
     )
-    if not stateful_x:
-        return step
     load = (
         "named_struct('s', x.st, 'c', x.sc, 'mc', x.smc, 'mts', x.smts, "
         "'nm', x.snm, 'lt', x.slts, 'dets', a.dets)"
@@ -132,63 +129,15 @@ def fold_step_sql(compiled: CompiledPattern, stateful_x: bool = False) -> str:
     return f"IF(x.is_state, {load}, {step})"
 
 
-def fold_column(
-    compiled: CompiledPattern,
-    evs_col: str = "evs",
-    init_sql: str | None = None,
-    stateful_x: bool = False,
-) -> Column:
-    """``aggregate(evs, init, step)`` as a Column.  ``init_sql``
-    defaults to the fresh-run accumulator; with ``stateful_x`` the
-    array's leading state pseudo-row (see fold_step_sql) supplies the
-    resume state instead."""
-    if init_sql is None:
-        init_sql = (
-            "named_struct('s', 0, 'c', 0L, 'mc', -1L, 'mts', -1L, 'nm', 0, "
-            f"'lt', -1L, 'dets', CAST(array() AS array<{DET_STRUCT}>))"
-        )
-    step = fold_step_sql(compiled, stateful_x)
+def fold_column(compiled: CompiledPattern) -> Column:
+    """``aggregate(evs, init, step)`` as a Column: the fold of each
+    key's ``evs`` array from the fresh-run accumulator, or from its
+    leading state pseudo-row (see fold_step_sql) when it has one."""
+    init = (
+        "named_struct('s', 0, 'c', 0L, 'mc', -1L, 'mts', -1L, 'nm', 0, "
+        f"'lt', -1L, 'dets', CAST(array() AS array<{DET_STRUCT}>))"
+    )
     return F.expr(
-        f"aggregate({evs_col}, CAST({init_sql} AS {ACC_STRUCT}), (a, x) -> {step})"
-    )
-
-
-def detections_sql(
-    compiled: CompiledPattern,
-    df: DataFrame,
-    key_col: str | None = None,
-    ts_col: str = "timestamp",
-    id_col: str = "id",
-) -> DataFrame:
-    """Batch detection with the JVM fold kernel: symbolize (JVM CASE) →
-    ONE shuffle (groupBy key, sort_array(collect_list)) → fold →
-    explode.  Python-free plan; same output contract as
-    BatchCEP.detections.  Holds one key's full event array in memory —
-    use the fused Arrow kernel when single keys exceed executor-array
-    sizes."""
-    from flink_rtcef_spark.operators.cep import BatchCEP
-
-    cep = BatchCEP(compiled, key_col=key_col, ts_col=ts_col, id_col=id_col)
-    sym = cep.symbolized(df)
-    key_type = dict(df.dtypes)[cep.key_col]
-
-    folded = (
-        sym.groupBy("key")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("ts", "event_id", "symbol"))
-            ).alias("evs")
-        )
-        .select("key", fold_column(compiled).alias("r"))
-    )
-    return (
-        folded.select("key", F.explode("r.dets").alias("d"))
-        .select(
-            F.col("key").cast(key_type).alias("key"),
-            F.col("d.event_id").alias("detection_event_id"),
-            F.col("d.ts").alias("detection_ts"),
-            F.col("d.counter").alias("counter"),
-            F.col("d.min_counter").alias("min_counter"),
-            F.col("d.n_matched").alias("n_matched"),
-        )
+        f"aggregate(evs, CAST({init} AS {ACC_STRUCT}), "
+        f"(a, x) -> {fold_step_sql(compiled)})"
     )

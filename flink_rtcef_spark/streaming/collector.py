@@ -43,6 +43,18 @@ from flink_rtcef_spark.streaming import bounded
 _SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
+def _check_ts(n_null: int, ts_col: str) -> None:
+    """Refuse a window with ``n_null`` rows whose ``ts_col`` is NULL: a
+    NULL bucket would land in Spark's ``__HIVE_DEFAULT_PARTITION__``
+    dir, which no ``bucket_id=<int>`` range assembles and which sends
+    every later :meth:`BucketCollector.assemble` down Spark's reader."""
+    if n_null:
+        raise ValueError(
+            f"{n_null} rows of the window have a NULL {ts_col!r}, so no "
+            f"bucket; drop or fill them before collecting"
+        )
+
+
 @dataclass
 class DatasetNotification:
     dataset_id: str
@@ -70,19 +82,21 @@ class BucketCollector:
         """Append a window into bucket partitions; emit a dataset
         notification when a new bucket appears (Collector.java:245-270).
 
-        ``window`` is a DataFrame (one partitioned Spark write, one job
-        for its distinct buckets) or an Arrow table already holding a
-        ``bucket_id`` column computed by :meth:`bucket_col` (one
-        ``pyarrow.parquet`` file per bucket, no Spark job)."""
+        ``window`` is a DataFrame (one job for its distinct buckets,
+        then one partitioned Spark write) or an Arrow table already
+        holding a ``bucket_id`` column computed by :meth:`bucket_col`
+        (one ``pyarrow.parquet`` file per bucket, no Spark job).  A row
+        with a NULL ``ts_col`` has no bucket: the window is refused
+        with a ValueError before anything is written."""
         if isinstance(window, pa.Table):
+            _check_ts(window.column("bucket_id").null_count, ts_col)
             buckets_now = self._write_arrow(window)
         else:
             with_bucket = window.withColumn("bucket_id", self.bucket_col(ts_col))
+            counts = dict(with_bucket.groupBy("bucket_id").count().collect())
+            _check_ts(counts.pop(None, 0), ts_col)
             with_bucket.write.mode("append").partitionBy("bucket_id").parquet(self.base_path)
-            buckets_now = {
-                int(r[0])
-                for r in with_bucket.select("bucket_id").distinct().collect()
-            }
+            buckets_now = {int(b) for b in counts}
         new_buckets = buckets_now - self.seen_buckets
         self.seen_buckets |= buckets_now
         if not new_buckets:

@@ -25,6 +25,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from flink_rtcef_spark.functions.metrics import mcc
 from flink_rtcef_spark.models.cst import CounterSuffixTree, cst_counts_pandas, cst_from_spark
 from flink_rtcef_spark.models.spst import SPST, spst_from_cst
 from flink_rtcef_spark.operators.cep import BatchCEP, key_sorted_pandas
@@ -177,19 +178,4 @@ class ModelFactory:
             confidence_threshold=self.confidence_threshold,
             spread=self.spread,
         )
-        return _mcc(**fcep.confusion_key_sorted(data.frame))
-
-
-def _mcc(tp: int, tn: int, fp: int, fn: int) -> float:
-    """Overflow-safe MCC (Scores.java:40-68)."""
-    import math
-
-    if (tp + fp) == 0 or (tp + fn) == 0 or (tn + fp) == 0 or (tn + fn) == 0:
-        return 0.0
-    p = tp / (tp + fp)
-    r = tp / (tp + fn)
-    spec = tn / (tn + fp)
-    npv = tn / (tn + fn)
-    return math.sqrt(p * r * spec * npv) - math.sqrt(
-        (1 - p) * (1 - r) * (1 - spec) * (1 - npv)
-    )
+        return mcc(**fcep.confusion_key_sorted(data.frame))

@@ -61,12 +61,13 @@ columns that symbolize a stream into them, and ``load``/``step``/
 (``jvm_fold``, :class:`_SqlFold`).  The protocol contract every route
 of every kernel keeps:
 
-- routes: ``driver`` advances the batch on the driver with zero Spark
-  jobs; ``sql`` runs the JVM fold (SDFA only); ``arrow`` runs the
-  fused mapInPandas kernel; ``auto`` goes driver when a bounded
-  ``limit(driver_max_rows + 1)`` probe of the batch AND the manifest's
-  counts of its touched buckets' carried state (no scan) fit, else
-  distributed (``sql`` where a fold exists, else ``arrow``).  All
+- routes, picked per batch from the data alone: ``driver`` advances
+  the batch on the driver with zero Spark jobs, taken when a bounded
+  ``limit(bounded.DRIVER_MAX_ROWS + 1)`` probe of the batch AND the
+  manifest's counts of its touched buckets' carried state (no scan,
+  at most ``bounded.DRIVER_MAX_STATE_ROWS``) fit; otherwise the batch
+  runs distributed, on ``sql`` (the JVM fold) for the SDFA and on
+  ``arrow`` (the fused mapInPandas kernel) for the other kernels.  All
   routes speak the same versioned-bucketed-state protocol, so the
   route can flip per batch with no state migration; each version's
   manifest records the route that wrote it (``engine_used``).
@@ -76,7 +77,7 @@ of every kernel keeps:
   would otherwise diverge (pandas groupby vs JVM groupBy null groups).
 - Spark actions per microbatch: the driver route runs NONE beyond the
   routing collect that doubles as the batch read; the distributed
-  routes run the probe (auto only), one tiny per-bucket count
+  routes run the probe, one tiny per-bucket count
   aggregate (touched buckets + group sizing), on the arrow route one
   count that materializes the passive/active split, and the write of
   the kernel's rows (kind 0 = output row, kind 1 = one state row per
@@ -121,20 +122,12 @@ from flink_rtcef_spark.operators.cep import (
 from flink_rtcef_spark.operators.forecast import FORECAST_OUTPUT_SCHEMA, _ForecastSpec
 from flink_rtcef_spark.operators.multi_cep import MULTI_OUTPUT_SCHEMA, _MultiSpec
 from flink_rtcef_spark.plans.compiler import CompiledPattern
+from flink_rtcef_spark.streaming import bounded
 from flink_rtcef_spark.streaming import state_table as stt
-from flink_rtcef_spark.streaming.bounded import DRIVER_MAX_ROWS, collect_bounded
 
 # long-form union of events and carried state; state rows sort before
 # any real event of their key (ts = _STATE_TS)
 _STATE_TS = -(1 << 62)
-
-#: default bound on the carried state rows the auto route will process
-#: driver-side.  Measured crossover (uniform-key bench, 10k-row
-#: batches, local[32], 9-batch wall): at 30k carried rows driver 6.7 s
-#: vs sql 10.8 s; at 60k driver 9.0 s vs 12.1 s; at 100k driver 18.1 s
-#: vs sql 15.3 s — the single-thread python kernel loses to the JVM
-#: fold somewhere above ~75k carried keys.
-DRIVER_MAX_STATE_ROWS = 75_000
 
 _NUMPY_TYPES = {
     "int": np.int32, "long": np.int64, "double": np.float64,
@@ -384,7 +377,7 @@ class _SqlFold:
             F.col("n_matched").alias("snm"),
             F.col("last_ts").alias("slts"),
         ).alias("x")
-        self.fold = fold_column(compiled, stateful_x=True).alias("r")
+        self.fold = fold_column(compiled).alias("r")
         self.rows = F.expr(
             "array_append("
             "  transform(r.dets, d -> named_struct("
@@ -405,7 +398,7 @@ class _SqlFold:
     ) -> DataFrame:
         """Carried-state rows union in as pseudo-events whose ts
         (-2^62) sorts them first within their key, so the
-        aggregate-fold's stateful_x branch loads them as the resume
+        aggregate-fold's is_state branch loads them as the resume
         accumulator — no state join, no second Exchange.  One explode
         emits each key's detections (kind=0) and carry-out (kind=1)
         from the same pass; state-only keys survive via their
@@ -421,22 +414,16 @@ class _SqlFold:
         return folded.select(F.explode(self.rows).alias("o")).select("o.*")
 
 
-def _route_to_driver(
-    batch_df: DataFrame,
-    cols: list[str],
-    engine: str,
-    meta: dict,
-    driver_max_rows: int,
-    driver_max_state_rows: int,
-):
-    """The auto/driver routing decision: collect the batch to driver
-    pandas when (a) engine == "driver", or (b) engine == "auto" AND
-    both bounds hold — the batch fits (the ``limit(n+1)`` probe of
+def _route_to_driver(batch_df: DataFrame, cols: list[str], meta: dict):
+    """The routing decision: collect the batch to driver pandas when
+    both bounds hold, read here at call time — the batch fits
+    ``bounded.DRIVER_MAX_ROWS`` (the ``limit(n+1)`` probe of
     :func:`bounded.collect_bounded`, shared with the adaptation loop)
-    and the carried state its touched buckets hold fits (manifest
-    counts — no scan).  Returns (the batch's live events — rows later
-    than the watermark dropped — as pandas, the buckets they touch), or
-    None → a distributed route.
+    and the carried state its touched buckets hold fits
+    ``bounded.DRIVER_MAX_STATE_ROWS`` (manifest counts — no scan).
+    Returns (the batch's live events — rows later than the watermark
+    dropped — as pandas, the buckets they touch), or None → the
+    distributed route.
 
     The Arrow collect over ``.toPandas()``: same rows, same dtypes for
     these non-null columns, but it skips the row-wise conversion layer
@@ -452,10 +439,8 @@ def _route_to_driver(
     pipeline, where the collect overlaps other per-batch work.  The
     prior mechanism was therefore removed; the bounded probe stays as
     the simpler, oversize-safe form."""
-    if engine not in ("auto", "driver"):
-        return None
-    table = collect_bounded(
-        batch_df.select(*cols), driver_max_rows if engine == "auto" else None
+    table = bounded.collect_bounded(
+        batch_df.select(*cols), bounded.DRIVER_MAX_ROWS
     )
     if table is None:
         return None
@@ -463,10 +448,7 @@ def _route_to_driver(
     wm = meta["watermark_ms"]
     live = pdf if wm is None else pdf[pdf["ts"] >= int(wm)]
     touched = stt.touched_buckets_of(live["key"], meta["num_buckets"])
-    if (
-        engine == "auto"
-        and stt.touched_state_rows(meta, touched) > driver_max_state_rows
-    ):
+    if stt.touched_state_rows(meta, touched) > bounded.DRIVER_MAX_STATE_ROWS:
         return None
     return live, touched
 
@@ -479,9 +461,6 @@ def _make_foreach_batch(
     watermark_delay_ms: int = 60_000,
     state_ttl_ms: int = 0,
     keep_versions: int = 2,
-    engine: str = "auto",
-    driver_max_rows: int = DRIVER_MAX_ROWS,
-    driver_max_state_rows: int | None = None,
     num_buckets: int = stt.DEFAULT_NUM_BUCKETS,
 ):
     """The one ``foreachBatch`` body of every kernel (see the module
@@ -494,34 +473,27 @@ def _make_foreach_batch(
     versions stay whole for replay; ``num_buckets`` pins the state
     table's bucket function for the life of ``state_dir``.
 
-    ``engine="auto"`` (default) bounds both sides of each microbatch:
-    ``driver_max_rows`` the batch, ``driver_max_state_rows`` (default
-    :data:`DRIVER_MAX_STATE_ROWS` = the measured driver-vs-JVM
-    crossover) the carried state its touched buckets hold — a
-    huge-key-space stream with tiny batches therefore routes
-    DISTRIBUTED and the driver never materializes the state table; a
-    distributed microbatch has a measured ~0.35 s job floor regardless
-    of row count (see _driver_batch).  ``engine="sql"`` (SDFA only)
-    always uses the JVM aggregate-fold kernel (plans/sql_kernel.py) —
-    the whole microbatch is one Python-free Catalyst plan.
-    ``engine="arrow"`` uses the fused mapInPandas kernel instead — pick
-    it when a single key's per-batch event array would strain executor
-    memory, since the SQL path materializes one key's batch as one
-    array.  ``engine="driver"`` forces the driver path (testing only:
-    it skips the state-size bound).
+    Each microbatch picks its route from the data alone (module
+    docstring): the driver when the batch and the carried state its
+    touched buckets hold fit the bounds of streaming/bounded.py, so a
+    huge-key-space stream with tiny batches still routes DISTRIBUTED
+    and the driver never materializes the state table; a distributed
+    microbatch has a measured ~0.35 s job floor regardless of row
+    count (see _driver_batch).  Distributed, the SDFA runs the JVM
+    aggregate-fold kernel (plans/sql_kernel.py) — the whole microbatch
+    is one Python-free Catalyst plan — and the other kernels, whose
+    steps are Python, the fused mapInPandas kernel.  The fold holds one
+    key's events of the batch in one array (docs/scale-design.md).
 
-    Measured SDFA engine crossover (sf0.1 events, local[32], warm
+    Measured SDFA route crossover (sf0.1 events, local[32], warm
     medians): 8 microbatches of 12.5 k rows — driver 3.33 s, sql
     4.50 s, arrow 5.89 s; 1 microbatch of 100 k rows — sql 0.84 s,
     arrow 0.92 s; at batch scale (1 M rows, no streaming machinery) the
     fused Arrow kernel wins instead (1.15 s vs 1.45 s — aggregate()
-    lambdas are interpreted, see plans/sql_kernel.py).  Hence auto
+    lambdas are interpreted, see plans/sql_kernel.py).  Hence the SDFA
     routes small→driver and large→sql: in the microbatch regime the
     SQL plan's zero Python-worker round trips dominate, and by the time
     the Arrow kernel would win the workload is a batch job."""
-    engines = ("auto", "sql", "arrow", "driver") if spec.jvm_fold else (
-        "auto", "arrow", "driver"
-    )
     if keep_versions < 1:
         # keep_versions=0 would GC v{batch_id} — the batch's OWN input
         # version — so a crash-replay of that batch would silently run
@@ -529,20 +501,8 @@ def _make_foreach_batch(
         raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
     if num_buckets < 1:
         raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
-    if engine not in engines:
-        # a typo (or "sql" for a kernel without a JVM fold) would
-        # otherwise silently fall through to the distributed arrow
-        # route and never surface
-        raise ValueError(
-            f"engine must be one of {'/'.join(engines)}, got {engine!r}"
-        )
-    if driver_max_state_rows is None:
-        driver_max_state_rows = DRIVER_MAX_STATE_ROWS
     runner = _make_partition_runner(spec)
-    fold = (
-        _SqlFold(spec.compiled) if spec.jvm_fold and engine in ("sql", "auto")
-        else None
-    )
+    fold = _SqlFold(spec.compiled) if spec.jvm_fold else None
 
     def finish_batch(spark, batch_id, meta, written, engine_used) -> None:
         """Every route's tail once ``v{batch_id+1}``'s data exists:
@@ -576,10 +536,7 @@ def _make_foreach_batch(
         meta = stt.read_meta(state_dir, batch_id, num_buckets)
         wm = meta["watermark_ms"]
 
-        routed = _route_to_driver(
-            batch_df, spec.event_cols, engine, meta,
-            driver_max_rows, driver_max_state_rows,
-        )
+        routed = _route_to_driver(batch_df, spec.event_cols, meta)
         if routed is not None:
             written = _driver_batch(
                 spec, runner, *routed, state_dir, batch_id, meta,
@@ -704,8 +661,8 @@ def make_foreach_batch_detections(
     """Build the ``foreachBatch`` function of an SDFA pattern over a
     stream symbolized by :func:`symbolize_stream`.  ``options`` are the
     skeleton's (``_make_foreach_batch``): watermark_delay_ms,
-    state_ttl_ms, keep_versions, engine (auto/sql/arrow/driver),
-    driver_max_rows, driver_max_state_rows and num_buckets."""
+    state_ttl_ms, keep_versions and num_buckets; the route (driver or
+    sql) is picked per batch from the data."""
     return _make_foreach_batch(_SdfaSpec(compiled), state_dir, sink, **options)
 
 
@@ -736,8 +693,8 @@ def start_fastpath_detections(
 ):
     """Wire the SDFA fast path end-to-end and start it: ``sink(df,
     batch_id)`` gets each batch's detections (``state_table.DET_SCHEMA``
-    columns); ``options`` as in :func:`make_foreach_batch_detections`.
-    Returns the StreamingQuery."""
+    columns); ``options`` and routes as in
+    :func:`make_foreach_batch_detections`.  Returns the StreamingQuery."""
     return _start(
         _SdfaSpec(compiled), stream_df, state_dir, checkpoint_dir, sink,
         key_col, ts_col, id_col, trigger, **options,
@@ -760,8 +717,8 @@ def start_fastpath_multi(
     the shared key and one pass advances every pattern of
     ``compiled_list`` (plans/compiler.compile_patterns); ``sink`` gets
     each batch's detections tagged with ``pattern_id``
-    (:data:`MULTI_OUTPUT_SCHEMA`).  Routes ``auto``/``arrow``/``driver``;
-    ``options`` as in :func:`make_foreach_batch_detections`."""
+    (:data:`MULTI_OUTPUT_SCHEMA`).  Routes driver or arrow, picked per
+    batch from the data; ``options`` as in :func:`make_foreach_batch_detections`."""
     return _start(
         _MultiSpec(compiled_list), stream_df, state_dir, checkpoint_dir,
         sink, key_col, ts_col, id_col, trigger, **options,
@@ -786,8 +743,8 @@ def start_fastpath_forecasts(
     """Start streaming recognition + forecasting with ``spst``:
     ``sink`` gets each batch's detections and forecasts in one frame,
     split by ``is_detection`` (:data:`FORECAST_OUTPUT_SCHEMA`, the rows
-    of ForecastCEP.forecasts).  Routes ``auto``/``arrow``/``driver``;
-    ``options`` as in :func:`make_foreach_batch_detections`."""
+    of ForecastCEP.forecasts).  Routes driver or arrow, picked per
+    batch from the data; ``options`` as in :func:`make_foreach_batch_detections`."""
     return _start(
         _ForecastSpec(spst, method, confidence_threshold, spread), stream_df,
         state_dir, checkpoint_dir, sink, key_col, ts_col, id_col, trigger,

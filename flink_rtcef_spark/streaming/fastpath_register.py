@@ -13,11 +13,11 @@ The cross-batch state is the per-key (configuration set, counter):
 The mandatory SREMO window bounds the config set (at most ``window``
 concurrent runs per key), so blob size is O(window), not O(stream).
 
-Routes: ``driver``, ``arrow`` and ``auto`` (driver below both bounds,
-``arrow`` above either).  There is no ``sql`` route here: register
-guards compare event attributes against stored valuations —
-inherently Python-side (the same boundary the reference crosses into
-its run closures), unlike the SDFA fold.
+Routes, picked per batch from the data: ``driver`` below both bounds
+of streaming/bounded.py, ``arrow`` above either.  There is no ``sql``
+route here: register guards compare event attributes against stored
+valuations — inherently Python-side (the same boundary the reference
+crosses into its run closures), unlike the SDFA fold.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ def make_foreach_batch_register(compiled, state_dir: str, sink=None, **options):
     """Build the ``foreachBatch`` function for a register pattern over
     a stream symbolized by :func:`symbolize_register_stream`: the
     skeleton and options of fastpath.make_foreach_batch_detections over
-    the register kernel, with routes ``auto``/``arrow``/``driver``."""
+    the register kernel, on the driver or arrow route."""
     return _make_foreach_batch(_RegisterSpec(compiled), state_dir, sink, **options)
 
 
@@ -67,7 +67,8 @@ def start_fastpath_register(
     **options,
 ):
     """Wire the register fast path end-to-end and start it: ``sink``
-    gets each batch's detections (``state_table.DET_SCHEMA`` columns).
+    gets each batch's detections (``state_table.DET_SCHEMA`` columns);
+    ``options`` and routes as in :func:`make_foreach_batch_register`.
     Returns the StreamingQuery."""
     return _start(
         _RegisterSpec(compiled), stream_df, state_dir, checkpoint_dir, sink,

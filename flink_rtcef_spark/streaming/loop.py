@@ -33,13 +33,14 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_rtcef_spark.functions.metrics import mcc
 from flink_rtcef_spark.models.spst import SPST
 from flink_rtcef_spark.operators.cep import SYMBOLIZED, key_sorted_pandas
 from flink_rtcef_spark.operators.forecast import ForecastCEP
 from flink_rtcef_spark.plans.compiler import CompiledPattern
 from flink_rtcef_spark.streaming import bounded
 from flink_rtcef_spark.streaming.collector import BucketCollector
-from flink_rtcef_spark.streaming.factory import ModelFactory, TrainingSet, TrainResult, _mcc
+from flink_rtcef_spark.streaming.factory import ModelFactory, TrainingSet, TrainResult
 from flink_rtcef_spark.streaming.observer import Instruction, Observer
 from flink_rtcef_spark.streaming.optimizer import BayesLiteOptimizer
 
@@ -126,8 +127,8 @@ class RTCEFLoop:
             counts = fcep.confusion(window)
         for k, v in counts.items():
             self.cum[k] += v
-        runtime = _mcc(**self.cum)
-        batch_mcc = _mcc(**counts)
+        runtime = mcc(**self.cum)
+        batch_mcc = mcc(**counts)
         return runtime, batch_mcc, counts
 
     # -------------------------------------------------------- controller

@@ -33,8 +33,17 @@ def small_arrow_batches(spark):
 @pytest.fixture
 def distributed_route(monkeypatch):
     """Send every non-empty frame of the adaptation loop and the model
-    factory down their distributed Spark plans: a driver bound of 0
-    rows."""
+    factory, and every non-empty fast-path microbatch, down their
+    distributed Spark plans: a driver bound of 0 rows."""
     from flink_rtcef_spark.streaming import bounded
 
     monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 0)
+
+
+@pytest.fixture
+def distributed_state_route(monkeypatch):
+    """Send every fast-path microbatch whose touched buckets carry any
+    state down the distributed route: a driver state bound of 0 rows."""
+    from flink_rtcef_spark.streaming import bounded
+
+    monkeypatch.setattr(bounded, "DRIVER_MAX_STATE_ROWS", 0)

@@ -1,8 +1,9 @@
 """foreachBatch fast path for register (SREMO/NSRA) patterns
 (streaming/fastpath_register.py): the pickled configuration-set state
 carried as a versioned parquet column must reproduce the batch
-RegisterCEP operator exactly across microbatch boundaries, engine
-routes, restarts, and event-clock TTL expiry."""
+RegisterCEP operator exactly across microbatch boundaries, routes,
+restarts, and event-clock TTL expiry.  The ``arrow`` cases force the
+distributed route with the ``distributed_route`` fixture."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 
 from flink_rtcef_spark.operators.cep_register import RegisterCEP
 from flink_rtcef_spark.plans.nsra import compile_register_pattern
+from flink_rtcef_spark.streaming import bounded
 from flink_rtcef_spark.streaming.fastpath_register import (
     start_fastpath_register,
 )
@@ -53,7 +55,7 @@ def _write_chunks(spark, path, rows, n_chunks):
             ).parquet(f"{path}/c{c}")
 
 
-def _run(spark, src, tmp, name, ttl_ms=0, engine="auto", **kw):
+def _run(spark, src, tmp, name, ttl_ms=0, **kw):
     collected = []
 
     def sink(df, bid):
@@ -68,7 +70,7 @@ def _run(spark, src, tmp, name, ttl_ms=0, engine="auto", **kw):
         stream, compile_register_pattern(PAT),
         state_dir=f"{tmp}/{name}_state", checkpoint_dir=f"{tmp}/{name}_ckpt",
         sink=sink, key_col="k", ts_col="ts", id_col="id",
-        watermark_delay_ms=5_000, state_ttl_ms=ttl_ms, engine=engine, **kw,
+        watermark_delay_ms=5_000, state_ttl_ms=ttl_ms, **kw,
     )
     assert q.awaitTermination(600), "stream did not drain"
     out = (
@@ -88,11 +90,13 @@ def _batch_want(spark, rows):
 
 
 @pytest.mark.parametrize("engine", ["arrow", "driver", "auto"])
-def test_fastpath_register_stream_equals_batch(spark, tmp_path, engine):
+def test_fastpath_register_stream_equals_batch(spark, tmp_path, request, engine):
     rows = _rows()
     src = str(tmp_path / "src")
     _write_chunks(spark, src, rows, 4)
-    got = _run(spark, src, str(tmp_path), f"eq_{engine}", engine=engine)
+    if engine == "arrow":
+        request.getfixturevalue("distributed_route")
+    got = _run(spark, src, str(tmp_path), f"eq_{engine}")
     got["detection_ts"] //= 1000  # stream ts is epoch millis
     want = _batch_want(spark, rows)
     assert len(want) > 0
@@ -100,9 +104,9 @@ def test_fastpath_register_stream_equals_batch(spark, tmp_path, engine):
 
 
 @pytest.mark.parametrize("engine", ["arrow", "driver"])
-def test_fastpath_register_drops_null_keys(spark, tmp_path, engine):
+def test_fastpath_register_drops_null_keys(spark, tmp_path, request, engine):
     """Same null-key contract as the deterministic fast path: null-keyed
-    rows are dropped in every engine, and a real key named "None" keeps
+    rows are dropped on every route, and a real key named "None" keeps
     matching (the driver route once stringified None into it)."""
     rows = _rows(n=120, seed=47)
     extra = [
@@ -115,26 +119,27 @@ def test_fastpath_register_drops_null_keys(spark, tmp_path, engine):
     ]
     src = str(tmp_path / "src")
     _write_chunks(spark, src, rows + extra + nulls, 3)
-    got = _run(spark, src, str(tmp_path), f"nullk_{engine}", engine=engine)
+    if engine == "arrow":
+        request.getfixturevalue("distributed_route")
+    got = _run(spark, src, str(tmp_path), f"nullk_{engine}")
     got["detection_ts"] //= 1000
     want = _batch_want(spark, rows + extra)
     assert (want["key"] == "None").sum() == 1
     assert got.astype(str).equals(want.astype(str))
 
 
-def test_fastpath_register_auto_flips_mid_stream(spark, tmp_path):
+def test_fastpath_register_auto_flips_mid_stream(spark, tmp_path, monkeypatch):
     """Batch 0 (small) routes driver-side, batch 1 (big) runs the
     distributed Arrow plan over the state batch 0 wrote — no state
     migration across the flip."""
+    monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 100)
     rows = _rows(n=300, seed=23)
     src = str(tmp_path / "src")
     _write_chunks(spark, src, rows[:40], 1)
     spark.createDataFrame(rows[40:], SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{src}/c1")
-    got = _run(
-        spark, src, str(tmp_path), "flip", engine="auto", driver_max_rows=100
-    )
+    got = _run(spark, src, str(tmp_path), "flip")
     got["detection_ts"] //= 1000
     want = _batch_want(spark, rows)
     assert len(want) > 0
@@ -180,11 +185,14 @@ def test_fastpath_register_restart_resumes_exactly_once(spark, tmp_path):
     assert got.astype(str).equals(want.astype(str))
 
 
-def test_fastpath_register_routes_distributed_on_big_state(spark, tmp_path):
+def test_fastpath_register_routes_distributed_on_big_state(
+    spark, tmp_path, distributed_state_route
+):
     """State-size routing twin of the deterministic fast path's test:
     batch 0 seeds many keys' config sets; batch 1 is tiny but its
-    buckets carry more rows than driver_max_state_rows, so it must run
-    distributed (arrow) — recorded in the manifest's engine_used."""
+    buckets carry more rows than ``bounded.DRIVER_MAX_STATE_ROWS`` (0
+    here), so it must run distributed (arrow) — recorded in the
+    manifest's engine_used."""
     import json
 
     src = str(tmp_path / "src")
@@ -194,10 +202,7 @@ def test_fastpath_register_routes_distributed_on_big_state(spark, tmp_path):
         [(f"k{i}", 900 + i, 2000 + i, "B", 5.0) for i in range(3)], SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(f"{src}/c1")
 
-    got = _run(
-        spark, src, str(tmp_path), "bigstate",
-        driver_max_rows=1000, driver_max_state_rows=100, num_buckets=4,
-    )
+    got = _run(spark, src, str(tmp_path), "bigstate", num_buckets=4)
     state_dir = f"{tmp_path}/bigstate_state"
     with open(f"{state_dir}/v1/meta.json") as f:
         m1 = json.load(f)

@@ -246,6 +246,26 @@ def test_pq_fit_distributed_matches_numpy(spark):
         )
 
 
+def test_pq_fit_distributed_releases_its_cache_when_the_fit_fails(
+    spark, monkeypatch
+):
+    """The normalized corpus ``pq_fit_distributed`` persists for its
+    Lloyd loops is unpersisted when a loop raises, not only when the
+    fit succeeds."""
+    from flink_rtcef_spark.operators import similarity
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("lloyd failed")
+
+    monkeypatch.setattr(similarity, "_lloyd_distributed", fail)
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="lloyd failed"):
+        similarity.pq_fit_distributed(emb, m=4, k=5, n_iter=3)
+    assert set(jsc.getPersistentRDDs().keys()) == before
+
+
 def test_pq_distributed_books_drive_adc(spark):
     from flink_rtcef_spark.operators.similarity import pq_fit_distributed
 

@@ -3,7 +3,7 @@ operators/text.repetition_signals) — crafted rows with known answers."""
 
 from __future__ import annotations
 
-from flink_rtcef_spark.operators.pii import drop_pii_documents, pii_scan
+from flink_rtcef_spark.operators.pii import pii_scan
 from flink_rtcef_spark.operators.text import (
     dup_line_signals,
     repetition_signals,
@@ -40,16 +40,6 @@ def test_pii_redaction_text(spark):
     assert rows[2]["redacted"] == "server [IP] and [IP] rebooted"
     assert rows[3]["redacted"] == "ssn is [SSN] repeat [SSN]"
     assert rows[4]["redacted"] == DOCS[3][1]
-
-
-def test_drop_pii_documents(spark):
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    kept = sorted(r["doc_id"] for r in drop_pii_documents(df).collect())
-    assert kept == [4]
-    kept2 = sorted(r["doc_id"] for r in drop_pii_documents(df, max_hits=2).collect())
-    assert kept2 == [1, 2, 3, 4, 5]  # every crafted doc has <= 2 hits
-    kept1 = sorted(r["doc_id"] for r in drop_pii_documents(df, max_hits=1).collect())
-    assert kept1 == [4]
 
 
 def test_repetition_signals_known_values(spark):

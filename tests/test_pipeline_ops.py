@@ -18,7 +18,6 @@ from flink_rtcef_spark.operators.dedup import (
 from flink_rtcef_spark.operators.multimodal import (
     extract_features,
     fake_decode,
-    real_decode_stub,
     synthesize_media,
 )
 from flink_rtcef_spark.operators.similarity import (
@@ -149,11 +148,6 @@ def test_multimodal_plumbing(spark):
         feats.sort_values("media_id").reset_index(drop=True),
         feats2.sort_values("media_id").reset_index(drop=True),
     )
-
-
-def test_real_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        real_decode_stub(b"xx", "image")
 
 
 def test_fake_decode_shapes():

@@ -1,6 +1,8 @@
 """JVM aggregate-fold CEP kernel (plans/sql_kernel.py) vs the Arrow loop
 kernel (operators/cep.py): bit-identical detections on real data and
-randomized streams, and a Python-free plan.
+randomized streams, and a Python-free plan.  The fold runs as the
+streaming fast path runs it (``fastpath._SqlFold``), over one batch
+with no carried state.
 
 The fold expresses the reference's per-event run advancement
 (WayebEngine.java:225-316) as a Catalyst ``aggregate`` lambda; parity
@@ -15,9 +17,9 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from flink_rtcef_spark.operators.cep import BatchCEP
+from flink_rtcef_spark.operators.cep import DET_SCHEMA, BatchCEP, sink_columns
 from flink_rtcef_spark.plans.compiler import compile_pattern
-from flink_rtcef_spark.plans.sql_kernel import detections_sql
+from flink_rtcef_spark.streaming.fastpath import _SqlFold
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -38,6 +40,14 @@ PATTERNS = [
 ]
 
 
+def _fold_detections(compiled, df, key_col, ts_col, id_col):
+    """The fold's detections over ``df`` as one batch with no carried
+    state, in BatchCEP.detections' columns and key type."""
+    cep = BatchCEP(compiled, key_col=key_col, ts_col=ts_col, id_col=id_col)
+    rows = _SqlFold(compiled)(cep.symbolized(df), None)
+    return rows.filter(F.col("kind") == 0).select(*sink_columns(DET_SCHEMA))
+
+
 def _norm(pdf):
     cols = pdf.columns.tolist()
     return pdf[cols].sort_values(cols).reset_index(drop=True)
@@ -50,7 +60,7 @@ def test_fold_matches_loop_kernel_on_events(spark, idx):
     events = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
     cep = BatchCEP(compiled, key_col="user_id", ts_col="ts", id_col="event_id")
     loop = _norm(cep.detections(events).toPandas())
-    fold = detections_sql(
+    fold = _fold_detections(
         compiled, events, key_col="user_id", ts_col="ts", id_col="event_id"
     ).toPandas()
     fold = _norm(fold[loop.columns.tolist()])
@@ -73,7 +83,7 @@ def test_fold_matches_loop_kernel_randomized(spark):
     compiled = compile_pattern(pat, "~(IsEventTypePredicate(C))")
     cep = BatchCEP(compiled, key_col="user_id", ts_col="ts", id_col="event_id")
     loop = _norm(cep.detections(df).toPandas())
-    fold = detections_sql(
+    fold = _fold_detections(
         compiled, df, key_col="user_id", ts_col="ts", id_col="event_id"
     ).toPandas()
     fold = _norm(fold[loop.columns.tolist()])
@@ -85,7 +95,7 @@ def test_fold_plan_is_python_free(spark):
     pat, resets = PATTERNS[0]
     compiled = compile_pattern(pat, resets)
     events = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    plan = detections_sql(
+    plan = _fold_detections(
         compiled, events, key_col="user_id", ts_col="ts", id_col="event_id"
     )._jdf.queryExecution().executedPlan().toString()
     for marker in ("EvalPython", "InPandas", "PythonUDF", "MapPartitions"):

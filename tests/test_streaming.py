@@ -14,10 +14,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from flink_rtcef_spark.functions.metrics import mcc
 from flink_rtcef_spark.operators.cep import BatchCEP
 from flink_rtcef_spark.plans.compiler import compile_pattern
 from flink_rtcef_spark.streaming.collector import BucketCollector
-from flink_rtcef_spark.streaming.factory import ModelFactory, _mcc
+from flink_rtcef_spark.streaming.factory import ModelFactory
 from flink_rtcef_spark.streaming.fastpath import start_fastpath_detections
 from flink_rtcef_spark.streaming.observer import Observer
 from flink_rtcef_spark.streaming.optimizer import BayesLiteOptimizer
@@ -120,12 +121,39 @@ def test_collector_buckets_and_retention(spark, tmp_path, request, route):
     assert sorted(col.seen_buckets) == [100, 200]
 
 
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_collector_refuses_null_timestamps(spark, tmp_path, request, route):
+    """A window with NULL timestamps has rows with no bucket: collect
+    raises a ValueError that counts them before either writer runs, so
+    the lake stays empty — no ``__HIVE_DEFAULT_PARTITION__`` dir — and
+    no bucket is recorded.  The window reaches the collector as the
+    adaptation loop hands it over: an Arrow table below the driver
+    bound, the DataFrame above it."""
+    from flink_rtcef_spark.streaming import bounded
+
+    if route == "distributed":
+        request.getfixturevalue("distributed_route")
+    lake = tmp_path / "lake"
+    col = BucketCollector(base_path=str(lake), bucket_size=100)
+    df = spark.createDataFrame(
+        [("a", 10, 0), ("a", None, 1), ("a", 120, 2), ("a", None, 3)],
+        "k string, timestamp long, id long",
+    )
+    projected = df.withColumn("bucket_id", col.bucket_col("timestamp"))
+    window = bounded.collect_bounded(projected, bounded.max_rows(projected))
+    assert (window is None) == (route == "distributed")
+    with pytest.raises(ValueError, match="2 rows .* NULL 'timestamp'"):
+        col.collect(df if window is None else window, ts_col="timestamp")
+    assert not lake.exists()
+    assert col.seen_buckets == set() and col.version == 0
+
+
 def test_mcc_formula_edge_cases():
-    assert _mcc(0, 0, 0, 0) == 0.0
-    assert _mcc(10, 10, 0, 0) == pytest.approx(1.0)
-    assert _mcc(0, 0, 10, 10) == pytest.approx(-1.0)  # all wrong
-    assert _mcc(0, 10, 0, 10) == 0.0  # zero tp+fp marginal -> 0
-    assert _mcc(5, 5, 5, 5) == pytest.approx(0.0)
+    assert mcc(0, 0, 0, 0) == 0.0
+    assert mcc(10, 10, 0, 0) == pytest.approx(1.0)
+    assert mcc(0, 0, 10, 10) == pytest.approx(-1.0)  # all wrong
+    assert mcc(0, 10, 0, 10) == 0.0  # zero tp+fp marginal -> 0
+    assert mcc(5, 5, 5, 5) == pytest.approx(0.0)
 
 
 def test_full_loop_replay(spark, tmp_path):

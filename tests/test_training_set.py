@@ -17,13 +17,14 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from flink_rtcef_spark.functions.metrics import mcc
 from flink_rtcef_spark.models.spst import train_spst
 from flink_rtcef_spark.operators.cep import BatchCEP
 from flink_rtcef_spark.operators.forecast import ForecastCEP
 from flink_rtcef_spark.plans.compiler import compile_pattern
 from flink_rtcef_spark.streaming import factory as factory_mod
 from flink_rtcef_spark.streaming.collector import BucketCollector
-from flink_rtcef_spark.streaming.factory import MIN_EVENTS, ModelFactory, _mcc
+from flink_rtcef_spark.streaming.factory import MIN_EVENTS, ModelFactory
 from flink_rtcef_spark.streaming.loop import RTCEFLoop
 from flink_rtcef_spark.streaming.observer import Instruction, Observer
 from tests.test_finance_trajectory import DECLS, PATTERN, synth_finance
@@ -104,7 +105,7 @@ def test_prepared_set_matches_plain_frame(spark, request, arrow_batch):
                 cep.symbolized(df), compiled, max_order=3,
                 pmin=pmin, gamma_min=gamma, horizon=10,
             )
-            ref_mcc = _mcc(**ForecastCEP(
+            ref_mcc = mcc(**ForecastCEP(
                 ref, **FINANCE_COLS, method="classify_nextk",
                 confidence_threshold=0.3, spread=5,
             ).confusion(df))

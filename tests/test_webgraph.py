@@ -1,7 +1,6 @@
 """PageRank link-graph operator: numpy ground truth, rank-mass
 conservation with dangling nodes, weighted == parallel-edge
-equivalence, DuckDB oracle parity on the derived host graph, and the
-broadcast plan for document weighting."""
+equivalence, and DuckDB oracle parity on the derived host graph."""
 
 from __future__ import annotations
 
@@ -13,9 +12,7 @@ from pyspark.sql import functions as F
 from flink_rtcef_spark.operators.webgraph import (
     pagerank,
     pagerank_oracle_sql,
-    rank_documents_by_host,
 )
-from flink_rtcef_spark.sources.io import load_table
 from tests.conftest import SF_SMOKE
 
 EDGES = [
@@ -114,12 +111,3 @@ def test_domain_pagerank_oracle(spark):
     ddf = con.execute(pagerank_oracle_sql(_EDGES_SQL, n_iter=10, round_to=6)).df()
     problems = compare("domain_pagerank", sdf, ddf)
     assert not problems, problems
-
-
-def test_rank_documents_broadcast_plan(spark):
-    docs = load_table(spark, SF_SMOKE, "documents")
-    edges = host_graph_edges(spark, SF_SMOKE)
-    ranked = rank_documents_by_host(docs, pagerank(edges, n_iter=3))
-    plan = ranked._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert ranked.count() == docs.count()
